@@ -88,11 +88,11 @@ def ingest(
     # The chunk store is versioned like the index: update() rewrites it
     # on deletions via the same manifest swap.
     chunks_path = os.path.join(out, "chunks")
-    cur, new_v, root = begin_rewrite(chunks_path)
+    new_v, root = begin_rewrite(chunks_path)
     chunks.select(
         "chunk_id", "doc_id", "chunk_idx", "chunk_start", "chunk_text"
     ).write.mode("overwrite").parquet(root)
-    commit_rewrite(chunks_path, cur, new_v)
+    commit_rewrite(chunks_path, new_v)
     chunks = spark.read.parquet(resolve_root(chunks_path))
 
     emb = embed_texts(chunks, "chunk_id", "chunk_text", dim).select(
@@ -178,9 +178,9 @@ def update(
                 id_col="chunk_id",
             )
             kept = live_chunks.join(deleted_doc_ids, "doc_id", "left_anti")
-            cur, new_v, new_root = begin_rewrite(chunks_path)
+            new_v, new_root = begin_rewrite(chunks_path)
             kept.write.mode("overwrite").parquet(new_root)
-            commit_rewrite(chunks_path, cur, new_v)
+            commit_rewrite(chunks_path, new_v)
 
     chunks = (
         chunk_documents(

@@ -159,6 +159,36 @@ def test_store_missing_params_raises(spark, corpora, tmp_path):
         read_bloom_params(path)
 
 
+def test_load_resolves_manifest_once(spark, corpora, tmp_path, monkeypatch):
+    """load_bloom reads params and words from ONE resolved version: a
+    rewrite that flips ``_CURRENT`` between two resolves would pair one
+    version's m with another version's words."""
+    from ubw_spark.operators import versioned
+    from ubw_spark.operators.bloom import load_bloom, write_bloom_store
+
+    bench, _ = corpora
+    path = str(tmp_path / "bloom_race")
+    write_bloom_store(bench, "text", path, n=3, m=1 << 12, k=4)  # v0
+    write_bloom_store(bench, "text", path, n=3, m=1 << 13, k=4)  # v1
+    versioned.write_manifest(path, 0)
+
+    real = versioned.resolve_root
+    calls = []
+
+    def flip_after_first(p):
+        root = real(p)
+        if not calls:
+            versioned.write_manifest(p, 1)  # a concurrent rewrite lands
+        calls.append(root)
+        return root
+
+    monkeypatch.setattr(versioned, "resolve_root", flip_after_first)
+    dense, params = load_bloom(spark, path)
+    want = build_bloom(bench, "text", n=3, m=params["m"], k=4)
+    assert params["m"] == 1 << 12
+    assert dense.collect()[0]["bloom_bits"] == want.collect()[0]["bloom_bits"]
+
+
 def test_probe_raises_on_m_mismatch(spark, corpora):
     """A filter built with one m probed under another must RAISE, not
     silently report zero hits (element_at past the array end is NULL in

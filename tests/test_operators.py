@@ -103,12 +103,9 @@ def test_minhash_prefilter_keeps_results_identical(spark, sf_dir):
     assert on == off and any(p[:2] == (0, 200000) for p in on)
 
 
-def test_minhash_index_sigs_store_and_legacy_probe(spark, sf_dir, tmp_path):
-    """The index persists the signature store (backing the probe-side
-    prefilter) and a legacy bands+docs-only index still probes — the
-    prefilter is an optimization stage, not a layout requirement."""
-    import shutil
-
+def test_minhash_index_sigs_store(spark, sf_dir, tmp_path):
+    """The index persists the signature store backing the probe-side
+    prefilter, and a probe through it finds the planted near-dup."""
     from ubw_spark.operators.lsh_index import (
         _resolve_root,
         _sigs_path,
@@ -138,17 +135,6 @@ def test_minhash_index_sigs_store_and_legacy_probe(spark, sf_dir, tmp_path):
         )
     )
     assert any(p[:2] == (0, 300000) for p in with_sigs)
-    # amputate the signature store → a pre-round-13 index layout
-    shutil.rmtree(_sigs_path(_resolve_root(path)))
-    legacy = sorted(
-        map(
-            tuple,
-            probe_minhash_index(
-                spark, path, batch, "doc_id", "text", threshold=0.6
-            ).collect(),
-        )
-    )
-    assert legacy == with_sigs
 
 
 def test_lsh_recall_audit_shape_and_exact_dup_bucket(spark, sf_dir):
@@ -1693,7 +1679,6 @@ def test_versioned_store_stats_reports_metadata_only(spark, sf_dir, tmp_path):
     s1 = store_stats(path)
     assert s1["current"] == 1
     assert set(s1["versions"]) == {0, 1}  # grace copy + live
-    assert s1["legacy_dirs"] == []
 
 
 def test_lang_lm_scores_gibberish_worst_within_language(spark, tmp_path, sf_dir):
@@ -1865,55 +1850,6 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
     )
 
 
-def test_bless_sidecar_migrates_legacy_minhash_index(spark, sf_dir, tmp_path):
-    """A store written before params pinning (simulated by deleting the
-    sidecar) is refused by probe; bless_minhash_index writes the pin
-    one-shot and the probe works again; blessing a PINNED store is
-    refused (drifting a live pin is the failure the pins prevent)."""
-    import os
-
-    import pytest as _pytest
-
-    from ubw_spark.operators.lsh_index import (
-        PARAMS_FILE,
-        bless_minhash_index,
-        probe_minhash_index,
-        write_minhash_index,
-    )
-    from ubw_spark.operators.versioned import resolve_root
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(30)
-    path = str(tmp_path / "idx")
-    write_minhash_index(docs, "doc_id", "text", path)
-    batch = docs.limit(3)
-
-    with _pytest.raises(ValueError, match="already has a"):
-        bless_minhash_index(path, k=3, num_hashes=64, bands=32, rows_per_band=2)
-
-    os.remove(os.path.join(resolve_root(path), PARAMS_FILE))
-    with _pytest.raises(ValueError, match="no .* sidecar"):
-        probe_minhash_index(spark, path, batch, "doc_id", "text").collect()
-
-    bless_minhash_index(path, k=3, num_hashes=64, bands=32, rows_per_band=2)
-    probe_minhash_index(spark, path, batch, "doc_id", "text").collect()
-
-
-def test_bless_sidecar_refuses_unversioned_path(tmp_path):
-    """bless only migrates REAL stores — for a bare directory with no
-    _CURRENT manifest, resolve_root falls back to the flat layout and
-    blessing an empty dir would fabricate a store; the write itself is
-    fine (flat layouts are readable), so assert the pin lands in the
-    directory given, not a version dir."""
-    from ubw_spark.operators.versioned import bless_sidecar, read_sidecar
-
-    p = str(tmp_path / "flat")
-    import os
-
-    os.makedirs(p)
-    bless_sidecar(p, "_X_PARAMS", {"a": 1}, "x index")
-    assert read_sidecar(p, "_X_PARAMS", "x index") == {"a": 1}
-
-
 def test_empty_adc_result_qid_type(spark):
     """Empty-queries ADC branch must match the populated branch's qid
     type for string-qid callers (schema-stable across micro-batches)."""
@@ -1954,60 +1890,6 @@ def test_simhash_recall_guaranteed_region_is_perfect(spark, sf_dir):
         if h <= 3:
             assert r["recall"] == 1.0, f"guaranteed bucket {h}: {r}"
     assert any(h > 3 for h in by_bucket), "measured region empty"
-
-
-def test_bless_ivf_and_ivfpq_wrappers(spark, sf_dir, tmp_path):
-    """The IVF/IVFPQ bless wrappers must write the SAME params their
-    probe checks read (a wrong constant — e.g. centroid_params vs
-    _ivfpq_params, or the wrong sidecar filename — would ship a
-    migration helper that blesses stores into a still-refused state)."""
-    import os
-
-    import pytest as _pytest
-
-    from ubw_spark.operators.ivf import (
-        IVF_PARAMS_FILE,
-        bless_ivf_index,
-        probe_ivf_index,
-        write_ivf_index,
-    )
-    from ubw_spark.operators.versioned import resolve_root
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(40)
-    cents = seed_ivf_centroids(emb, k=4)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, cents, path)
-    queries = emb.limit(2)
-
-    with _pytest.raises(ValueError, match="already has a"):
-        bless_ivf_index(path, cents)
-    os.remove(os.path.join(resolve_root(path), IVF_PARAMS_FILE))
-    with _pytest.raises(ValueError, match="no .* sidecar"):
-        probe_ivf_index(spark, path, queries, cents).collect()
-    bless_ivf_index(path, cents)
-    probe_ivf_index(spark, path, queries, cents).collect()
-
-    from ubw_spark.operators.pq import (
-        PQ_PARAMS_FILE,
-        bless_ivfpq_index,
-        probe_ivfpq_index,
-        seed_pq_codebooks,
-        write_ivfpq_index,
-    )
-
-    books = seed_pq_codebooks(emb, m=2, ksub=4)
-    path2 = str(tmp_path / "ivfpq")
-    write_ivfpq_index(emb, cents, books, path2)
-    qlist = [(r["vec_id"], list(r["embedding"])) for r in queries.collect()]
-
-    with _pytest.raises(ValueError, match="already has a"):
-        bless_ivfpq_index(path2, cents, books)
-    os.remove(os.path.join(resolve_root(path2), PQ_PARAMS_FILE))
-    with _pytest.raises(ValueError, match="no .* sidecar"):
-        probe_ivfpq_index(spark, path2, qlist, cents, books).collect()
-    bless_ivfpq_index(path2, cents, books)
-    probe_ivfpq_index(spark, path2, qlist, cents, books).collect()
 
 
 def test_png_codec_roundtrip_all_filters():

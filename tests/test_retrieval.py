@@ -151,7 +151,7 @@ def test_compact_can_retire_every_document(spark, docs_df, tmp_path):
     store) must commit — the restat used to schema-infer the empty new
     version dir and crash BEFORE the manifest flip, making the
     retirement permanently impossible.  The empty committed version
-    stays readable (schema-bearing marker file) and reports zero
+    stays readable (its pinned _SCHEMA, no data files) and reports zero
     documents."""
     path = str(tmp_path / "ti_all")
     write_term_index(docs_df, "doc_id", "text", path)
@@ -354,7 +354,7 @@ def test_append_recovers_from_torn_version_dir(spark, docs_df, tmp_path):
     write_term_index(first, "doc_id", "text", path)
     # simulate the crashed attempt: carryover done, no commit
     old_root = resolve_root(path)
-    _cur, _new_v, torn_root = begin_rewrite(path)
+    _new_v, torn_root = begin_rewrite(path)
     link_carryover(old_root, torn_root, skip_files=("_TERM_STATS",))
     # the retry (or any next batch) must fold exactly once
     append_term_batch(rest, "doc_id", "text", path, batch_id=1)

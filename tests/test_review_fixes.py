@@ -126,23 +126,6 @@ def test_stream_dedup_uses_watermark_bounded_state(spark):
     assert "DeduplicateWithinWatermark" in plan
 
 
-def test_corrupt_index_manifest_raises_not_stale_fallback(tmp_path):
-    """A _CURRENT manifest that exists but doesn't parse must raise —
-    falling back to the flat root would silently serve a stale
-    grace-kept index (review finding, round 8)."""
-    from ubw_spark.operators.lsh_index import current_version
-
-    path = str(tmp_path / "idx")
-    import os
-
-    os.makedirs(path)
-    assert current_version(path) is None  # absent = legacy, fine
-    with open(os.path.join(path, "_CURRENT"), "w") as f:
-        f.write("garbage")
-    with pytest.raises(ValueError, match="corrupt index manifest"):
-        current_version(path)
-
-
 def test_cutpoint_bucketize_clamps_oversized_cut_arrays(spark):
     """cuts built for 32 buckets fed to bits=4 must clamp to bucket 15,
     not alias high buckets onto low ones through interleave's bit mask
@@ -200,66 +183,6 @@ def test_gram_compaction_leaves_no_staging_tables(spark):
     finally:
         for t in (tbl, f"{tbl}__compact", f"{tbl}__old"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_versioned_store_survives_six_digit_versions(tmp_path):
-    """v100000 ('{:05d}' is a MINIMUM width) must be recognized as a
-    version dir: the legacy sweep must not delete the live version on a
-    long-lived store, and GC must still remove old versions (review
-    finding, round 8)."""
-    import os
-
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        current_version,
-        resolve_root,
-        version_dir,
-    )
-
-    path = str(tmp_path / "store")
-    os.makedirs(version_dir(path, 99999))
-    os.makedirs(version_dir(path, 100000))
-    with open(os.path.join(path, "_CURRENT"), "w") as f:
-        f.write("100000")
-    assert current_version(path) == 100000
-    assert resolve_root(path).endswith("v100000")
-
-    cur, new_v, new_root = begin_rewrite(path)
-    assert new_v == 100001
-    os.makedirs(new_root)
-    commit_rewrite(path, cur, new_v, legacy_names=("bands",))
-    assert current_version(path) == 100001
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("v"))
-    # v99999 GC'd (older than grace), v100000 grace-kept, live intact
-    assert dirs == ["v100000", "v100001"]
-
-
-def test_versioned_legacy_sweep_only_deletes_named_dirs(tmp_path):
-    """commit_rewrite must never delete a co-located directory it was
-    not told about (review finding, round 8)."""
-    import os
-
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
-
-    path = str(tmp_path / "store")
-    os.makedirs(os.path.join(path, "bands"))
-    os.makedirs(os.path.join(path, "user_backup"))
-    os.makedirs(os.path.join(path, "ivf_cell=3"))
-    with open(os.path.join(path, "_CURRENT"), "w") as f:
-        f.write("0")
-    os.makedirs(os.path.join(path, "v00000"))
-
-    cur, new_v, root = begin_rewrite(path)
-    os.makedirs(root)
-    commit_rewrite(
-        path, cur, new_v,
-        legacy_names=("bands",), legacy_prefixes=("ivf_cell=",),
-    )
-    left = sorted(os.listdir(path))
-    assert "user_backup" in left       # untouched: not named
-    assert "bands" not in left         # named legacy store removed
-    assert "ivf_cell=3" not in left    # prefixed legacy store removed
 
 
 def test_semdedup_rejects_nonpositive_pair_salt(spark):

@@ -567,3 +567,21 @@ def test_gram_probe_skew_guard_collapses_hot_gram(spark):
         assert out[11] == (8, 0, 0.0)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_should_widen_falls_back_to_widening_without_rdd(spark):
+    """``.rdd`` does not exist on Spark Connect: a frame whose split
+    probe raises must widen (the pre-round-14 behavior), not fail the
+    gram-table build."""
+    from ubw_spark.operators.spans import _should_widen
+
+    big = spark.range(1_000_000)  # ~8 MB estimate: past the size gate
+
+    class NoRdd:
+        _jdf = big._jdf
+
+        @property
+        def rdd(self):
+            raise RuntimeError("no RDD API on this backend")
+
+    assert _should_widen(NoRdd(), parallelism=16)

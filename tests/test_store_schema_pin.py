@@ -12,6 +12,8 @@ partition discovery or footer inference that drifts from
 probe.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -193,20 +195,22 @@ def test_moments_store_pin(spark, tmp_path):
     _assert_pinned_matches_inference(spark, resolve_root(path))
 
 
-def test_legacy_store_without_pin_falls_back(spark, tmp_path):
-    """A store written before pinning existed (no _SCHEMA) must still
-    load via inference — read_pinned_parquet is always safe to call."""
-    p = str(tmp_path / "legacy")
+def test_store_without_pin_raises(spark, tmp_path):
+    """A directory without a _SCHEMA pin is not a store written here:
+    read_pinned_parquet refuses it by name instead of inferring."""
+    p = str(tmp_path / "unpinned")
     spark.range(5).write.parquet(p)
-    df = read_pinned_parquet(spark, p)
-    assert df.count() == 5
+    msg = re.escape(f"{p} has no {SCHEMA_FILE}")
+    with pytest.raises(ValueError, match=msg):
+        read_pinned_parquet(spark, p)
 
 
-def test_probe_results_identical_with_and_without_pin(spark, tmp_path):
+def test_probe_results_identical_with_and_without_pin(
+    spark, tmp_path, monkeypatch
+):
     """Same probe results whether the loader used the pin or inference
     — the pin changes WHEN the schema is known, never what is read."""
-    import os
-
+    from ubw_spark.operators import lsh_index
     from ubw_spark.operators.lsh_index import (
         probe_minhash_index,
         write_minhash_index,
@@ -221,9 +225,9 @@ def test_probe_results_identical_with_and_without_pin(spark, tmp_path):
     with_pin = probe_minhash_index(
         spark, path, probe, "doc_id", "text", threshold=0.2
     ).collect()
-    root = resolve_root(path)
-    for sub in ("bands", "docs", "sigs"):
-        os.remove(os.path.join(root, sub, SCHEMA_FILE))
+    monkeypatch.setattr(
+        lsh_index, "read_pinned_parquet", lambda s, d: s.read.parquet(d)
+    )
     without_pin = probe_minhash_index(
         spark, path, probe, "doc_id", "text", threshold=0.2
     ).collect()

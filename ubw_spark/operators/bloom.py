@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ubw_spark.functions.hof import let
 from ubw_spark.functions.text import tokens
 from ubw_spark.operators.dedup import word_shingles
+from ubw_spark.operators.versioned import MergeStore
 
 M_DEFAULT = 1 << 18  # bits in the filter (32 KiB packed)
 K_DEFAULT = 4  # probes per gram
@@ -311,9 +312,9 @@ def bloom_audit(
 
 
 # ---------------------------------------------------------------------------
-# Persisted bloom store — the fifth member of the versioned-store family
-# (LSH bands, gram index, IVF cells, IVFPQ codes share the same
-# _CURRENT-manifest lifecycle; operators/versioned.py).
+# Persisted bloom store: the shared merge-store lifecycle
+# (operators/versioned.py::MergeStore).  OR-merge is idempotent, so
+# appends take no batch_id.
 # ---------------------------------------------------------------------------
 
 #: Sidecar in each version dir pinning (n, m, k).  Underscore-prefixed,
@@ -324,32 +325,24 @@ def bloom_audit(
 PARAMS_FILE = "_BLOOM_PARAMS"
 
 
-def _write_params(root: str, n: int, m: int, k: int) -> None:
-    import json
-    import os
+def _or_merge(old: DataFrame, new: DataFrame) -> DataFrame:
+    """bloom(A ∪ B) == bloom(A) | bloom(B): union the packed words and
+    bit_or them per word index."""
+    return (
+        old.withColumnRenamed("bits", "mask")
+        .unionByName(new.withColumnRenamed("bits", "mask"))
+        .groupBy("word_idx")
+        .agg(F.expr("bit_or(mask)").alias("bits"))
+    )
 
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, PARAMS_FILE), "w") as f:
-        json.dump({"n": n, "m": m, "k": k}, f)
+
+_STORE = MergeStore(PARAMS_FILE, "bloom", _or_merge)
 
 
 def read_bloom_params(path: str) -> dict:
     """(n, m, k) of the LIVE store version; raises if the sidecar is
     missing — probing with guessed params is the silent-zero failure."""
-    import json
-    import os
-
-    from ubw_spark.operators.versioned import resolve_root
-
-    p = os.path.join(resolve_root(path), PARAMS_FILE)
-    try:
-        with open(p) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise ValueError(
-            f"bloom store at {path} has no {PARAMS_FILE} sidecar — not a "
-            "bloom store (or written by hand); refusing to guess (n, m, k)"
-        ) from None
+    return _STORE.params(path)
 
 
 def write_bloom_store(
@@ -362,23 +355,12 @@ def write_bloom_store(
     k: int = K_DEFAULT,
     parallelism: int | None = None,
 ) -> None:
-    """Persist the sparse packed filter as a versioned store: write the
-    ``(word_idx, bits)`` parquet + params sidecar into a fresh version
-    dir, then flip ``_CURRENT`` (one small-object write; previous
-    version grace-kept — operators/versioned.py)."""
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
-
+    """Persist the sparse packed filter — ``(word_idx, bits)``, ≤ m/64
+    rows — + its params sidecar as a new store version."""
     packed = packed_bloom_words(
         bench, text_col, n=n, m=m, k=k, parallelism=parallelism
     )
-    cur, new_v, new_root = begin_rewrite(path)
-    # ≤ m/64 rows of two bigints: one file reads in one footer+scan
-    packed.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(new_root, packed.schema)
-    _write_params(new_root, n, m, k)
-    commit_rewrite(path, cur, new_v)
+    _STORE.write(packed, path, {"n": n, "m": m, "k": k})
 
 
 def append_bloom_store(
@@ -395,42 +377,15 @@ def append_bloom_store(
     unioned with the batch's, bit_or-merged per word — cost ∝ batch +
     m/64, never ∝ the accumulated benchmark.  Params come from the
     store's sidecar; the batch CANNOT override them."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        read_pinned_parquet,
-        resolve_root,
-    )
-
-    p = read_bloom_params(path)
-    old = read_pinned_parquet(spark, resolve_root(path))
-    new = packed_bloom_words(
+    _STORE.fold(spark, path, lambda p: packed_bloom_words(
         batch, text_col, n=p["n"], m=p["m"], k=p["k"],
         parallelism=parallelism,
-    ).withColumnRenamed("bits", "mask")
-    merged = (
-        old.withColumnRenamed("bits", "mask")
-        .unionByName(new)
-        .groupBy("word_idx")
-        .agg(F.expr("bit_or(mask)").alias("bits"))
-    )
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    _write_params(new_root, p["n"], p["m"], p["k"])
-    commit_rewrite(path, cur, new_v)
+    ))
 
 
 def load_bloom(spark, path: str) -> tuple[DataFrame, dict]:
     """(one-row dense filter, params) from the live store version."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        resolve_root,
-    )
-
-    p = read_bloom_params(path)
-    packed = read_pinned_parquet(spark, resolve_root(path))
+    packed, p = _STORE.load(spark, path)
     return dense_bloom_row(packed, p["m"]), p
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.dedup import portable_hash
+from ubw_spark.operators.versioned import MergeStore
 
 #: rho is computed from a 32-bit uniform hash value.
 _HASH_BITS = 32
@@ -232,25 +233,25 @@ def estimate_sql(p: int, registers_cte: str, group_by: str = "") -> str:
 
 
 # ---------------------------------------------------------------------------
-# Persisted register store: the versioned-manifest lifecycle.  MAX-merge
-# is idempotent, so — unlike the CMS add-merge store — appends need NO
-# replay high-water mark: at-least-once foreachBatch delivery folds a
-# replayed batch in as a no-op (the Bloom OR-merge property).
+# Persisted register store (versioned.MergeStore).  MAX-merge is
+# idempotent, so appends take no batch_id: a replayed batch folds in as
+# a no-op (the Bloom OR-merge property).
 
 PARAMS_FILE = "_HLL_PARAMS"
 
+_STORE = MergeStore(
+    PARAMS_FILE,
+    "hll",
+    hll_merge,
+    repin=lambda df, p: df.select(
+        "bucket", F.col("r").alias("r", metadata={"hll_p": p["p"]})
+    ),
+)
+
 
 def write_hll_store(registers: DataFrame, path: str) -> None:
-    """Persist an (ungrouped) register set as a versioned store:
-    registers parquet + precision sidecar into a fresh version dir,
-    then flip ``_CURRENT`` (operators/versioned.py).  <= 2^p rows of
-    two ints: one coalesced file."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        write_sidecar,
-    )
-
+    """Persist an (ungrouped) register set (<= 2^p rows) + its
+    precision sidecar as a new store version."""
     p = _check_p(registers, "write_hll_store")
     extra = [c for c in registers.columns if c not in ("bucket", "r")]
     if extra:
@@ -258,33 +259,13 @@ def write_hll_store(registers: DataFrame, path: str) -> None:
             f"write_hll_store: store registers must be ungrouped "
             f"(bucket, r); got extra columns {extra}"
         )
-    cur, new_v, new_root = begin_rewrite(path)
-    registers.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(new_root, registers.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"p": p})
-    commit_rewrite(path, cur, new_v)
+    _STORE.write(registers, path, {"p": p})
 
 
 def load_hll(spark, path: str) -> tuple[DataFrame, dict]:
-    """(registers, params) from the live store version — root resolved
-    ONCE for sidecar + data (a double resolve could straddle a rewrite),
-    precision re-pinned from the sidecar (the authority) onto the ``r``
-    metadata."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
-
-    root = resolve_root(path)
-    params = read_sidecar(root, PARAMS_FILE, "hll")
-    df = read_pinned_parquet(spark, root)
-    regs = df.select(
-        "bucket", F.col("r").alias("r", metadata={"hll_p": params["p"]})
-    )
-    return regs, params
+    """(registers, params) from the live store version, precision
+    re-pinned from the sidecar onto the ``r`` metadata."""
+    return _STORE.load(spark, path)
 
 
 def append_hll_batch(spark, batch: DataFrame, item_col: str, path: str) -> None:
@@ -295,9 +276,7 @@ def append_hll_batch(spark, batch: DataFrame, item_col: str, path: str) -> None:
     semantic no-op and no batch_id bookkeeping exists here (contrast
     ``append_cms_batch``).  Precision comes from the store's sidecar;
     the batch cannot override it."""
-    old, params = load_hll(spark, path)
-    new = hll_build(batch, item_col, p=params["p"])
-    _merge_and_flip(spark, old, new, params, path)
+    _STORE.fold(spark, path, lambda p: hll_build(batch, item_col, p=p["p"]))
 
 
 def append_hll_registers(spark, registers: DataFrame, path: str) -> None:
@@ -309,26 +288,7 @@ def append_hll_registers(spark, registers: DataFrame, path: str) -> None:
     §1.2).  Precision safety is unchanged: ``hll_merge`` raises when
     the registers' pinned p differs from the store sidecar's, and
     rejects grouped inputs (extra columns)."""
-    old, params = load_hll(spark, path)
-    _merge_and_flip(spark, old, registers, params, path)
-
-
-def _merge_and_flip(
-    spark, old: DataFrame, new: DataFrame, params: dict, path: str
-) -> None:
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
-
-    merged = hll_merge(old, new)
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"p": params["p"]})
-    commit_rewrite(path, cur, new_v)
+    _STORE.fold(spark, path, lambda _: registers)
 
 
 def estimate_hll_store(spark, path: str) -> DataFrame:

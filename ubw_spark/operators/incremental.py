@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ubw_spark.operators.versioned import MergeStore
+
 
 def row_delta(
     old: DataFrame,
@@ -240,45 +242,25 @@ def join_delta(
 
 
 # ---------------------------------------------------------------------------
-# Persisted aggregate store: the versioned-manifest lifecycle applied to
-# a materialized grouped aggregate — a STREAMING MATERIALIZED VIEW when
-# driven from foreachBatch.  Folding is ADD-merge (apply_delta_to_agg),
-# which is NOT replay-idempotent, so the sidecar keeps the CMS store's
-# batch_id high-water mark; state moved per fold is |groups| rows.
+# Persisted aggregate store (versioned.MergeStore) — a STREAMING
+# MATERIALIZED VIEW when driven from foreachBatch.  Folding is ADD-merge
+# (apply_delta_to_agg), so the sidecar keeps a batch_id high-water mark;
+# state moved per fold is |groups| rows.
 
 AGG_PARAMS_FILE = "_AGG_PARAMS"
 
+_STORE = MergeStore(AGG_PARAMS_FILE, "agg", apply_delta_to_agg)
+
 
 def write_agg_store(state: DataFrame, path: str) -> None:
-    """Persist a grouped aggregate (e.g. a grouped_agg result) as a
-    versioned store — |groups| rows into a fresh version dir, flip
-    ``_CURRENT`` (operators/versioned.py)."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
-
-    cur, new_v, new_root = begin_rewrite(path)
-    state.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, state.schema)
-    write_sidecar(new_root, AGG_PARAMS_FILE, {})
-    commit_rewrite(path, cur, new_v)
+    """Persist a grouped aggregate (e.g. a grouped_agg result) as a new
+    store version."""
+    _STORE.write(state, path, {})
 
 
 def load_agg_store(spark, path: str) -> tuple[DataFrame, dict]:
-    """(state, params) from the live version — root resolved ONCE for
-    sidecar + data (the double-resolve compaction race rule)."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
-
-    root = resolve_root(path)
-    params = read_sidecar(root, AGG_PARAMS_FILE, "agg")
-    return read_pinned_parquet(spark, root), params
+    """(state, params) from the live version."""
+    return _STORE.load(spark, path)
 
 
 def fold_batch_into_agg_store(
@@ -298,28 +280,7 @@ def fold_batch_into_agg_store(
     sidecar records the high-water mark and an already-folded id
     becomes a no-op (the append_cms_batch contract; the HLL store's
     max-merge needs none of this)."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
+    _STORE.fold(
+        spark, path, lambda _: delta, batch_id=batch_id,
+        group_cols=group_cols, measures=measures, count_col=count_col,
     )
-
-    state, params = load_agg_store(spark, path)
-    if batch_id is not None:
-        last = params.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    merged = apply_delta_to_agg(
-        state, delta, group_cols, measures, count_col=count_col
-    )
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    out_params = {}
-    if batch_id is not None:
-        out_params["last_batch_id"] = batch_id
-    elif params.get("last_batch_id") is not None:
-        out_params["last_batch_id"] = params["last_batch_id"]
-    write_sidecar(new_root, AGG_PARAMS_FILE, out_params)
-    commit_rewrite(path, cur, new_v)

@@ -25,6 +25,17 @@ from pyspark.sql.functions import broadcast
 from ubw_spark.functions.hof import fence
 
 from ubw_spark.operators.similarity import cosine_col
+from ubw_spark.operators.versioned import (
+    begin_rewrite,
+    check_append_schema,
+    commit_rewrite,
+    compact_partitioned_store,
+    pin_schema,
+    read_pinned_parquet,
+    read_sidecar,
+    resolve_root,
+    write_sidecar,
+)
 
 
 def train_ivf_centroids(
@@ -205,8 +216,6 @@ def centroid_params(centroids: list[list[float]]) -> dict:
 def _check_ivf_params(
     root: str, centroids: list[list[float]], kind: str = "ivf index"
 ) -> None:
-    from ubw_spark.operators.versioned import read_sidecar
-
     stored = read_sidecar(root, IVF_PARAMS_FILE, kind)
     got = centroid_params(centroids)
     if stored != got:
@@ -263,9 +272,7 @@ def write_ivf_index(
     The store is VERSIONED (operators/versioned.py): rewrites land in a
     fresh ``vNNNNN/`` dir and the ``_CURRENT`` manifest flips in one
     small-object write — same lifecycle as the LSH and gram indexes."""
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
-
-    cur, new_v, root = begin_rewrite(path)
+    new_v, root = begin_rewrite(path)
     assigned = assign_ivf_cells(corpus, centroids, vec_col)
     (
         assigned.repartition("ivf_cell")
@@ -273,11 +280,9 @@ def write_ivf_index(
         .partitionBy("ivf_cell")
         .parquet(root)
     )
-    from ubw_spark.operators.versioned import pin_schema, write_sidecar
-
     pin_schema(root, assigned.schema, ("ivf_cell",))
     write_sidecar(root, IVF_PARAMS_FILE, centroid_params(centroids))
-    commit_rewrite(path, cur, new_v, legacy_prefixes=("ivf_cell=",))
+    commit_rewrite(path, new_v)
 
 
 def probe_ivf_index(
@@ -310,11 +315,6 @@ def probe_ivf_index(
     candidates when queries was non-deterministic (sample(), unordered
     limit, re-read of mutable storage) AND paid the k·dim literal
     expression build per call at paper-scale k."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        resolve_root,
-    )
-
     root = resolve_root(path)
     _check_ivf_params(root, centroids)
     q_rows = queries.select(
@@ -464,14 +464,16 @@ def append_ivf_batch(
     append into the live version's cell partitions — additive, so
     racing readers see either file set, both complete (the batch is
     simply not yet visible in the older one).  Ids must be unique
-    across appends; removals go through :func:`compact_ivf_index`."""
-    from ubw_spark.operators.versioned import resolve_root
-
+    across appends; removals go through :func:`compact_ivf_index`.  A
+    batch whose read-back schema differs from the pinned ``_SCHEMA``
+    (e.g. an ``int`` id into a ``bigint`` store) is refused before
+    anything lands."""
     root = resolve_root(path)
     _check_ivf_params(root, centroids)
+    assigned = assign_ivf_cells(batch, centroids, vec_col)
+    check_append_schema(path, root, assigned.schema, ("ivf_cell",))
     (
-        assign_ivf_cells(batch, centroids, vec_col)
-        .repartition("ivf_cell")
+        assigned.repartition("ivf_cell")
         .write.mode("append")
         .partitionBy("ivf_cell")
         .parquet(root)
@@ -494,34 +496,13 @@ def compact_ivf_index(
     path).  Cell partitioning is preserved; the swap is the shared
     versioned-manifest flip (operators/versioned.py) — write new
     version, one small-object pointer write, grace-keep the previous."""
-    from ubw_spark.operators.versioned import (
-        compact_partitioned_store,
-        read_sidecar,
-        resolve_root,
-        write_sidecar,
-    )
-
     stored = read_sidecar(resolve_root(path), IVF_PARAMS_FILE, "ivf index")
     compact_partitioned_store(
         spark, path, drop_ids, id_col, "ivf_cell",
-        broadcast_drops=broadcast_drops, legacy_prefixes=("ivf_cell=",),
+        broadcast_drops=broadcast_drops,
         # the quantizer pin carries verbatim — compaction changes
         # membership, never cell geometry
         pre_commit=lambda new_root: write_sidecar(
             new_root, IVF_PARAMS_FILE, stored
         ),
-    )
-
-
-def bless_ivf_index(path: str, centroids: list[list[float]]) -> None:
-    """Migrate an IVF cell store written before params pinning: pins
-    the caller-supplied quantizer into the live version root so
-    probe/append/compact stop refusing it (refuses if already pinned —
-    see versioned.bless_sidecar).  The caller owns the claim that these
-    ARE the training-time centroids; blessing with the wrong table
-    makes every later probe silently scan the wrong cells."""
-    from ubw_spark.operators.versioned import bless_sidecar
-
-    bless_sidecar(
-        path, IVF_PARAMS_FILE, centroid_params(centroids), "ivf index"
     )

@@ -34,14 +34,13 @@ invisible on read.
 Layout versioning: the index root holds ``_CURRENT`` (a one-line
 manifest naming the live version) and ``vNNNNN/`` directories, each a
 complete ``bands``+``docs``+``sigs`` triple (``sigs`` — the persisted
-MinHash signatures backing the candidate prefilter — is absent on
-indexes written before round 13; probing them skips the prefilter).  Readers resolve the manifest once
-per query; rewrites (overwrite, compaction) write a fresh version dir
-and flip the manifest with a single small-file write — atomic locally
-via rename, atomic on object stores as one PUT.  The previous version
-survives one cycle as a grace copy for in-flight readers.  The
-machinery is shared by every persisted index store here — see
-operators/versioned.py for the full contract.
+MinHash signatures backing the candidate prefilter).  Readers resolve
+the manifest once per query; rewrites (overwrite, compaction) write a
+fresh version dir and flip the manifest with a single small-file write
+— atomic locally via rename, atomic on object stores as one PUT.  The
+previous version survives one cycle as a grace copy for in-flight
+readers.  The machinery is shared by every persisted index store here
+— see operators/versioned.py for the full contract.
 
 Reference parity: this extends the reference's CRUD/upsert surface
 (documentation/doc-01.md:136-158) the way a training-data lake needs —
@@ -65,6 +64,7 @@ from ubw_spark.operators.dedup import (
 )
 from ubw_spark.operators.versioned import (
     begin_rewrite,
+    check_append_schema,
     commit_rewrite,
     current_version,  # re-exported: part of this module's public API
     pin_schema,
@@ -105,7 +105,6 @@ __all__ = [
     "probe_minhash_index",
     "compacted_index_frames",
     "compact_minhash_index",
-    "bless_minhash_index",
     "current_version",
 ]
 
@@ -120,17 +119,6 @@ def _docs_path(path: str) -> str:
 
 def _sigs_path(path: str) -> str:
     return posixpath.join(path, "sigs")
-
-
-def _has_sigs(root: str) -> bool:
-    """Whether this version root carries the signature store.  Indexes
-    written before the round-13 signature-estimate prefilter have only
-    ``bands`` + ``docs``; probing them still works (the prefilter is an
-    optimization stage, not a layout contract), it just ships every
-    banded candidate straight to the shingle verify."""
-    import os
-
-    return os.path.isdir(_sigs_path(root))
 
 
 def write_minhash_index(
@@ -158,7 +146,7 @@ def write_minhash_index(
     resolves the manifest first.  Rewrites (a fresh ``overwrite`` or a
     compaction) write a NEW version dir and flip the pointer — never
     mutate a dir a reader may hold open."""
-    cur, new_v, root = begin_rewrite(path)
+    new_v, root = begin_rewrite(path)
     sh, sig, banded = banded_minhash(
         df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
@@ -217,7 +205,7 @@ def write_minhash_index(
             "rows_per_band": rows_per_band,
         },
     )
-    commit_rewrite(path, cur, new_v, legacy_names=("bands", "docs", "sigs"))
+    commit_rewrite(path, new_v)
 
 
 def append_minhash_batch(
@@ -244,19 +232,26 @@ def append_minhash_batch(
     Appends go INTO the current version dir (resolved via the
     manifest): an append is additive, so readers racing it see either
     the old or the new file set — both are complete indexes (the batch
-    is simply not yet visible in the old one)."""
+    is simply not yet visible in the old one).  A batch whose read-back
+    schema differs from a store's pinned ``_SCHEMA`` is refused before
+    anything lands."""
     root = _resolve_root(path)
     _check_lsh_params(root, k, num_hashes, bands, rows_per_band)
     sh, sig, banded = banded_minhash(
         df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
     )
+    banded_out = banded.withColumnRenamed("__band", "band").withColumnRenamed(
+        "__key", "key"
+    )
+    sig_out = sig.withColumnRenamed("__sig", "sig")
+    check_append_schema(path, _bands_path(root), banded_out.schema, ("band",))
+    check_append_schema(path, _docs_path(root), sh.schema)
+    check_append_schema(path, _sigs_path(root), sig_out.schema)
 
     def _append_bands() -> None:
         (
-            banded.withColumnRenamed("__band", "band")
-            .withColumnRenamed("__key", "key")
-            .repartition("band")
+            banded_out.repartition("band")
             .write.mode("append")
             .partitionBy("band")
             .parquet(_bands_path(root))
@@ -266,20 +261,19 @@ def append_minhash_batch(
         sh.write.mode("append").parquet(_docs_path(root))
 
     def _append_sigs() -> None:
-        sig.withColumnRenamed("__sig", "sig").write.mode("append").parquet(
-            _sigs_path(root)
-        )
+        sig_out.write.mode("append").parquet(_sigs_path(root))
 
     # Independent projections of the one materialized batch frame into
     # three disjoint store directories: overlap the append jobs (guide
     # §2.6) exactly as in write_minhash_index.
     from concurrent.futures import ThreadPoolExecutor
 
-    jobs = [_append_bands, _append_docs]
-    if _has_sigs(root):
-        jobs.append(_append_sigs)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(j) for j in jobs]:
+        for fut in [
+            pool.submit(_append_bands),
+            pool.submit(_append_docs),
+            pool.submit(_append_sigs),
+        ]:
             fut.result()
 
 
@@ -311,8 +305,8 @@ def probe_minhash_index(
     Candidates pass the signature-estimate prefilter (persisted ``sigs``
     store vs the batch's in-flight signatures — see
     dedup.minhash_dedup_pairs for the cut and its recall pricing)
-    before any corpus shingle is read; ``prefilter_margin=None``, or an
-    index written before the ``sigs`` store existed, disables it.
+    before any corpus shingle is read; ``prefilter_margin=None``
+    disables it.
 
     The manifest is resolved ONCE here, so the candidate scan and the
     verify join read the same version even if a compaction flips the
@@ -340,13 +334,11 @@ def probe_minhash_index(
         .distinct()
     )
     cut = prefilter_min_agree(threshold, num_hashes, prefilter_margin)
-    if cut > 0 and _has_sigs(root):
+    if cut > 0:
         # signature-estimate prefilter (dedup.minhash_agreement): the
         # corpus side reads the persisted 512 B/doc signature store —
         # never the shingle store — so only prefilter survivors pull
-        # document shingles.  Legacy bands+docs-only indexes skip this
-        # stage (superset semantics: every banded candidate verifies);
-        # rebuild the index to pick the prefilter up.
+        # document shingles.
         from ubw_spark.functions.hof import fence
 
         # the corpus side is a materialized parquet column (inferred
@@ -389,12 +381,11 @@ def compacted_index_frames(
     id_col: str = "corpus_id",
     *,
     broadcast_drops: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The (bands, docs, sigs) frames of the index at ``path`` with
     ``drop_ids`` anti-joined out — the lazy core of
     :func:`compact_minhash_index`, exposed so plan tests can assert the
-    join strategy without executing a rewrite.  ``sigs`` is None for a
-    legacy index without the signature store.
+    join strategy without executing a rewrite.
 
     ``broadcast_drops=True`` broadcasts the drop set into both
     anti-joins — right when the drop set is an eval-set-sized blocklist.
@@ -413,12 +404,8 @@ def compacted_index_frames(
     docs_kept = read_pinned_parquet(spark, _docs_path(root)).join(
         maybe_bc(drops), id_col, "left_anti"
     )
-    sigs_kept = (
-        read_pinned_parquet(spark, _sigs_path(root)).join(
-            maybe_bc(drops), id_col, "left_anti"
-        )
-        if _has_sigs(root)
-        else None
+    sigs_kept = read_pinned_parquet(spark, _sigs_path(root)).join(
+        maybe_bc(drops), id_col, "left_anti"
     )
     return bands_kept, docs_kept, sigs_kept
 
@@ -452,7 +439,7 @@ def compact_minhash_index(
     grace copy until the NEXT compaction garbage-collects it."""
     old_root = _resolve_root(path)
     stored_params = read_sidecar(old_root, PARAMS_FILE, "minhash index")
-    cur, new_v, new_root = begin_rewrite(path)
+    new_v, new_root = begin_rewrite(path)
     bands_kept, docs_kept, sigs_kept = compacted_index_frames(
         spark, path, drop_ids, id_col, broadcast_drops=broadcast_drops
     )
@@ -465,35 +452,10 @@ def compact_minhash_index(
     pin_schema(_bands_path(new_root), bands_kept.schema, ("band",))
     docs_kept.write.mode("overwrite").parquet(_docs_path(new_root))
     pin_schema(_docs_path(new_root), docs_kept.schema)
-    if sigs_kept is not None:
-        sigs_kept.write.mode("overwrite").parquet(_sigs_path(new_root))
-        pin_schema(_sigs_path(new_root), sigs_kept.schema)
+    sigs_kept.write.mode("overwrite").parquet(_sigs_path(new_root))
+    pin_schema(_sigs_path(new_root), sigs_kept.schema)
     # the layout params carry verbatim — compaction changes membership,
     # never the banding scheme
     write_sidecar(new_root, PARAMS_FILE, stored_params)
-    # Flip + GC + legacy flat-store cleanup, shared contract:
-    # operators/versioned.py::commit_rewrite.
-    commit_rewrite(path, cur, new_v, legacy_names=("bands", "docs", "sigs"))
-
-
-def bless_minhash_index(
-    path: str, k: int, num_hashes: int, bands: int, rows_per_band: int
-) -> None:
-    """Migrate a minhash band store written before params pinning: pins
-    the caller-supplied banding layout into the live version root so
-    probe/append/compact stop refusing it (refuses if already pinned —
-    see versioned.bless_sidecar).  Bless with the wrong layout and band
-    keys silently never match — rebuild when in doubt."""
-    from ubw_spark.operators.versioned import bless_sidecar
-
-    bless_sidecar(
-        path,
-        PARAMS_FILE,
-        {
-            "k": k,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "rows_per_band": rows_per_band,
-        },
-        "minhash index",
-    )
+    # Flip + GC, shared contract: operators/versioned.py::commit_rewrite.
+    commit_rewrite(path, new_v)

@@ -36,12 +36,14 @@ shifted first — the projection already centers exactly.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.functions.hof import let
+from ubw_spark.operators.versioned import MergeStore
 
 __all__ = [
     "covariance_matrix",
@@ -135,12 +137,21 @@ def _numpy_moments(emb: DataFrame, vec_col: str) -> DataFrame:
             }
         )
 
-    per_part = emb.select(vec_col).mapInPandas(acc, schema)
-    return per_part.groupBy("i", "j").agg(
-        F.sum("sxy").alias("sxy"),
-        F.sum("si").alias("si"),
-        F.sum("sj").alias("sj"),
-        F.sum("n").alias("n"),
+    return _sum_moments(emb.select(vec_col).mapInPandas(acc, schema))
+
+
+def _sum_moments(*parts: DataFrame) -> DataFrame:
+    """(i, j) re-aggregated union of moment frames — exact, since raw
+    moments are plain sums."""
+    return (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy("i", "j")
+        .agg(
+            F.sum("sxy").alias("sxy"),
+            F.sum("si").alias("si"),
+            F.sum("sj").alias("sj"),
+            F.sum("n").alias("n"),
+        )
     )
 
 
@@ -232,9 +243,16 @@ def pca_project(
 
 # ---------------------------------------------------------------- store
 
-#: Sidecar pinning append bookkeeping (the replay high-water mark);
-#: absent on pre-sidecar stores, which stay readable.
+#: Sidecar pinning append bookkeeping (the replay high-water mark).
 MOMENTS_PARAMS = "_PCA_PARAMS"
+
+_STORE = MergeStore(MOMENTS_PARAMS, "pca-moments", _sum_moments)
+
+
+def _moments(emb: DataFrame, vec_col: str, method: str) -> DataFrame:
+    if method == "numpy":
+        return _numpy_moments(emb, vec_col)
+    return _sql_moments(emb, vec_col)
 
 
 def write_moments_store(
@@ -245,23 +263,7 @@ def write_moments_store(
     so batches MERGE EXACTLY by (i, j) addition, which a covariance or
     eigenvector store never could.  A nightly re-fit reads this store
     instead of re-scanning the corpus."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
-
-    agg = (
-        _numpy_moments(emb, vec_col)
-        if method == "numpy"
-        else _sql_moments(emb, vec_col)
-    )
-    cur, new_v, root = begin_rewrite(path)
-    agg.coalesce(1).write.mode("overwrite").parquet(root)
-    pin_schema(root, agg.schema)
-    write_sidecar(root, MOMENTS_PARAMS, {})
-    commit_rewrite(path, cur, new_v)
+    _STORE.write(_moments(emb, vec_col, method), path, {})
 
 
 def append_moments_batch(
@@ -277,77 +279,19 @@ def append_moments_batch(
     tests).  Cost ∝ the batch plus the d(d+1)/2-row store itself,
     never the corpus.
 
-    Runs the full versioned rewrite cycle (the append_term_batch /
-    append_cms_batch discipline): the new version holds the (i, j)
-    re-aggregated union of live + batch rows — the store stays at
-    exactly d(d+1)/2 rows however many appends land (compaction for
-    free; the moments frame is tiny, so a full rewrite is cheap) —
-    and the manifest flips once, so a crash mid-append leaves the live
-    version untouched.  ADD-merge is not replay-idempotent: streaming
-    callers MUST pass ``batch_id``; the sidecar's high-water mark
-    makes a redelivered micro-batch a no-op before any write."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-        write_sidecar,
+    The new version holds the (i, j) re-aggregated union of live +
+    batch rows, so the store stays at exactly d(d+1)/2 rows however
+    many appends land.  ADD-merge is not replay-idempotent: streaming
+    callers MUST pass ``batch_id`` (versioned.MergeStore.fold)."""
+    _STORE.fold(
+        batch.sparkSession, path,
+        lambda _: _moments(batch, vec_col, method), batch_id=batch_id,
     )
-
-    old_root = resolve_root(path)
-    try:
-        params = read_sidecar(old_root, MOMENTS_PARAMS, "pca-moments")
-    except ValueError:
-        params = {}  # pre-sidecar store: still readable, no high-water
-    if batch_id is not None:
-        last = params.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    agg = (
-        _numpy_moments(batch, vec_col)
-        if method == "numpy"
-        else _sql_moments(batch, vec_col)
-    )
-    spark = batch.sparkSession
-    merged = (
-        read_pinned_parquet(spark, old_root)
-        .unionByName(agg)
-        .groupBy("i", "j")
-        .agg(
-            F.sum("sxy").alias("sxy"),
-            F.sum("si").alias("si"),
-            F.sum("sj").alias("sj"),
-            F.sum("n").alias("n"),
-        )
-    )
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    if batch_id is not None:
-        params["last_batch_id"] = batch_id
-    write_sidecar(new_root, MOMENTS_PARAMS, params)
-    commit_rewrite(path, cur, new_v)
 
 
 def pca_fit_from_store(spark, path: str, r: int) -> dict:
     """Fit from the persisted moments alone (no corpus access): one
     (i, j) re-aggregation over ≤ |appends| × d(d+1)/2 rows, then the
     shared driver-side eigh tail."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        resolve_root,
-    )
-
-    merged = (
-        read_pinned_parquet(spark, resolve_root(path))
-        .groupBy("i", "j")
-        .agg(
-            F.sum("sxy").alias("sxy"),
-            F.sum("si").alias("si"),
-            F.sum("sj").alias("sj"),
-            F.sum("n").alias("n"),
-        )
-    )
-    return _fit_from_moment_rows(merged.collect(), r)
+    moments, _ = _STORE.load(spark, path)
+    return _fit_from_moment_rows(_sum_moments(moments).collect(), r)

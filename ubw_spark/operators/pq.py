@@ -27,6 +27,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ubw_spark.operators.versioned import (
+    begin_rewrite,
+    commit_rewrite,
+    compact_partitioned_store,
+    pin_schema,
+    read_pinned_parquet,
+    read_sidecar,
+    resolve_root,
+    write_sidecar,
+)
+
 
 def seed_pq_codebooks(
     emb: DataFrame,
@@ -225,8 +236,6 @@ def _check_ivfpq_params(
     cell_centroids: list[list[float]],
     codebooks: list[list[list[float]]],
 ) -> None:
-    from ubw_spark.operators.versioned import read_sidecar
-
     stored = read_sidecar(root, PQ_PARAMS_FILE, "ivfpq index")
     got = _ivfpq_params(cell_centroids, codebooks)
     if stored != got:
@@ -391,9 +400,7 @@ def write_ivfpq_index(
     cell (the ivf.write_ivf_index rationale)."""
     from ubw_spark.operators.ivf import assign_ivf_cells
 
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
-
-    cur, new_v, root = begin_rewrite(path)
+    new_v, root = begin_rewrite(path)
     coded = pq_encode(
         assign_ivf_cells(corpus, cell_centroids, vec_col), codebooks
     ).select(id_col, "ivf_cell", "pq_code")
@@ -403,11 +410,9 @@ def write_ivfpq_index(
         .partitionBy("ivf_cell")
         .parquet(root)
     )
-    from ubw_spark.operators.versioned import pin_schema, write_sidecar
-
     pin_schema(root, coded.schema, ("ivf_cell",))
     write_sidecar(root, PQ_PARAMS_FILE, _ivfpq_params(cell_centroids, codebooks))
-    commit_rewrite(path, cur, new_v, legacy_prefixes=("ivf_cell=",))
+    commit_rewrite(path, new_v)
 
 
 def probe_ivfpq_index(
@@ -427,11 +432,6 @@ def probe_ivfpq_index(
     plan — the same pattern as ivf.probe_ivf_index), and the per-query
     cell bound + ADC scoring then run exactly as :func:`ivf_pq_topk`.
     Corpus text/vectors are never read — only m-int codes."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        resolve_root,
-    )
-
     root = resolve_root(path)
     _check_ivfpq_params(root, cell_centroids, codebooks)
     if not queries:
@@ -499,36 +499,11 @@ def compact_ivfpq_index(
     corpus-fraction drop sets; cell partitioning preserved; swap via
     the versioned-manifest flip — one shared body for both
     cell-partitioned stores (versioned.compact_partitioned_store)."""
-    from ubw_spark.operators.versioned import (
-        compact_partitioned_store,
-        read_sidecar,
-        resolve_root,
-        write_sidecar,
-    )
-
     stored = read_sidecar(resolve_root(path), PQ_PARAMS_FILE, "ivfpq index")
     compact_partitioned_store(
         spark, path, drop_ids, id_col, "ivf_cell",
-        broadcast_drops=broadcast_drops, legacy_prefixes=("ivf_cell=",),
+        broadcast_drops=broadcast_drops,
         pre_commit=lambda new_root: write_sidecar(
             new_root, PQ_PARAMS_FILE, stored
         ),
-    )
-
-
-def bless_ivfpq_index(
-    path: str,
-    cell_centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-) -> None:
-    """Migrate an IVFPQ store written before params pinning — the
-    IVF bless helper's double-table twin (quantizer + codebooks).
-    Refuses already-pinned stores; see versioned.bless_sidecar."""
-    from ubw_spark.operators.versioned import bless_sidecar
-
-    bless_sidecar(
-        path,
-        PQ_PARAMS_FILE,
-        _ivfpq_params(cell_centroids, codebooks),
-        "ivfpq index",
     )

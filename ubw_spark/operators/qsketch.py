@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ubw_spark.operators.versioned import MergeStore
+
 __all__ = [
     "hist_build",
     "grouped_hist_build",
@@ -243,62 +245,14 @@ def grouped_hist_quantiles(
 
 
 # ---------------------------------------------------------------------------
-# Persisted histogram store: versioned-manifest lifecycle (the CMS
-# pattern — bounded cells, ADD-merge appends, batch_id high-water for
-# at-least-once replay safety).
+# Persisted histogram store (versioned.MergeStore): bounded cells,
+# ADD-merge appends, batch_id high-water mark for replay safety.
 
-
-def read_hist_params(path: str) -> dict:
-    """(lo, hi, nbins[, last_batch_id]) of the LIVE store version."""
-    from ubw_spark.operators.versioned import read_sidecar, resolve_root
-
-    return read_sidecar(resolve_root(path), PARAMS_FILE, "qh")
-
-
-def write_hist_store(cells: DataFrame, path: str) -> None:
-    """Persist histogram cells as a versioned store: ≤nbins rows of two
-    numbers into a fresh version dir + range sidecar, then flip
-    ``_CURRENT`` (operators/versioned.py).
-
-    GLOBAL histograms only: grouped cells are rejected — load_hist
-    reads back (bin, cnt) and would silently collapse every segment
-    into one curve."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        write_sidecar,
-    )
-
-    if set(cells.columns) != {"bin", "cnt"}:
-        raise ValueError(
-            "write_hist_store: expected exactly (bin, cnt) cells; got "
-            f"{cells.columns} — grouped histograms have no store "
-            "lifecycle (reading one back would merge the segments)"
-        )
-    lo, hi, nb = _check_shape(cells, "write_hist_store")
-    cur, new_v, new_root = begin_rewrite(path)
-    cells.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(new_root, cells.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"lo": lo, "hi": hi, "nbins": nb})
-    commit_rewrite(path, cur, new_v)
-
-
-def load_hist(spark, path: str) -> tuple[DataFrame, dict]:
-    """(cells, params) from the live version — root resolved ONCE for
-    sidecar + data (the load_cms rule), range re-pinned from the
-    sidecar (the authority) onto the column metadata."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
-
-    root = resolve_root(path)
-    p = read_sidecar(root, PARAMS_FILE, "qh")
-    df = read_pinned_parquet(spark, root)
-    cells = df.select(
+_STORE = MergeStore(
+    PARAMS_FILE,
+    "qh",
+    hist_merge,
+    repin=lambda df, p: df.select(
         "bin",
         F.col("cnt").alias(
             "cnt",
@@ -306,8 +260,34 @@ def load_hist(spark, path: str) -> tuple[DataFrame, dict]:
                 "qh_lo": p["lo"], "qh_hi": p["hi"], "qh_bins": p["nbins"],
             },
         ),
-    )
-    return cells, p
+    ),
+)
+
+
+def read_hist_params(path: str) -> dict:
+    """(lo, hi, nbins[, last_batch_id]) of the LIVE store version."""
+    return _STORE.params(path)
+
+
+def write_hist_store(cells: DataFrame, path: str) -> None:
+    """Persist histogram cells (≤nbins rows) + the range sidecar as a
+    new store version.  GLOBAL histograms only: grouped cells are
+    rejected — load_hist reads back (bin, cnt) and would silently
+    collapse every segment into one curve."""
+    if set(cells.columns) != {"bin", "cnt"}:
+        raise ValueError(
+            "write_hist_store: expected exactly (bin, cnt) cells; got "
+            f"{cells.columns} — grouped histograms have no store "
+            "lifecycle (reading one back would merge the segments)"
+        )
+    lo, hi, nb = _check_shape(cells, "write_hist_store")
+    _STORE.write(cells, path, {"lo": lo, "hi": hi, "nbins": nb})
+
+
+def load_hist(spark, path: str) -> tuple[DataFrame, dict]:
+    """(cells, params) from the live version, range re-pinned from the
+    sidecar onto the column metadata."""
+    return _STORE.load(spark, path)
 
 
 def append_hist_batch(
@@ -325,15 +305,9 @@ def append_hist_batch(
     ADD-merge is not replay-idempotent: at-least-once callers
     (foreachBatch) MUST pass ``batch_id`` — the sidecar keeps the
     high-water mark and an already-folded id is a no-op."""
-    old, p = load_hist(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    new = hist_build(
+    _STORE.fold(spark, path, lambda p: hist_build(
         batch, value_col, lo=p["lo"], hi=p["hi"], nbins=p["nbins"]
-    )
-    _hist_merge_and_flip(spark, old, new, p, path, batch_id)
+    ), batch_id=batch_id)
 
 
 def append_hist_cells(
@@ -345,36 +319,7 @@ def append_hist_cells(
     (round 13, guide §1.2).  Shape safety is unchanged: ``hist_merge``
     raises when the cells' pinned (lo, hi, nbins) differ from the
     store sidecar's."""
-    old, p = load_hist(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    _hist_merge_and_flip(spark, old, cells, p, path, batch_id)
-
-
-def _hist_merge_and_flip(
-    spark, old: DataFrame, new: DataFrame, p: dict, path: str,
-    batch_id: int | None,
-) -> None:
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
-
-    merged = hist_merge(old, new)
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    params = {"lo": p["lo"], "hi": p["hi"], "nbins": p["nbins"]}
-    if batch_id is not None:
-        params["last_batch_id"] = batch_id
-    elif p.get("last_batch_id") is not None:
-        params["last_batch_id"] = p["last_batch_id"]
-    write_sidecar(new_root, PARAMS_FILE, params)
-    commit_rewrite(path, cur, new_v)
+    _STORE.fold(spark, path, lambda _: cells, batch_id=batch_id)
 
 
 def probe_hist_quantiles(

@@ -50,7 +50,6 @@ this is net-new capability, same as the ANN family.
 from __future__ import annotations
 
 import hashlib
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,8 +60,12 @@ from ubw_spark.functions.text import tokens
 from ubw_spark.operators.dedup import portable_hash
 from ubw_spark.operators.versioned import (
     begin_rewrite,
+    check_append_schema,
     commit_rewrite,
     compact_partitioned_store,
+    link_carryover,
+    pin_schema,
+    read_pinned_parquet,
     read_sidecar,
     resolve_root,
     write_sidecar,
@@ -532,7 +535,7 @@ def write_term_index(
     from pyspark.sql import Observation
 
     obs = Observation()
-    cur, new_v, root = begin_rewrite(path)
+    new_v, root = begin_rewrite(path)
     posts = _bucketed_postings(
         df, id_col, text_col, buckets, stats_observation=obs,
         parallelism=parallelism,
@@ -543,12 +546,10 @@ def write_term_index(
         .partitionBy("tb")
         .parquet(root)
     )
-    from ubw_spark.operators.versioned import pin_schema
-
     pin_schema(root, posts.schema, ("tb",))
     st = obs.get  # {n_docs, total_tokens} observed during the write
     _write_stats(root, st["n_docs"], st["total_tokens"], buckets)
-    commit_rewrite(path, cur, new_v)
+    commit_rewrite(path, new_v)
 
 
 def append_term_batch(
@@ -580,8 +581,9 @@ def append_term_batch(
     (foreachBatch is at-least-once) MUST pass the framework's
     ``batch_id`` — the sidecar keeps the high-water mark and an
     already-folded id is a no-op BEFORE any write (the
-    append_cms_batch contract)."""
-    from ubw_spark.operators.versioned import link_carryover
+    append_cms_batch contract).  A batch whose read-back schema differs
+    from the pinned ``_SCHEMA`` is refused before any write."""
+    from pyspark.sql import Observation
 
     old_root = resolve_root(path)
     old = _read_stats_at(old_root, path)
@@ -589,7 +591,13 @@ def append_term_batch(
         last = old.get("last_batch_id")
         if last is not None and batch_id <= last:
             return  # replayed micro-batch: already folded in
-    cur, new_v, new_root = begin_rewrite(path)
+    obs = Observation()
+    posts = _bucketed_postings(
+        batch, id_col, text_col, old["buckets"], stats_observation=obs,
+        parallelism=parallelism,
+    )
+    check_append_schema(path, old_root, posts.schema, ("tb",))
+    new_v, new_root = begin_rewrite(path)
     # A crashed earlier attempt leaves a torn new_root that begin_rewrite
     # re-issues (the manifest never flipped): clear it, or carryover hits
     # its own leftover hardlinks and a retry would append the batch's
@@ -599,15 +607,8 @@ def append_term_batch(
 
     _shutil.rmtree(new_root, ignore_errors=True)
     link_carryover(old_root, new_root, skip_files=(STATS_FILE,))
-    from pyspark.sql import Observation
-
-    obs = Observation()
     (
-        _bucketed_postings(
-            batch, id_col, text_col, old["buckets"], stats_observation=obs,
-            parallelism=parallelism,
-        )
-        .repartition("tb")
+        posts.repartition("tb")
         .write.mode("append")
         .partitionBy("tb")
         .parquet(new_root)
@@ -623,7 +624,7 @@ def append_term_batch(
     elif old.get("last_batch_id") is not None:
         merged["last_batch_id"] = old["last_batch_id"]
     write_sidecar(new_root, STATS_FILE, merged)
-    commit_rewrite(path, cur, new_v)
+    commit_rewrite(path, new_v)
 
 
 def probe_term_index(
@@ -644,8 +645,6 @@ def probe_term_index(
     buckets of the index; the term ``isin`` predicate pushes into the
     parquet scan of those partitions.  The version root is resolved
     ONCE — stats and postings always come from the same version."""
-    from ubw_spark.operators.versioned import read_pinned_parquet
-
     qts = query_terms(query)
     root = resolve_root(path)
     stats = _read_stats_at(root, path)
@@ -703,8 +702,6 @@ def probe_term_index_batch(
     a (qid, term) count window would concentrate a hot term's postings
     in one task — the _score_topk skew rationale)."""
     from pyspark.sql import Window
-
-    from ubw_spark.operators.versioned import read_pinned_parquet
 
     root = resolve_root(path)
     stats = _read_stats_at(root, path)
@@ -779,17 +776,12 @@ def compact_term_index(
     versioned.py)."""
     old_root = resolve_root(path)
     old = _read_stats_at(old_root, path)
-    # Schema captured from the OLD version: the restat read below must
-    # pass it explicitly — a full retirement writes a version dir with
-    # zero part files, and a schema-INFERRING read of it throws before
-    # the commit, making "retire the last documents" (takedown/GDPR)
-    # permanently impossible.
-    from ubw_spark.operators.versioned import read_pinned_parquet
-
-    schema = read_pinned_parquet(spark, old_root).schema
 
     def restat(new_root: str) -> None:
-        kept = spark.read.schema(schema).parquet(new_root)
+        # the pinned read matters: a full retirement (takedown of the
+        # last documents) leaves zero part files, which a
+        # schema-INFERRING read would fail on before the commit
+        kept = read_pinned_parquet(spark, new_root)
         st = (
             kept.select(id_col, "dl")
             .distinct()
@@ -799,16 +791,6 @@ def compact_term_index(
             )
             .collect()[0]  # one row: two bigints
         )
-        if st["n"] == 0:
-            # leave one empty schema-bearing part file so later
-            # readers without an explicit schema (probes) still
-            # resolve the store instead of failing schema inference
-            import pyarrow.parquet as papq
-
-            papq.write_table(
-                spark.createDataFrame([], schema).toArrow(),
-                os.path.join(new_root, "part-empty.parquet"),
-            )
         _write_stats(
             new_root,
             st["n"],

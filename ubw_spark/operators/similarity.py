@@ -124,7 +124,15 @@ def hyperplane_bucket_array(
     trips at PLAN BUILD time (measured ~6 s for 16×4×64), while one
     F.expr per table parses in milliseconds to the IDENTICAL Catalyst
     tree (same zip_with → aggregate fold, same cast, same fold order →
-    same values)."""
+    same values).
+
+    ``bits`` must be <= 31: the bucket accumulates ``shiftleft(1, j)``
+    into an int, which overflows at bit 31."""
+    if bits > 31:
+        raise ValueError(
+            f"hyperplane_bucket_array: bits={bits} > 31 — the bucket id "
+            "is a 32-bit int accumulator"
+        )
     df = df.withColumn(
         vec_col,
         F.when(

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.dedup import portable_hash
+from ubw_spark.operators.versioned import MergeStore
 
 
 def _cell_bucket(item_col: Column, i: int, width: int) -> Column:
@@ -185,72 +186,44 @@ def cms_estimate(
 
 
 # ---------------------------------------------------------------------------
-# Persisted sketch store: the versioned-manifest lifecycle (7th store).
-# The sketch is bounded at depth*width cells, so every lifecycle step —
-# write, add-merge append, probe load — moves sketch-sized data only;
-# the corpus is touched once per batch, to BUILD that batch's sketch.
+# Persisted sketch store (versioned.MergeStore).  The sketch is bounded
+# at depth*width cells, so every lifecycle step moves sketch-sized data
+# only; the corpus is touched once per batch, to BUILD its sketch.
 
 PARAMS_FILE = "_CMS_PARAMS"
 
-
-def read_cms_params(path: str) -> dict:
-    """(width, depth[, last_batch_id]) of the LIVE store version;
-    raises if the sidecar is missing (the bloom-store rule).  For
-    sidecar + data reads use :func:`load_cms`, which resolves the
-    version root ONCE for both."""
-    from ubw_spark.operators.versioned import read_sidecar, resolve_root
-
-    return read_sidecar(resolve_root(path), PARAMS_FILE, "cms")
-
-
-def write_cms_store(sketch: DataFrame, path: str) -> None:
-    """Persist a sketch as a versioned store: cells parquet + shape
-    sidecar into a fresh version dir, then flip ``_CURRENT`` (previous
-    version grace-kept — operators/versioned.py).  ≤ depth*width rows
-    of three numbers: one coalesced file, one footer to read back."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        write_sidecar,
-    )
-
-    w, d = _check_shape(sketch, "write_cms_store")
-    cur, new_v, new_root = begin_rewrite(path)
-    sketch.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(new_root, sketch.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"width": w, "depth": d})
-    commit_rewrite(path, cur, new_v)
-
-
-def load_cms(spark, path: str) -> tuple[DataFrame, dict]:
-    """(sketch, params) from the live store version.  The root is
-    resolved ONCE and sidecar + cells read from that same root — two
-    independent resolves could straddle a concurrent rewrite and pin
-    one version's shape onto another's cells (a silent-undercount
-    combination the shape guard cannot catch).  The shape is re-pinned
-    from the sidecar (the authority) onto the ``cnt`` metadata, so a
-    store whose files were produced elsewhere still carries the
-    guard."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
-
-    root = resolve_root(path)
-    p = read_sidecar(root, PARAMS_FILE, "cms")
-    df = read_pinned_parquet(spark, root)
-    sk = df.select(
+_STORE = MergeStore(
+    PARAMS_FILE,
+    "cms",
+    cms_merge,
+    repin=lambda df, p: df.select(
         "i",
         "bucket",
         F.col("cnt").alias(
             "cnt",
             metadata={"cms_width": p["width"], "cms_depth": p["depth"]},
         ),
-    )
-    return sk, p
+    ),
+)
+
+
+def read_cms_params(path: str) -> dict:
+    """(width, depth[, last_batch_id]) of the LIVE store version;
+    raises if the sidecar is missing."""
+    return _STORE.params(path)
+
+
+def write_cms_store(sketch: DataFrame, path: str) -> None:
+    """Persist a sketch (≤ depth*width cells) + its shape sidecar as
+    a new store version."""
+    w, d = _check_shape(sketch, "write_cms_store")
+    _STORE.write(sketch, path, {"width": w, "depth": d})
+
+
+def load_cms(spark, path: str) -> tuple[DataFrame, dict]:
+    """(sketch, params) from the live store version, the shape
+    re-pinned from the sidecar onto the ``cnt`` metadata."""
+    return _STORE.load(spark, path)
 
 
 def append_cms_batch(
@@ -273,16 +246,10 @@ def append_cms_batch(
     callers (foreachBatch is at-least-once) MUST pass the framework's
     ``batch_id`` — the sidecar records the high-water mark and an
     already-folded id becomes a no-op on replay."""
-    old, p = load_cms(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    new = cms_build(
+    _STORE.fold(spark, path, lambda p: cms_build(
         batch, item_col,
         width=p["width"], depth=p["depth"], weight_col=weight_col,
-    )
-    _cms_merge_and_flip(spark, old, new, p, path, batch_id)
+    ), batch_id=batch_id)
 
 
 def append_cms_cells(
@@ -296,36 +263,7 @@ def append_cms_cells(
     raises when the cells' pinned (width, depth) differ from the store
     sidecar's.  The batch_id replay contract is the caller's to honour
     exactly as with raw batches."""
-    old, p = load_cms(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    _cms_merge_and_flip(spark, old, cells, p, path, batch_id)
-
-
-def _cms_merge_and_flip(
-    spark, old: DataFrame, new: DataFrame, p: dict, path: str,
-    batch_id: int | None,
-) -> None:
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
-
-    merged = cms_merge(old, new)
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    params = {"width": p["width"], "depth": p["depth"]}
-    if batch_id is not None:
-        params["last_batch_id"] = batch_id
-    elif p.get("last_batch_id") is not None:
-        params["last_batch_id"] = p["last_batch_id"]
-    write_sidecar(new_root, PARAMS_FILE, params)
-    commit_rewrite(path, cur, new_v)
+    _STORE.fold(spark, path, lambda _: cells, batch_id=batch_id)
 
 
 def probe_cms_store(

@@ -76,16 +76,20 @@ def _should_widen(df: DataFrame, parallelism: int) -> bool:
     bytes; filters pass it through) — which is every call site in this
     repo.  A non-file source whose stats understate the data (e.g. a
     Range projected into long strings) would skip widening; callers
-    with such inputs should pre-repartition themselves."""
+    with such inputs should pre-repartition themselves.
+
+    Both probes are private or classic-only APIs (``_jdf``, ``.rdd`` —
+    neither exists on Spark Connect): when either fails, widen, the
+    conservative pre-round-14 behavior."""
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
         if size < _WIDEN_MIN_BYTES:
             return False
+        return df.rdd.getNumPartitions() * 4 < parallelism
     except Exception:
-        pass  # no estimate: assume large (pre-round-14 behavior)
-    return df.rdd.getNumPartitions() * 4 < parallelism
+        return True
 
 
 def token_gram_table(

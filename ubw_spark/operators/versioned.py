@@ -20,24 +20,30 @@ query so a mid-query flip cannot split a plan across versions.
 
 A manifest that exists but does not parse RAISES: falling back to an
 older layout on corruption would silently serve stale data (documents
-compacted out would resurface) — absent-manifest and corrupt-manifest
-are different conditions, and only the first means "legacy flat
-layout".
+compacted out would resurface).  An absent manifest means "not a
+store (yet)": the path resolves to itself, and the store's sidecar or
+``_SCHEMA`` check then refuses it by name.
+
+The six bounded-state merge stores share one lifecycle,
+:class:`MergeStore`; the file-additive stores (LSH bands, IVF cells,
+IVFPQ codes, term index) use the primitives below directly.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import posixpath
 import re
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 #: Manifest file at the store root naming the live version directory.
 MANIFEST = "_CURRENT"
 #: {5,} not {5}: version_dir's {:05d} is a MINIMUM width — v100000 is
-#: six digits, and a five-digit-only match would make the legacy sweep
-#: delete the live version dir the moment a long-lived store passes
-#: v99999.
+#: six digits, and a five-digit-only match would leave every version
+#: past v99999 out of GC and the store stats.
 _VDIR_RE = re.compile(r"^v(\d{5,})$")
 
 
@@ -47,7 +53,7 @@ def version_dir(path: str, version: int) -> str:
 
 def current_version(path: str) -> int | None:
     """The live version number from ``path/_CURRENT``, or None when the
-    store has no manifest (legacy flat layout, or not written yet)."""
+    path has no manifest (not written yet, or not a store)."""
     try:
         with open(posixpath.join(path, MANIFEST)) as f:
             raw = f.read().strip()
@@ -65,7 +71,8 @@ def current_version(path: str) -> int | None:
 
 def resolve_root(path: str) -> str:
     """Directory holding the live store: the manifest's version dir, or
-    ``path`` itself for a pre-manifest flat layout (still readable)."""
+    ``path`` itself when there is no manifest — a non-store directory,
+    which the caller's sidecar or ``_SCHEMA`` read then refuses."""
     v = current_version(path)
     return path if v is None else version_dir(path, v)
 
@@ -90,40 +97,20 @@ def gc_versions(path: str, keep_from: int) -> None:
             shutil.rmtree(posixpath.join(path, name))
 
 
-def begin_rewrite(path: str) -> tuple[int | None, int, str]:
-    """(current_version, new_version, new_root) for a rewrite cycle —
-    the caller writes the new root COMPLETELY, then calls
-    :func:`commit_rewrite`."""
+def begin_rewrite(path: str) -> tuple[int, str]:
+    """(new_version, new_root) for a rewrite cycle — the caller writes
+    the new root COMPLETELY, then calls :func:`commit_rewrite`."""
     cur = current_version(path)
     new_v = 0 if cur is None else cur + 1
-    return cur, new_v, version_dir(path, new_v)
+    return new_v, version_dir(path, new_v)
 
 
-def commit_rewrite(
-    path: str,
-    cur: int | None,
-    new_v: int,
-    *,
-    legacy_names: tuple[str, ...] = (),
-    legacy_prefixes: tuple[str, ...] = (),
-) -> None:
-    """Flip the manifest to ``new_v``, GC versions past grace, and —
-    once a versioned copy has existed for a full cycle — remove the
-    NAMED pre-manifest flat stores left at the root by older releases
-    (``legacy_names`` exact dir names, ``legacy_prefixes`` dir-name
-    prefixes like ``ivf_cell=``).  Only what the caller names is ever
-    deleted: the store root may legitimately hold user co-located
-    directories (backups, checkpoints) that a blanket
-    everything-but-vNNNNN sweep would silently destroy."""
+def commit_rewrite(path: str, new_v: int) -> None:
+    """Flip the manifest to ``new_v`` and GC versions past grace.  Only
+    ``vNNNNN`` dirs are ever deleted: the store root may legitimately
+    hold user co-located directories (backups, checkpoints)."""
     write_manifest(path, new_v)
     gc_versions(path, new_v - 1)
-    if cur is not None and (legacy_names or legacy_prefixes):
-        for name in os.listdir(path):
-            p = posixpath.join(path, name)
-            if not os.path.isdir(p) or _VDIR_RE.match(name):
-                continue
-            if name in legacy_names or name.startswith(legacy_prefixes):
-                shutil.rmtree(p)
 
 
 def link_carryover(
@@ -146,16 +133,13 @@ def link_carryover(
     (cross-device).
 
     ``skip_files``: exact file names NOT carried over (sidecars the
-    caller rewrites).  Version dirs, ``_CURRENT`` and ``*.tmp`` under
-    ``src_root`` are always skipped — they only appear when the source
-    is a legacy flat root (src == store path)."""
-    for root, dirs, files in os.walk(src_root):
-        dirs[:] = [d for d in dirs if not _VDIR_RE.match(d)]
+    caller rewrites)."""
+    for root, _dirs, files in os.walk(src_root):
         rel = os.path.relpath(root, src_root)
         out = dst_root if rel == "." else posixpath.join(dst_root, rel)
         os.makedirs(out, exist_ok=True)
         for f in files:
-            if f == MANIFEST or f.endswith(".tmp") or f in skip_files:
+            if f in skip_files:
                 continue
             src = os.path.join(root, f)
             dst = posixpath.join(out, f)
@@ -173,7 +157,6 @@ def compact_partitioned_store(
     partition_col: str,
     *,
     broadcast_drops: bool = True,
-    legacy_prefixes: tuple[str, ...] = (),
     pre_commit=None,
 ) -> None:
     """The shared compaction body for partitionBy-laid-out stores (IVF
@@ -197,7 +180,7 @@ def compact_partitioned_store(
     kept = read_pinned_parquet(spark, old_root).join(
         maybe_bc(drops), id_col, "left_anti"
     )
-    cur, new_v, new_root = begin_rewrite(path)
+    new_v, new_root = begin_rewrite(path)
     (
         kept.repartition(partition_col)
         .write.mode("overwrite")
@@ -207,24 +190,19 @@ def compact_partitioned_store(
     pin_schema(new_root, kept.schema, (partition_col,))
     if pre_commit is not None:
         pre_commit(new_root)
-    commit_rewrite(path, cur, new_v, legacy_prefixes=legacy_prefixes)
+    commit_rewrite(path, new_v)
 
 
 def store_stats(path: str) -> dict:
     """Maintenance report for a versioned store, from FS METADATA only
-    (no data read — the footer_bounds discipline): the live version,
-    every version dir's file count and byte size, and whether legacy
-    flat stores remain at the root.  What an OPTIMIZE/GC scheduler
-    consults to decide when a rewrite pays for itself."""
+    (no data read — the footer_bounds discipline): the live version and
+    every version dir's file count and byte size.  What an OPTIMIZE/GC
+    scheduler consults to decide when a rewrite pays for itself."""
     versions: dict[int, dict] = {}
-    legacy: list[str] = []
     for name in sorted(os.listdir(path)):
         p = posixpath.join(path, name)
-        if not os.path.isdir(p):
-            continue
         m = _VDIR_RE.match(name)
-        if not m:
-            legacy.append(name)
+        if not m or not os.path.isdir(p):
             continue
         files = n_bytes = 0
         for root, _dirs, fnames in os.walk(p):
@@ -233,11 +211,7 @@ def store_stats(path: str) -> dict:
                     files += 1
                     n_bytes += os.path.getsize(os.path.join(root, f))
         versions[int(m.group(1))] = {"files": files, "bytes": n_bytes}
-    return {
-        "current": current_version(path),
-        "versions": versions,
-        "legacy_dirs": legacy,
-    }
+    return {"current": current_version(path), "versions": versions}
 
 
 #: Read-back schema sidecar written next to a store's data files.
@@ -288,9 +262,6 @@ def pin_schema(
     :func:`read_pinned_parquet` can skip footer inference.  Call AFTER
     the data write with the schema of the frame that was written (and
     the ``partitionBy`` columns, if any)."""
-    import json
-    import os
-
     os.makedirs(data_dir, exist_ok=True)
     schema = readback_schema(written_schema, partition_cols)
     tmp = posixpath.join(data_dir, SCHEMA_FILE + ".tmp")
@@ -300,30 +271,52 @@ def pin_schema(
 
 
 def read_pinned_parquet(spark, data_dir: str):
-    """``spark.read.parquet(data_dir)`` minus the schema-inference job
-    when the writer pinned a ``_SCHEMA`` sidecar (guide §6 — predicate
-    pushdown, partition discovery and pruning are unchanged; only the
-    footer-read inference pass is skipped).  Stores written before
-    pinning existed fall back to plain inference, so this is always
-    safe to call on a store directory."""
-    import json
+    """``spark.read.parquet(data_dir)`` minus the schema-inference job,
+    using the ``_SCHEMA`` sidecar every store writer pins (guide §6 —
+    predicate pushdown, partition discovery and pruning are unchanged;
+    only the footer-read inference pass is skipped)."""
+    return spark.read.schema(pinned_schema(data_dir)).parquet(data_dir)
 
+
+def pinned_schema(data_dir: str):
+    """The ``_SCHEMA`` pin at ``data_dir``; raises, naming the dir,
+    when it is missing — that is not a store written here."""
     from pyspark.sql import types as T
 
     try:
         with open(posixpath.join(data_dir, SCHEMA_FILE)) as f:
-            schema = T.StructType.fromJson(json.load(f))
+            return T.StructType.fromJson(json.load(f))
     except FileNotFoundError:
-        return spark.read.parquet(data_dir)
-    return spark.read.schema(schema).parquet(data_dir)
+        raise ValueError(
+            f"store data dir {data_dir} has no {SCHEMA_FILE} pin — not a "
+            "store written by this package; refusing to infer its schema"
+        ) from None
+
+
+def check_append_schema(
+    path: str, data_dir: str, written_schema, partition_cols=()
+) -> None:
+    """Refuse an append into ``data_dir`` that writes a column the pin
+    lacks or with another type: appended files are read with the pinned
+    schema, so an extra column would vanish and a retyped one (an
+    ``int`` id into a ``bigint`` store) be misread.  A batch may omit
+    pinned columns — those read back NULL for its rows.  Nullability is
+    not compared: every file column reads back nullable."""
+    pinned = pinned_schema(data_dir)
+    types = {f.name: f.dataType.simpleString() for f in pinned}
+    got = readback_schema(written_schema, partition_cols)
+    if any(types.get(f.name) != f.dataType.simpleString() for f in got):
+        raise ValueError(
+            f"append to store {path} refused: the batch's read-back "
+            f"schema differs from the {SCHEMA_FILE} pinned at {data_dir}"
+            f"\n  pinned: {pinned.simpleString()}"
+            f"\n  batch:  {got.simpleString()}"
+        )
 
 
 def write_sidecar(root: str, filename: str, params: dict) -> None:
     """JSON params sidecar inside an ALREADY-RESOLVED version root —
     the shared writer every store's shape/stats pin goes through."""
-    import json
-    import os
-
     os.makedirs(root, exist_ok=True)
     with open(posixpath.join(root, filename), "w") as f:
         json.dump(params, f)
@@ -336,8 +329,6 @@ def read_sidecar(root: str, filename: str, kind: str) -> dict:
     (the store could flip versions between the two resolves).  Raises
     with the store ``kind`` in the message when missing: probing with
     guessed params is the silent-zero/undercount failure."""
-    import json
-
     p = posixpath.join(root, filename)
     try:
         with open(p) as f:
@@ -349,33 +340,60 @@ def read_sidecar(root: str, filename: str, kind: str) -> dict:
         ) from None
 
 
-def bless_sidecar(path: str, filename: str, params: dict, kind: str) -> None:
-    """One-shot migration for stores written BEFORE params pinning
-    existed: writes the params sidecar into the store's CURRENT version
-    root from caller-supplied params, so probe/append/compact stop
-    refusing a legacy store without forcing a full rebuild.
+@dataclass(frozen=True)
+class MergeStore:
+    """The lifecycle of the bounded-state MERGE stores (count-min,
+    HLL, quantile histogram, Bloom, PCA moments, incremental agg): the
+    whole state is one small frame, so every append rewrites
+    merge(live, batch) in full — one coalesced parquet file, its
+    ``_SCHEMA`` pin and the params sidecar in a fresh version dir —
+    then flips the manifest ONCE.  A crash before the flip leaves the
+    live version byte-identical.
 
-    One refusal keeps this from becoming a footgun: an EXISTING pin is
-    never overwritten (silently drifting a live pin is exactly the
-    mis-score failure the sidecars exist to prevent — rebuild instead).
-    Unversioned paths (no ``_CURRENT`` manifest) are accepted on
-    purpose: the pre-manifest FLAT layout is precisely what a legacy
-    store looks like, and resolve_root writes the pin into the flat dir
-    itself, where flat-layout readers will find it.  The caller owns
-    BOTH claims — that the path really is a store, and that ``params``
-    match what it was built with; bless an empty dir or guessed params
-    and every probe inherits the lie."""
-    import json
-    import os
+    An instance holds only per-store constants: the ``sidecar`` file
+    name, the store ``kind`` for error messages, the
+    ``merge(old, new, **merge_args)`` kernel, and an optional
+    ``repin(df, params)`` that re-attaches the sidecar params (the
+    authority) as column metadata on load."""
 
-    root = resolve_root(path)
-    p = posixpath.join(root, filename)
-    if os.path.exists(p):
-        with open(p) as f:
-            stored = json.load(f)
-        raise ValueError(
-            f"{kind} store at {path} already has a {filename} pin "
-            f"({stored!r}) — bless_sidecar only migrates UNpinned "
-            "legacy stores; rebuild the index to change params"
-        )
-    write_sidecar(root, filename, params)
+    sidecar: str
+    kind: str
+    merge: Callable
+    repin: Callable | None = None
+
+    def params(self, path: str) -> dict:
+        """Sidecar of the live version (use :meth:`load` for data)."""
+        return read_sidecar(resolve_root(path), self.sidecar, self.kind)
+
+    def write(self, frame, path: str, params: dict) -> None:
+        new_v, root = begin_rewrite(path)
+        frame.coalesce(1).write.mode("overwrite").parquet(root)
+        pin_schema(root, frame.schema)
+        write_sidecar(root, self.sidecar, params)
+        commit_rewrite(path, new_v)
+
+    def load(self, spark, path: str):
+        """(state, params), both from ONE manifest resolve: two resolves
+        could straddle a rewrite and pair one version's params with
+        another's data, which no shape guard catches."""
+        root = resolve_root(path)
+        params = read_sidecar(root, self.sidecar, self.kind)
+        df = read_pinned_parquet(spark, root)
+        return (df if self.repin is None else self.repin(df, params)), params
+
+    def fold(self, spark, path: str, build, *, batch_id=None, **merge_args):
+        """Merge ``build(params)`` — the batch's state under the stored
+        params — into the live state and write the next version.  A
+        ``batch_id`` at or below the sidecar's ``last_batch_id`` is a
+        no-op before any write (at-least-once replay); a folded one
+        becomes the new mark, and without one the mark carries."""
+        old, params = self.load(spark, path)
+        last = params.get("last_batch_id")
+        if batch_id is not None and last is not None and batch_id <= last:
+            return  # replayed micro-batch: already folded in
+        merged = self.merge(old, build(params), **merge_args)
+        out = {k: v for k, v in params.items() if k != "last_batch_id"}
+        mark = last if batch_id is None else batch_id
+        if mark is not None:
+            out["last_batch_id"] = mark
+        self.write(merged, path, out)
