@@ -80,10 +80,7 @@ def curate(
 
     d = stage("02_exact_dedup", exact_dedup(d, "doc_id", "text"))
 
-    pairs = minhash_dedup_pairs(
-        d, "doc_id", "text", k=3, threshold=jaccard,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    pairs = minhash_dedup_pairs(d, "doc_id", "text", k=3, threshold=jaccard)
     d = stage("03_near_dedup", dedup_keep_list(d, pairs, "doc_id"))
 
     # Docs whose every token was cut (a strict subset of an earlier doc
@@ -112,17 +109,15 @@ def curate(
         # doc sharing NO 3-gram cannot reach Jaccard >= threshold.
         from ubw_spark.operators.bloom import bloom_probe, build_bloom
 
-        par = spark.sparkContext.defaultParallelism
         bloom = build_bloom(evalset, "text", n=3)
         suspects = (
-            bloom_probe(d, "doc_id", "text", bloom, n=3, parallelism=par)
+            bloom_probe(d, "doc_id", "text", bloom, n=3)
             .where(F.col("hit_grams") > 0)
             .select("doc_id")
         )
         contaminated = minhash_contamination_pairs(
             d.join(suspects, "doc_id", "left_semi"),
             evalset, "doc_id", "text", k=3, threshold=jaccard,
-            parallelism=par,
         ).select(F.col("corpus_id").alias("doc_id")).distinct()
         d = stage("05_decontam", d.join(contaminated, "doc_id", "left_anti"))
 

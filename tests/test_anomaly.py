@@ -113,3 +113,23 @@ def test_rolling_trend_null_values_mask_their_x(spark):
     # points (0,0),(1,10),(3,30),(4,40) lie exactly on y = 10x
     assert out[4]["n_ctx"] == 4
     assert out[4]["slope"] == pytest.approx(10.0)
+
+
+def test_rolling_zscore_single_window_pinned_exchange(spark):
+    from ubw_spark.operators.anomaly import rolling_zscore
+
+    df = spark.range(100).select(
+        (F.col("id") % 5).alias("k"),
+        F.col("id").alias("t"),
+        (F.col("id") % 17).alias("v"),
+    )
+    out = rolling_zscore(df, ["k"], ["t"], "v", window=4, min_periods=2)
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    # all three sufficient statistics ride ONE Window operator
+    assert plan.count("Window (") == 1, plan
+    # the key exchange is user-pinned (AQE must not coalesce it away)
+    assert "REPARTITION_BY_NUM" in plan, plan

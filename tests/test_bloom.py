@@ -88,9 +88,10 @@ def test_build_rejects_unaligned_m(spark, corpora):
 
 
 def test_probe_plan_is_shuffle_free(spark, corpora):
-    """The at-scale posture: with parallelism=None the probe side has NO
-    Exchange — the corpus streams map-only through the broadcast
-    nested-loop join against the one-row packed filter.  (The build side
+    """The at-scale posture: a corpus that already has enough splits is
+    not widened, so the probe side has NO Exchange — the corpus streams
+    map-only through the broadcast nested-loop join against the one-row
+    packed filter.  (The build side
     below the broadcast keeps its own bounded exchanges.)"""
     bench, corpus = corpora
     bloom = build_bloom(bench, "text")

@@ -135,3 +135,22 @@ def test_store_lifecycle_replay_safe(spark, bigrams, tmp_path):
     grouped = hll_build(bigrams, "bigram", p=10, group_cols=["lang"])
     with pytest.raises(ValueError, match="must be ungrouped"):
         write_hll_store(grouped, str(tmp_path / "hll_bad"))
+
+
+def test_hll_rho_expr_matches_definition(spark):
+    import hashlib
+
+    from ubw_spark.operators.hll import hll_rho
+
+    items = ["a", "b", "hello world", "", "7", "zzz"]
+    df = spark.createDataFrame([(s,) for s in items], "item string")
+    got = {
+        r["item"]: r["rho"]
+        for r in df.select(
+            "item", hll_rho(F.col("item")).alias("rho")
+        ).collect()
+    }
+    for s in items:
+        w = int(hashlib.md5(f"hll:r:{s}".encode()).hexdigest()[:8], 16)
+        expected = 1 + sum(1 for j in range(1, 33) if w < (1 << (32 - j)))
+        assert got[s] == expected, (s, w)

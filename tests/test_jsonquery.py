@@ -1,6 +1,8 @@
 """JSON-driven query compiler tests: happy path, error accumulation,
 injection safety."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1068,3 +1070,54 @@ def test_unknown_how_does_not_cascade_scope_errors(spark, tables):
     msg = str(ei.value)
     assert "unknown how 'lefty'" in msg
     assert "not in scope" not in msg
+
+
+def test_literal_frame_matches_createdataframe_values(spark):
+    from ubw_spark.functions.literals import literal_frame
+
+    schema = (
+        "a bigint, b int, c double, d string, e boolean, "
+        "f timestamp, g date, h array<double>, i float"
+    )
+    rows = [
+        (
+            1, 2, 0.1, "plain", True,
+            datetime.datetime(2024, 5, 5, 6, 7, 8),
+            datetime.date(2024, 5, 5), [1.5, -2.25], 0.5,
+        ),
+        (
+            -9, None, 1e-05, "quo'te\\back\nline", False,
+            datetime.datetime(2031, 1, 2, 3, 4, 5),
+            datetime.date(2031, 1, 2), [], None,
+        ),
+        (None, 0, None, None, None, None, None, None, 3.25),
+    ]
+    fast = literal_frame(spark, rows, schema)
+    slow = spark.createDataFrame(rows, schema)
+    assert fast.schema == slow.schema
+    assert sorted(map(repr, fast.collect())) == sorted(
+        map(repr, slow.collect())
+    )
+
+
+def test_literal_frame_plans_without_python_scan(spark):
+    from ubw_spark.functions.literals import literal_frame
+    from ubw_spark.plans import formatted_plan
+
+    df = literal_frame(spark, [(1, "x")], "k bigint, v string")
+    plan = formatted_plan(df)
+    assert "BatchEvalPython" not in plan
+    assert "Scan ExistingRDD" not in plan
+
+
+def test_literal_frame_falls_back_for_unsupported(spark):
+    from ubw_spark.functions.literals import literal_frame
+
+    # map type has no literal rendering → createDataFrame fallback
+    df = literal_frame(
+        spark, [({"a": 1},)], "m map<string,int>"
+    )
+    assert df.collect()[0]["m"] == {"a": 1}
+    # empty rows keep the schema
+    empty = literal_frame(spark, [], "k bigint")
+    assert empty.count() == 0 and empty.columns == ["k"]

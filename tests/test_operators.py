@@ -2051,3 +2051,161 @@ def test_sim_recall_matrix_covers_all_variants(spark, sf_dir):
         rows[("ivfpq", 4)]["recall_milli"]
         <= rows[("ivf", 4)]["recall_milli"]
     )
+
+
+def test_minhash_signature_expr_matches_python(spark):
+    import hashlib
+
+    from ubw_spark.operators.dedup import (
+        MERSENNE_P,
+        _hash_params,
+        minhash_signature,
+        portable_hash,
+    )
+
+    df = spark.createDataFrame(
+        [(["x y z", "y z w"],), (["solo gram here"],)], "sh array<string>"
+    )
+    hashed = df.select(
+        F.transform("sh", portable_hash).alias("__hv"), "sh"
+    )
+    rows = hashed.select(
+        minhash_signature("__hv", 8).alias("sig"), "sh"
+    ).collect()
+    for r in rows:
+        hvs = [
+            int(hashlib.md5(g.encode()).hexdigest()[:8], 16)
+            for g in r["sh"]
+        ]
+        for i in range(8):
+            a, b = _hash_params(i)
+            assert r["sig"][i] == min((a * h + b) % MERSENNE_P for h in hvs)
+
+
+def test_minhash_agreement_expr_counts(spark):
+    from ubw_spark.operators.dedup import minhash_agreement
+
+    df = spark.createDataFrame(
+        [([1, 2, 3, 4], [1, 9, 3, 7])], "a array<bigint>, b array<bigint>"
+    )
+    n = df.select(
+        minhash_agreement(F.col("a"), F.col("b"), 4).alias("n")
+    ).collect()[0]["n"]
+    assert n == 2
+
+
+def test_minhash_pairs_materialized_equals_unmaterialized(spark, sf_dir):
+    from ubw_spark.operators.dedup import minhash_dedup_pairs
+
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    kw = dict(k=3, num_hashes=64, bands=32, rows_per_band=2, threshold=0.4)
+    mat = sorted(
+        map(tuple, minhash_dedup_pairs(d, "doc_id", "text", **kw).collect())
+    )
+    unmat = sorted(
+        map(
+            tuple,
+            minhash_dedup_pairs(
+                d, "doc_id", "text", checkpoint=None, **kw
+            ).collect(),
+        )
+    )
+    assert mat == unmat and len(mat) > 0
+
+
+def test_lsh_index_parallel_writes_complete_store(spark, tmp_path):
+    """write_minhash_index submits its three store writes from a thread
+    pool; the committed version must still hold all three stores plus
+    both sidecars, and the manifest must flip only after all landed."""
+    import os
+
+    from ubw_spark.operators.lsh_index import write_minhash_index
+    from ubw_spark.operators.versioned import SCHEMA_FILE, resolve_root
+
+    docs = spark.range(24).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("alpha beta gamma delta epsilon token"),
+            (F.col("id") % 4).cast("string"),
+        ).alias("text"),
+    )
+    path = str(tmp_path / "lsh_par")
+    write_minhash_index(docs, "doc_id", "text", path)
+    root = resolve_root(path)
+    for sub in ("bands", "docs", "sigs"):
+        d = os.path.join(root, sub)
+        assert os.path.isdir(d), f"missing store {sub}"
+        assert os.path.exists(os.path.join(d, SCHEMA_FILE))
+        assert any(f.endswith(".parquet") for _r, _d, fs in os.walk(d)
+                   for f in fs)
+    assert os.path.exists(os.path.join(root, "_LSH_PARAMS"))
+
+
+# ---------------------------------------------------------------------------
+# dedup.widen: the one compute-widening rule
+
+
+def _round_robins(df) -> int:
+    from ubw_spark.plans.inspect import simple_plan
+
+    return simple_plan(df).count("RoundRobinPartitioning")
+
+
+def _text_file(spark, path, files):
+    spark.range(20_000).selectExpr(
+        "id AS doc_id", "concat('token ', id, ' tail') AS text"
+    ).repartition(files).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_widen_keeps_tiny_in_memory_frame(spark):
+    from ubw_spark.operators.dedup import widen
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
+    assert _round_robins(widen(df)) == 0
+
+
+def test_widen_spreads_one_split_file_above_the_floor(spark, tmp_path):
+    from ubw_spark.operators.dedup import widen
+    from ubw_spark.plans.inspect import simple_plan
+
+    df = _text_file(spark, str(tmp_path / "one"), 1)
+    assert df.rdd.getNumPartitions() == 1
+    plan = df._jdf.queryExecution().optimizedPlan()
+    size = int(plan.stats().sizeInBytes())
+    par = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({par})" in simple_plan(
+        widen(df, min_bytes=size)
+    )
+    assert _round_robins(widen(df, min_bytes=size + 1)) == 0
+
+
+def test_widen_keeps_input_that_already_has_enough_splits(spark, tmp_path):
+    from ubw_spark.operators.dedup import widen
+
+    par = spark.sparkContext.defaultParallelism
+    df = _text_file(spark, str(tmp_path / "wide"), par)
+    assert df.rdd.getNumPartitions() >= par
+    assert _round_robins(widen(df)) == 0
+
+
+def test_widen_falls_back_to_widening_when_probes_raise(spark):
+    """The probes go through private JVM APIs: a frame whose size and
+    split probes raise must widen, not fail the map stage's build."""
+    from ubw_spark.operators.dedup import widen
+
+    df = spark.range(1_000_000)  # already session-wide, if it were probed
+
+    class Unprobeable:
+        sparkSession = df.sparkSession
+        repartition = df.repartition
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("no JVM plan on this backend")
+
+        @property
+        def rdd(self):
+            raise RuntimeError("no RDD API on this backend")
+
+    assert _round_robins(widen(Unprobeable())) == 1

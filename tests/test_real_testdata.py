@@ -9,6 +9,7 @@ choke-point the driver path uses (registry.table), so a future
 encoding change fails here in seconds.
 """
 
+import datetime
 import os
 
 import pytest
@@ -80,5 +81,48 @@ def test_events_ntz_cast_requires_utc_session(spark):
         for good in ("UTC", "Etc/UTC", "GMT"):
             spark.conf.set("spark.sql.session.timeZone", good)
             assert table(spark, SF_DIR, "events").limit(1).count() == 1
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_table_memo_returns_same_plan_per_key(spark, tmp_path):
+    from ubw_spark.queries.registry import table
+
+    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
+    for p in (p1, p2):
+        spark.range(3).toDF("k").write.parquet(f"{p}/t.parquet")
+    d1 = table(spark, p1, "t")
+    assert table(spark, p1, "t") is d1  # memo hit: identical object
+    assert table(spark, p2, "t") is not d1  # different dir, own plan
+    # the memo holds a PLAN, not results: actions still read the files
+    assert d1.count() == 3
+
+
+def test_table_memo_utc_guard_fires_on_hits(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ubw_spark.queries.registry import table
+
+    # an NTZ-encoded events table (timestamp[us], no timezone)
+    tbl = pa.table(
+        {
+            "event_id": pa.array([1], pa.int64()),
+            "ts": pa.array(
+                [datetime.datetime(2024, 1, 1, 12, 0, 0)],
+                pa.timestamp("us"),
+            ),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "events.parquet"))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        df = table(spark, str(tmp_path), "events")
+        assert table(spark, str(tmp_path), "events") is df  # memoized
+        # a later zone change must fail the HIT, not serve the plan
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        with pytest.raises(AssertionError, match="UTC"):
+            table(spark, str(tmp_path), "events")
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)

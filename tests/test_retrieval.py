@@ -364,3 +364,62 @@ def test_append_recovers_from_torn_version_dir(spark, docs_df, tmp_path):
     got = sorted(probe_term_index(spark, path, q, k=10).collect())
     want = sorted(bm25_topk(docs_df, "doc_id", "text", q, k=10).collect())
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_doc_postings_observation_matches_corpus_stats(spark):
+    from pyspark.sql import Observation
+
+    from ubw_spark.operators.retrieval import _corpus_stats, doc_postings
+
+    # includes a whitespace-only doc (trims to "" which the shared
+    # tokenizer splits to [""] — ONE empty token, counted in stats)
+    # and a NULL-text doc (excluded everywhere)
+    df = spark.createDataFrame(
+        [(1, "alpha beta beta"), (2, "   "), (3, None), (4, "gamma")],
+        "doc_id bigint, text string",
+    )
+    obs = Observation()
+    postings = doc_postings(df, "doc_id", "text", stats_observation=obs)
+    postings.write.format("noop").mode("overwrite").save()
+    got = obs.get
+    want = _corpus_stats(df, "text").collect()[0]
+    assert got["n_docs"] == want["n_docs"] == 3
+    assert got["total_tokens"] == want["total_tokens"] == 5
+
+
+def test_doc_postings_local_matches_exploded_form(spark):
+    from ubw_spark.operators.retrieval import doc_postings, doc_postings_local
+
+    rows = [
+        (1, "the quick brown fox the the"),
+        (2, ""),            # "" tokenizes to one empty token
+        (3, None),          # NULL text: dropped by both forms
+        (4, "a a a a a"),   # single repeated term
+        (5, "  spaced   out   words "),
+        (6, "dup dup nodup"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    a = doc_postings(df, "doc_id", "text")
+    b = doc_postings_local(df, "doc_id", "text")
+    assert a.columns == b.columns
+    assert [f.dataType.simpleString() for f in a.schema.fields] == [
+        f.dataType.simpleString() for f in b.schema.fields
+    ]
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def test_bucketed_postings_single_exchange_and_fenced_kernel(spark):
+    """The store-write frame has ONE exchange (the bucket repartition)
+    and the sort+run-length kernel is fenced: the explode's inferred
+    size() predicate must not re-run it at the scan."""
+    from pyspark.sql import functions as F
+
+    from ubw_spark.operators.retrieval import _bucketed_postings
+
+    df = spark.createDataFrame(
+        [(1, "x y x"), (2, "z")], "doc_id int, text string"
+    )
+    frame = _bucketed_postings(df, "doc_id", "text", 32).repartition("tb")
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("array_sort") == 1, plan

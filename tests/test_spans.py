@@ -389,10 +389,10 @@ def test_span_plans_are_linear_shapes(spark, sf_dir):
     spans = REGISTRY["dedup_duplicate_spans"].fn(spark, sf_dir)
     # gh repartition ×2 branches + the per-doc id window — the r11
     # shape (explicit repartition replacing the no-op partial-distinct
-    # combine; see duplicate_gram_positions' docstring) — plus the r13
-    # compute-widening round-robin of the raw (id, text) rows, once per
-    # gram branch (token_gram_table's parallelism knob; small-byte rows,
-    # full-width hashing)
+    # combine; see duplicate_gram_positions' docstring) — plus room for
+    # the compute-widening round-robin of the raw (id, text) rows, once
+    # per gram branch (dedup.widen, which skips inputs below spans'
+    # _WIDEN_MIN_BYTES floor)
     assert shuffle_count(spans) <= 5
     cut = REGISTRY["dedup_cut_spans"].fn(spark, sf_dir)
     p = simple_plan(cut)
@@ -567,21 +567,3 @@ def test_gram_probe_skew_guard_collapses_hot_gram(spark):
         assert out[11] == (8, 0, 0.0)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def test_should_widen_falls_back_to_widening_without_rdd(spark):
-    """``.rdd`` does not exist on Spark Connect: a frame whose split
-    probe raises must widen (the pre-round-14 behavior), not fail the
-    gram-table build."""
-    from ubw_spark.operators.spans import _should_widen
-
-    big = spark.range(1_000_000)  # ~8 MB estimate: past the size gate
-
-    class NoRdd:
-        _jdf = big._jdf
-
-        @property
-        def rdd(self):
-            raise RuntimeError("no RDD API on this backend")
-
-    assert _should_widen(NoRdd(), parallelism=16)

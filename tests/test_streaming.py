@@ -1340,3 +1340,21 @@ def test_stream_session_kill_and_replay_exactly_once(spark, sf_dir, tmp_path):
     )
     # exactly-once also means no duplicate session rows in the sink
     assert final.count() == final.distinct().count()
+
+
+def test_stream_shuffle_partitions(spark, monkeypatch):
+    from ubw_spark.streaming.stages import (
+        shuffle_partitions_override,
+        stream_shuffle_partitions,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
+    n = stream_shuffle_partitions(spark)
+    assert 1 <= n <= 4
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "13")
+    assert stream_shuffle_partitions(spark) == 13
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with shuffle_partitions_override(spark, 3):
+        assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == before

@@ -113,10 +113,7 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".localdata/sf1",
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_session(
-        "ann-recall", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
+    spark = get_session("ann-recall")
     # k ~ sqrt(N) is the classical IVF sizing (FAISS guideline);
     # 64 cells at 20k vectors keeps expected cell size ~312
     rows = recall_curve(spark, sf_dir, k_cells=64)

@@ -35,12 +35,7 @@ def main() -> int:
     from ubw_spark.session import get_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if not cpus.isdigit():
-        cpus = str(os.cpu_count() or 8)
-    spark = get_session(
-        "capture-plans", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
+    spark = get_session("capture-plans")
 
     if tag.startswith("r13_"):
         out_dir = os.path.join("plans", "r13")

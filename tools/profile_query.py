@@ -29,15 +29,10 @@ def main() -> int:
     from ubw_spark.session import get_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if not cpus.isdigit():
-        cpus = str(os.cpu_count() or 8)
     evdir = f"/tmp/ubw_spark_eventlog_{os.getpid()}"
     os.makedirs(evdir, exist_ok=True)
     spark = get_session(
         "profile-query",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": evdir,

@@ -25,13 +25,7 @@ def main() -> int:
     from ubw_spark.session import get_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if not cpus.isdigit():
-        cpus = str(os.cpu_count() or 8)
-    spark = get_session(
-        "time-queries", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
+    spark = get_session("time-queries")
     for name in names:  # warmup (JIT + footer caches), untimed
         REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
@@ -51,6 +45,7 @@ def main() -> int:
     except OSError:
         la = None
     print(json.dumps({"queries": out, "total": round(sum(out.values()), 3),
+                      "cores": spark.sparkContext.defaultParallelism,
                       "load_avg_end": la}))
     spark.stop()
     return 0

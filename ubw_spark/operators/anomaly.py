@@ -34,21 +34,19 @@ def rolling_zscore(
     min_periods: int = 8,
     threshold: float = 3.0,
     dp: int = 6,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Score each point against the trailing ``window`` observations of
     ITS OWN series (current row excluded, so a spike can't mask
     itself): appends exact context sums ``(n_ctx, s1, s2)``, the
     z-score, and an ``is_anomaly`` flag (|z| ≥ threshold).
 
-    ``parallelism``: the decimal rolling sums are the CPU-heavy stage,
-    and AQE's byte-based coalescing collapses the window's key exchange
-    to one partition when the keyed rows are small on disk but
-    expensive per row.  Passing N replaces that exchange with an
-    explicit ``repartition(N, *key_cols)`` — same clustering, so the
-    window adds no second exchange, but the partition count is pinned
-    (AQE leaves user-specified repartitions alone).  Default None keeps
-    the AQE-planned exchange.
+    The decimal rolling sums are the CPU-heavy stage, and AQE's
+    byte-based coalescing collapses the window's key exchange to one
+    partition when the keyed rows are small on disk but expensive per
+    row.  So the exchange is an explicit ``repartition(N, *key_cols)``
+    with N = the session's ``defaultParallelism`` — same clustering, so
+    the window adds no second exchange, but the partition count is
+    pinned (AQE leaves user-specified repartitions alone).
 
     ``value_col`` must already be integer-grain (e.g. cents — see
     module docstring).  z is computed entirely from exact integers:
@@ -71,8 +69,10 @@ def rolling_zscore(
             f"rolling_zscore: input already has column(s) {clash}, which "
             "this operator appends — rename them upstream"
         )
-    if parallelism:
-        df = df.repartition(parallelism, *[F.col(c) for c in key_cols])
+    df = df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism,
+        *[F.col(c) for c in key_cols],
+    )
     w = (
         Window.partitionBy(*key_cols)
         .orderBy(*[F.col(c) for c in order_cols])

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ubw_spark.functions.hof import let
 from ubw_spark.functions.text import tokens
-from ubw_spark.operators.dedup import word_shingles
+from ubw_spark.operators.dedup import widen, word_shingles
 from ubw_spark.operators.versioned import MergeStore
 
 M_DEFAULT = 1 << 18  # bits in the filter (32 KiB packed)
@@ -68,7 +68,6 @@ def packed_bloom_words(
     n: int = 3,
     m: int = M_DEFAULT,
     k: int = K_DEFAULT,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """SPARSE packed filter ``(word_idx: bigint, bits: bigint)`` — one
     row per 64-bit word with at least one set bit (≤ m/64 rows).
@@ -78,16 +77,12 @@ def packed_bloom_words(
     (2) pack 64 positions per word via bit_or.  This sparse form is
     what the persisted store holds — and what two filters UNION through
     (bitwise OR is the exact Bloom union, see append_bloom_store).
-
-    ``parallelism``: gram hashing on the BUILD side runs before the
-    distinct's exchange — with fewer benchmark input splits than cores
-    it is serial (same knob and rationale as bloom_probe's)."""
+    Gram hashing runs before the distinct's exchange, so the benchmark
+    input is widened first (dedup.widen)."""
     if m % 64:
         raise ValueError(f"m must be a multiple of 64, got {m}")
-    if parallelism:
-        bench = bench.repartition(parallelism)
     pos = (
-        bench.select(
+        widen(bench).select(
             F.explode(word_shingles(F.col(text_col), n)).alias("gram")
         )
         .select(F.explode(bloom_positions(F.col("gram"), m, k)).alias("pos"))
@@ -134,15 +129,11 @@ def build_bloom(
     n: int = 3,
     m: int = M_DEFAULT,
     k: int = K_DEFAULT,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """ONE-row dense filter built from the benchmark's word-n-grams —
     ``dense_bloom_row(packed_bloom_words(...))``."""
     return dense_bloom_row(
-        packed_bloom_words(
-            bench, text_col, n=n, m=m, k=k, parallelism=parallelism
-        ),
-        m,
+        packed_bloom_words(bench, text_col, n=n, m=m, k=k), m
     )
 
 
@@ -189,20 +180,15 @@ def bloom_probe(
     n: int = 3,
     m: int = M_DEFAULT,
     k: int = K_DEFAULT,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Per-document contamination counts ``(id, total_grams, hit_grams)``
     — MAP-ONLY: the one-row packed filter arrives via broadcast
     nested-loop join, then grams → positions → bit tests are all
     higher-order functions inside the row.  No shuffle, no explode; the
     corpus is read once.  Docs with zero grams (< n words) are dropped,
-    matching the gram-level oracle.
-
-    ``parallelism``: same knob as minhash_lsh_pairs (dedup.py:209) —
-    gram hashing is CPU-heavy per row; when the input has fewer splits
-    than cores (small/unsplittable files), one cheap repartition of raw
-    text buys full-width compute.  Default None keeps the input
-    partitioning and the pure zero-shuffle plan.
+    matching the gram-level oracle.  Gram hashing is CPU-heavy per
+    row, so the corpus is widened first (dedup.widen) — a corpus that
+    already has enough splits keeps the pure zero-shuffle plan.
 
     The md5 hex is let-bound inside bloom_positions, so the hash runs
     ONCE per gram — not once per bit probe (lambda vars are bound
@@ -214,15 +200,13 @@ def bloom_probe(
     contaminated gram would silently drop out of ``hit_grams`` (the
     exact silent-zero failure the store's params sidecar exists to
     prevent; this closes the same hole for the in-memory API)."""
-    if parallelism:
-        corpus = corpus.repartition(parallelism)
     # Docs with < n tokens (zero grams) are dropped HERE, on the raw
     # token count, NOT via a where(total_grams > 0) on the output: the
     # output-side predicate pushes down as size(<full shingle expr>) > 0
     # — an interpreted re-evaluation of the whole gram pipeline inside
     # the Filter that measured 25× slower than the probe itself.
     probed = (
-        corpus.where(F.size(tokens(F.col(text_col))) >= n)
+        widen(corpus).where(F.size(tokens(F.col(text_col))) >= n)
         .select(
             F.col(id_col),
             word_shingles(F.col(text_col), n).alias("__grams"),
@@ -255,7 +239,6 @@ def bloom_audit(
     n: int = 3,
     m: int = M_DEFAULT,
     k: int = K_DEFAULT,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """ONE-row gram-level audit of the filter against exact membership:
     ``(n_grams, bloom_hits, exact_hits, false_positives, fp_rate)``.
@@ -266,9 +249,7 @@ def bloom_audit(
     is a global property of the filter, not of any document).  False
     negatives are impossible by construction — property-tested in
     tests/test_bloom.py."""
-    if parallelism:
-        corpus = corpus.repartition(parallelism)
-        bench = bench.repartition(parallelism)
+    corpus, bench = widen(corpus), widen(bench)
     bg = bench.select(
         F.explode(word_shingles(F.col(text_col), n)).alias("gram")
     ).distinct()
@@ -353,13 +334,10 @@ def write_bloom_store(
     n: int = 3,
     m: int = M_DEFAULT,
     k: int = K_DEFAULT,
-    parallelism: int | None = None,
 ) -> None:
     """Persist the sparse packed filter — ``(word_idx, bits)``, ≤ m/64
     rows — + its params sidecar as a new store version."""
-    packed = packed_bloom_words(
-        bench, text_col, n=n, m=m, k=k, parallelism=parallelism
-    )
+    packed = packed_bloom_words(bench, text_col, n=n, m=m, k=k)
     _STORE.write(packed, path, {"n": n, "m": m, "k": k})
 
 
@@ -368,8 +346,6 @@ def append_bloom_store(
     batch: DataFrame,
     text_col: str,
     path: str,
-    *,
-    parallelism: int | None = None,
 ) -> None:
     """Fold a new benchmark batch into the persisted filter WITHOUT
     rebuilding: bloom(A ∪ B) == bloom(A) | bloom(B) bit-for-bit (both
@@ -378,8 +354,7 @@ def append_bloom_store(
     m/64, never ∝ the accumulated benchmark.  Params come from the
     store's sidecar; the batch CANNOT override them."""
     _STORE.fold(spark, path, lambda p: packed_bloom_words(
-        batch, text_col, n=p["n"], m=p["m"], k=p["k"],
-        parallelism=parallelism,
+        batch, text_col, n=p["n"], m=p["m"], k=p["k"]
     ))
 
 
@@ -395,13 +370,11 @@ def probe_bloom_store(
     id_col: str,
     text_col: str,
     path: str,
-    *,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """bloom_probe against the persisted filter, under the params the
     store was built with."""
     bloom, p = load_bloom(spark, path)
     return bloom_probe(
         corpus, id_col, text_col, bloom,
-        n=p["n"], m=p["m"], k=p["k"], parallelism=parallelism,
+        n=p["n"], m=p["m"], k=p["k"],
     )

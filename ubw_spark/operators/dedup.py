@@ -48,6 +48,66 @@ _AUDIT_TRUTH_PARTITIONS = 8
 DEFAULT_MAX_BUCKET = 64
 
 
+def widen(df: DataFrame, min_bytes: int = 0) -> DataFrame:
+    """``df`` round-robined to its session's ``defaultParallelism`` when
+    it arrives in fewer splits than that, else ``df`` unchanged — the
+    one compute-widening rule (docs/SCALE.md "Compute widening").
+
+    Every caller runs a CPU-heavy per-row map next (shingle/md5
+    hashing, tokenize, array math): over a small or unsplittable file
+    that map is otherwise serial, and one cheap shuffle of the raw rows
+    buys full-width compute.  Inputs that already carry enough splits —
+    every corpus-scale lake — never reshuffle.  ``min_bytes`` is a
+    caller's measured floor on the optimizer's size estimate, below
+    which the exchange costs more than the serial map it breaks up.
+
+    Neither probe plans the query physically: the size is the
+    optimized plan's estimate, and the split count is read off the
+    plan's leaves (see :func:`_input_splits`).  Both go through private
+    JVM APIs (``_jdf``, Catalyst internals that change between Spark
+    versions): when either fails, widen."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if int(plan.stats().sizeInBytes()) < min_bytes:
+            return df
+        splits = _input_splits(df, plan, par)
+    except Exception:
+        splits = 0
+    return df.repartition(par) if splits < par else df
+
+
+def _input_splits(df: DataFrame, plan, par: int) -> int:
+    """Partition count of ``df``'s scans, summed over the plan's leaves
+    (exact for one scan and for a union of scans).  A file relation is
+    sized the way Spark's file scan cuts it
+    (``FilePartition.maxSplitBytes``: splits of max(openCost,
+    bytes/parallelism) capped at maxPartitionBytes, each file charged
+    openCost); an RDD leaf (a foreachBatch micro-batch, a checkpoint)
+    reports its own count; any other leaf makes the plan pay ``.rdd``
+    (~0.2 s of physical planning)."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    cost = conf.filesOpenCostInBytes()
+    splits = 0
+    it = plan.collectLeaves().iterator()
+    while it.hasNext():
+        leaf = it.next()
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRDD":
+            splits += leaf.rdd().getNumPartitions()
+        elif kind == "LogicalRelation":
+            files = leaf.relation().location()
+            n, size = len(files.inputFiles()), int(files.sizeInBytes())
+            split = min(
+                conf.filesMaxPartitionBytes(),
+                max(cost, (size + n * cost) // par),
+            )
+            splits += max(1, -(-(size + (n - 1) * cost) // split))
+        else:
+            return df.rdd.getNumPartitions()
+    return splits
+
+
 def cap_buckets(
     banded: DataFrame,
     bucket_cols: list[str],
@@ -245,7 +305,6 @@ def minhash_frames(
     *,
     k: int = 3,
     num_hashes: int = 64,
-    parallelism: int | None = None,
     checkpoint: str | None = "local",
 ) -> DataFrame:
     """The shared MinHash base frame ``(id, __sh, __sig)`` — shingle
@@ -281,15 +340,11 @@ def minhash_frames(
     re-evaluates the whole shingle pipeline — measured 4× on the sf0.1
     bench).
 
-    ``parallelism``: signature computation is CPU-heavy per row; when
-    the input has fewer splits than cores (small/unsplittable files),
-    pass the target partition count to repartition BEFORE hashing —
-    one cheap shuffle of raw text buys full-width compute."""
+    Signature computation is CPU-heavy per row, so the input is
+    widened first (:func:`widen`)."""
     from ubw_spark.operators.iterate import truncate
 
-    if parallelism:
-        df = df.repartition(parallelism)
-    base = df.where(F.size(tokens(F.col(text_col))) >= k)
+    base = widen(df).where(F.size(tokens(F.col(text_col))) >= k)
     sh = base.select(
         F.col(id_col), word_shingles(F.col(text_col), k).alias("__sh")
     )
@@ -382,7 +437,6 @@ def minhash_dedup_pairs(
     bands: int = 32,
     rows_per_band: int = 2,
     threshold: float = 0.4,
-    parallelism: int | None = None,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     prefilter_margin: float | None = 0.15,
     checkpoint: str | None = "local",
@@ -418,18 +472,11 @@ def minhash_dedup_pairs(
     volume) or re-band (r=3, b=21 moves the S-curve itself to 0.36).
     ``prefilter_margin=None`` disables.
 
-    ``parallelism``: signature computation is CPU-heavy per row; when the
-    input has fewer splits than cores (small/unsplittable files), pass
-    the target partition count to repartition BEFORE hashing — one cheap
-    shuffle of raw text buys full-width compute.  Default None keeps the
-    input partitioning (right when the lake already has many splits).
-
     ``checkpoint``: materialization policy for the shared shingle+
     signature frame — see :func:`minhash_frames`."""
     combined = minhash_frames(
         df, id_col, text_col,
-        k=k, num_hashes=num_hashes, parallelism=parallelism,
-        checkpoint=checkpoint,
+        k=k, num_hashes=num_hashes, checkpoint=checkpoint,
     )
     return _pairs_from_frames(
         combined, id_col,
@@ -792,7 +839,6 @@ def banded_minhash(
     num_hashes: int = 64,
     bands: int = 32,
     rows_per_band: int = 2,
-    parallelism: int | None = None,
     checkpoint: str | None = "local",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared MinHash banding pipeline: filter short docs, shingle,
@@ -804,21 +850,12 @@ def banded_minhash(
     contamination, the persisted index) builds candidates, prefilters,
     and verifies from.
 
-    ``parallelism``: signature computation is the CPU-heavy stage; when
-    the input has fewer splits than cores (small/unsplittable files),
-    repartition BEFORE hashing so one cheap raw-text shuffle buys
-    full-width compute — same knob and rationale as
-    :func:`minhash_dedup_pairs` (measured 3-4× on the sf0.1
-    contamination bench, whose one-file input otherwise bands on a
-    couple of tasks).
-
     ``checkpoint``: materialization policy for the shared frame all
     three returned frames derive from — see :func:`minhash_frames`."""
     out_id = id_alias or id_col
     combined = minhash_frames(
         df, id_col, text_col,
-        k=k, num_hashes=num_hashes, parallelism=parallelism,
-        checkpoint=checkpoint,
+        k=k, num_hashes=num_hashes, checkpoint=checkpoint,
     ).select(
         F.col(id_col).alias(out_id),
         F.col("__sh").alias(sh_name),
@@ -854,7 +891,6 @@ def minhash_contamination_pairs(
     threshold: float = 0.4,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     large_probe: bool = False,
-    parallelism: int | None = None,
     prefilter_margin: float | None = 0.15,
     checkpoint: str | None = "local",
 ) -> DataFrame:
@@ -891,8 +927,7 @@ def minhash_contamination_pairs(
             df, id_col, text_col,
             id_alias=f"{side}_id", sh_name=f"__sh_{side}",
             k=k, num_hashes=num_hashes, bands=bands,
-            rows_per_band=rows_per_band, parallelism=parallelism,
-            checkpoint=checkpoint,
+            rows_per_band=rows_per_band, checkpoint=checkpoint,
         )
 
     c_sh, c_sig, c_banded = prep(corpus, "corpus")

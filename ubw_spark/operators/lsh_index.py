@@ -131,7 +131,6 @@ def write_minhash_index(
     num_hashes: int = 64,
     bands: int = 32,
     rows_per_band: int = 2,
-    parallelism: int | None = None,
 ) -> None:
     """Materialize the corpus LSH index at ``path``: banded signature
     keys partitioned by band (``path/bands``) and the shingle store for
@@ -150,7 +149,6 @@ def write_minhash_index(
     sh, sig, banded = banded_minhash(
         df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
-        parallelism=parallelism,
     )
     banded_out = banded.withColumnRenamed("__band", "band").withColumnRenamed(
         "__key", "key"
@@ -292,7 +290,6 @@ def probe_minhash_index(
     num_hashes: int = 64,
     bands: int = 32,
     rows_per_band: int = 2,
-    parallelism: int | None = None,
     prefilter_margin: float | None = 0.15,
 ) -> DataFrame:
     """Near-dup pairs between a written index and an incoming batch:
@@ -316,7 +313,6 @@ def probe_minhash_index(
     p_sh, p_sig, p_banded = banded_minhash(
         probe, id_col, text_col, id_alias="probe_id", sh_name="sh_probe",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
-        parallelism=parallelism,
     )
     p_banded = p_banded.withColumnRenamed("__band", "band").withColumnRenamed(
         "__key", "key"

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ubw_spark.functions.text import tokens
-from ubw_spark.operators.dedup import portable_hash
+from ubw_spark.operators.dedup import portable_hash, widen
 from ubw_spark.operators.versioned import (
     begin_rewrite,
     check_append_schema,
@@ -497,20 +497,17 @@ def _bucketed_postings(
     buckets: int,
     *,
     stats_observation=None,
-    parallelism: int | None = None,
 ) -> DataFrame:
     # The writers need every posting (no term filter to push down), so
     # the shuffle-free form applies: the bucket repartition that
-    # follows is the ONLY exchange in the store write — plus, when
-    # ``parallelism`` is passed, one cheap raw-text repartition FIRST:
-    # tokenize + run-length tf is the CPU-heavy map, and a one-file
-    # micro-batch (the foreachBatch append case) otherwise runs it on a
-    # single task (round 14; the spans/bloom/minhash widening knob —
-    # measured ~1.2 s/append serial vs ~0.5 s widened at sf0.1).
-    if parallelism:
-        df = df.repartition(parallelism)
+    # follows is the ONLY exchange in the store write — plus, for an
+    # input with fewer splits than cores, the widening round-robin
+    # FIRST (dedup.widen): tokenize + run-length tf is the CPU-heavy
+    # map, and a one-file micro-batch (the foreachBatch append case)
+    # otherwise runs it on a single task (measured ~1.2 s/append serial
+    # vs ~0.5 s widened at sf0.1).
     return doc_postings_local(
-        df, id_col, text_col, stats_observation=stats_observation
+        widen(df), id_col, text_col, stats_observation=stats_observation
     ).withColumn("tb", portable_hash(F.col("term")) % buckets)
 
 
@@ -521,7 +518,6 @@ def write_term_index(
     path: str,
     *,
     buckets: int = 32,
-    parallelism: int | None = None,
 ) -> None:
     """Materialize the inverted index: posting rows partitioned by the
     term's portable hash bucket (``tb``), plus the stats sidecar (which
@@ -537,8 +533,7 @@ def write_term_index(
     obs = Observation()
     new_v, root = begin_rewrite(path)
     posts = _bucketed_postings(
-        df, id_col, text_col, buckets, stats_observation=obs,
-        parallelism=parallelism,
+        df, id_col, text_col, buckets, stats_observation=obs
     )
     (
         posts.repartition("tb")
@@ -559,7 +554,6 @@ def append_term_batch(
     path: str,
     *,
     batch_id: int | None = None,
-    parallelism: int | None = None,
 ) -> None:
     """Fold a new document batch into the index: the batch's posting
     files land in the bucket partitions (under the sidecar's pinned
@@ -593,8 +587,7 @@ def append_term_batch(
             return  # replayed micro-batch: already folded in
     obs = Observation()
     posts = _bucketed_postings(
-        batch, id_col, text_col, old["buckets"], stats_observation=obs,
-        parallelism=parallelism,
+        batch, id_col, text_col, old["buckets"], stats_observation=obs
     )
     check_append_schema(path, old_root, posts.schema, ("tb",))
     new_v, new_root = begin_rewrite(path)

@@ -163,7 +163,7 @@ def hyperplane_bucket_array(
     # ~4 HOF nodes + one flat constant; values are bit-identical (same
     # zip_with element products, same left-to-right aggregate fold,
     # same bit weights summed in the same j order — parity asserted on
-    # real testdata in tests/test_r14_optimizations.py).
+    # real testdata in tests/test_similarity.py).
     planes_sql = "array(" + ",".join(
         "array(" + ",".join(
             "array(" + ",".join(f"{float(c)!r}D" for c in planes[t, j]) + ")"

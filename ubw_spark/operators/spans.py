@@ -53,43 +53,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ubw_spark.functions.text import tokens
+from ubw_spark.operators.dedup import widen
 
 
-#: Inputs whose optimizer-estimated size is below this never widen:
-#: the repartition exchange costs ~0.3-0.5 s fixed, and serial gram
-#: hashing clears sub-MB inputs faster than that (round-14 A/B in
-#: token_gram_table's docstring).  Estimates are roughly on-disk
-#: (compressed) bytes for file scans.
+#: Gram hashing's floor for :func:`ubw_spark.operators.dedup.widen`:
+#: inputs whose optimizer-estimated size is below this never widen.
+#: Gram hashing is light enough per row that the round-robin exchange
+#: (~0.3-0.5 s fixed) only pays for itself when the serial map it
+#: breaks up is long: at sf0.1 (``documents`` = ONE 0.6 MB split)
+#: widening measured a net loss at 32 cores (round 14: spans 1.70 vs
+#: 1.30 s, span index probe 2.58 vs 2.26 s widened vs not), while a
+#: single multi-MB unsplittable file still widens.  Estimates are
+#: roughly on-disk (compressed) bytes for file scans.
 _WIDEN_MIN_BYTES = 4 * 1024 * 1024
-
-
-def _should_widen(df: DataFrame, parallelism: int) -> bool:
-    """Whether the gram-hashing map stage should be repartitioned to
-    ``parallelism`` first — only when the input is BOTH big enough that
-    breaking up the serial map pays for the exchange AND narrow (fewer
-    than parallelism/4 splits).  Size is checked FIRST: the estimate
-    reuses the already-analyzed plan (~1 ms), while ``.rdd`` forces a
-    separate physical planning pass (~0.2 s on a fresh frame) that
-    small inputs — the common bench case — should never pay.
-
-    The size estimate is trustworthy for FILE-BACKED inputs (on-disk
-    bytes; filters pass it through) — which is every call site in this
-    repo.  A non-file source whose stats understate the data (e.g. a
-    Range projected into long strings) would skip widening; callers
-    with such inputs should pre-repartition themselves.
-
-    Both probes are private or classic-only APIs (``_jdf``, ``.rdd`` —
-    neither exists on Spark Connect): when either fails, widen, the
-    conservative pre-round-14 behavior."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if size < _WIDEN_MIN_BYTES:
-            return False
-        return df.rdd.getNumPartitions() * 4 < parallelism
-    except Exception:
-        return True
 
 
 def token_gram_table(
@@ -97,37 +73,15 @@ def token_gram_table(
     id_col: str,
     text_col: str,
     k: int,
-    *,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """(id, __pos, __gh): every k-token gram start position with its
     64-bit gram hash.  0-based positions; docs shorter than k tokens
     contribute nothing (the ``n >= k`` guard also keeps
     ``F.sequence(0, n-k)`` from counting DOWN when n < k).
 
-    ``parallelism``: tokenize + k-window hashing is the CPU-heavy map
-    stage, and it runs BEFORE any consumer's ``__gh`` exchange — with
-    fewer input splits than cores (small/unsplittable files) it is
-    serial.  Same knob as bloom_probe/minhash: one cheap repartition of
-    the raw (id, text) rows buys full-width hashing.  Default None
-    keeps the input partitioning (and the probe plans' zero-extra-
-    Exchange assertions).
-
-    The widening is CONDITIONAL on input size and split count (round
-    14, VERDICT r13 item 3 — guide §2: derive partitioning from input
-    size, don't pin a constant): gram hashing is light enough per row
-    that the repartition exchange only pays for itself when the serial
-    map it breaks up is genuinely long.  At bench scale (sf0.1
-    documents = ONE 0.6 MB split) the unconditional knob was a measured
-    net LOSS (driver 32-core r13 recording spans 0.71→1.36 / probe
-    1.74→2.32; round-14 A/B widened 1.70/2.58 s vs unwidened
-    1.30/2.26 s), while a single multi-MB unsplittable file — the case
-    the knob was built for — still widens: the exchange's ~0.3-0.5 s
-    fixed cost buys minutes of serial interpreted-HOF hashing there.
-    Inputs that already carry ≥ parallelism/4 splits never widen.
-    Size comes from the optimizer's own estimate (one py4j call, no
-    job); when no estimate is available the input is assumed large
-    (the conservative pre-round-14 behavior).
+    Tokenize + k-window hashing is the CPU-heavy map stage, and it runs
+    BEFORE any consumer's ``__gh`` exchange, so a narrow input is widened
+    first (dedup.widen, above the ``_WIDEN_MIN_BYTES`` floor).
 
     The gram key is the xxhash64 of the k-long TOKEN-HASH window, not
     of the joined gram string: each token is hashed once per document
@@ -139,12 +93,10 @@ def token_gram_table(
     iff their token sequences match, up to the same 64-bit birthday
     bound documented above (a token-hash collision folds into the same
     budget)."""
-    if parallelism and _should_widen(df, parallelism):
-        df = df.repartition(parallelism)
     toks = tokens(F.col(text_col))
-    d = df.select(F.col(id_col), toks.alias("__toks")).where(
-        F.size("__toks") >= k
-    )
+    d = widen(df, _WIDEN_MIN_BYTES).select(
+        F.col(id_col), toks.alias("__toks")
+    ).where(F.size("__toks") >= k)
     from ubw_spark.functions.hof import let
 
     gram_hashes = let(
@@ -166,7 +118,6 @@ def duplicate_gram_positions(
     *,
     k: int = 8,
     min_docs: int = 2,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """(id, __pos) of every gram start whose k-gram occurs in
     >= min_docs distinct documents.
@@ -186,9 +137,7 @@ def duplicate_gram_positions(
     corpus scale where dup outgrows broadcast, both sides are already
     hash-partitioned on ``__gh`` and the sort-merge join needs no new
     exchange."""
-    grams = token_gram_table(
-        df, id_col, text_col, k, parallelism=parallelism
-    ).repartition("__gh")
+    grams = token_gram_table(df, id_col, text_col, k).repartition("__gh")
     dup = (
         grams.groupBy("__gh")
         .agg(F.count_distinct(id_col).alias("__nd"))
@@ -207,7 +156,6 @@ def duplicate_spans(
     *,
     k: int = 8,
     min_docs: int = 2,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Maximal duplicated token spans per document:
     (id, span_start, span_end, span_tokens), positions 0-based
@@ -218,8 +166,7 @@ def duplicate_spans(
     position starts past (running max end) + 1 — overlapping OR
     adjacent covered regions merge into one contiguous span."""
     pos = duplicate_gram_positions(
-        df, id_col, text_col, k=k, min_docs=min_docs,
-        parallelism=parallelism,
+        df, id_col, text_col, k=k, min_docs=min_docs
     )
     prev = (
         Window.partitionBy(id_col)
@@ -275,7 +222,6 @@ def cut_duplicate_spans(
     k: int = 8,
     min_docs: int = 2,
     out_col: str = "clean_text",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Apply the ExactSubstr policy: remove every NON-OWNER occurrence
     of duplicated text, keeping exactly one copy corpus-wide.
@@ -303,9 +249,7 @@ def cut_duplicate_spans(
     # same explicit-repartition shape as duplicate_gram_positions: the
     # owner aggregate runs one clustered pass instead of a no-op
     # map-side combine over ~unique (gh, id) pairs
-    grams = token_gram_table(
-        df, id_col, text_col, k, parallelism=parallelism
-    ).repartition("__gh")
+    grams = token_gram_table(df, id_col, text_col, k).repartition("__gh")
     owners = (
         grams.groupBy("__gh")
         .agg(
@@ -386,13 +330,10 @@ def _gram_index_rows(
     id_col: str,
     text_col: str,
     k: int,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """The index schema, defined ONCE for write and append:
     one row per distinct gram hash — (gh, owner, n_docs)."""
-    grams = token_gram_table(
-        df, id_col, text_col, k, parallelism=parallelism
-    )
+    grams = token_gram_table(df, id_col, text_col, k)
     return (
         grams.groupBy("__gh")
         .agg(
@@ -440,7 +381,6 @@ def write_gram_index(
     *,
     k: int = 8,
     num_buckets: int = 32,
-    parallelism: int | None = None,
 ) -> None:
     """Persist the corpus's distinct gram hashes as a BUCKETED table
     (gh, owner, n_docs) — the incremental / streaming counterpart of
@@ -462,7 +402,7 @@ def write_gram_index(
         raise ValueError(
             f"gram index table must be unqualified, got {table_name!r}"
         )
-    idx = _gram_index_rows(df, id_col, text_col, k, parallelism)
+    idx = _gram_index_rows(df, id_col, text_col, k)
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     _clear_orphaned_location(spark, table_name)
@@ -524,16 +464,13 @@ def probe_gram_index(
     text_col: str,
     *,
     k: int = 8,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Per-batch-document contamination vs the indexed corpus:
     (id, n_tokens, dup_tokens, dup_fraction), where dup_tokens counts
     tokens covered by any gram already present in the index.  Every
     batch row appears, zero-filled."""
     _check_index_k(spark, table_name, k)
-    bg = token_gram_table(
-        batch, id_col, text_col, k, parallelism=parallelism
-    )
+    bg = token_gram_table(batch, id_col, text_col, k)
     idx = spark.table(table_name).select(F.col("gh").alias("__gh"))
     # Skew guard: pre-aggregate the batch to ONE row per (doc, gram)
     # before the bucket-aligned join.  A degenerate document repeating
@@ -574,7 +511,6 @@ def append_gram_index(
     text_col: str,
     *,
     k: int = 8,
-    parallelism: int | None = None,
 ) -> None:
     """Add a new batch's NOVEL grams to the index (anti-join on gh,
     bucketed append) so the next batch dedups against this one too —
@@ -589,7 +525,7 @@ def append_gram_index(
     alignment) — the table's layout is the single source of truth."""
     _check_index_k(spark, table_name, k)
     num_buckets = _table_num_buckets(spark, table_name) or 32
-    novel = _gram_index_rows(batch, id_col, text_col, k, parallelism).join(
+    novel = _gram_index_rows(batch, id_col, text_col, k).join(
         spark.table(table_name).select("gh"), "gh", "left_anti"
     )
     (
@@ -734,7 +670,6 @@ def duplicated_token_fraction(
     *,
     k: int = 8,
     min_docs: int = 2,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Per-document duplication summary:
     (id, n_tokens, dup_tokens, dup_fraction) — every document appears,
@@ -742,8 +677,7 @@ def duplicated_token_fraction(
     the removal-policy input (ExactSubstr cuts the spans; a cruder
     policy drops docs above a fraction threshold)."""
     spans = duplicate_spans(
-        df, id_col, text_col, k=k, min_docs=min_docs,
-        parallelism=parallelism,
+        df, id_col, text_col, k=k, min_docs=min_docs
     )
     per_doc = spans.groupBy(id_col).agg(
         F.sum("span_tokens").alias("__dup")

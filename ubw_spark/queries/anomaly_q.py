@@ -60,7 +60,6 @@ def ts_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = rolling_zscore(
         obs, ["user_id"], ["ts"], "cents",
         window=24, min_periods=8, threshold=3.0,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
     return scored.select(
         "user_id",

@@ -81,20 +81,16 @@ def dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-corpus-doc count of word-3-grams caught by a Bloom filter
     built over the eval set — the ZERO-SHUFFLE decontamination path.
     Build cost ∝ benchmark; probe is map-only over the corpus with the
-    32 KiB packed filter broadcast as one row (plan-asserted at
-    parallelism=None: tests/test_bloom.py — no Exchange on the probe
-    side; here the testbed's single-file input gets the same
-    repartition spread every CPU-heavy query uses).  False positives
+    32 KiB packed filter broadcast as one row (plan-asserted in
+    tests/test_bloom.py — no Exchange on the probe side of a corpus
+    that already has enough splits; the testbed's single-file input
+    is widened like every CPU-heavy input, dedup.widen).  False positives
     only (over-removal is safe); rate audited by
     ``dedup_bloom_fpr_audit``."""
     d = table(spark, sf_dir, "documents")
-    bloom = build_bloom(
-        d.where(F.col("doc_id") % 10 == 0), "text", n=3,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    bloom = build_bloom(d.where(F.col("doc_id") % 10 == 0), "text", n=3)
     return bloom_probe(
         d.where(F.col("doc_id") % 10 != 0), "doc_id", "text", bloom, n=3,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -141,7 +137,6 @@ def dedup_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.where(F.col("doc_id") % 10 == 0),
         "text",
         n=3,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -172,16 +167,12 @@ def dedup_bloom_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = "/tmp/ubw_spark_bloom_store_" + hashlib.md5(
         sf_dir.encode()
     ).hexdigest()[:10]
-    par = spark.sparkContext.defaultParallelism
     write_bloom_store(
         d.where(F.col("doc_id") % 20 == 0), "text", path, n=3,
-        parallelism=par,
     )
     append_bloom_store(
         spark, d.where(F.col("doc_id") % 20 == 10), "text", path,
-        parallelism=par,
     )
     return probe_bloom_store(
         spark, d.where(F.col("doc_id") % 10 != 0), "doc_id", "text", path,
-        parallelism=spark.sparkContext.defaultParallelism,
     )

@@ -107,10 +107,7 @@ def search_bm25_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = "/tmp/ubw_spark_term_store_" + hashlib.md5(
         sf_dir.encode()
     ).hexdigest()[:10]
-    write_term_index(
-        d, "doc_id", "text", path,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    write_term_index(d, "doc_id", "text", path)
     return probe_term_index(spark, path, QUERY, k=TOP_K)
 
 
@@ -162,9 +159,8 @@ def stream_term_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events-staging pattern): the per-slice filter-and-write loop
     # re-scanned the corpus once per slice — 3× the read volume for a
     # headline query (round 13; guide §1.2 don't repeat passes).
-    par = spark.sparkContext.defaultParallelism
     seed = d.where(F.col("doc_id") % 4 == 0)
-    write_term_index(seed, "doc_id", "text", store, parallelism=par)
+    write_term_index(seed, "doc_id", "text", store)
     stage = f"{base}/stage"
     (
         d.where(F.col("doc_id") % 4 != 0)
@@ -201,13 +197,9 @@ def stream_term_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
     def handle(bdf: DataFrame, batch_id: int) -> None:
-        # widen the one-file micro-batch before the tokenize-heavy
-        # postings map (it would otherwise run on a single task — the
-        # spans/bloom/minhash widening rationale, round 14)
-        append_term_batch(
-            bdf, "doc_id", "text", store, batch_id=batch_id,
-            parallelism=par,
-        )
+        # the one-file micro-batch is widened inside the append
+        # (dedup.widen) before the tokenize-heavy postings map
+        append_term_batch(bdf, "doc_id", "text", store, batch_id=batch_id)
 
     stream = (
         spark.readStream.schema(d.schema)

@@ -21,6 +21,7 @@ from ubw_spark.operators.dedup import (
     minhash_dedup_pairs,
     simhash_near_pairs,
     simhash_signature,
+    widen,
 )
 from ubw_spark.operators.multimodal import extract_features, with_payload_metadata
 from ubw_spark.operators.similarity import embedding_near_dup_pairs, lsh_ann_topk
@@ -87,7 +88,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_dedup_pairs(
         d, "doc_id", "text",
         k=3, num_hashes=64, bands=32, rows_per_band=2, threshold=0.4,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -1484,7 +1484,6 @@ def dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         k=3, num_hashes=64, bands=32, rows_per_band=2, threshold=0.4,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -1548,7 +1547,6 @@ def dedup_contamination_large_probe(spark: SparkSession, sf_dir: str) -> DataFra
         "text",
         k=3, num_hashes=64, bands=32, rows_per_band=2, threshold=0.4,
         large_probe=True,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -1674,11 +1672,11 @@ def sim_quantized_prerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ubw_spark.operators.quantize import dequantize_int8, quantize_int8
     from ubw_spark.operators.similarity import cosine_col
 
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # quantize/dequantize/cosine are per-row JVM array math and the
     # embeddings table ships as ONE parquet split — spread the compute
-    # (same rationale as banded_minhash's parallelism knob)
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
+    emb = widen(
+        table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
     dq = dequantize_int8(quantize_int8(emb)).where(F.col("q_scale") > 0)
     corpus = dq.select("vec_id", F.col("dequant").alias("cv"))
     qs = dq.where(F.col("vec_id") < 3).select(
@@ -2014,14 +2012,12 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     path = "/tmp/ubw_spark_minhash_idx_" + hashlib.md5(
         sf_dir.encode()
     ).hexdigest()[:10]
-    par = spark.sparkContext.defaultParallelism
     write_minhash_index(
         d.where(F.col("doc_id") < 400), "doc_id", "text", path,
-        parallelism=par,
     )
     return probe_minhash_index(
         spark, path, d.where(F.col("doc_id") >= 400), "doc_id", "text",
-        probe_bands=8, threshold=0.4, parallelism=par,
+        probe_bands=8, threshold=0.4,
     )
 
 

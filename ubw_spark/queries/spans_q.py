@@ -63,10 +63,7 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents — the ExactSubstr cut list.  O(total tokens), no pair
     join; see operators/spans.py for the 100 TB argument."""
     d = table(spark, sf_dir, "documents")
-    return duplicate_spans(
-        d, "doc_id", "text", k=8, min_docs=2,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    return duplicate_spans(d, "doc_id", "text", k=8, min_docs=2)
 
 
 @register(
@@ -92,7 +89,6 @@ def dedup_duplicated_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return duplicated_token_fraction(
         d, "doc_id", "text", k=8, min_docs=2,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -145,14 +141,11 @@ def dedup_span_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     tbl = "ubw_gram_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    par = spark.sparkContext.defaultParallelism
     write_gram_index(
         d.where(F.col("doc_id") < 250), "doc_id", "text", tbl, k=8,
-        parallelism=par,
     )
     return probe_gram_index(
         spark, d.where(F.col("doc_id") >= 250), tbl, "doc_id", "text", k=8,
-        parallelism=par,
     )
 
 
@@ -196,7 +189,4 @@ def dedup_cut_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram), keeping exactly one copy corpus-wide — ExactSubstr dedup
     run end to end, output ready to replace the documents table."""
     d = table(spark, sf_dir, "documents")
-    return cut_duplicate_spans(
-        d, "doc_id", "text", k=8, min_docs=2,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    return cut_duplicate_spans(d, "doc_id", "text", k=8, min_docs=2)

@@ -20,8 +20,8 @@ def get_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if not cpus.isdigit():  # 'local[*]' idiom: '*' → machine core count
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if not cpus.isdigit():  # unset, or the 'local[*]' idiom: core count
         cpus = str(os.cpu_count() or 8)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
