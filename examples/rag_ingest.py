@@ -40,10 +40,27 @@ sys.path.insert(
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ubw_spark.operators.versioned import FileStore
+
 #: chunk_id = doc_id * CHUNK_STRIDE + chunk_idx — reversible, unique
 #: while docs stay under CHUNK_STRIDE chunks (~224k chars at the
 #: default 224-char stride).
 CHUNK_STRIDE = 1_000
+
+#: The chunk store, versioned like the indexes: one unpartitioned part,
+#: its sidecar pinning the chunking params (a batch chunked under other
+#: params would carry ids and windows the stored chunks do not).
+CHUNKS = FileStore("_CHUNK_PARAMS", "chunk", ((None, None),))
+
+
+def _chunk_params(chunk_chars: int, overlap: int) -> dict:
+    return {"chunk_chars": chunk_chars, "overlap": overlap}
+
+
+def read_chunks(spark, out: str) -> DataFrame:
+    """The live chunk store, read with its pinned schema."""
+    root, _ = CHUNKS.open(os.path.join(out, "chunks"))
+    return CHUNKS.read(spark, root)
 
 
 def embed_texts(df: DataFrame, id_col: str, text_col: str, dim: int) -> DataFrame:
@@ -73,11 +90,6 @@ def ingest(
     {n_docs, n_chunks, centroids} (centroids are needed to probe)."""
     from ubw_spark.operators.chunking import chunk_documents
     from ubw_spark.operators.ivf import train_ivf_centroids, write_ivf_index
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        resolve_root,
-    )
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     chunks = chunk_documents(
@@ -85,15 +97,16 @@ def ingest(
     ).withColumn(
         "chunk_id", F.col("doc_id") * CHUNK_STRIDE + F.col("chunk_idx")
     )
-    # The chunk store is versioned like the index: update() rewrites it
-    # on deletions via the same manifest swap.
-    chunks_path = os.path.join(out, "chunks")
-    new_v, root = begin_rewrite(chunks_path)
-    chunks.select(
-        "chunk_id", "doc_id", "chunk_idx", "chunk_start", "chunk_text"
-    ).write.mode("overwrite").parquet(root)
-    commit_rewrite(chunks_path, new_v)
-    chunks = spark.read.parquet(resolve_root(chunks_path))
+    CHUNKS.write(
+        os.path.join(out, "chunks"),
+        (
+            chunks.select(
+                "chunk_id", "doc_id", "chunk_idx", "chunk_start", "chunk_text"
+            ),
+        ),
+        _chunk_params(chunk_chars, overlap),
+    )
+    chunks = read_chunks(spark, out)
 
     emb = embed_texts(chunks, "chunk_id", "chunk_text", dim).select(
         F.col("chunk_id").alias("vec_id"), "embedding"
@@ -136,7 +149,8 @@ def update(
       retrieval hits while in-flight probes finish on the grace copy.
 
     Chunk parameters must match :func:`ingest`'s (layout contract,
-    like the banding parameters of the LSH index).
+    like the banding parameters of the LSH index): the chunk store's
+    sidecar refuses an append under other ones.
 
     Deletions run BEFORE appends, so replacing a document — the same
     doc_id in both ``new_docs`` and ``deleted_doc_ids`` — works in one
@@ -154,22 +168,19 @@ def update(
         append_term_batch,
         compact_term_index,
     )
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        resolve_root,
-    )
+    from ubw_spark.operators.versioned import read_pinned_parquet, resolve_root
 
     chunks_path = os.path.join(out, "chunks")
     ivf_path = os.path.join(out, "ivf")
 
     n_dropped = 0
     if deleted_doc_ids is not None:
-        live_chunks = spark.read.parquet(resolve_root(chunks_path))
-        drop = live_chunks.join(deleted_doc_ids, "doc_id").select(
+        drop = read_chunks(spark, out).join(deleted_doc_ids, "doc_id").select(
             F.col("chunk_id").alias("vec_id")
         )
-        live_ids = spark.read.parquet(resolve_root(ivf_path)).select("vec_id")
+        live_ids = read_pinned_parquet(spark, resolve_root(ivf_path)).select(
+            "vec_id"
+        )
         n_dropped = drop.join(live_ids, "vec_id").count()
         if n_dropped:
             compact_ivf_index(spark, ivf_path, drop)
@@ -177,10 +188,7 @@ def update(
                 spark, os.path.join(out, "terms"), drop,
                 id_col="chunk_id",
             )
-            kept = live_chunks.join(deleted_doc_ids, "doc_id", "left_anti")
-            new_v, new_root = begin_rewrite(chunks_path)
-            kept.write.mode("overwrite").parquet(new_root)
-            commit_rewrite(chunks_path, new_v)
+            CHUNKS.compact(spark, chunks_path, deleted_doc_ids, "doc_id")
 
     chunks = (
         chunk_documents(
@@ -195,7 +203,11 @@ def update(
     )
     n_new = chunks.count()
     if n_new:
-        chunks.write.mode("append").parquet(resolve_root(chunks_path))
+        CHUNKS.append(
+            chunks_path,
+            lambda _stored: (chunks,),
+            params=_chunk_params(chunk_chars, overlap),
+        )
         emb = embed_texts(chunks, "chunk_id", "chunk_text", dim).select(
             F.col("chunk_id").alias("vec_id"), "embedding"
         )
@@ -276,12 +288,10 @@ def search(
     qemb = embed_texts(q, "__pid", "qtext", dim).select(
         F.col("__pid").alias("vec_id"), "embedding"
     )
-    from ubw_spark.operators.versioned import resolve_root
-
     hits = probe_ivf_index(
         spark, os.path.join(out, "ivf"), qemb, centroids, k=k, nprobe=nprobe
     ).withColumn("qid", -F.col("qid") - 1)
-    chunks = spark.read.parquet(resolve_root(os.path.join(out, "chunks")))
+    chunks = read_chunks(spark, out)
     return hits.join(
         chunks.select(F.col("chunk_id").alias("vec_id"), "doc_id", "chunk_text"),
         "vec_id",
@@ -309,7 +319,6 @@ def hybrid_search(
     from pyspark.sql import Window
 
     from ubw_spark.operators.retrieval import probe_term_index, rrf_fuse
-    from ubw_spark.operators.versioned import resolve_root
 
     dense = search(
         spark, out, centroids, [(0, query_text)],
@@ -330,9 +339,7 @@ def hybrid_search(
         .alias("lex_rank"),
     )
     fused = rrf_fuse(lex, dense, id_col="chunk_id", k=k, rrf_k=rrf_k)
-    chunks = spark.read.parquet(
-        resolve_root(os.path.join(out, "chunks"))
-    )
+    chunks = read_chunks(spark, out)
     return fused.join(
         chunks.select("chunk_id", "doc_id", "chunk_text"), "chunk_id"
     ).select(

@@ -258,3 +258,17 @@ def test_g9_paging(friend_df):
         QueryParams(orders=base.orders, page_index=2, page_size=2),
     )
     assert [r["id"] for r in rows_of(to_view(df, SPEC))] == [3, 4]
+
+
+def test_render_decimal_is_json_serializable(spark):
+    import json
+
+    from ubw_spark.core.spec import ColumnSpec, QuerySpec
+    from ubw_spark.render import to_view
+
+    df = spark.createDataFrame(
+        [(1, "17954.55")], "id bigint, amt string"
+    ).select("id", F.col("amt").cast("decimal(12,2)").alias("amt"))
+    view = to_view(df, QuerySpec([ColumnSpec("id"), ColumnSpec("amt")]))
+    dumped = json.loads(json.dumps(view))
+    assert dumped["data"][0]["amt"] == 17954.55

@@ -1121,3 +1121,25 @@ def test_literal_frame_falls_back_for_unsupported(spark):
     # empty rows keep the schema
     empty = literal_frame(spark, [], "k bigint")
     assert empty.count() == 0 and empty.columns == ["k"]
+
+
+def test_jsonquery_one_bad_join_does_not_cascade(spark, friend_df):
+    from ubw_spark.core.errors import SpecValidationError
+    from ubw_spark.core.jsonquery import compile_json_query
+
+    grades = spark.createDataFrame([(3, "C")], "g bigint, letter string")
+    tables = {"friend": friend_df, "grades": grades}
+    q = {
+        "from": "friend",
+        "joins": [
+            {"table": "grades", "on": [["MISSPELLED", "g"]]},  # broken
+        ],
+        "columns": [{"name": "letter", "expr": "letter"}],  # valid via join
+    }
+    with pytest.raises(SpecValidationError) as ei:
+        compile_json_query(spark, q, lambda n: tables[n])
+    msg = str(ei.value)
+    assert "MISSPELLED" in msg
+    # the join's own schema still entered scope: no spurious complaint
+    # about 'letter'
+    assert "letter" not in msg

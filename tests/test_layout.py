@@ -372,3 +372,22 @@ def test_read_pruned_handles_thousand_plus_file_lists(spark, tmp_path):
     sel, s_sel = read_pruned(spark, path, {"k": (100, 104)})
     assert s_sel["files_read"] <= 10
     assert sorted(r["k"] for r in sel.collect()) == [100, 101, 102, 103, 104]
+
+
+def test_cutpoint_bucketize_clamps_oversized_cut_arrays(spark):
+    """cuts built for 32 buckets fed to bits=4 must clamp to bucket 15,
+    not alias high buckets onto low ones through interleave's bit mask
+    (review finding, round 8)."""
+    from ubw_spark.operators.layout import bucketize_by_cutpoints
+
+    df = spark.createDataFrame([(float(v),) for v in range(40)], "v double")
+    cuts = F.array(*[F.lit(float(c)) for c in range(1, 32)])  # 31 cuts
+    out = {
+        r["v"]: r["b"]
+        for r in df.select(
+            "v", bucketize_by_cutpoints(F.col("v"), cuts, 4).alias("b")
+        ).collect()
+    }
+    assert out[0.0] == 0
+    assert out[10.0] == 10
+    assert all(out[float(v)] == 15 for v in range(15, 40))

@@ -107,18 +107,17 @@ def test_minhash_index_sigs_store(spark, sf_dir, tmp_path):
     """The index persists the signature store backing the probe-side
     prefilter, and a probe through it finds the planted near-dup."""
     from ubw_spark.operators.lsh_index import (
-        _resolve_root,
-        _sigs_path,
         probe_minhash_index,
         write_minhash_index,
     )
+    from ubw_spark.operators.versioned import resolve_root
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") < 40
     )
     path = str(tmp_path / "idx")
     write_minhash_index(docs, "doc_id", "text", path)
-    sigs = spark.read.parquet(_sigs_path(_resolve_root(path)))
+    sigs = spark.read.parquet(f"{resolve_root(path)}/sigs")
     assert set(sigs.columns) == {"corpus_id", "sig"}
     assert sigs.count() == docs.count()
     assert len(sigs.first()["sig"]) == 64
@@ -1172,9 +1171,9 @@ def test_minhash_index_compaction_removes_dropped_ids(spark, sf_dir, tmp_path):
     ).collect()
     assert not any(r["corpus_id"] == 0 for r in after)
     # unrelated entries survive the rewrite (read via the manifest)
-    from ubw_spark.operators.lsh_index import _docs_path, _resolve_root
+    from ubw_spark.operators.versioned import resolve_root
 
-    assert spark.read.parquet(_docs_path(_resolve_root(path))).count() == 39
+    assert spark.read.parquet(f"{resolve_root(path)}/docs").count() == 39
 
 
 def test_minhash_index_shuffled_compaction_and_versioned_swap(
@@ -1222,15 +1221,15 @@ def test_minhash_index_shuffled_compaction_and_versioned_swap(
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
     # A reader that resolved the manifest BEFORE the compaction flip:
-    from ubw_spark.operators.lsh_index import _docs_path, _resolve_root
+    from ubw_spark.operators.versioned import resolve_root
 
-    pre_flip_root = _resolve_root(path)
+    pre_flip_root = resolve_root(path)
     compact_minhash_index(spark, path, drops, broadcast_drops=False)
     assert current_version(path) == 1
     # ...still scans a complete grace-copy index after the flip,
-    assert spark.read.parquet(_docs_path(pre_flip_root)).count() == 40
+    assert spark.read.parquet(f"{pre_flip_root}/docs").count() == 40
     # while new readers resolve the compacted version.
-    assert spark.read.parquet(_docs_path(_resolve_root(path))).count() == 38
+    assert spark.read.parquet(f"{resolve_root(path)}/docs").count() == 38
     near = docs.where(F.col("doc_id") == 0).select(
         F.lit(100000).cast("bigint").alias("doc_id"), "text"
     )
@@ -2209,3 +2208,89 @@ def test_widen_falls_back_to_widening_when_probes_raise(spark):
             raise RuntimeError("no RDD API on this backend")
 
     assert _round_robins(widen(Unprobeable())) == 1
+
+
+def test_short_docs_yield_empty_shingles_not_crash(spark):
+    df = spark.createDataFrame(
+        [(1, ""), (2, "one"), (3, "two words"), (4, "now three words here")],
+        "doc_id bigint, text string",
+    )
+    out = {
+        r["doc_id"]: r["s"]
+        for r in df.select(
+            "doc_id", word_shingles(F.col("text"), 3).alias("s")
+        ).collect()
+    }
+    assert out[1] == [] and out[2] == [] and out[3] == []
+    assert len(out[4]) == 2
+    # the full minhash pipeline also survives short docs
+    pairs = minhash_dedup_pairs(df, "doc_id", "text", k=3)
+    assert pairs.count() == 0
+
+
+def test_char_ngrams_short_string(spark):
+    from ubw_spark.functions.text import char_ngrams
+
+    df = spark.createDataFrame([("ab",), ("abcd",)], "s string")
+    out = [r["g"] for r in df.select(char_ngrams(F.col("s"), 3).alias("g")).collect()]
+    assert out[0] == [] and sorted(out[1]) == ["abc", "bcd"]
+
+
+def test_asof_join_no_chimera_columns(spark):
+    """A NULL attribute on the true as-of row must stay NULL, not be
+    backfilled from an older right row."""
+    left = spark.createDataFrame(
+        [(1, 300, "p1")], "user_id bigint, t bigint, pid string"
+    ).select("user_id", F.timestamp_seconds("t").alias("ts"), "pid")
+    right = spark.createDataFrame(
+        [(1, 100, "c1", 5.0), (1, 200, "c2", None)],
+        "user_id bigint, t bigint, cid string, v double",
+    ).select("user_id", F.timestamp_seconds("t").alias("ts"), "cid", "v")
+    out = asof_join(
+        left, right, on="ts", by=["user_id"], right_cols=["cid", "v"]
+    ).collect()[0]
+    assert out["cid_right"] == "c2"
+    assert out["v_right"] is None  # NOT 5.0 from the older row
+
+
+def test_semdedup_rejects_nonpositive_pair_salt(spark):
+    """pair_salt=0 would make pmod NULL and silently report zero
+    duplicates (review finding, round 8) — must raise instead."""
+    import pytest as _pytest
+
+    from ubw_spark.operators.semdedup import semantic_dup_pairs
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
+    )
+    with _pytest.raises(ValueError, match="pair_salt"):
+        semantic_dup_pairs(
+            df, "vec_id", "embedding", [[1.0, 0.0]], pair_salt=0
+        ).collect()
+
+
+def test_dsir_featureless_target_raises(spark):
+    """code-review r11: an empty/featureless target made every
+    log-ratio NULL and the coalesce handed back neutral weights —
+    dsir_select would silently degrade to uniform sampling."""
+    from ubw_spark.operators.dsir import dsir_log_weights
+
+    source = spark.createDataFrame(
+        [(1, "some words here to featurize")], "id bigint, text string"
+    )
+    empty_target = spark.createDataFrame([], "id bigint, text string")
+    with pytest.raises(Exception, match="NO features"):
+        dsir_log_weights(source, empty_target, "id", "text").collect()
+
+
+def test_pq_empty_queries_return_empty(spark):
+    from ubw_spark.operators.pq import pq_adc_topk, pq_encode
+
+    books = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 1.0], [0.5, 0.5]]]
+    vecs = spark.createDataFrame(
+        [(1, [0.9, 0.1, 0.8, 0.9])], "vec_id bigint, embedding array<float>"
+    )
+    codes = pq_encode(vecs, books)
+    out = pq_adc_topk(codes, [], books)
+    assert out.columns == ["qid", "vec_id", "approx_ip"]
+    assert out.count() == 0

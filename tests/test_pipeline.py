@@ -52,3 +52,15 @@ def test_observe_summaries_no_second_scan(spark, friend_df):
     out.collect()  # one action
     s = p.summaries()["filtered"]
     assert s == {"n": 3, "total_age": 2391}
+
+
+def test_pipeline_rejects_duplicate_stage_names():
+    from ubw_spark.pipeline import Pipeline, PipelineStage
+
+    with pytest.raises(ValueError, match="duplicate stage name"):
+        Pipeline(
+            [
+                PipelineStage(lambda d: d, observe={"n": F.count(F.lit(1))}),
+                PipelineStage(lambda d: d, observe={"n": F.count(F.lit(1))}),
+            ]
+        )

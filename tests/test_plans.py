@@ -330,27 +330,42 @@ _EXPECTED_WINDOW_EXEMPTIONS = {
 }
 
 
-def test_no_registered_query_has_global_window_over_raw_rows(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_lints(spark, sf_dir):
+    """ONE plan sweep over every registered query feeding all the
+    registry-wide lints below: {lint: {query: findings}}, each query
+    planned once rather than once per lint."""
+    from ubw_spark.plans.inspect import (
+        global_window_exemptions,
+        global_window_violations,
+        hof_filter_violations,
+        quadratic_window_violations,
+    )
+
+    lints = {
+        "global_window": global_window_violations,
+        "window_exemptions": global_window_exemptions,
+        "quadratic_window": quadratic_window_violations,
+        "hof_filter": hof_filter_violations,
+    }
+    found = {k: {} for k in lints}
+    for name, qd in sorted(REGISTRY.items()):
+        df = qd.fn(spark, sf_dir)
+        for k, lint in lints.items():
+            v = lint(df)
+            if v:
+                found[k][name] = v
+    return found
+
+
+def test_no_registered_query_has_global_window_over_raw_rows(registry_lints):
     """Registry-wide scale lint: no query may plan an unpartitioned
     WindowExec over raw table rows (the one-task 100 TB killer) — and
     every window the lint DOES exempt must appear, with its grounding,
     in the reviewed _EXPECTED_WINDOW_EXEMPTIONS table above (one plan
     sweep computes both, so lint and certification can't drift)."""
-    from ubw_spark.plans.inspect import (
-        global_window_exemptions,
-        global_window_violations,
-    )
-
-    offenders = {}
-    exempted = {}
-    for name, qd in sorted(REGISTRY.items()):
-        df = qd.fn(spark, sf_dir)
-        v = global_window_violations(df)
-        if v:
-            offenders[name] = v
-        e = global_window_exemptions(df)
-        if e:
-            exempted[name] = e
+    offenders = registry_lints["global_window"]
+    exempted = registry_lints["window_exemptions"]
     assert not offenders, offenders
     assert exempted == _EXPECTED_WINDOW_EXEMPTIONS, (
         "exempted global windows changed — review each new site's "
@@ -359,21 +374,14 @@ def test_no_registered_query_has_global_window_over_raw_rows(spark, sf_dir):
     )
 
 
-def test_no_registered_query_plans_a_quadratic_window_frame(spark, sf_dir):
+def test_no_registered_query_plans_a_quadratic_window_frame(registry_lints):
     """Registry-wide scale lint: no query may plan a window frame with
     a moving lower bound and an UNBOUNDED FOLLOWING upper bound —
     Spark's UnboundedFollowingWindowFunctionFrame re-scans to the
     partition end per row, O(n²) per key (the round-10 gapfill finding;
     the mechanical fix is the mirrored running frame over the reversed
     sort).  Whole-partition and running frames pass."""
-    from ubw_spark.plans.inspect import quadratic_window_violations
-
-    offenders = {}
-    for name, qd in sorted(REGISTRY.items()):
-        df = qd.fn(spark, sf_dir)
-        v = quadratic_window_violations(df)
-        if v:
-            offenders[name] = v
+    offenders = registry_lints["quadratic_window"]
     assert not offenders, offenders
 
 
@@ -506,21 +514,14 @@ def test_ivf_store_probe_query_prunes_partitions(spark, sf_dir):
     assert len(probed) <= 2 and probed < on_disk, (probed, on_disk)
 
 
-def test_no_registered_query_filters_through_a_hof(spark, sf_dir):
+def test_no_registered_query_filters_through_a_hof(registry_lints):
     """Registry-wide lint: no query may plan a Filter that evaluates a
     higher-order-function lambda per row — the interpreted
     re-evaluation hazard (no CSE in Filter predicates; a predicate on a
     derived array pipeline gets pushed below the projection and re-runs
     the pipeline per input row — measured 25x on the Bloom probe before
     its guard moved to the raw token count)."""
-    from ubw_spark.plans.inspect import hof_filter_violations
-
-    offenders = {}
-    for name, qd in sorted(REGISTRY.items()):
-        df = qd.fn(spark, sf_dir)
-        v = hof_filter_violations(df)
-        if v:
-            offenders[name] = v
+    offenders = registry_lints["hof_filter"]
     assert not offenders, offenders
 
 

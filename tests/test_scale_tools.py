@@ -516,3 +516,50 @@ def test_excel_view_runtime_decimals_param(spark, tmp_path):
     )
     got = read_xlsx_column_styles(p2)["amount"]
     assert got == {"num_fmt": "0.0000", "width": 20.0}
+
+
+def test_salted_join_rejects_outer_shapes(spark):
+    from ubw_spark.operators.skew import salted_join
+
+    a = spark.createDataFrame([(1, "x")], "k bigint, v string")
+    b = spark.createDataFrame([(1, "y")], "k bigint, w string")
+    with pytest.raises(ValueError, match="duplicate unmatched"):
+        salted_join(a, b, "k", how="full")
+    with pytest.raises(ValueError, match="duplicate unmatched"):
+        salted_join(a, b, "k", how="right")
+
+
+def test_excel_reader_foreign_cells(spark, tmp_path):
+    """code-review r11: real-Excel constructs the stdlib reader must
+    survive — error cells (t="e"), ISO-date cells (t="d"), and cells
+    WITHOUT an r attribute (position implied sequentially)."""
+    import zipfile
+
+    from ubw_spark.sources.excel import read_xlsx_rows
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    rel_ns = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    sheet = f"""<?xml version="1.0"?>
+<worksheet xmlns="{ns}"><sheetData>
+<row r="1"><c r="A1" t="inlineStr"><is><t>a</t></is></c><c r="B1" t="inlineStr"><is><t>b</t></is></c><c r="C1" t="inlineStr"><is><t>c</t></is></c></row>
+<row r="2"><c><v>1</v></c><c><v>2</v></c><c t="e"><v>#DIV/0!</v></c></row>
+<row r="3"><c r="A3" t="d"><v>2024-01-02</v></c><c><v>9</v></c></row>
+</sheetData></worksheet>"""
+    wb = f"""<?xml version="1.0"?>
+<workbook xmlns="{ns}" xmlns:r="{rel_ns}"><sheets>
+<sheet name="S1" sheetId="1" r:id="rId1"/></sheets></workbook>"""
+    rels = f"""<?xml version="1.0"?>
+<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+<Relationship Id="rId1" Type="{rel_ns}/worksheet" Target="worksheets/sheet1.xml"/>
+</Relationships>"""
+    path = str(tmp_path / "foreign.xlsx")
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("xl/workbook.xml", wb)
+        zf.writestr("xl/_rels/workbook.xml.rels", rels)
+        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+    cols, rows = read_xlsx_rows(path)
+    assert cols == ["a", "b", "c"]
+    # r-less cells land sequentially; the error cell decodes to None
+    assert rows[0] == (1, 2, None)
+    # t="d" keeps the ISO text; the r-less 9 sits one past A3
+    assert rows[1] == ("2024-01-02", 9, None)

@@ -118,3 +118,13 @@ def test_write_passes_through_callers_columns(docs, spark, tmp_path):
     assert "curriculum_bin" in back.columns
     assert back.where(F.col("curriculum_bin") != 7).count() == 0
     assert "shard_key" not in back.columns
+
+
+def test_training_shards_reject_reserved_columns(spark, tmp_path):
+    from ubw_spark.operators.shards import write_training_shards
+
+    df = spark.createDataFrame(
+        [(1, 7), (2, 8)], "id bigint, shard_key int"
+    )
+    with pytest.raises(ValueError, match="shard_key"):
+        write_training_shards(df, str(tmp_path / "s"), "id", 2)

@@ -78,3 +78,18 @@ def test_nearest_cells_matches_driver_reference(spark):
             [float(x) for x in r["embedding"]], cents, 1
         )[0]
         assert got[r["vec_id"]] == exp
+
+
+def test_lsh_buckets_reject_corrupt_vectors(spark):
+    """code-review r11: NULL/wrong-dim vectors used to sign-bit to 0
+    and pile into bucket 0 of every table (silent candidate blowup or
+    capped recall-0 drop) — now a loud executor-side error."""
+    from ubw_spark.operators.similarity import hyperplane_lsh_buckets
+
+    bad = spark.createDataFrame(
+        [(1, [0.1] * 8), (2, [0.5] * 5)], "id bigint, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="non-8-dim"):
+        hyperplane_lsh_buckets(bad, dim=8, bits=4, tables=2).agg(
+            F.sum("lsh_bucket")
+        ).collect()

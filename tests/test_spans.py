@@ -567,3 +567,43 @@ def test_gram_probe_skew_guard_collapses_hot_gram(spark):
         assert out[11] == (8, 0, 0.0)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_gram_compaction_leaves_no_staging_tables(spark):
+    """The rename-shuffle swap must clean up __old and __compact on
+    success (review finding, round 8: the swap window is documented,
+    but a SUCCESSFUL compaction must not leak catalog entries)."""
+    from ubw_spark.operators.spans import (
+        compact_gram_index,
+        grams_of,
+        probe_gram_index,
+        write_gram_index,
+    )
+
+    tbl = "gram_idx_residue_test"
+    for t in (tbl, f"{tbl}__compact", f"{tbl}__old"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        docs = spark.createDataFrame(
+            [(1, "a b c d e f"), (2, "g h i j k l")],
+            "doc_id bigint, text string",
+        )
+        write_gram_index(docs, "doc_id", "text", tbl, k=4, num_buckets=2)
+        retire = grams_of(
+            spark.createDataFrame([(0, "a b c d e f")], "doc_id bigint, text string"),
+            "doc_id", "text", k=4,
+        )
+        compact_gram_index(spark, tbl, retire)
+        assert spark.catalog.tableExists(tbl)
+        assert not spark.catalog.tableExists(f"{tbl}__compact")
+        assert not spark.catalog.tableExists(f"{tbl}__old")
+        out = {
+            r.doc_id: r.dup_fraction
+            for r in probe_gram_index(
+                spark, docs, tbl, "doc_id", "text", k=4
+            ).collect()
+        }
+        assert out[1] == 0.0 and out[2] == 1.0
+    finally:
+        for t in (tbl, f"{tbl}__compact", f"{tbl}__old"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")

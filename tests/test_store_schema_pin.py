@@ -210,7 +210,7 @@ def test_probe_results_identical_with_and_without_pin(
 ):
     """Same probe results whether the loader used the pin or inference
     — the pin changes WHEN the schema is known, never what is read."""
-    from ubw_spark.operators import lsh_index
+    from ubw_spark.operators import versioned
     from ubw_spark.operators.lsh_index import (
         probe_minhash_index,
         write_minhash_index,
@@ -226,7 +226,7 @@ def test_probe_results_identical_with_and_without_pin(
         spark, path, probe, "doc_id", "text", threshold=0.2
     ).collect()
     monkeypatch.setattr(
-        lsh_index, "read_pinned_parquet", lambda s, d: s.read.parquet(d)
+        versioned, "read_pinned_parquet", lambda s, d: s.read.parquet(d)
     )
     without_pin = probe_minhash_index(
         spark, path, probe, "doc_id", "text", threshold=0.2

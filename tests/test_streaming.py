@@ -1358,3 +1358,15 @@ def test_stream_shuffle_partitions(spark, monkeypatch):
     with shuffle_partitions_override(spark, 3):
         assert spark.conf.get(key) == "3"
     assert spark.conf.get(key) == before
+
+
+def test_stream_dedup_uses_watermark_bounded_state(spark):
+    """dropDuplicatesWithinWatermark appears in the plan (bounded state),
+    not plain dropDuplicates with unbounded key retention."""
+    from ubw_spark.streaming.stages import stream_dedup
+
+    df = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00")], "event_id bigint, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    plan = stream_dedup(df, ["event_id"])._jdf.queryExecution().logical().toString()
+    assert "DeduplicateWithinWatermark" in plan

@@ -1,6 +1,7 @@
 """The versioned store layout (operators/versioned.py): manifest
-parsing, version GC, the one merge-store lifecycle every bounded-state
-store shares, and the schema guard on file-additive appends."""
+parsing, version GC, the merge-store lifecycle every bounded-state
+store shares, the file-store lifecycle every file-additive store
+shares, and the guard that keeps both behind versioned.py."""
 
 import hashlib
 import os
@@ -260,12 +261,24 @@ def test_merge_store_contract(spark, tmp_path, monkeypatch, store):
         case["load"](spark, bare)
 
 
-# ---------------------------------------- file-additive append drift
+# ------------------------------------------------------- file stores
 
 
-def _docs(spark, id_type):
-    return spark.range(12).select(
-        F.col("id").cast(id_type).alias("doc_id"),
+def _vecs(spark, lo, n=12):
+    return spark.range(lo, lo + n).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            (F.col("id") % 3).cast("float"),
+            (F.col("id") % 2).cast("float"),
+            F.lit(1.0).cast("float"),
+            ((F.col("id") % 5) / 4).cast("float"),
+        ).alias("embedding"),
+    )
+
+
+def _texts(spark, lo, n=12):
+    return spark.range(lo, lo + n).select(
+        F.col("id").alias("doc_id"),
         F.concat(
             F.lit("alpha beta gamma delta epsilon token"),
             (F.col("id") % 4).cast("string"),
@@ -273,60 +286,210 @@ def _docs(spark, id_type):
     )
 
 
-def _ivf_frames(spark, id_type):
-    return spark.range(12).select(
-        F.col("id").cast(id_type).alias("vec_id"),
-        F.array(
-            (F.col("id") % 3).cast("float"),
-            (F.col("id") % 2).cast("float"),
-            F.lit(1.0).cast("float"),
-        ).alias("embedding"),
-    )
+_CELLS = [[0.0, 0.0, 1.0, 0.0], [2.0, 1.0, 1.0, 1.0]]
+_CELLS_B = [[1.0, 0.0, 1.0, 0.0], [0.0, 1.0, 1.0, 1.0]]
+_BOOKS = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 1.0], [0.5, 0.5]]]
 
 
-_CENTROIDS = [[0.0, 0.0, 1.0], [2.0, 1.0, 1.0]]
+def _ivf_case():
+    from ubw_spark.operators import ivf as m
 
-
-def _ivf_store():
-    from ubw_spark.operators.ivf import append_ivf_batch, write_ivf_index
-
-    return (
-        lambda s, p: write_ivf_index(_ivf_frames(s, "bigint"), _CENTROIDS, p),
-        lambda s, p: append_ivf_batch(_ivf_frames(s, "int"), _CENTROIDS, p),
-        lambda root: root,
-    )
-
-
-def _minhash_store():
-    from ubw_spark.operators.lsh_index import (
-        append_minhash_batch,
-        write_minhash_index,
-    )
-
-    return (
-        lambda s, p: write_minhash_index(
-            _docs(s, "bigint"), "doc_id", "text", p
+    return dict(
+        module=m, id_col="vec_id", frames=_vecs,
+        write=lambda s, df, p, alt=False: m.write_ivf_index(
+            df, _CELLS_B if alt else _CELLS, p
         ),
-        lambda s, p: append_minhash_batch(
-            _docs(s, "int"), "doc_id", "text", p
+        append=lambda s, df, p, bid: m.append_ivf_batch(df, _CELLS, p),
+        compact=lambda s, p, drops: m.compact_ivf_index(s, p, drops),
+        # a probe under the store's quantizer, or under a drifted one
+        probe=lambda s, p, ok=True: m.probe_ivf_index(
+            s, p, _vecs(s, 0, 1), _CELLS if ok else _CELLS_B
+        ).count(),
+    )
+
+
+def _ivfpq_case():
+    from ubw_spark.operators import pq as m
+
+    books_b = [[[0.0, 1.0], [1.0, 0.0]], _BOOKS[1]]
+    return dict(
+        module=m, id_col="vec_id", frames=_vecs,
+        write=lambda s, df, p, alt=False: m.write_ivfpq_index(
+            df, _CELLS_B if alt else _CELLS, _BOOKS, p
         ),
-        lambda root: os.path.join(root, "bands"),
+        append=None,  # the code store is rebuilt, never appended to
+        compact=lambda s, p, drops: m.compact_ivfpq_index(s, p, drops),
+        probe=lambda s, p, ok=True: m.probe_ivfpq_index(
+            s, p, [(-1, [0.9, 0.1, 0.8, 0.9])], _CELLS,
+            _BOOKS if ok else books_b,
+        ).count(),
     )
 
 
-def _term_store():
-    from ubw_spark.operators.retrieval import (
-        append_term_batch,
-        write_term_index,
-    )
+def _minhash_case():
+    from ubw_spark.operators import lsh_index as m
 
-    return (
-        lambda s, p: write_term_index(
-            _docs(s, "bigint"), "doc_id", "text", p, buckets=4
+    return dict(
+        module=m, id_col="corpus_id", frames=_texts,
+        write=lambda s, df, p, alt=False: m.write_minhash_index(
+            df, "doc_id", "text", p, bands=32 if alt else 16
         ),
-        lambda s, p: append_term_batch(_docs(s, "int"), "doc_id", "text", p),
-        lambda root: root,
+        append=lambda s, df, p, bid: m.append_minhash_batch(
+            df, "doc_id", "text", p, bands=16
+        ),
+        compact=lambda s, p, drops: m.compact_minhash_index(s, p, drops),
+        # banding params drifted from the store's make keys that never
+        # match: silent zero pairs without the pin
+        probe=lambda s, p, ok=True: m.probe_minhash_index(
+            s, p, _texts(s, 0, 2), "doc_id", "text", bands=16 if ok else 32
+        ).count(),
     )
+
+
+def _term_case():
+    from ubw_spark.operators import retrieval as m
+
+    return dict(
+        module=m, id_col="doc_id", frames=_texts,
+        write=lambda s, df, p, alt=False: m.write_term_index(
+            df, "doc_id", "text", p, buckets=8 if alt else 4
+        ),
+        append=lambda s, df, p, bid: m.append_term_batch(
+            df, "doc_id", "text", p, batch_id=bid
+        ),
+        compact=lambda s, p, drops: m.compact_term_index(s, p, drops),
+        # the sidecar is the authority for the modulus: no caller params
+        probe=lambda s, p, ok=True: m.probe_term_index(s, p, "alpha").count(),
+        restat=True,
+    )
+
+
+FILE_STORES = {
+    "ivf": _ivf_case,
+    "ivfpq": _ivfpq_case,
+    "minhash": _minhash_case,
+    "term": _term_case,
+}
+
+
+def _file_state(spark, store, path):
+    """(sorted rows per part, sidecar without the replay mark)."""
+    root, sidecar = store.open(path)
+    parts = [_sorted(store.read(spark, root, sub)) for sub, _ in store.parts]
+    return parts, {k: v for k, v in sidecar.items() if k != "last_batch_id"}
+
+
+def _crash(*args, **kwargs):
+    raise RuntimeError("killed before the manifest flip")
+
+
+@pytest.mark.parametrize("store", sorted(FILE_STORES))
+def test_file_store_contract(spark, tmp_path, monkeypatch, store):
+    """Every file-additive store: write → append == one-shot build
+    (the term index's append flips a new version and guards replays;
+    IVF and LSH append in place; IVFPQ has no append); compaction drops
+    the ids and carries the sidecar over or recomputes it; a crash
+    between the data write and the flip leaves the live version
+    byte-identical and a retry succeeds; a params mismatch and a
+    missing sidecar both raise, naming the store kind and the path."""
+    case = FILE_STORES[store]()
+    fs = case["module"]._STORE
+    frames = case["frames"]
+    df = frames(spark, 0, 24)
+    path = str(tmp_path / store)
+
+    def crash_leaves_live_intact(op):
+        v = current_version(path)
+        live = _tree_bytes(version_dir(path, v))
+        with monkeypatch.context() as m:
+            m.setattr(versioned, "commit_rewrite", _crash)
+            with pytest.raises(RuntimeError, match="killed"):
+                op()
+        assert current_version(path) == v
+        assert _tree_bytes(version_dir(path, v)) == live
+
+    if case["append"] is None:
+        case["write"](spark, df, path)
+    else:
+        case["write"](spark, frames(spark, 0, 12), path)
+        batch = frames(spark, 12, 12)
+        flips = case.get("restat", False)
+        if flips:
+            crash_leaves_live_intact(
+                lambda: case["append"](spark, batch, path, 1)
+            )
+        case["append"](spark, batch, path, 1)
+        assert current_version(path) == (1 if flips else 0)
+        if flips:
+            case["append"](spark, batch, path, 1)  # redelivered batch
+            assert current_version(path) == 1  # a no-op before any write
+            assert fs.open(path)[1]["last_batch_id"] == 1
+        whole = str(tmp_path / f"{store}_whole")
+        case["write"](spark, df, whole)
+        assert _file_state(spark, fs, path) == _file_state(spark, fs, whole)
+    assert case["probe"](spark, path) >= 0  # matching params probe fine
+
+    drops = spark.createDataFrame([(1,), (14,)], "id bigint")
+    crash_leaves_live_intact(lambda: case["compact"](spark, path, drops))
+    v = current_version(path)
+    case["compact"](spark, path, drops)
+    assert current_version(path) == v + 1
+    kept = str(tmp_path / f"{store}_kept")
+    case["write"](spark, df.where(~F.col(df.columns[0]).isin(1, 14)), kept)
+    assert _file_state(spark, fs, path) == _file_state(spark, fs, kept)
+    if case.get("restat"):
+        assert fs.open(path)[1]["last_batch_id"] == 1  # carried through
+
+    if store != "term":  # the term sidecar is the authority: no params
+        with pytest.raises(ValueError) as err:
+            case["probe"](spark, path, ok=False)
+        msg = str(err.value)
+        assert fs.kind in msg and path in msg and "params mismatch" in msg
+
+    bare = str(tmp_path / f"{store}_bare")
+    df.write.parquet(bare)
+    with pytest.raises(ValueError) as err:
+        case["probe"](spark, bare)
+    msg = str(err.value)
+    assert fs.kind in msg and bare in msg and fs.sidecar in msg
+
+
+@pytest.mark.parametrize("store", sorted(FILE_STORES))
+def test_compaction_resolves_manifest_once(spark, tmp_path, monkeypatch, store):
+    """A compaction reads the sidecar and the data from ONE manifest
+    resolve: a rewrite that flips ``_CURRENT`` between two resolves
+    would pair one version's quantizer, banding or stats with another
+    version's rows.  The flip is injected after the first manifest
+    read, wherever the store resolves it."""
+    case = FILE_STORES[store]()
+    fs = case["module"]._STORE
+    path = str(tmp_path / store)
+    case["write"](spark, case["frames"](spark, 0), path)  # v0
+    case["write"](spark, case["frames"](spark, 100), path, alt=True)  # v1
+    versioned.write_manifest(path, 0)
+    v0_sidecar = fs.open(path)[1]
+
+    real = versioned.current_version
+    calls = []
+
+    def flip_after_first(p):
+        v = real(p)
+        if not calls:
+            versioned.write_manifest(p, 1)  # a concurrent rewrite lands
+        calls.append(v)
+        return v
+
+    drops = spark.createDataFrame([(1,)], "id bigint")
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "current_version", flip_after_first)
+        case["compact"](spark, path, drops)
+    root, sidecar = fs.open(path)
+    ids = fs.read(spark, root, fs.parts[0][0]).select(case["id_col"])
+    assert sorted({r[0] for r in ids.collect()}) == sorted(set(range(12)) - {1})
+    if case.get("restat"):  # stats recomputed; the modulus is v0's
+        assert sidecar["buckets"] == v0_sidecar["buckets"]
+    else:
+        assert sidecar == v0_sidecar
 
 
 @pytest.mark.parametrize("store", ["ivf", "minhash", "term"])
@@ -335,16 +498,56 @@ def test_file_additive_append_refuses_schema_drift(spark, tmp_path, store):
     bigint-id store appended with an int id) is refused before anything
     lands, naming the store, the data dir and both schemas — instead of
     files the pinned read would misread."""
-    write, append, data_dir = {
-        "ivf": _ivf_store, "minhash": _minhash_store, "term": _term_store,
-    }[store]()
+    case = FILE_STORES[store]()
+    sub = case["module"]._STORE.parts[0][0]
     path = str(tmp_path / store)
-    write(spark, path)
+    case["write"](spark, case["frames"](spark, 0), path)
     root = resolve_root(path)
+    data_dir = root if sub is None else os.path.join(root, sub)
+    batch = case["frames"](spark, 12)
+    batch = batch.withColumn(batch.columns[0], F.col(batch.columns[0]).cast("int"))
     before = _tree_bytes(path)
     with pytest.raises(ValueError) as err:
-        append(spark, path)
+        case["append"](spark, batch, path, None)
     msg = str(err.value)
-    assert path in msg and data_dir(root) in msg
+    assert path in msg and data_dir in msg
     assert "bigint" in msg and re.search(r"\bint\b", msg)
     assert _tree_bytes(path) == before
+
+
+# ------------------------------------------------------- module guard
+
+#: The store lifecycle primitives: only versioned.py's two lifecycles
+#: may call them, so every store's write/append/compact is one of those.
+_LIFECYCLE = {
+    "begin_rewrite", "commit_rewrite", "pin_schema", "write_sidecar",
+    "link_carryover", "check_append_schema",
+}
+
+
+def test_lifecycle_primitives_stay_in_versioned():
+    """No module under ubw_spark/ or examples/ other than versioned.py
+    calls a store lifecycle primitive, and the pre-FileStore shared
+    compaction body is gone."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(versioned.__file__).resolve().parents[2]
+    offenders = []
+    for base in ("ubw_spark", "examples"):
+        for f in sorted((repo / base).rglob("*.py")):
+            if f == Path(versioned.__file__).resolve():
+                continue
+            for node in ast.walk(ast.parse(f.read_text())):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = fn.id if isinstance(fn, ast.Name) else getattr(
+                    fn, "attr", None
+                )
+                if name in _LIFECYCLE:
+                    offenders.append(
+                        f"{f.relative_to(repo)}:{node.lineno} {name}"
+                    )
+    assert not offenders, offenders
+    assert not hasattr(versioned, "compact_partitioned_store")

@@ -204,3 +204,30 @@ class TestKeySkewReport:
 
         df = spark.createDataFrame([("a",), ("b",)], "k string")
         assert global_window_violations(key_skew_report(df, "k")) == []
+
+
+def test_short_texts_yield_empty_winnow_not_crash(spark):
+    df = spark.createDataFrame(
+        [(1, "ab"), (2, ""), (3, "long enough text here")],
+        "doc_id bigint, text string",
+    )
+    out = winnow_fingerprints_df(df, "doc_id", "text", k=5, window=4)
+    ids = {r["doc_id"] for r in out.collect()}
+    assert 1 not in ids and 2 not in ids and 3 in ids
+
+
+def test_scd2_handles_multiple_changes_per_key(spark):
+    from ubw_spark.operators.cdc import scd2_init, scd2_merge
+
+    snap = spark.createDataFrame(
+        [(1, "a", "2024-01-01 00:00:00")], "id bigint, v string, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    dim = scd2_init(snap)
+    changes = spark.createDataFrame(
+        [(1, "b", "2024-02-01 00:00:00"), (1, "c", "2024-03-01 00:00:00")],
+        "id bigint, v string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    out = scd2_merge(dim, changes, keys=["id"])
+    current = out.where("is_current").collect()
+    assert len(current) == 1 and current[0]["v"] == "c"  # latest wins, once
+    assert out.count() == 2  # old closed + new current

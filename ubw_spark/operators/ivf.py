@@ -25,17 +25,7 @@ from pyspark.sql.functions import broadcast
 from ubw_spark.functions.hof import fence
 
 from ubw_spark.operators.similarity import cosine_col
-from ubw_spark.operators.versioned import (
-    begin_rewrite,
-    check_append_schema,
-    commit_rewrite,
-    compact_partitioned_store,
-    pin_schema,
-    read_pinned_parquet,
-    read_sidecar,
-    resolve_root,
-    write_sidecar,
-)
+from ubw_spark.operators.versioned import FileStore
 
 
 def train_ivf_centroids(
@@ -197,6 +187,9 @@ def assign_vectorized(
 #: the bloom/CMS/gram/LSH param pins exist for.
 IVF_PARAMS_FILE = "_IVF_PARAMS"
 
+#: The cell store: one part at the version root, partitioned by cell.
+_STORE = FileStore(IVF_PARAMS_FILE, "ivf index", ((None, "ivf_cell"),))
+
 
 def centroid_params(centroids: list[list[float]]) -> dict:
     """Fingerprint of a centroid (or codebook) table for the sidecar —
@@ -211,20 +204,6 @@ def centroid_params(centroids: list[list[float]]) -> dict:
         "dim": len(norm[0]) if norm else 0,
         "md5": hashlib.md5(json.dumps(norm).encode()).hexdigest(),
     }
-
-
-def _check_ivf_params(
-    root: str, centroids: list[list[float]], kind: str = "ivf index"
-) -> None:
-    stored = read_sidecar(root, IVF_PARAMS_FILE, kind)
-    got = centroid_params(centroids)
-    if stored != got:
-        raise ValueError(
-            f"{kind} at {root} was built with a different quantizer "
-            f"(store {stored}, caller {got}) — probing/appending with "
-            "drifted centroids silently assigns the wrong cells; use "
-            "the training-time centroids or rebuild the index"
-        )
 
 
 def nearest_cells_py(
@@ -272,17 +251,11 @@ def write_ivf_index(
     The store is VERSIONED (operators/versioned.py): rewrites land in a
     fresh ``vNNNNN/`` dir and the ``_CURRENT`` manifest flips in one
     small-object write — same lifecycle as the LSH and gram indexes."""
-    new_v, root = begin_rewrite(path)
-    assigned = assign_ivf_cells(corpus, centroids, vec_col)
-    (
-        assigned.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(root)
+    _STORE.write(
+        path,
+        (assign_ivf_cells(corpus, centroids, vec_col),),
+        centroid_params(centroids),
     )
-    pin_schema(root, assigned.schema, ("ivf_cell",))
-    write_sidecar(root, IVF_PARAMS_FILE, centroid_params(centroids))
-    commit_rewrite(path, new_v)
 
 
 def probe_ivf_index(
@@ -315,8 +288,7 @@ def probe_ivf_index(
     candidates when queries was non-deterministic (sample(), unordered
     limit, re-read of mutable storage) AND paid the k·dim literal
     expression build per call at paper-scale k."""
-    root = resolve_root(path)
-    _check_ivf_params(root, centroids)
+    root, _ = _STORE.open(path, centroid_params(centroids))
     q_rows = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
     ).collect()
@@ -341,7 +313,7 @@ def probe_ivf_index(
     # literal_frame, not createDataFrame: the probe rows join every
     # consuming job, and a pickled local RDD would launch a Python
     # worker per job (round-13 measurement: ~0.3-0.5 s each warm)
-    indexed_all = read_pinned_parquet(spark, root)
+    indexed_all = _STORE.read(spark, root)
     probes = literal_frame(
         spark,
         probe_rows,
@@ -468,15 +440,10 @@ def append_ivf_batch(
     batch whose read-back schema differs from the pinned ``_SCHEMA``
     (e.g. an ``int`` id into a ``bigint`` store) is refused before
     anything lands."""
-    root = resolve_root(path)
-    _check_ivf_params(root, centroids)
-    assigned = assign_ivf_cells(batch, centroids, vec_col)
-    check_append_schema(path, root, assigned.schema, ("ivf_cell",))
-    (
-        assigned.repartition("ivf_cell")
-        .write.mode("append")
-        .partitionBy("ivf_cell")
-        .parquet(root)
+    _STORE.append(
+        path,
+        lambda _stored: (assign_ivf_cells(batch, centroids, vec_col),),
+        params=centroid_params(centroids),
     )
 
 
@@ -493,16 +460,11 @@ def compact_ivf_index(
     surfacing as neighbors.  Same two-posture anti-join as the LSH
     index compaction: ``broadcast_drops=False`` for corpus-fraction
     drop sets plans a shuffled anti-join (no broadcast limit in the
-    path).  Cell partitioning is preserved; the swap is the shared
-    versioned-manifest flip (operators/versioned.py) — write new
-    version, one small-object pointer write, grace-keep the previous."""
-    stored = read_sidecar(resolve_root(path), IVF_PARAMS_FILE, "ivf index")
-    compact_partitioned_store(
-        spark, path, drop_ids, id_col, "ivf_cell",
-        broadcast_drops=broadcast_drops,
-        # the quantizer pin carries verbatim — compaction changes
-        # membership, never cell geometry
-        pre_commit=lambda new_root: write_sidecar(
-            new_root, IVF_PARAMS_FILE, stored
-        ),
+    path).  Cell partitioning and the quantizer pin are preserved
+    (compaction changes membership, never cell geometry); the swap is
+    the shared versioned-manifest flip (operators/versioned.py) —
+    write new version, one small-object pointer write, grace-keep the
+    previous."""
+    _STORE.compact(
+        spark, path, drop_ids, id_col, broadcast_drops=broadcast_drops
     )

@@ -49,8 +49,6 @@ the index IS the long-lived table, batches are the writes.
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -63,15 +61,9 @@ from ubw_spark.operators.dedup import (
     prefilter_min_agree,
 )
 from ubw_spark.operators.versioned import (
-    begin_rewrite,
-    check_append_schema,
-    commit_rewrite,
+    FileStore,
     current_version,  # re-exported: part of this module's public API
-    pin_schema,
-    read_pinned_parquet,
-    read_sidecar,
-    resolve_root as _resolve_root,
-    write_sidecar,
+    resolve_root,
 )
 
 #: Params sidecar pinning the banding layout.  Probing or appending
@@ -81,23 +73,13 @@ from ubw_spark.operators.versioned import (
 #: the bloom/CMS/gram-index param pins exist for.
 PARAMS_FILE = "_LSH_PARAMS"
 
-
-def _check_lsh_params(
-    root: str, k: int, num_hashes: int, bands: int, rows_per_band: int
-) -> None:
-    stored = read_sidecar(root, PARAMS_FILE, "minhash index")
-    got = {
-        "k": k,
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "rows_per_band": rows_per_band,
-    }
-    if stored != got:
-        raise ValueError(
-            f"minhash index params mismatch: store has {stored}, caller "
-            f"passed {got} — band keys never match across parameter "
-            "sets; use the stored params or rebuild the index"
-        )
+#: The banded keys partitioned by band, the shingle store for candidate
+#: verification, and the persisted signatures backing the prefilter.
+_STORE = FileStore(
+    PARAMS_FILE,
+    "minhash index",
+    (("bands", "band"), ("docs", None), ("sigs", None)),
+)
 
 __all__ = [
     "write_minhash_index",
@@ -109,16 +91,30 @@ __all__ = [
 ]
 
 
-def _bands_path(path: str) -> str:
-    return posixpath.join(path, "bands")
+def _lsh_params(k: int, num_hashes: int, bands: int, rows_per_band: int):
+    return {
+        "k": k,
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "rows_per_band": rows_per_band,
+    }
 
 
-def _docs_path(path: str) -> str:
-    return posixpath.join(path, "docs")
-
-
-def _sigs_path(path: str) -> str:
-    return posixpath.join(path, "sigs")
+def _index_frames(df: DataFrame, id_col: str, text_col: str, params: dict):
+    """(bands, docs, sigs) rows of ``df`` under the banding ``params``.
+    The three are INDEPENDENT projections of the one materialized
+    minhash frame (banded_minhash truncates it eagerly before
+    returning), so the store overlaps their write jobs."""
+    sh, sig, banded = banded_minhash(
+        df, id_col, text_col, id_alias="corpus_id", sh_name="sh", **params
+    )
+    banded_out = banded.withColumnRenamed("__band", "band").withColumnRenamed(
+        "__key", "key"
+    )
+    # the signature store backs the prefilter between the band join and
+    # the shingle verify: ~512 B/doc vs KBs/doc of shingles, rewritten
+    # alongside docs, read with a two-column pruned scan at probe time
+    return banded_out, sh, sig.withColumnRenamed("__sig", "sig")
 
 
 def write_minhash_index(
@@ -145,65 +141,8 @@ def write_minhash_index(
     resolves the manifest first.  Rewrites (a fresh ``overwrite`` or a
     compaction) write a NEW version dir and flip the pointer — never
     mutate a dir a reader may hold open."""
-    new_v, root = begin_rewrite(path)
-    sh, sig, banded = banded_minhash(
-        df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
-        k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
-    )
-    banded_out = banded.withColumnRenamed("__band", "band").withColumnRenamed(
-        "__key", "key"
-    )
-    # the signature store backs the prefilter between the band join and
-    # the shingle verify: ~512 B/doc vs KBs/doc of shingles, rewritten
-    # alongside docs, read with a two-column pruned scan at probe time
-    sig_out = sig.withColumnRenamed("__sig", "sig")
-
-    def _write_bands() -> None:
-        (
-            banded_out.repartition("band")
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(_bands_path(root))
-        )
-        pin_schema(_bands_path(root), banded_out.schema, ("band",))
-
-    def _write_docs() -> None:
-        sh.write.mode("overwrite").parquet(_docs_path(root))
-        pin_schema(_docs_path(root), sh.schema)
-
-    def _write_sigs() -> None:
-        sig_out.write.mode("overwrite").parquet(_sigs_path(root))
-        pin_schema(_sigs_path(root), sig_out.schema)
-
-    # The three stores are INDEPENDENT projections of the one
-    # materialized minhash frame (banded_minhash truncates it eagerly
-    # before returning), so their write jobs overlap instead of running
-    # back-to-back (guide §2.6): each write's tail (commit protocol,
-    # small last tasks) back-fills with the next store's tasks.  Jobs
-    # submitted from driver threads are the documented Spark pattern;
-    # nothing here mutates shared state — each thread owns its store
-    # subdirectory, and the manifest flip below happens after ALL three
-    # landed.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [
-            pool.submit(_write_bands),
-            pool.submit(_write_docs),
-            pool.submit(_write_sigs),
-        ]:
-            fut.result()
-    write_sidecar(
-        root,
-        PARAMS_FILE,
-        {
-            "k": k,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "rows_per_band": rows_per_band,
-        },
-    )
-    commit_rewrite(path, new_v)
+    params = _lsh_params(k, num_hashes, bands, rows_per_band)
+    _STORE.write(path, _index_frames(df, id_col, text_col, params), params)
 
 
 def append_minhash_batch(
@@ -233,46 +172,12 @@ def append_minhash_batch(
     is simply not yet visible in the old one).  A batch whose read-back
     schema differs from a store's pinned ``_SCHEMA`` is refused before
     anything lands."""
-    root = _resolve_root(path)
-    _check_lsh_params(root, k, num_hashes, bands, rows_per_band)
-    sh, sig, banded = banded_minhash(
-        df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
-        k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
+    params = _lsh_params(k, num_hashes, bands, rows_per_band)
+    _STORE.append(
+        path,
+        lambda _stored: _index_frames(df, id_col, text_col, params),
+        params=params,
     )
-    banded_out = banded.withColumnRenamed("__band", "band").withColumnRenamed(
-        "__key", "key"
-    )
-    sig_out = sig.withColumnRenamed("__sig", "sig")
-    check_append_schema(path, _bands_path(root), banded_out.schema, ("band",))
-    check_append_schema(path, _docs_path(root), sh.schema)
-    check_append_schema(path, _sigs_path(root), sig_out.schema)
-
-    def _append_bands() -> None:
-        (
-            banded_out.repartition("band")
-            .write.mode("append")
-            .partitionBy("band")
-            .parquet(_bands_path(root))
-        )
-
-    def _append_docs() -> None:
-        sh.write.mode("append").parquet(_docs_path(root))
-
-    def _append_sigs() -> None:
-        sig_out.write.mode("append").parquet(_sigs_path(root))
-
-    # Independent projections of the one materialized batch frame into
-    # three disjoint store directories: overlap the append jobs (guide
-    # §2.6) exactly as in write_minhash_index.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [
-            pool.submit(_append_bands),
-            pool.submit(_append_docs),
-            pool.submit(_append_sigs),
-        ]:
-            fut.result()
 
 
 def probe_minhash_index(
@@ -308,8 +213,9 @@ def probe_minhash_index(
     The manifest is resolved ONCE here, so the candidate scan and the
     verify join read the same version even if a compaction flips the
     pointer mid-query."""
-    root = _resolve_root(path)
-    _check_lsh_params(root, k, num_hashes, bands, rows_per_band)
+    root, _ = _STORE.open(
+        path, _lsh_params(k, num_hashes, bands, rows_per_band)
+    )
     p_sh, p_sig, p_banded = banded_minhash(
         probe, id_col, text_col, id_alias="probe_id", sh_name="sh_probe",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
@@ -317,7 +223,7 @@ def probe_minhash_index(
     p_banded = p_banded.withColumnRenamed("__band", "band").withColumnRenamed(
         "__key", "key"
     )
-    idx = read_pinned_parquet(spark, _bands_path(root))
+    idx = _STORE.read(spark, root, "bands")
     if probe_bands is not None:
         idx = idx.where(F.col("band") < probe_bands)
         p_banded = p_banded.where(F.col("band") < probe_bands)
@@ -341,7 +247,7 @@ def probe_minhash_index(
         # null-checks on it are cheap scan filters); only the batch's
         # in-flight signatures need the pushdown fence — see
         # dedup.minhash_dedup_pairs
-        c_sig = read_pinned_parquet(spark, _sigs_path(root))
+        c_sig = _STORE.read(spark, root, "sigs")
         cands = (
             cands.join(c_sig, "corpus_id")
             .join(
@@ -358,7 +264,7 @@ def probe_minhash_index(
             )
             .select("corpus_id", "probe_id")
         )
-    c_sh = read_pinned_parquet(spark, _docs_path(root))
+    c_sh = _STORE.read(spark, root, "docs")
     inter = F.size(F.array_intersect("sh", "sh_probe"))
     union = F.size(F.array_union("sh", "sh_probe"))
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -391,19 +297,9 @@ def compacted_index_frames(
     of a web corpus, billions of ids, far past any driver/broadcast
     limit.  Same two-posture pattern as
     dedup.minhash_contamination_pairs(large_probe=...)."""
-    drops = drop_ids.select(F.col(drop_ids.columns[0]).alias(id_col))
-    maybe_bc = broadcast if broadcast_drops else (lambda d: d)
-    root = _resolve_root(path)
-    bands_kept = read_pinned_parquet(spark, _bands_path(root)).join(
-        maybe_bc(drops), id_col, "left_anti"
+    return _STORE.kept(
+        spark, resolve_root(path), drop_ids, id_col, broadcast_drops
     )
-    docs_kept = read_pinned_parquet(spark, _docs_path(root)).join(
-        maybe_bc(drops), id_col, "left_anti"
-    )
-    sigs_kept = read_pinned_parquet(spark, _sigs_path(root)).join(
-        maybe_bc(drops), id_col, "left_anti"
-    )
-    return bands_kept, docs_kept, sigs_kept
 
 
 def compact_minhash_index(
@@ -433,25 +329,6 @@ def compact_minhash_index(
     overwrite.  A reader that resolved the manifest just before the
     flip keeps scanning the previous version, which survives as a
     grace copy until the NEXT compaction garbage-collects it."""
-    old_root = _resolve_root(path)
-    stored_params = read_sidecar(old_root, PARAMS_FILE, "minhash index")
-    new_v, new_root = begin_rewrite(path)
-    bands_kept, docs_kept, sigs_kept = compacted_index_frames(
+    _STORE.compact(
         spark, path, drop_ids, id_col, broadcast_drops=broadcast_drops
     )
-    (
-        bands_kept.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(_bands_path(new_root))
-    )
-    pin_schema(_bands_path(new_root), bands_kept.schema, ("band",))
-    docs_kept.write.mode("overwrite").parquet(_docs_path(new_root))
-    pin_schema(_docs_path(new_root), docs_kept.schema)
-    sigs_kept.write.mode("overwrite").parquet(_sigs_path(new_root))
-    pin_schema(_sigs_path(new_root), sigs_kept.schema)
-    # the layout params carry verbatim — compaction changes membership,
-    # never the banding scheme
-    write_sidecar(new_root, PARAMS_FILE, stored_params)
-    # Flip + GC, shared contract: operators/versioned.py::commit_rewrite.
-    commit_rewrite(path, new_v)

@@ -27,16 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ubw_spark.operators.versioned import (
-    begin_rewrite,
-    commit_rewrite,
-    compact_partitioned_store,
-    pin_schema,
-    read_pinned_parquet,
-    read_sidecar,
-    resolve_root,
-    write_sidecar,
-)
+from ubw_spark.operators.versioned import FileStore
 
 
 def seed_pq_codebooks(
@@ -219,6 +210,9 @@ def _adc_sum_sql(
 #: against wrong tables (the IVF pin rationale, doubled).
 PQ_PARAMS_FILE = "_IVFPQ_PARAMS"
 
+#: The code store: one part at the version root, partitioned by cell.
+_STORE = FileStore(PQ_PARAMS_FILE, "ivfpq index", ((None, "ivf_cell"),))
+
 
 def _ivfpq_params(
     cell_centroids: list[list[float]], codebooks: list[list[list[float]]]
@@ -229,22 +223,6 @@ def _ivfpq_params(
         "cells": centroid_params(cell_centroids),
         "codebooks": [centroid_params(book) for book in codebooks],
     }
-
-
-def _check_ivfpq_params(
-    root: str,
-    cell_centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-) -> None:
-    stored = read_sidecar(root, PQ_PARAMS_FILE, "ivfpq index")
-    got = _ivfpq_params(cell_centroids, codebooks)
-    if stored != got:
-        raise ValueError(
-            f"ivfpq index at {root} was built with a different "
-            "quantizer/codebook set — probing with drifted parameters "
-            "silently scores wrong; use the training-time tables or "
-            "rebuild the index"
-        )
 
 
 def _empty_adc_result(
@@ -400,19 +378,10 @@ def write_ivfpq_index(
     cell (the ivf.write_ivf_index rationale)."""
     from ubw_spark.operators.ivf import assign_ivf_cells
 
-    new_v, root = begin_rewrite(path)
     coded = pq_encode(
         assign_ivf_cells(corpus, cell_centroids, vec_col), codebooks
     ).select(id_col, "ivf_cell", "pq_code")
-    (
-        coded.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(root)
-    )
-    pin_schema(root, coded.schema, ("ivf_cell",))
-    write_sidecar(root, PQ_PARAMS_FILE, _ivfpq_params(cell_centroids, codebooks))
-    commit_rewrite(path, new_v)
+    _STORE.write(path, (coded,), _ivfpq_params(cell_centroids, codebooks))
 
 
 def probe_ivfpq_index(
@@ -432,18 +401,15 @@ def probe_ivfpq_index(
     plan — the same pattern as ivf.probe_ivf_index), and the per-query
     cell bound + ADC scoring then run exactly as :func:`ivf_pq_topk`.
     Corpus text/vectors are never read — only m-int codes."""
-    root = resolve_root(path)
-    _check_ivfpq_params(root, cell_centroids, codebooks)
+    root, _ = _STORE.open(path, _ivfpq_params(cell_centroids, codebooks))
     if not queries:
-        return _empty_adc_result(
-            read_pinned_parquet(spark, root), id_col, qid_type
-        )
+        return _empty_adc_result(_STORE.read(spark, root), id_col, qid_type)
     probes = {
         qid: _nearest_cells_py([float(x) for x in vec], cell_centroids, nprobe)
         for qid, vec in queries
     }
     all_cells = sorted({c for cells in probes.values() for c in cells})
-    coded = read_pinned_parquet(spark, root).where(
+    coded = _STORE.read(spark, root).where(
         F.col("ivf_cell").isin(all_cells)
     )
     per_query = []
@@ -496,14 +462,9 @@ def compact_ivfpq_index(
     ivf.compact_ivf_index; the rows here are m-int codes, so the
     rewrite moves 32× fewer bytes than the raw-vector store).
     ``broadcast_drops=False`` plans a shuffled anti-join for
-    corpus-fraction drop sets; cell partitioning preserved; swap via
-    the versioned-manifest flip — one shared body for both
-    cell-partitioned stores (versioned.compact_partitioned_store)."""
-    stored = read_sidecar(resolve_root(path), PQ_PARAMS_FILE, "ivfpq index")
-    compact_partitioned_store(
-        spark, path, drop_ids, id_col, "ivf_cell",
-        broadcast_drops=broadcast_drops,
-        pre_commit=lambda new_root: write_sidecar(
-            new_root, PQ_PARAMS_FILE, stored
-        ),
+    corpus-fraction drop sets; cell partitioning and the params pin
+    preserved; swap via the versioned-manifest flip
+    (versioned.FileStore.compact)."""
+    _STORE.compact(
+        spark, path, drop_ids, id_col, broadcast_drops=broadcast_drops
     )

@@ -58,18 +58,7 @@ from pyspark.sql.functions import broadcast
 
 from ubw_spark.functions.text import tokens
 from ubw_spark.operators.dedup import portable_hash, widen
-from ubw_spark.operators.versioned import (
-    begin_rewrite,
-    check_append_schema,
-    commit_rewrite,
-    compact_partitioned_store,
-    link_carryover,
-    pin_schema,
-    read_pinned_parquet,
-    read_sidecar,
-    resolve_root,
-    write_sidecar,
-)
+from ubw_spark.operators.versioned import FileStore
 
 __all__ = [
     "doc_postings",
@@ -92,6 +81,11 @@ __all__ = [
 #: would hash query terms under the wrong modulus — the silent-zero
 #: failure class the bloom params sidecar exists for.
 STATS_FILE = "_TERM_STATS"
+
+#: The posting store: one part at the version root, partitioned by the
+#: term bucket.  Its sidecar moves with the data, so appends run the
+#: crash-atomic carryover cycle (versioned.FileStore.append).
+_STORE = FileStore(STATS_FILE, "term index", ((None, "tb"),))
 
 _K1 = 1.2
 _B = 0.75
@@ -450,36 +444,8 @@ def phrase_match(
 # ---------------------------------------------------------------- store
 
 
-def _write_stats(
-    root: str,
-    n_docs: int,
-    total_tokens: int,
-    buckets: int,
-    last_batch_id: int | None = None,
-) -> None:
-    # last_batch_id is the exactly-once high-water mark: rewrites that
-    # regenerate the sidecar (compaction, retirement) MUST carry it
-    # through, or a redelivered foreachBatch micro-batch after the
-    # rewrite is re-folded (duplicate postings, double-counted stats).
-    stats: dict = {
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "buckets": buckets,
-    }
-    if last_batch_id is not None:
-        stats["last_batch_id"] = last_batch_id
-    write_sidecar(root, STATS_FILE, stats)
-
-
-def _read_stats_at(root: str, path: str) -> dict:
-    """Sidecar of an ALREADY-RESOLVED version root — callers that also
-    scan postings must resolve once and read both from the same root
-    (versioned.py's readers-resolve-once rule: resolving twice lets a
-    concurrent compaction split stats and postings across versions).
-    Thin wrapper over the shared sidecar reader; ``path`` keeps the
-    caller-facing store path in scope for future messaging."""
-    del path  # the resolved root identifies the store in the error
-    return read_sidecar(root, STATS_FILE, "term index")
+def _stats(n_docs: int, total_tokens: int, buckets: int) -> dict:
+    return {"n_docs": n_docs, "total_tokens": total_tokens, "buckets": buckets}
 
 
 def read_term_stats(path: str) -> dict:
@@ -487,7 +453,7 @@ def read_term_stats(path: str) -> dict:
     raises when the sidecar is missing — scoring with guessed corpus
     stats skews every idf/avgdl silently (the bloom params-sidecar
     rule)."""
-    return _read_stats_at(resolve_root(path), path)
+    return _STORE.open(path)[1]
 
 
 def _bucketed_postings(
@@ -531,20 +497,15 @@ def write_term_index(
     from pyspark.sql import Observation
 
     obs = Observation()
-    new_v, root = begin_rewrite(path)
     posts = _bucketed_postings(
         df, id_col, text_col, buckets, stats_observation=obs
     )
-    (
-        posts.repartition("tb")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(root)
+    _STORE.write(
+        path,
+        (posts,),
+        # {n_docs, total_tokens} observed during the write
+        lambda: _stats(**obs.get, buckets=buckets),
     )
-    pin_schema(root, posts.schema, ("tb",))
-    st = obs.get  # {n_docs, total_tokens} observed during the write
-    _write_stats(root, st["n_docs"], st["total_tokens"], buckets)
-    commit_rewrite(path, new_v)
 
 
 def append_term_batch(
@@ -579,45 +540,22 @@ def append_term_batch(
     from the pinned ``_SCHEMA`` is refused before any write."""
     from pyspark.sql import Observation
 
-    old_root = resolve_root(path)
-    old = _read_stats_at(old_root, path)
-    if batch_id is not None:
-        last = old.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
     obs = Observation()
-    posts = _bucketed_postings(
-        batch, id_col, text_col, old["buckets"], stats_observation=obs
+    _STORE.append(
+        path,
+        lambda old: (
+            _bucketed_postings(
+                batch, id_col, text_col, old["buckets"],
+                stats_observation=obs,
+            ),
+        ),
+        # the counts observed during the write add to the live ones
+        restat=lambda old, _root: _stats(
+            **{k: old[k] + v for k, v in obs.get.items()},
+            buckets=old["buckets"],
+        ),
+        batch_id=batch_id,
     )
-    check_append_schema(path, old_root, posts.schema, ("tb",))
-    new_v, new_root = begin_rewrite(path)
-    # A crashed earlier attempt leaves a torn new_root that begin_rewrite
-    # re-issues (the manifest never flipped): clear it, or carryover hits
-    # its own leftover hardlinks and a retry would append the batch's
-    # posting files a SECOND time into the torn dir (mode("append") does
-    # not self-heal the way the overwrite-mode stores do).
-    import shutil as _shutil
-
-    _shutil.rmtree(new_root, ignore_errors=True)
-    link_carryover(old_root, new_root, skip_files=(STATS_FILE,))
-    (
-        posts.repartition("tb")
-        .write.mode("append")
-        .partitionBy("tb")
-        .parquet(new_root)
-    )
-    st = obs.get  # {n_docs, total_tokens} observed during the write
-    merged = {
-        "n_docs": old["n_docs"] + st["n_docs"],
-        "total_tokens": old["total_tokens"] + st["total_tokens"],
-        "buckets": old["buckets"],
-    }
-    if batch_id is not None:
-        merged["last_batch_id"] = batch_id
-    elif old.get("last_batch_id") is not None:
-        merged["last_batch_id"] = old["last_batch_id"]
-    write_sidecar(new_root, STATS_FILE, merged)
-    commit_rewrite(path, new_v)
 
 
 def probe_term_index(
@@ -639,9 +577,8 @@ def probe_term_index(
     parquet scan of those partitions.  The version root is resolved
     ONCE — stats and postings always come from the same version."""
     qts = query_terms(query)
-    root = resolve_root(path)
-    stats = _read_stats_at(root, path)
-    idx = read_pinned_parquet(spark, root)
+    root, stats = _STORE.open(path)
+    idx = _STORE.read(spark, root)
     # Empty query OR fully-retired store → empty result up front: with
     # n_docs = 0 the avgdl literal is total/0, which ANSI constant
     # folding rejects at PLAN time even though no row would evaluate it.
@@ -696,12 +633,11 @@ def probe_term_index_batch(
     in one task — the _score_topk skew rationale)."""
     from pyspark.sql import Window
 
-    root = resolve_root(path)
-    stats = _read_stats_at(root, path)
+    root, stats = _STORE.open(path)
     if stats["n_docs"] == 0:
         # fully-retired store: same plan-time ANSI divide-by-zero guard
         # as probe_term_index
-        idx0 = read_pinned_parquet(spark, root)
+        idx0 = _STORE.read(spark, root)
         return queries.select(
             F.col(qid_col).alias("qid"),
             F.lit(None).cast(idx0.schema[id_col].dataType).alias(id_col),
@@ -723,7 +659,7 @@ def probe_term_index_batch(
     )
     # bounded: ≤ `buckets` distinct values regardless of batch size
     bs = sorted(r["tb"] for r in qt.select("tb").distinct().collect())
-    idx = read_pinned_parquet(spark, root)
+    idx = _STORE.read(spark, root)
     hit = idx.where(F.col("tb").isin(bs)).join(
         broadcast(qt.select("term").distinct()), "term", "left_semi"
     )
@@ -767,14 +703,12 @@ def compact_term_index(
     contract).  ``broadcast_drops=False`` plans a shuffled anti-join
     for corpus-fraction drop sets (the two-posture compaction rule,
     versioned.py)."""
-    old_root = resolve_root(path)
-    old = _read_stats_at(old_root, path)
 
-    def restat(new_root: str) -> None:
+    def restat(old: dict, new_root: str) -> dict:
         # the pinned read matters: a full retirement (takedown of the
         # last documents) leaves zero part files, which a
         # schema-INFERRING read would fail on before the commit
-        kept = read_pinned_parquet(spark, new_root)
+        kept = _STORE.read(spark, new_root)
         st = (
             kept.select(id_col, "dl")
             .distinct()
@@ -784,20 +718,9 @@ def compact_term_index(
             )
             .collect()[0]  # one row: two bigints
         )
-        _write_stats(
-            new_root,
-            st["n"],
-            st["t"],
-            old["buckets"],
-            last_batch_id=old.get("last_batch_id"),
-        )
+        return _stats(st["n"], st["t"], old["buckets"])
 
-    compact_partitioned_store(
-        spark,
-        path,
-        drop_ids,
-        id_col,
-        "tb",
-        broadcast_drops=broadcast_drops,
-        pre_commit=restat,
+    _STORE.compact(
+        spark, path, drop_ids, id_col,
+        broadcast_drops=broadcast_drops, restat=restat,
     )

@@ -24,9 +24,10 @@ compacted out would resurface).  An absent manifest means "not a
 store (yet)": the path resolves to itself, and the store's sidecar or
 ``_SCHEMA`` check then refuses it by name.
 
-The six bounded-state merge stores share one lifecycle,
-:class:`MergeStore`; the file-additive stores (LSH bands, IVF cells,
-IVFPQ codes, term index) use the primitives below directly.
+Every store here goes through one of two lifecycles: the six
+bounded-state merge stores through :class:`MergeStore`, the four
+file-additive stores (LSH bands, IVF cells, IVFPQ codes, term index)
+through :class:`FileStore`.  The primitives below are theirs.
 """
 
 from __future__ import annotations
@@ -147,50 +148,6 @@ def link_carryover(
                 os.link(src, dst)
             except OSError:
                 shutil.copy2(src, dst)
-
-
-def compact_partitioned_store(
-    spark,
-    path: str,
-    drop_ids,
-    id_col: str,
-    partition_col: str,
-    *,
-    broadcast_drops: bool = True,
-    pre_commit=None,
-) -> None:
-    """The shared compaction body for partitionBy-laid-out stores (IVF
-    cells, IVFPQ codes, the term index): anti-join ``drop_ids`` out of
-    the live version, rewrite partition-preserving into a new version
-    dir, flip the manifest.  ``broadcast_drops=False`` plans a shuffled
-    anti-join for corpus-fraction drop sets — the same two-posture rule
-    as every compaction here.
-
-    ``pre_commit(new_root)``: optional hook invoked after the rewrite
-    lands and BEFORE the manifest flips — the one correct place to
-    regenerate a stats/params sidecar for the new version (a hook that
-    raises leaves the old version live and the new dir orphaned, which
-    commit_rewrite's begin/commit contract already tolerates)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import broadcast
-
-    old_root = resolve_root(path)
-    drops = drop_ids.select(F.col(drop_ids.columns[0]).alias(id_col))
-    maybe_bc = broadcast if broadcast_drops else (lambda d: d)
-    kept = read_pinned_parquet(spark, old_root).join(
-        maybe_bc(drops), id_col, "left_anti"
-    )
-    new_v, new_root = begin_rewrite(path)
-    (
-        kept.repartition(partition_col)
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(new_root)
-    )
-    pin_schema(new_root, kept.schema, (partition_col,))
-    if pre_commit is not None:
-        pre_commit(new_root)
-    commit_rewrite(path, new_v)
 
 
 def store_stats(path: str) -> dict:
@@ -388,12 +345,186 @@ class MergeStore:
         no-op before any write (at-least-once replay); a folded one
         becomes the new mark, and without one the mark carries."""
         old, params = self.load(spark, path)
-        last = params.get("last_batch_id")
-        if batch_id is not None and last is not None and batch_id <= last:
+        if _replayed(params, batch_id):
             return  # replayed micro-batch: already folded in
         merged = self.merge(old, build(params), **merge_args)
-        out = {k: v for k, v in params.items() if k != "last_batch_id"}
-        mark = last if batch_id is None else batch_id
-        if mark is not None:
-            out["last_batch_id"] = mark
-        self.write(merged, path, out)
+        self.write(merged, path, _with_mark(params, params, batch_id))
+
+
+def _replayed(sidecar: dict, batch_id) -> bool:
+    """Whether ``batch_id`` is at or below the sidecar's replay
+    high-water mark (at-least-once redelivery of a folded batch)."""
+    last = sidecar.get("last_batch_id")
+    return batch_id is not None and last is not None and batch_id <= last
+
+
+def _with_mark(out: dict, live: dict, batch_id) -> dict:
+    """``out`` with the replay high-water mark: the folded ``batch_id``,
+    else the ``live`` sidecar's mark carried through (a rewrite that
+    drops it would let a redelivered batch fold twice)."""
+    out = {k: v for k, v in out.items() if k != "last_batch_id"}
+    mark = live.get("last_batch_id") if batch_id is None else batch_id
+    if mark is not None:
+        out["last_batch_id"] = mark
+    return out
+
+
+@dataclass(frozen=True)
+class FileStore:
+    """The lifecycle of the FILE-ADDITIVE stores (MinHash-LSH bands,
+    IVF cells, IVFPQ codes, term index): the data is a parquet file set
+    too large to rewrite per batch, so an append adds files and only
+    a write or a compaction writes a fresh version dir — every part
+    written and ``_SCHEMA``-pinned, the params sidecar, then ONE
+    manifest flip.  A crash before the flip leaves the live version
+    byte-identical.
+
+    An instance holds only per-store constants: the ``sidecar`` file
+    name, the store ``kind`` for error messages, and the store's
+    ``parts`` as ``(subdir, partition column)`` pairs — a partitioned
+    part is ``repartition(col)`` before ``partitionBy(col)`` so each
+    partition lands in O(1) files, not (tasks × partitions).  The parts
+    of one store are independent projections, so a multi-part write,
+    append or compaction overlaps its part jobs (guide §2.6): each
+    write's tail back-fills with the next part's tasks, every thread
+    owns its own directory, and the flip waits for all of them."""
+
+    sidecar: str
+    kind: str
+    #: (subdirectory of the version root or None for the root itself,
+    #: ``partitionBy`` column or None) per part
+    parts: tuple[tuple[str | None, str | None], ...]
+
+    def _dir(self, root: str, sub: str | None) -> str:
+        return root if sub is None else posixpath.join(root, sub)
+
+    def open(self, path: str, params: dict | None = None) -> tuple[str, dict]:
+        """(root, sidecar) of the live version from ONE manifest
+        resolve — read the data from that same root (:meth:`read`): two
+        resolves could straddle a rewrite and pair one version's params
+        with another's data.  Refuses a sidecar that differs from
+        ``params`` when given: keys, cells or codes computed under other
+        params never match the stored ones, a silent zero or wrong
+        result rather than an error."""
+        root = resolve_root(path)
+        stored = read_sidecar(root, self.sidecar, self.kind)
+        if params is not None and stored != params:
+            raise ValueError(
+                f"{self.kind} store at {path}: params mismatch — the store "
+                f"has {stored}, the caller passed {params}; use the stored "
+                "params or rebuild the store"
+            )
+        return root, stored
+
+    def read(self, spark, root: str, sub: str | None = None):
+        """The part at ``sub`` of the ALREADY-RESOLVED version ``root``,
+        read with its pinned schema."""
+        return read_pinned_parquet(spark, self._dir(root, sub))
+
+    def _write_parts(self, root: str, frames, mode: str) -> None:
+        def one(part, frame) -> None:
+            sub, col = part
+            out = self._dir(root, sub)
+            w = (frame.repartition(col).write.partitionBy(col) if col
+                 else frame.write)
+            w.mode(mode).parquet(out)
+            if mode == "overwrite":
+                pin_schema(out, frame.schema, (col,) if col else ())
+
+        jobs = list(zip(self.parts, frames))
+        if len(jobs) == 1:
+            one(*jobs[0])
+            return
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            for fut in [pool.submit(one, *job) for job in jobs]:
+                fut.result()
+
+    def _flip(self, path: str, new_v: int, root: str, sidecar: dict) -> None:
+        write_sidecar(root, self.sidecar, sidecar)
+        commit_rewrite(path, new_v)
+
+    def write(self, path: str, frames, params) -> None:
+        """A fresh version of ``frames`` (one per part).  ``params`` is
+        the sidecar, or a callable returning it once the parts landed
+        (stats observed during the write)."""
+        new_v, root = begin_rewrite(path)
+        self._write_parts(root, frames, "overwrite")
+        self._flip(path, new_v, root, params() if callable(params) else params)
+
+    def append(
+        self, path: str, build, *, params=None, restat=None, batch_id=None
+    ) -> None:
+        """Fold a batch in: ``build(sidecar)`` returns its frame per
+        part under the stored params; ``params``, when given, must equal
+        the sidecar.  A batch whose read-back schema differs from a
+        part's ``_SCHEMA`` pin is refused before anything lands.
+
+        The posture follows from whether the append writes a new
+        sidecar.  Without ``restat`` the sidecar stays, and the batch's
+        files land IN the live version: additive, so a racing reader
+        sees either file set, both complete.  With ``restat(sidecar,
+        root)`` returning the new sidecar (stats that move with the
+        data), the new version = hardlinks to every live file
+        (:func:`link_carryover`) + the batch's files + the new sidecar,
+        then one flip; a ``batch_id`` at or below the sidecar's
+        ``last_batch_id`` is a no-op before any write, and a folded one
+        becomes the new mark."""
+        root, stored = self.open(path, params)
+        if _replayed(stored, batch_id):
+            return  # replayed micro-batch: already folded in
+        frames = build(stored)
+        for (sub, col), frame in zip(self.parts, frames):
+            check_append_schema(
+                path, self._dir(root, sub), frame.schema,
+                (col,) if col else (),
+            )
+        if restat is None:
+            self._write_parts(root, frames, "append")
+            return
+        new_v, new_root = begin_rewrite(path)
+        # A crashed earlier attempt leaves a torn new_root that
+        # begin_rewrite re-issues (the manifest never flipped): clear it,
+        # or carryover hits its own leftover hardlinks and the batch's
+        # files land a SECOND time (mode("append") does not self-heal).
+        shutil.rmtree(new_root, ignore_errors=True)
+        link_carryover(root, new_root, skip_files=(self.sidecar,))
+        self._write_parts(new_root, frames, "append")
+        self._flip(
+            path, new_v, new_root,
+            _with_mark(restat(stored, new_root), stored, batch_id),
+        )
+
+    def kept(self, spark, root: str, drop_ids, id_col: str,
+             broadcast_drops: bool = True) -> tuple:
+        """Every part of the version at ``root`` with ``drop_ids`` (one
+        column of ids) anti-joined out, lazily.  ``broadcast_drops=False``
+        plans shuffled anti-joins (both sides exchange on id) — required
+        when the drop set is corpus-fraction-sized, past any broadcast
+        limit."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.functions import broadcast
+
+        drops = drop_ids.select(F.col(drop_ids.columns[0]).alias(id_col))
+        maybe_bc = broadcast if broadcast_drops else (lambda d: d)
+        return tuple(
+            self.read(spark, root, sub).join(maybe_bc(drops), id_col, "left_anti")
+            for sub, _col in self.parts
+        )
+
+    def compact(self, spark, path: str, drop_ids, id_col: str, *,
+                broadcast_drops: bool = True, restat=None) -> None:
+        """Rewrite the live version without ``drop_ids`` into a fresh
+        version dir, partitioning preserved.  The sidecar carries over
+        verbatim — compaction changes membership, never the layout —
+        unless ``restat(sidecar, new_root)`` recomputes it from the
+        kept data.  Data and sidecar come from ONE manifest resolve."""
+        root, stored = self.open(path)
+        frames = self.kept(spark, root, drop_ids, id_col, broadcast_drops)
+        new_v, new_root = begin_rewrite(path)
+        self._write_parts(new_root, frames, "overwrite")
+        sidecar = stored if restat is None else _with_mark(
+            restat(stored, new_root), stored, None
+        )
+        self._flip(path, new_v, new_root, sidecar)
