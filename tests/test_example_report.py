@@ -35,3 +35,26 @@ def test_report_service_flow(spark, sf_dir, tmp_path):
     assert got["styles"]["total"] == {"num_fmt": "0", "width": 14.0}
     assert got["styles"]["balance"] == {"num_fmt": "0.00", "width": 12.0}
     assert os.path.exists(got["xlsx"])
+
+
+def test_get_session_disables_call_site_capture(monkeypatch):
+    """The engine's session turns off PySpark's per-Column call-site
+    capture (a few py4j round trips on every Column/DataFrame method).
+    Asserted on the builder, so no second SparkContext starts here."""
+    import ubw_spark.session as session_mod
+
+    conf = {}
+
+    class Builder:
+        def __getattr__(self, name):  # appName, master: chain through
+            return lambda *a: self
+
+        def config(self, k, v):
+            conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return conf
+
+    monkeypatch.setattr(session_mod.SparkSession, "builder", Builder())
+    assert session_mod.get_session()["spark.python.sql.dataFrameDebugging.enabled"] == "false"

@@ -48,6 +48,18 @@ def test_g2_properties_catalog(friend_df):
     ]
 
 
+def test_g2_properties_catalog_under_select(friend_df):
+    # columns the request's select dropped are not in the retrieve set
+    df = apply_params(friend_df, SPEC, QueryParams(select=["id"]))
+    props = to_view(df, SPEC)["properties"]
+    assert [(p["property"], p["typeName"], p["inRetrieve"]) for p in props] == [
+        ("id", "bigint", True),
+        ("name", "unknown", False),
+        ("nick", "unknown", False),
+        ("ageOpt", "unknown", False),
+    ]
+
+
 G3_ORDERS = [("name", True), ("id", False), ("ageOpt2", False)]
 # name→nick redirect; id asc; "ageOpt2" unknown → dropped.  Effective SQL
 # per doc-02.md:130: ORDER BY id ASC NULLS LAST, nick DESC NULLS LAST

@@ -43,6 +43,26 @@ def test_join_derive_agg_order(spark, tables):
     assert got == [("A", 1, 56), ("B", 1, 60), ("C", 1, 4666), ("S", 1, None)]
 
 
+def test_post_block_adds_no_identity_project(spark, tables):
+    """All columns visible: the params block re-uses the aggregate's
+    frame as is — no Project re-selecting every column onto itself."""
+    q = {
+        "from": "friend",
+        "group_by": ["grade"],
+        "aggs": [{"name": "n", "fn": "count"}],
+    }
+    plain = compile_json_query(spark, q, tables)
+    paged = compile_json_query(
+        spark, {**q, "orders": [["grade", False]], "take": 2}, tables
+    )
+
+    def node_names(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return [ln.lstrip(" :+-").split(" ")[0] for ln in plan.splitlines()]
+
+    assert node_names(paged) == ["GlobalLimit", "LocalLimit", "Sort"] + node_names(plain)
+
+
 def test_errors_accumulate(spark, tables):
     q = {
         "from": "friend",

@@ -2,12 +2,16 @@
 order/filter/paging dicts never crash, unknown keys are no-ops, paging
 partitions the sorted result."""
 
+import gc
+import weakref
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ubw_spark import ColumnSpec, QueryParams, QuerySpec, apply_params
+from ubw_spark.core import spec as spec_mod
 
 SPEC = QuerySpec(
     [
@@ -45,12 +49,14 @@ def test_random_params_never_crash(spark, friend_df, orders, filters):
     unknown ops/columns, lists where scalars belong.  The engine must
     silently drop what doesn't apply — never raise (the reference's
     out-of-range-filter contract, doc-01.md:148-152)."""
-    df = apply_params(
-        friend_df, SPEC, QueryParams(orders=orders, filters=filters)
-    )
+    p = QueryParams(orders=orders, filters=filters)
+    df = apply_params(friend_df, SPEC, p)  # projection memo warm
     rows = df.collect()
     assert len(rows) <= 4
     assert df.columns == ["id", "name", "nick", "ageOpt"]
+    # ... and cold: the memo hands back the plan a fresh projection builds
+    spec_mod._FRAME_MEMO.clear()
+    assert apply_params(friend_df, SPEC, p).collect() == rows
 
 
 @settings(
@@ -350,3 +356,72 @@ def test_keyset_rejects_page1_and_drop0_too(spark, friend_df):
                 QueryParams(orders=_ORDERS,
                             after_key={"age": 30, "id": 2}, take=2, **kw),
             ).collect()
+
+
+# ------------------------------------------------------ projection memo
+
+
+def _analyzed_node_names(df):
+    return [
+        line.lstrip(" :+-").split(" ")[0]
+        for line in df._jdf.queryExecution().analyzed().toString().splitlines()
+    ]
+
+
+def test_frame_memo_same_spec_same_frame(spark, friend_df):
+    assert SPEC.frame(friend_df) is SPEC.frame(friend_df)
+    assert SPEC.frame(friend_df, all_columns=True) is SPEC.frame(
+        friend_df, all_columns=True
+    )
+
+
+def test_frame_memo_equal_specs_get_their_own_frames(spark, friend_df):
+    a = QuerySpec([ColumnSpec("id"), ColumnSpec("ageOpt", expr="age")])
+    b = QuerySpec([ColumnSpec("id"), ColumnSpec("ageOpt", expr="age")])
+    c = QuerySpec([ColumnSpec("id"), ColumnSpec("ageOpt", expr="grade")])
+    fa, fb, fc = a.frame(friend_df), b.frame(friend_df), c.frame(friend_df)
+    assert fa is not fb
+    assert [tuple(r) for r in fa.collect()] == [tuple(r) for r in fb.collect()]
+    assert [r["ageOpt"] for r in fc.orderBy("id").collect()] == [3, 4, 5, 6]
+
+
+def test_frame_memo_is_bounded_per_base_frame(spark, friend_df):
+    # a caller minting a spec object per request must not grow the memo
+    for _ in range(spec_mod._FRAME_MEMO_PER_DF + 3):
+        QuerySpec([ColumnSpec("ageOpt", expr="age")]).frame(friend_df)
+    assert len(spec_mod._FRAME_MEMO[friend_df]) == spec_mod._FRAME_MEMO_PER_DF
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        SPEC,  # projected: the memo holds the frame
+        QuerySpec([ColumnSpec(c) for c in ("id", "name", "nick", "age", "grade")]),
+    ],
+    ids=["projected", "identity"],
+)
+def test_frame_memo_does_not_keep_base_alive(spark, spec):
+    df = spark.createDataFrame(
+        [(1, "a", "b", 2, 3)], "id bigint, name string, nick string, age int, grade int"
+    )
+    out = spec.frame(df, all_columns=True)
+    assert (out is df) == (spec is not SPEC)
+    ref = weakref.ref(df)
+    del df, out
+    gc.collect()
+    assert ref() is None
+
+
+def test_keyset_request_with_filters_has_one_filter_node(spark, friend_df):
+    out = apply_params(
+        friend_df, KEYSET_SPEC,
+        QueryParams(orders=_ORDERS, after_key={"age": 30, "id": 2}, take=2),
+    )
+    assert _analyzed_node_names(out).count("Filter") == 1
+    spec = QuerySpec([*KEYSET_SPEC.columns[:2], ColumnSpec("name", filterable=True)])
+    out = apply_params(
+        friend_df, spec,
+        QueryParams(orders=_ORDERS, filters={"name": {"ne": "x"}},
+                    after_key={"age": 30, "id": 2}, take=2),
+    )
+    assert _analyzed_node_names(out).count("Filter") == 1

@@ -24,6 +24,7 @@ that projection so hidden sort keys still work (doc-02.md:144-167).
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field, replace
 from typing import Any
 
@@ -33,6 +34,18 @@ from pyspark.sql import functions as F
 
 def _to_col(expr: Column | str) -> Column:
     return F.col(expr) if isinstance(expr, str) else expr
+
+
+#: Lazy-plan memo for :meth:`QuerySpec.frame`: base DataFrame →
+#: [(spec, all_columns, frame)], newest last.  One base frame and one spec
+#: serve every request of a service; the memo saves each request's
+#: projection analysis and py4j round trips (plans only, no data).  Weak
+#: on the base frame; specs match by identity (their Columns have no
+#: value equality), and the cap bounds per-request spec objects.
+_FRAME_MEMO: "weakref.WeakKeyDictionary[DataFrame, list]" = (
+    weakref.WeakKeyDictionary()
+)
+_FRAME_MEMO_PER_DF = 8
 
 
 @dataclass(frozen=True)
@@ -115,10 +128,26 @@ class QuerySpec:
         ``all_columns=True`` keeps hidden columns in the projection — used
         by the params compiler so hidden sort keys survive until after
         orderBy (Catalyst prunes them from the scan of the final plan
-        anyway once the outer select drops them).
+        anyway once the outer select drops them).  Repeat calls with the
+        same df and spec object return the same (memoized) frame; an
+        identity projection returns ``df`` itself.
         """
         cols = self.columns if all_columns else self.visible_columns()
-        return df.select(*[c.column() for c in cols])
+        if all(c.expr is None and c.default is None for c in cols) and [
+            c.name for c in cols
+        ] == df.columns:
+            return df  # identity; never memoized: it would pin its weak key
+        try:
+            per = _FRAME_MEMO.setdefault(df, [])
+        except TypeError:  # un-weakref-able frame stand-in
+            return df.select(*[c.column() for c in cols])
+        for spec, all_cols, out in per:
+            if spec is self and all_cols == all_columns:
+                return out
+        out = df.select(*[c.column() for c in cols])
+        per.append((self, all_columns, out))
+        del per[:-_FRAME_MEMO_PER_DF]
+        return out
 
     def restrict(self, requested: list[str] | None) -> "QuerySpec":
         """GraphQL-style list-driven projection (reference P4,

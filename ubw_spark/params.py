@@ -297,12 +297,10 @@ def apply_params(
     out = spec.frame(df, all_columns=True)
 
     # one schema analysis serves both the filter and keyset paths —
-    # where() does not change the schema, and each dict(out.dtypes) is
-    # a py4j round trip on the per-request compile path
+    # each dict(out.dtypes) is a py4j round trip on the per-request
+    # compile path (a memoized frame's schema is already cached)
     dtypes = dict(out.dtypes)
     pred = _rebind_pred_to_projection(spec, params.filters, dtypes)
-    if pred is not None:
-        out = out.where(pred)
 
     keys = _effective_order_keys(spec, params.orders)
 
@@ -330,10 +328,11 @@ def apply_params(
                 "after_key requires orders: keyset paging is only "
                 "defined over the effective sort columns"
             )
-        out = out.where(
-            _keyset_predicate(keys, params.after_key, dtypes)
-        )
+        after = _keyset_predicate(keys, params.after_key, dtypes)
+        pred = after if pred is None else pred & after
         offset = None
+    if pred is not None:  # one Filter node, one analysis pass
+        out = out.where(pred)
 
     if keys:
         out = out.orderBy(
@@ -349,6 +348,8 @@ def apply_params(
         out = out.limit(limit)
 
     visible = [c.name for c in eff_spec.visible_columns()]
+    if visible == [c.name for c in spec.columns]:
+        return out  # the frame's columns already: no identity Project
     return out.select(*visible)
 
 

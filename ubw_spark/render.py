@@ -29,7 +29,9 @@ def properties_catalog(spec: QuerySpec, df: DataFrame) -> list[dict[str, Any]]:
     """The per-column metadata catalog (doc-02.md:107-115).
 
     ``canOrder`` is False for columns whose sort redirects elsewhere
-    (doc-02.md:111: name redirects to nick → canOrder false)."""
+    (doc-02.md:111: name redirects to nick → canOrder false).
+    ``inRetrieve`` is True only for columns the rendered frame carries —
+    a ``QueryParams(select=[...])`` request drops the rest."""
     dtypes = dict(df.dtypes)
     out = []
     for c in spec.visible_columns():
@@ -37,7 +39,7 @@ def properties_catalog(spec: QuerySpec, df: DataFrame) -> list[dict[str, Any]]:
             {
                 "property": c.name,
                 "typeName": dtypes.get(c.name, "unknown"),
-                "inRetrieve": c.visible,
+                "inRetrieve": c.name in dtypes,
                 "canOrder": bool(c.orderable and c.order_target is None),
                 "isDefaultDesc": c.default_desc,
                 "describe": c.describe,
