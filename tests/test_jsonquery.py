@@ -438,6 +438,33 @@ def test_json_update_assignments_read_old_values(spark, tables):
     assert row[1] == (2333, 3)  # untouched
 
 
+@pytest.mark.parametrize(
+    "col, ops",
+    [
+        ("id", {"in": "12"}),  # a string is not a list of operands
+        ("id", {"between": 1}),
+        ("day", {"eq": "zz"}),  # not a date
+        ("grade", "ge 5"),  # ops must be an object
+    ],
+)
+def test_json_update_refuses_operands_that_do_not_fit(spark, friend_df, col, ops):
+    """The update verb compiles its filters with the read path's walk,
+    but refuses what a read would ignore: an update must not rewrite
+    rows its filter was meant to spare."""
+    from ubw_spark.core.jsonquery import compile_json_write
+
+    dated = friend_df.withColumn("day", F.lit(datetime.date(2020, 6, 1)))
+    with pytest.raises(SpecValidationError) as ei:
+        compile_json_write(
+            spark,
+            {"verb": "update", "target": "friend", "filters": {col: ops},
+             "assign": {"age": {"lit": 0}}},
+            lambda n: {"friend": dated}[n],
+        )
+    (problem,) = ei.value.problems
+    assert problem.startswith(f"update.filters.{col}:")
+
+
 # --- property-based fuzz: hostile/garbage specs never escape ------------
 
 from hypothesis import HealthCheck, given, settings

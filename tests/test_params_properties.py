@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ubw_spark import ColumnSpec, QueryParams, QuerySpec, apply_params
 from ubw_spark.core import spec as spec_mod
+from ubw_spark.params import validate_params
 
 SPEC = QuerySpec(
     [
@@ -229,12 +230,13 @@ def test_keyset_fuzz_pages_partition_redirected_order(spark, orders, take):
     cursor reproduces the unpaged result exactly — no dup, no gap, no
     crash — and the hidden-rank variant returns the same rows minus the
     hidden column (hidden sort keys stay live)."""
-    from ubw_spark.params import _effective_order_keys
+    from ubw_spark.params import _resolve
 
     spy_spec, hidden_spec = _fuzz_specs()
     df = spark.createDataFrame(_FUZZ_ROWS, _FUZZ_SCHEMA)
     orders = list(orders) + [("id", False)]  # unique tiebreak => total order
-    eff = [s.name for s, _ in _effective_order_keys(spy_spec, tuple(orders))]
+    keys = _resolve(spy_spec, QueryParams(orders=orders), None)[0]
+    eff = [s.name for s, _ in keys]
 
     full = apply_params(df, spy_spec, QueryParams(orders=orders)).collect()
     walked, after = [], None
@@ -323,25 +325,25 @@ def test_boundary_coercion_temporal_and_decimal_exactness():
     import datetime
     import decimal
 
-    from ubw_spark.params import _coerce_boundary
+    from ubw_spark.params import _coerce
 
-    ok, v = _coerce_boundary("date", "zz")
+    ok, v = _coerce("date", "zz")
     assert not ok
-    ok, v = _coerce_boundary("date", "2024-02-03")
+    ok, v = _coerce("date", "2024-02-03")
     assert ok and v == datetime.date(2024, 2, 3)
-    ok, v = _coerce_boundary("timestamp", "2024-02-03T01:02:03")
+    ok, v = _coerce("timestamp", "2024-02-03T01:02:03")
     assert ok and v == datetime.datetime(2024, 2, 3, 1, 2, 3)
-    ok, v = _coerce_boundary("timestamp", "not a time")
+    ok, v = _coerce("timestamp", "not a time")
     assert not ok
     # native Row types still pass through untouched
-    ok, v = _coerce_boundary("date", datetime.date(2020, 1, 1))
+    ok, v = _coerce("date", datetime.date(2020, 1, 1))
     assert ok and v == datetime.date(2020, 1, 1)
     # decimal string: exact, no float round-trip (2^53 + 1 survives)
     big = "9007199254740993"
-    ok, v = _coerce_boundary("decimal(20,0)", big)
+    ok, v = _coerce("decimal(20,0)", big)
     assert ok and isinstance(v, decimal.Decimal) and int(v) == int(big)
     assert float(big) != int(big)  # the hazard the branch exists for
-    ok, v = _coerce_boundary("decimal(20,2)", "12.34")
+    ok, v = _coerce("decimal(20,2)", "12.34")
     assert ok and v == decimal.Decimal("12.34")
 
 
@@ -425,3 +427,135 @@ def test_keyset_request_with_filters_has_one_filter_node(spark, friend_df):
                     after_key={"age": 30, "id": 2}, take=2),
     )
     assert _analyzed_node_names(out).count("Filter") == 1
+
+
+# ------------------------------------------- one filter compiler, one coercion
+
+
+_TYPED_SCHEMA = "big bigint, dec decimal(20,0), d date, ts timestamp"
+_TYPED_SPEC = QuerySpec(
+    [ColumnSpec(c, orderable=True, filterable=True) for c in ("big", "dec", "d", "ts")]
+)
+
+
+@pytest.fixture()
+def typed_df(spark):
+    import datetime
+    from decimal import Decimal
+
+    return spark.createDataFrame(
+        [
+            (9007199254740992, Decimal("12345678901234567168"),
+             datetime.date(2020, 6, 1), datetime.datetime(2020, 6, 1, 1, 2, 3)),
+            (9007199254740993, Decimal("12345678901234567891"),
+             datetime.date(2020, 6, 2), datetime.datetime(2020, 6, 2)),
+        ],
+        _TYPED_SCHEMA,
+    )
+
+
+def _big_values(df, filters):
+    return sorted(
+        r["big"]
+        for r in apply_params(df, _TYPED_SPEC, QueryParams(filters=filters)).collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "filters, want",
+    [
+        ({"big": {"eq": "9007199254740993"}}, [9007199254740993]),
+        ({"dec": {"eq": "12345678901234567891"}}, [9007199254740993]),
+        # no JVM long holds 2^64: compared as a decimal, not a crash
+        ({"big": {"lt": 2**64}}, [9007199254740992, 9007199254740993]),
+    ],
+)
+def test_integer_and_decimal_operands_are_exact(spark, typed_df, filters, want):
+    """A numeric string parses with int()/Decimal(), never float: above
+    2^53 a float round trip lands on the neighbouring row."""
+    assert _big_values(typed_df, filters) == want
+
+
+@pytest.mark.parametrize("col", ["d", "ts"])
+def test_junk_temporal_operand_is_an_exact_noop(spark, typed_df, col):
+    """An operand that is no date or timestamp is an ignored filter
+    (same rows as no filter), not a CAST_INVALID_INPUT mid-job."""
+    assert _big_values(typed_df, {col: {"eq": "zz"}}) == _big_values(typed_df, {})
+    assert validate_params(_TYPED_SPEC, QueryParams(filters={col: {"eq": "zz"}})) == []
+
+
+def test_native_date_and_timestamp_string_on_date_column_apply(spark, typed_df):
+    import datetime
+
+    want = [9007199254740992]
+    assert _big_values(typed_df, {"d": {"eq": datetime.date(2020, 6, 1)}}) == want
+    assert _big_values(typed_df, {"d": {"eq": "2020-06-01 00:00:00"}}) == want
+
+
+_U2_SPEC = QuerySpec(
+    [
+        ColumnSpec("id", orderable=True, filterable=True),
+        ColumnSpec("name"),
+        ColumnSpec("nick", order_target="missing", filterable=True),
+        ColumnSpec("grade", orderable=True, filterable=True),
+    ]
+)
+_U2_BASE = {"orders": [("id", True)], "filters": {"grade": {"ge": 4}}}
+
+#: one request key per kind of ignored key: (extra orders, extra filters,
+#: the problem's prefix)
+_U2_CASES = [
+    ([("bogus", False)], {}, "orders.bogus:"),  # unknown column
+    ([("name", False)], {}, "orders.name:"),  # not orderable
+    ([("nick", True)], {}, "orders.nick:"),  # redirect to an unknown target
+    ([], {"bogus": {"eq": 1}}, "filters.bogus:"),  # unknown column
+    ([], {"name": {"eq": "jilen"}}, "filters.name:"),  # not filterable
+    ([], {"id": 3}, "filters.id:"),  # ops not a dict
+    ([], {"id": {"zzz": 1}}, "filters.id:"),  # unknown op
+    ([], {"nick": {"like": "k%"}}, "filters.nick:"),  # not likeable
+]
+
+
+def test_every_ignored_key_is_reported_and_exactly_ignored(spark, friend_df):
+    """U2: validate_params names each key apply_params leaves out, and
+    leaving it out is exact: the answer equals the request without it."""
+    clean = apply_params(friend_df, _U2_SPEC, QueryParams(**_U2_BASE)).collect()
+    assert [r["id"] for r in clean] == [4, 3, 2]
+    for orders, filters, prefix in _U2_CASES:
+        p = QueryParams(
+            orders=_U2_BASE["orders"] + orders,
+            filters={**_U2_BASE["filters"], **filters},
+        )
+        problems = validate_params(_U2_SPEC, p)
+        assert len(problems) == 1 and problems[0].startswith(prefix), problems
+        assert apply_params(friend_df, _U2_SPEC, p).collect() == clean, prefix
+
+
+def test_one_filter_compiler():
+    """No module under ubw_spark/ or examples/ but params.py reads the
+    filter-op whitelist or defines an operand coercion, and params.py
+    has one coercion: a second filter compiler cannot grow back."""
+    import ast
+    from pathlib import Path
+
+    import ubw_spark.params as params_mod
+
+    params_py = Path(params_mod.__file__).resolve()
+    repo = params_py.parents[1]
+    offenders, coercions = [], []
+    for base in ("ubw_spark", "examples"):
+        for f in sorted((repo / base).rglob("*.py")):
+            for node in ast.walk(ast.parse(f.read_text())):
+                if isinstance(node, ast.FunctionDef) and "coerce" in node.name:
+                    if f == params_py:
+                        coercions.append(node.name)
+                    else:
+                        offenders.append(f"{f.relative_to(repo)}:{node.lineno}")
+                elif f != params_py and "_FILTER_OPS" in (
+                    getattr(node, "id", None),
+                    getattr(node, "attr", None),
+                    getattr(node, "name", None),
+                ):
+                    offenders.append(f"{f.relative_to(repo)}:{node.lineno}")
+    assert not offenders, offenders
+    assert coercions == ["_coerce"], coercions

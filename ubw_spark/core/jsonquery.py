@@ -57,7 +57,7 @@ from pyspark.sql.window import Window
 
 from ubw_spark.core.errors import ErrorAccumulator, SpecValidationError
 from ubw_spark.core.spec import ColumnSpec, QuerySpec
-from ubw_spark.params import QueryParams, apply_params
+from ubw_spark.params import QueryParams, _resolve, apply_params
 
 # The scalar-function vocabulary reachable from JSON (§2.8 surface).
 _FNS: dict[str, Callable[..., Column]] = {
@@ -697,8 +697,6 @@ def _apply_post_blocks(
 
 from functools import reduce
 
-from ubw_spark.params import _FILTER_OPS  # whitelist shared with reads
-
 
 def _literal_rows_df(
     spark: SparkSession,
@@ -886,17 +884,23 @@ def compile_json_write(
         assign = spec.get("assign", {})
         if not assign:
             acc.add("update: 'assign' mapping required")
-        cond = F.lit(True)
-        for col, ops in spec.get("filters", {}).items():
-            if col not in target.columns:
-                acc.add(f"update.filters: column '{col}' not in target")
-                continue
-            for op, val in ops.items():
-                fn = _FILTER_OPS.get(op)
-                if fn is None:
-                    acc.add(f"update.filters.{col}: unknown op '{op}'")
-                    continue
-                cond = cond & fn(F.col(col), val)
+        filters = spec.get("filters", {})
+        if not isinstance(filters, dict):
+            acc.add("update.filters: must be an object")
+            filters = {}
+        # the read path's filter walk over every target column
+        _keys, cond, problems = _resolve(
+            QuerySpec([
+                ColumnSpec(c, filterable=True, likeable=True)
+                for c in target.columns
+            ]),
+            QueryParams(filters=filters),
+            dict(target.dtypes),
+        )
+        for p in problems:
+            acc.add(f"update.{p}")
+        if cond is None:
+            cond = F.lit(True)
         exprs = {}
         for col, node in assign.items():
             if col not in target.columns:

@@ -22,8 +22,18 @@ Implements, with the reference's silent-ignore semantics:
 - P6 optional predicate conjunction: absent params produce no filter node
   at all (Sample04.scala:7-16).
 
-Pre-flight validation accumulates all problems (AtomicException analog)
-instead of failing one at a time — see ubw_spark.core.errors.
+One walk, :func:`_resolve`, decides which order keys and filters a
+request may use and returns a problem for each one it leaves out.  Its
+callers differ only in what they do with those problems:
+:func:`apply_params` ignores them (the reference's silent-ignore
+contract), :func:`validate_params` returns them (U2: the accumulated
+report, AtomicException analog), and the JSON ``update`` verb raises them
+all at once through ``ErrorAccumulator``.  One coercion, :func:`_coerce`,
+turns every filter operand and keyset boundary into a literal of its
+column's type: native date/datetime/Decimal values pass, numeric strings
+parse exactly (never through float), temporal strings must parse as ISO.
+An operand it refuses is one more problem (a filter that is not
+applied); a boundary it refuses raises ValueError.
 
 Scale notes: everything here compiles to a single declarative plan —
 filter → orderBy → offset/limit → project — so Catalyst gets full
@@ -40,15 +50,15 @@ depth — see :func:`_keyset_predicate` and the oracled
 
 from __future__ import annotations
 
-import re
+import datetime
 from dataclasses import dataclass, field
+from decimal import Decimal, InvalidOperation
 from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ubw_spark.core.errors import ErrorAccumulator
 from ubw_spark.core.spec import ColumnSpec, QuerySpec
 
 # The filter-operator whitelist (P7).  `like` additionally requires the
@@ -113,53 +123,81 @@ class QueryParams:
         return self.drop, self.take
 
 
-def _normalize_orders(orders: tuple) -> list[tuple[str, bool | None]]:
-    out: list[tuple[str, bool | None]] = []
-    for o in orders:
-        if isinstance(o, str):
-            out.append((o, None))  # direction from spec default (L4)
-        else:
-            name, is_desc = o
-            out.append((name, bool(is_desc)))
-    return out
+def _resolve(
+    spec: QuerySpec, params: QueryParams, dtypes: dict[str, str] | None
+) -> tuple[list[tuple[ColumnSpec, bool]], Column | None, list[str]]:
+    """The one capability walk: which order keys and filters of
+    ``params`` the spec admits.  Returns ``(keys, predicate, problems)``:
 
+    - ``keys``: (target spec, is_desc) pairs after the order_target
+      redirect, in *spec declaration order* — the reference's generated
+      SQL (doc-02.md:130);
+    - ``predicate``: the AND of every admitted filter, or None when none
+      applies (P6: no Filter node at all).  Filters compare against the
+      projected columns by name;
+    - ``problems``: one ``"orders.<key>: why"`` or ``"filters.<key>: why"``
+      message per key left out.
 
-def _effective_order_keys(
-    spec: QuerySpec, orders: tuple
-) -> list[tuple[ColumnSpec, bool]]:
-    """Resolve requested order keys to (target spec, is_desc) pairs.
-
-    Redirects through order_target, drops keys whose target is not
-    orderable (silent-ignore), and — matching the reference's generated
-    SQL (doc-02.md:130) — returns keys in *spec declaration order*.
-    """
+    With ``dtypes=None`` operands are neither checked nor compiled."""
     smap = spec.spec_map()
+    problems: list[str] = []
     requested: dict[str, bool] = {}
-    for name, is_desc in _normalize_orders(orders):
+    for o in params.orders:
+        name, is_desc = (o, None) if isinstance(o, str) else o
         s = smap.get(name)
         if s is None:
-            continue  # unknown column: ignore
+            problems.append(f"orders.{name}: not a declared column")
+            continue
         if s.order_target is not None:
             # Declaring a redirect is itself the orderability opt-in.
             target = smap.get(s.order_target)
-            if target is None:
-                continue
-        elif s.orderable:
-            target = s
+            why = f"redirects to unknown column '{s.order_target}'"
         else:
-            continue  # non-orderable, no redirect: silently dropped
-        direction = is_desc if is_desc is not None else target.default_desc
-        requested.setdefault(target.name, direction)
-    # re-emit in declaration order
-    return [
-        (s, requested[s.name]) for s in spec.columns if s.name in requested
-    ]
+            target, why = (s if s.orderable else None), "not orderable"
+        if target is None:
+            problems.append(f"orders.{name}: {why}")
+            continue
+        requested.setdefault(
+            target.name,
+            target.default_desc if isinstance(o, str) else bool(is_desc),
+        )
+    keys = [(s, requested[s.name]) for s in spec.columns if s.name in requested]
+
+    preds: list[Column] = []
+    for name, ops in params.filters.items():
+        s = smap.get(name)
+        if s is None:
+            problems.append(f"filters.{name}: not a declared column")
+            continue
+        if not s.filterable:
+            problems.append(f"filters.{name}: not filterable")
+            continue
+        if not isinstance(ops, dict):
+            problems.append(f"filters.{name}: operators must be an object")
+            continue
+        for op, operand in ops.items():
+            fn = _FILTER_OPS.get(op)
+            if fn is None:
+                problems.append(f"filters.{name}: unknown op '{op}'")
+            elif op == "like" and not s.likeable:
+                problems.append(f"filters.{name}: 'like' not allowed")
+            elif dtypes is not None:
+                dtype = dtypes.get(name, "string")
+                ok, v = _operand(dtype, op, operand)
+                if ok:
+                    preds.append(fn(F.col(name), v))
+                else:
+                    problems.append(
+                        f"filters.{name}: {op} operand {operand!r} does not "
+                        f"fit {dtype}"
+                    )
+    return keys, reduce(lambda a, b: a & b, preds) if preds else None, problems
 
 
 def _keyset_predicate(
     keys: list[tuple[ColumnSpec, bool]],
     after_key: dict[str, Any],
-    dtypes: dict[str, str] | None = None,
+    dtypes: dict[str, str],
 ) -> Column:
     """Compile the last-seen sort-key row into a lexicographic
     strictly-after predicate — keyset pagination, the deep-offset
@@ -186,12 +224,11 @@ def _keyset_predicate(
     exactly the effective sort columns: a partial boundary would
     silently return rows from the wrong page — a correctness hazard,
     not a capability negotiation like the orders/filters whitelists.
-    Boundary VALUES go through the same JSON-layer coercion as filter
-    operands (``_coerce_operand``) when ``dtypes`` is provided — an
-    un-coercible value raises the same loud ValueError instead of an
-    opaque ANSI cast failure mid-job (boundaries normally come from a
-    previous page's row and are type-correct; a JSON layer can hand a
-    string where a date/number belongs).
+    Boundary VALUES go through :func:`_coerce`, as filter operands do,
+    but an un-coercible one raises that ValueError instead of being
+    ignored (boundaries normally come from a previous page's row and
+    are type-correct; a JSON layer can hand a string where a date or
+    number belongs).
     """
     eff_names = [s.name for s, _ in keys]
     if sorted(after_key) != sorted(eff_names):
@@ -201,22 +238,16 @@ def _keyset_predicate(
             "needs the full boundary row (include a unique tiebreak "
             "key in orders)"
         )
-    if dtypes is not None:
-        coerced: dict[str, Any] = {}
-        for name, v in after_key.items():
-            if v is None:
-                coerced[name] = None
-                continue
-            ok, cv = _coerce_boundary(dtypes.get(name, "string"), v)
-            if not ok:
-                raise ValueError(
-                    f"after_key[{name!r}] = {v!r} is not coercible to "
-                    f"column type {dtypes.get(name, 'string')} — a "
-                    "malformed boundary would silently page from the "
-                    "wrong position"
-                )
-            coerced[name] = cv
-        after_key = coerced
+    coerced: dict[str, Any] = {}
+    for name, v in after_key.items():
+        ok, coerced[name] = (True, None) if v is None else _coerce(dtypes[name], v)
+        if not ok:
+            raise ValueError(
+                f"after_key[{name!r}] = {v!r} is not coercible to column "
+                f"type {dtypes[name]} — a malformed boundary would silently "
+                "page from the wrong position"
+            )
+    after_key = coerced
     disjuncts: list[Column] = []
     for i, (s, is_desc) in enumerate(keys):
         conj: list[Column] = []
@@ -240,58 +271,25 @@ def _keyset_predicate(
 
 
 def validate_params(spec: QuerySpec, params: QueryParams) -> list[str]:
-    """Pre-flight check returning ALL problems (U2 analog).  The engine's
-    default behavior is silent-ignore per the reference; this is the
-    opt-in strict mode for clients that want the accumulated report."""
-    acc = ErrorAccumulator()
-    smap = spec.spec_map()
-    for name, is_desc in _normalize_orders(params.orders):
-        s = smap.get(name)
-        if s is None:
-            acc.add(f"order key '{name}' is not a declared column")
-        elif not s.orderable and s.order_target is None:
-            acc.add(f"order key '{name}' is not orderable")
-        elif s.order_target is not None and s.order_target not in smap:
-            acc.add(
-                f"order key '{name}' redirects to unknown column "
-                f"'{s.order_target}'"
-            )
-    for name, ops in params.filters.items():
-        s = smap.get(name)
-        if s is None:
-            acc.add(f"filter column '{name}' is not a declared column")
-            continue
-        if not s.filterable:
-            acc.add(f"filter column '{name}' is not filterable")
-            continue
-        for op in ops:
-            if op not in _FILTER_OPS:
-                acc.add(f"filter operator '{op}' on '{name}' is unknown")
-            elif op == "like" and not s.likeable:
-                acc.add(f"column '{name}' does not allow 'like'")
-    return acc.problems
+    """Every order and filter key ``apply_params`` would ignore, one
+    message each (U2: the accumulated report, for clients that want it
+    instead of the silent ignore).  Operands are not checked."""
+    return _resolve(spec, params, None)[2]
 
 
 def apply_params(
     df: DataFrame,
     spec: QuerySpec,
     params: QueryParams | None = None,
-    *,
-    strict: bool = False,
 ) -> DataFrame:
     """Compile (base df, spec, params) → final DataFrame.
 
     Plan shape: project-all-spec-columns → filter → orderBy →
-    offset/limit → project-visible.  Hidden sort keys work because the
+    offset/limit → drop-hidden.  Hidden sort keys work because the
     outer projection happens after orderBy; Catalyst's ColumnPruning
     still reaches the scan.
     """
     params = params or QueryParams()
-    if strict:
-        acc = ErrorAccumulator()
-        acc.problems = validate_params(spec, params)
-        acc.raise_if_any()
-
     eff_spec = spec.restrict(list(params.select) if params.select else None)
     # Keep every declared column in scope for filters and hidden sort keys.
     out = spec.frame(df, all_columns=True)
@@ -300,9 +298,7 @@ def apply_params(
     # each dict(out.dtypes) is a py4j round trip on the per-request
     # compile path (a memoized frame's schema is already cached)
     dtypes = dict(out.dtypes)
-    pred = _rebind_pred_to_projection(spec, params.filters, dtypes)
-
-    keys = _effective_order_keys(spec, params.orders)
+    keys, pred, _ignored = _resolve(spec, params, dtypes)
 
     offset, limit = params.offset_limit()
     if params.after_key is not None:
@@ -347,145 +343,78 @@ def apply_params(
     if limit is not None:
         out = out.limit(limit)
 
-    visible = [c.name for c in eff_spec.visible_columns()]
-    if visible == [c.name for c in spec.columns]:
-        return out  # the frame's columns already: no identity Project
-    return out.select(*visible)
-
-
-_NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
-
-
-def _coerce_operand(dtype: str, v: Any) -> tuple[bool, Any]:
-    """Coerce a JSON-layer operand to the column's type.  Returns
-    (ok, coerced).  Un-coercible operands make the predicate a silent
-    no-op — the reference's contract for out-of-range filter params
-    (doc-01.md:148-152) — instead of an ANSI runtime cast error."""
-    base = dtype.split("(")[0]
-    try:
-        if base in _NUMERIC_TYPES or base == "decimal":
-            if isinstance(v, bool) or v is None:
-                return False, None
-            if isinstance(v, (int, float)):
-                return True, v
-            if isinstance(v, str) and v.strip():
-                f = float(v)
-                return True, int(f) if f.is_integer() and base not in ("float", "double") else f
-            return False, None
-        if base == "string":
-            return (v is not None), None if v is None else str(v)
-        if base in ("date", "timestamp", "timestamp_ntz"):
-            return isinstance(v, str) and bool(v.strip()), v
-        if base == "boolean":
-            return isinstance(v, bool), v
-        return True, v  # exotic types: pass through
-    except (TypeError, ValueError):
-        return False, None
+    # one drop (a single string Seq) rather than a select that builds a
+    # JVM Column per visible name; restrict keeps declaration order
+    visible = {c.name for c in eff_spec.visible_columns()}
+    hidden = [c.name for c in spec.columns if c.name not in visible]
+    return out.drop(*hidden) if hidden else out
 
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+_NUMERIC_TYPES = _INT_TYPES + ("float", "double", "decimal")
+_LONG = range(-(2**63), 2**63)
 
 
-def _coerce_boundary(dtype: str, v: Any) -> tuple[bool, Any]:
-    """Keyset-boundary coercion — stricter AND more permissive than the
-    filter-operand path in exactly the ways a page cursor needs:
+def _coerce(dtype: str, v: Any) -> tuple[bool, Any]:
+    """Coerce one operand (a filter operand or a keyset boundary value)
+    to a literal for a column of Spark type ``dtype``.  Returns
+    ``(ok, value)``; ``ok`` is False when ``v`` cannot be one:
 
-    - values that are ALREADY the column's native Python type pass
-      through untouched (a boundary normally comes from a collected
-      Row: ``datetime``/``date`` for timestamp/date columns and
-      ``Decimal`` for decimals are type-correct, but
-      ``_coerce_operand`` — built for JSON operands — only accepts
-      strings there and would reject a perfectly valid cursor);
-    - integer- and decimal-typed columns parse strings WITHOUT a
-      ``float()`` round-trip (``int()`` / ``Decimal()``): a JSON bigint
-      or decimal cursor above 2^53 would round to the nearest even
-      double and silently page from the wrong row — the exact hazard
-      this path exists to prevent;
-    - date/timestamp STRING boundaries must actually parse as ISO
-      dates/timestamps: the filter path's any-non-empty-string rule is
-      fine for a silent-no-op filter, but a junk cursor here becomes
-      ``col > lit('zz')`` — an ANSI CAST_INVALID_INPUT mid-job (or,
-      ANSI off, a silently empty page forever) instead of this
-      function's documented loud ValueError."""
-    import datetime
-    import decimal as _decimal
-
+    - native ``date``, ``datetime`` and ``Decimal`` values pass through;
+    - integer and decimal strings parse exactly with ``int()`` and
+      ``Decimal()``, never through ``float`` (a bigint above 2^53 would
+      round to its even neighbour and select the wrong row); a number
+      no 64-bit integer holds becomes a ``Decimal``, and one no Spark
+      decimal holds is refused;
+    - a temporal string must parse with ``datetime.fromisoformat`` (a
+      junk one would fail the job with CAST_INVALID_INPUT), and a date
+      column keeps only the date part, as Spark's cast does."""
     base = dtype.split("(")[0]
-    if base in ("date",) and isinstance(v, datetime.date) and not isinstance(
-        v, datetime.datetime
-    ):
+    if v is None:
+        return False, None
+    if base == "string":
+        return True, str(v)
+    if base == "boolean":
+        return isinstance(v, bool), v
+    if base in ("date", "timestamp", "timestamp_ntz"):
+        if isinstance(v, datetime.date):
+            return True, v
+        try:
+            t = datetime.datetime.fromisoformat(v.strip())
+        except (AttributeError, ValueError):
+            return False, None
+        return True, t.date() if base == "date" else t
+    if base not in _NUMERIC_TYPES:
+        return True, v  # exotic types: pass through
+    if isinstance(v, bool) or not isinstance(v, (int, float, Decimal, str)):
+        return False, None
+    if isinstance(v, (float, Decimal)) or (isinstance(v, int) and v in _LONG):
         return True, v
-    if base in ("timestamp", "timestamp_ntz") and isinstance(
-        v, datetime.datetime
-    ):
-        return True, v
-    if (base in _NUMERIC_TYPES or base == "decimal") and isinstance(
-        v, _decimal.Decimal
-    ):
-        return True, v
-    if isinstance(v, str):
-        s = v.strip()
-        if base in _INT_TYPES and re.fullmatch(r"[+-]?\d+", s):
-            return True, int(s)
-        if base == "decimal" and re.fullmatch(r"[+-]?\d+(\.\d+)?", s):
-            return True, _decimal.Decimal(s)
-        if base == "date":
-            try:
-                return True, datetime.date.fromisoformat(s)
-            except ValueError:
-                return False, None
-        if base in ("timestamp", "timestamp_ntz"):
-            try:
-                return True, datetime.datetime.fromisoformat(s)
-            except ValueError:
-                return False, None
-    return _coerce_operand(dtype, v)
+    try:  # a string, or an int no JVM long holds
+        if base in ("float", "double"):
+            return True, float(v)
+        d = Decimal(v)
+    except (ValueError, InvalidOperation):
+        return False, None
+    _, digits, exp = d.as_tuple()
+    if not d.is_finite() or max(len(digits) + max(exp, 0), -exp) > 38:
+        return False, None  # no Spark decimal literal holds it
+    if base in _INT_TYPES and d == d.to_integral_value() and int(d) in _LONG:
+        return True, int(d)
+    return True, d
 
 
-def _coerce_for_op(dtype: str, op: str, operand: Any) -> tuple[bool, Any]:
+def _operand(dtype: str, op: str, operand: Any) -> tuple[bool, Any]:
+    """The operand shape each filter op takes, elements via _coerce."""
     if op == "isnull":
         return isinstance(operand, bool), operand
-    if op in ("in", "between"):
-        if not isinstance(operand, (list, tuple)):
-            return False, None
-        if op == "between" and len(operand) != 2:
-            return False, None
-        out = []
-        for v in operand:
-            ok, cv = _coerce_operand(dtype, v)
-            if not ok:
-                return False, None
-            out.append(cv)
-        return True, out
     if op == "like":
         return isinstance(operand, str), operand
-    return _coerce_operand(dtype, operand)
-
-
-def _rebind_pred_to_projection(
-    spec: QuerySpec,
-    filters: dict[str, dict[str, Any]],
-    dtypes: dict[str, str],
-) -> Column | None:
-    """Filters run on the projected frame, so operands compare against the
-    *output* columns (post-rename, post-default) by name.  Returns None
-    when nothing applies (P6: no Filter node at all)."""
-    smap = spec.spec_map()
-    preds: list[Column] = []
-    for name, ops in (filters or {}).items():
-        s = smap.get(name)
-        if s is None or not s.filterable:
-            continue
-        if not isinstance(ops, dict):
-            continue
-        c = F.col(s.name)
-        dtype = dtypes.get(s.name, "string")
-        for op, operand in ops.items():
-            fn = _FILTER_OPS.get(op)
-            if fn is None or (op == "like" and not s.likeable):
-                continue
-            ok, coerced = _coerce_for_op(dtype, op, operand)
-            if not ok:
-                continue
-            preds.append(fn(c, coerced))
-    return reduce(lambda a, b: a & b, preds) if preds else None
+    if op not in ("in", "between"):
+        return _coerce(dtype, operand)
+    if not isinstance(operand, (list, tuple)) or (
+        op == "between" and len(operand) != 2
+    ):
+        return False, None
+    coerced = [_coerce(dtype, v) for v in operand]
+    return all(ok for ok, _ in coerced), [v for _, v in coerced]
