@@ -117,3 +117,59 @@ def test_gate_window_ordering():
         assert name in gate, name
     assert set(q) == set(REGISTRY)
     assert list(oracles)[:50] == gate
+
+
+def test_every_query_module_is_imported_and_registers():
+    """Every module in ubw_spark/queries/ but the registry is imported by
+    the package and registers at least one query, so a family module
+    cannot silently drop out of queries()."""
+    import ast
+    import pkgutil
+    from pathlib import Path
+
+    import ubw_spark.queries as pkg
+
+    init = ast.parse(Path(pkg.__file__).read_text())
+    imported = {
+        a.name
+        for node in ast.walk(init)
+        if isinstance(node, ast.ImportFrom) and node.module == pkg.__name__
+        for a in node.names
+    }
+    registering = {q.fn.__module__ for q in pkg.REGISTRY.values()}
+    modules = {m.name for m in pkgutil.iter_modules(pkg.__path__)} - {"registry"}
+    assert sorted(modules - imported) == []
+    assert sorted(m for m in modules if f"{pkg.__name__}.{m}" not in registering) == []
+
+
+def test_engine_does_not_import_the_query_layer():
+    """No module under ubw_spark/ outside ubw_spark/queries/, and no
+    example, imports a query module: the registry (or the package's
+    REGISTRY) is all the query layer shows them, so the engine never
+    depends on a query family."""
+    import ast
+    from pathlib import Path
+
+    import ubw_spark
+
+    root = Path(ubw_spark.__file__).resolve().parent
+    repo = root.parent
+    allowed = {"ubw_spark.queries.registry", "ubw_spark.queries.REGISTRY"}
+    files = [f for f in root.rglob("*.py") if f.relative_to(root).parts[0] != "queries"]
+    offenders = []
+    for f in sorted(files) + sorted((repo / "examples").rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module == "ubw_spark.queries":
+                mods = [f"{node.module}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                mods = [node.module]
+            else:
+                continue
+            offenders += [
+                f"{f.relative_to(repo)}:{node.lineno} {m}"
+                for m in mods
+                if m.startswith("ubw_spark.queries") and m not in allowed
+            ]
+    assert not offenders, offenders

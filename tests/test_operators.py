@@ -338,7 +338,7 @@ def test_ivf_seed_centroid_recall_vs_brute_force(spark, sf_dir):
     # The registered (oracled) query uses deterministic md5-seeded
     # centroids instead of KMeans — recall must still clear the bar.
     from ubw_spark.operators.ivf import ivf_ann_topk
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 10)
@@ -1067,7 +1067,7 @@ def test_ivfpq_respects_probe_bound_and_adc_scores(spark, sf_dir):
         pq_encode,
         seed_pq_codebooks,
     )
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cells = seed_ivf_centroids(emb, k=8)
@@ -1118,7 +1118,7 @@ def test_ivfpq_index_write_probe_matches_inmemory(spark, sf_dir, tmp_path):
         write_ivfpq_index,
     )
     from ubw_spark.plans.inspect import formatted_plan
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cells = seed_ivf_centroids(emb, k=8)
@@ -1404,7 +1404,7 @@ def test_semdedup_assign_paths_agree(spark, sf_dir):
     lowest-cid tie-break) — the dispatch is a performance knob, never a
     results knob."""
     from ubw_spark.operators.ivf import _nearest_cells, assign_vectorized
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = seed_ivf_centroids(emb, k=24)  # above the dispatch line
@@ -1544,7 +1544,7 @@ def test_ivf_index_versioned_lifecycle(spark, sf_dir, tmp_path):
         write_ivf_index,
     )
     from ubw_spark.operators.versioned import current_version
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(100)
     cents = seed_ivf_centroids(emb, k=4)
@@ -1589,7 +1589,7 @@ def test_ivf_compaction_shuffled_path_plans_no_broadcast(spark, sf_dir, tmp_path
     from ubw_spark.operators.ivf import write_ivf_index
     from ubw_spark.operators.versioned import resolve_root
     from ubw_spark.plans import broadcast_join_count
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
     cents = seed_ivf_centroids(emb, k=4)
@@ -1624,7 +1624,7 @@ def test_ivfpq_index_compaction_retires_vectors(spark, sf_dir, tmp_path):
         write_ivfpq_index,
     )
     from ubw_spark.operators.versioned import current_version
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(120)
     cells = seed_ivf_centroids(emb, k=4)
@@ -1662,7 +1662,7 @@ def test_ivfpq_index_compaction_retires_vectors(spark, sf_dir, tmp_path):
 def test_versioned_store_stats_reports_metadata_only(spark, sf_dir, tmp_path):
     from ubw_spark.operators.ivf import compact_ivf_index, write_ivf_index
     from ubw_spark.operators.versioned import store_stats
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(40)
     cents = seed_ivf_centroids(emb, k=4)

@@ -220,7 +220,7 @@ def test_ivf_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
         probe_ivf_index,
         write_ivf_index,
     )
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
     from ubw_spark.queries.registry import table
 
     emb = table(spark, str(sf_dir), "embeddings")
@@ -486,7 +486,7 @@ def test_ivf_store_probe_query_prunes_partitions(spark, sf_dir):
     from ubw_spark.operators.ivf import probe_ivf_index
     from ubw_spark.operators.versioned import resolve_root
     from ubw_spark.queries.registry import table
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     df = REGISTRY["sim_ivf_store_probe"].fn(spark, sf_dir)
     plan = formatted_plan(df)

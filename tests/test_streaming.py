@@ -11,6 +11,7 @@ from ubw_spark.streaming import (
     read_stream,
     run_to_memory,
     session_window_agg,
+    sliding_window_agg,
     stateful_running_totals,
     tumbling_window_agg,
 )
@@ -33,13 +34,18 @@ def batch_events(spark, events_dir):
     return spark.read.parquet(events_dir)
 
 
-def test_stream_tumbling_equals_batch(spark, events_dir):
+@pytest.mark.parametrize(
+    "kind, window_agg",
+    [
+        ("tumbling", lambda df: tumbling_window_agg(df, group_extra=["event_type"])),
+        ("sliding", sliding_window_agg),
+    ],
+    ids=["tumbling", "sliding"],
+)
+def test_stream_tumbling_equals_batch(spark, events_dir, kind, window_agg):
     stream = read_stream(spark, events_dir)
-    agg = tumbling_window_agg(stream, group_extra=["event_type"])
-    result = run_to_memory(agg, "tumbling_test")()
-    batch = tumbling_window_agg(
-        batch_events(spark, events_dir), group_extra=["event_type"]
-    )
+    result = run_to_memory(window_agg(stream), f"{kind}_test")()
+    batch = window_agg(batch_events(spark, events_dir))
     got = {tuple(map(str, r)) for r in result.collect()}
     want = {tuple(map(str, r)) for r in batch.collect()}
     assert got == want and len(want) > 0
@@ -198,8 +204,9 @@ def test_stream_funnel_equals_batch(spark, events_dir):
     """Funnel phase-1 state is a streaming agg built from the SAME
     aggregate expressions as the batch query; the global summary runs
     over the sink.  Stream == batch, end to end."""
-    from ubw_spark.queries.tokens_funnel import funnel_summary, funnel_user_aggs
+    from ubw_spark.queries.tokens_funnel import funnel_summary
     from ubw_spark.streaming import stream_funnel_user_state
+    from ubw_spark.streaming.stages import funnel_user_aggs
 
     stream = read_stream(spark, events_dir)
     state = run_to_memory(
@@ -589,7 +596,7 @@ def test_stream_incremental_ann_ingest_dedup_and_append(spark, sf_dir, tmp_path)
     against the APPENDED store, exactly like the LSH and gram loops."""
     from ubw_spark.operators.ivf import append_ivf_batch, probe_ivf_index
     from ubw_spark.operators.ivf import write_ivf_index
-    from ubw_spark.queries.scale_ops import seed_ivf_centroids
+    from ubw_spark.operators.ivf import seed_ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(60)
     cents = seed_ivf_centroids(emb, k=4)

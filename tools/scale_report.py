@@ -146,11 +146,6 @@ def multi_point(paths: list[str], floor_small_sec: float = 0.5) -> None:
     )
 
 
-def three_point(paths: list[str], floor_small_sec: float = 0.5) -> None:
-    """Back-compat alias for the round-11 three-recording mode."""
-    multi_point(paths, floor_small_sec)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("paths", nargs="+")

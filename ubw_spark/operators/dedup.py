@@ -20,7 +20,7 @@ Built for the 100 TB posture:
 
 Hashing is md5-based and engine-portable (same values in DuckDB SQL), so
 the whole MinHash pipeline is oracle-checkable — see
-ubw_spark/queries/scale_ops.py.
+ubw_spark/queries/dedup_q.py.
 """
 
 from pyspark.sql import Column, DataFrame, Window

@@ -56,6 +56,43 @@ def train_ivf_centroids(
     return [c.tolist() for c in model.clusterCenters()]
 
 
+def seed_ivf_centroids(
+    emb: DataFrame, k: int = 8, *, rows: list | None = None
+) -> list[list[float]]:
+    """Deterministic, SQL-expressible coarse quantizer: the k corpus
+    vectors with smallest md5(vec_id).  Used by the REGISTERED query so
+    the full IVF path (cell assign → probe → exact re-rank) is oracled
+    end-to-end in DuckDB; production training stays
+    :func:`train_ivf_centroids` (distributed KMeans — not SQL).
+    Collect is bounded: k × dim floats.
+
+    ``rows``: pre-collected md5-ordered seed rows (≥ k, from
+    :func:`seed_rows`) — lets a caller seeding several families
+    (sim_recall_report: IVF k=8 + PQ ksub=16 from the SAME ordering)
+    pay ONE driver collect instead of one per family."""
+    if rows is None:
+        rows = seed_rows(emb, k)
+    return [[float(x) for x in r["embedding"]] for r in rows[:k]]
+
+
+def seed_rows(emb: DataFrame, n: int) -> list:
+    """The shared md5-ordered seed collect: the n corpus rows with
+    smallest (md5(vec_id), vec_id) — the ONE ordering every seeded
+    quantizer family (IVF centroids, PQ codebooks) slices prefixes of,
+    so a family needing k ≤ n seeds reads rows[:k] bit-identically to
+    its own limit(k) collect."""
+    return (
+        emb.select(
+            "vec_id",
+            "embedding",
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
+        )
+        .orderBy("__h", "vec_id")
+        .limit(n)
+        .collect()
+    )
+
+
 def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
     """Indices of the n nearest centroids (squared L2), as an array
     expression over centroid literals.

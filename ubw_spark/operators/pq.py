@@ -24,7 +24,7 @@ oracle-checkable end-to-end in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.versioned import FileStore
@@ -34,38 +34,29 @@ def seed_pq_codebooks(
     emb: DataFrame,
     m: int = 8,
     ksub: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     rows: list | None = None,
 ) -> list[list[list[float]]]:
     """Deterministic, SQL-expressible codebooks: subspace j's centroids
     are the j-th subvectors of the ksub corpus vectors with smallest
-    md5(id) — reproducible in any engine with md5, like ivf.py's seed
-    centroids.  Collect is bounded: ksub × dim floats.  Returns
+    md5(vec_id) — reproducible in any engine with md5, like ivf.py's
+    seed centroids.  Collect is bounded: ksub × dim floats.  Returns
     ``codebooks[j][c] = list[dsub floats]``.
 
     ``rows``: pre-collected md5-ordered seed rows (≥ ksub, see
-    queries.scale_ops.seed_rows) — one shared driver collect for
-    callers seeding several quantizer families."""
-    if rows is not None:
-        rows = rows[:ksub]
-    else:
-        rows = (
-            emb.select(
-                id_col, vec_col,
-                F.md5(F.col(id_col).cast("string")).alias("__h"),
-            )
-            .orderBy("__h", id_col)
-            .limit(ksub)
-            .collect()
-        )
-    dim = len(rows[0][vec_col])
+    ivf.seed_rows) — one shared driver collect for callers seeding
+    several quantizer families."""
+    if rows is None:
+        from ubw_spark.operators.ivf import seed_rows
+
+        rows = seed_rows(emb, ksub)
+    rows = rows[:ksub]
+    dim = len(rows[0]["embedding"])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
     return [
         [
-            [float(x) for x in r[vec_col][j * dsub : (j + 1) * dsub]]
+            [float(x) for x in r["embedding"][j * dsub : (j + 1) * dsub]]
             for r in rows
         ]
         for j in range(m)

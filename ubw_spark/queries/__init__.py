@@ -20,9 +20,10 @@ from ubw_spark.queries import relational  # noqa: F401
 from ubw_spark.queries import textops  # noqa: F401
 from ubw_spark.queries import similarity  # noqa: F401
 from ubw_spark.queries import events  # noqa: F401
-from ubw_spark.queries import scale_ops  # noqa: F401
+from ubw_spark.queries import dedup_q  # noqa: F401
+from ubw_spark.queries import multimodal_q  # noqa: F401
 from ubw_spark.queries import pipeline_q  # noqa: F401
-from ubw_spark.queries import tpch_more  # noqa: F401
+from ubw_spark.queries import tpch  # noqa: F401
 from ubw_spark.queries import jsonquery_q  # noqa: F401
 from ubw_spark.queries import nested_q  # noqa: F401
 from ubw_spark.queries import vocabulary  # noqa: F401
@@ -34,10 +35,6 @@ from ubw_spark.queries import splits_q  # noqa: F401
 from ubw_spark.queries import shards_q  # noqa: F401
 from ubw_spark.queries import sketch_q  # noqa: F401
 from ubw_spark.queries import bpe_q  # noqa: F401
-from ubw_spark.queries import tpch_more2  # noqa: F401
-from ubw_spark.queries import tpch_more3  # noqa: F401
-from ubw_spark.queries import tpch_more4  # noqa: F401
-from ubw_spark.queries import tpch_more5  # noqa: F401
 from ubw_spark.queries import curation_q  # noqa: F401
 from ubw_spark.queries import cdc_skew_q  # noqa: F401
 from ubw_spark.queries import components_q  # noqa: F401

@@ -1,7 +1,9 @@
 """Corpus-curation queries: per-source quota caps and token-budget
-mixing (operators/curation.py) — the post-dedup steps that shape a
-pretraining corpus to a data recipe.  Both deterministic and fully
-oracled, membership arithmetic included, like the splits family.
+mixing (operators/curation.py), and sequence packing
+(operators/packing.py) — the post-dedup steps that shape a pretraining
+corpus to a data recipe and into training windows.  All deterministic
+and fully oracled, membership arithmetic included, like the splits
+family.
 """
 
 from __future__ import annotations
@@ -208,13 +210,14 @@ def curation_quality_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFram
     hand-picked constant).  One scalar percentile aggregate broadcast
     back + map-side filter (operators/curation.py::quantile_gate)."""
     from ubw_spark.operators.curation import quantile_gate
-    from ubw_spark.queries.textops import _STOPWORDS, _tokens
+    from ubw_spark.functions.text import tokens
+    from ubw_spark.queries.textops import _STOPWORDS
 
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), r"\s+")
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     stop_cnt = F.size(
-        F.filter(_tokens(F.col("text")), lambda x: F.array_contains(stop_arr, x))
+        F.filter(tokens(F.col("text")), lambda x: F.array_contains(stop_arr, x))
     )
     from ubw_spark.functions.hof import fence
 
@@ -371,4 +374,49 @@ def curation_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.lit(100000.0) * F.col("weight") / F.col("tokens"), 4
         ).alias("effective_epochs"),
+    )
+
+
+@register(
+    "pack_sequences",
+    oracle=r"""
+    WITH t AS (
+      SELECT doc_id,
+             CAST(length(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
+               AS n_tok
+      FROM documents),
+    c AS (
+      -- CAST: the windowed sum is HUGEINT; pandas canonicalizes that to
+      -- float64, which would hash-mismatch Spark's BIGINT.
+      SELECT doc_id, n_tok,
+             CAST(sum(n_tok) OVER (ORDER BY doc_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               - n_tok AS BIGINT) AS tok_start
+      FROM t)
+    SELECT doc_id, n_tok, tok_start,
+           CAST(tok_start // 256 AS BIGINT) AS seq_id,
+           CAST(tok_start % 256 AS BIGINT) AS seq_offset,
+           CAST(CASE WHEN n_tok > 0
+                THEN ((tok_start + n_tok - 1) // 256) - (tok_start // 256) + 1
+                ELSE 0 END AS BIGINT) AS n_seqs
+    FROM c
+    """,
+    tags=("packing", "training"),
+)
+def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence packing (concat-then-chunk): map every document to its
+    256-token training window(s).  The oracle is the naive one-window
+    global cumsum; the operator computes the identical assignment with
+    a two-phase distributed prefix sum (per-bucket totals → tiny bucket
+    ledger window → per-bucket windows), which is the shape that
+    survives 100 TB — see ubw_spark/operators/packing.py."""
+    from ubw_spark.operators.packing import pack_concat_chunks
+
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tok"),
+    )
+    return pack_concat_chunks(
+        toks, "doc_id", "n_tok", chunk_len=256, bucket_width=64
     )

@@ -5,7 +5,9 @@ Each query here is the exact batch semantics of a Structured Streaming
 pipeline in ubw_spark.streaming: tumbling/sliding windows via
 ``F.window``, sessionization via the gap rule.  Running them in batch
 against a SQL oracle proves the window math; the streaming tests then
-prove the same plans run incrementally with watermarks.
+prove the same plans run incrementally with watermarks.  The as-of and
+bounded range joins over the same table (operators/temporal.py) sit
+here too, each oracled by DuckDB's native join.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ubw_spark.operators.temporal import asof_join, range_join
 from ubw_spark.queries.registry import register, table
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -580,3 +583,73 @@ def stream_session_window_stateful(spark: SparkSession, sf_dir: str) -> DataFram
             "within 300s — a partial sink would undercount sessions"
         )
     return spark.read.schema(agg.schema).parquet(sink)
+
+
+@register(
+    "asof_join_last_click",
+    oracle="""
+    SELECT p.event_id AS purchase_id,
+           p.user_id,
+           strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+           c.event_id AS click_id,
+           round(c.value, 4) AS click_value
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON p.user_id = c.user_id AND p.ts >= c.ts
+    """,
+    tags=("join", "temporal"),
+)
+def asof_join_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each purchase ← most recent prior click of the same
+    user.  Single shuffle + ordered window carry-forward (operators.
+    temporal.asof_join); oracle is DuckDB's native ASOF JOIN."""
+    ev = table(spark, sf_dir, "events")
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = ev.where(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts", "value"
+    )
+    joined = asof_join(
+        purchases, clicks, on="ts", by=["user_id"],
+        right_cols=["event_id", "value"],
+    )
+    return joined.select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        F.col("event_id_right").alias("click_id"),
+        F.round("value_right", 4).alias("click_value"),
+    )
+
+
+@register(
+    "range_join_errors_before_purchase",
+    oracle="""
+    SELECT p.event_id AS purchase_id,
+           count(*) AS n_errors
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    JOIN (SELECT * FROM events WHERE event_type = 'error') e
+      ON p.user_id = e.user_id
+     AND e.ts >= p.ts - INTERVAL '30 minutes' AND e.ts <= p.ts
+    GROUP BY 1
+    """,
+    tags=("join", "temporal"),
+)
+def range_join_errors_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded range join: errors within the 30 min before each purchase
+    (bin-bucketed equi-join, operators.temporal.range_join — 3× fanout,
+    never per-key cartesian)."""
+    ev = table(spark, sf_dir, "events")
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("p_ts")
+    )
+    errors = ev.where(F.col("event_type") == "error").select(
+        F.col("event_id").alias("error_id"), "user_id", F.col("ts").alias("e_ts")
+    )
+    joined = range_join(
+        purchases, errors, key="user_id",
+        left_ts="p_ts", right_ts="e_ts",
+        lower_seconds=1800, upper_seconds=0,
+    )
+    return joined.groupBy("purchase_id").agg(F.count(F.lit(1)).alias("n_errors"))

@@ -5,7 +5,6 @@ tests/test_pca.py; eigenvectors are not SQL-expressible)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ubw_spark.operators.pca import covariance_matrix
 from ubw_spark.queries.registry import register, table

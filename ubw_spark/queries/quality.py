@@ -24,13 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ubw_spark.functions.text import tokens
 from ubw_spark.queries.registry import register, table
-
-
-def _tokens(col):
-    from ubw_spark.functions.text import tokens
-
-    return tokens(col)
 
 
 def _token_stats(d: DataFrame) -> DataFrame:
@@ -38,7 +33,7 @@ def _token_stats(d: DataFrame) -> DataFrame:
     groupBy — the formulation whose partial aggregation survives long
     documents (the array-expression alternative is O(n·distinct) per
     row)."""
-    ex = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+    ex = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     cnt = ex.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     return cnt.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
@@ -110,7 +105,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # token array let-bound (functions/hof.py): split once per doc,
     # not once per window reference
-    bst = let(_tokens(F.col("text")), bigram_stats)
+    bst = let(tokens(F.col("text")), bigram_stats)
     bs = d.select(
         "doc_id",
         bst["n_bigrams"].alias("n_bigrams"),
@@ -167,7 +162,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_freq is a window over the (doc, term) counts (one term-keyed
     shuffle); N joins in as a broadcast 1-row aggregate."""
     d = table(spark, sf_dir, "documents")
-    ex = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+    ex = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     cnt = ex.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
     n_total = d.agg(F.count(F.lit(1)).cast("double").alias("__N"))
     doclen = Window.partitionBy("doc_id")
@@ -359,7 +354,7 @@ def _lm_logprob_scores(d: DataFrame, keys: list[str]) -> DataFrame:
     the counts, a one-row-per-key-group totals broadcast, and a model
     join on per-doc DISTINCT tokens so hot tokens stay skew-linear."""
     ex = d.select(
-        "doc_id", *keys, F.explode(_tokens(F.col("text"))).alias("tok")
+        "doc_id", *keys, F.explode(tokens(F.col("text"))).alias("tok")
     )
     tf = ex.groupBy("doc_id", *keys, "tok").agg(F.count(F.lit(1)).alias("k"))
     cnt = ex.groupBy(*keys, "tok").agg(F.count(F.lit(1)).alias("c"))

@@ -26,189 +26,6 @@ from ubw_spark.queries.registry import register, table
 # --- A1: aggregation -------------------------------------------------------
 
 @register(
-    "q1_pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)                                   AS sum_qty,
-           round(sum(l_extendedprice), 2)                              AS sum_base_price,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,4))
-                          * (1 - CAST(l_discount AS DECIMAL(12,4)))), 2)
-                AS DOUBLE)                                             AS sum_disc_price,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,4))
-                          * (1 - CAST(l_discount AS DECIMAL(12,4)))
-                          * (1 + CAST(l_tax AS DECIMAL(12,4)))), 2)
-                AS DOUBLE)                                             AS sum_charge,
-           round(avg(l_quantity), 4)                                   AS avg_qty,
-           round(avg(l_extendedprice), 4)                              AS avg_price,
-           round(avg(l_discount), 4)                                   AS avg_disc,
-           count(*)                                                    AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-    tags=("agg", "flagship"),
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: the flagship scan→filter→groupBy→agg.
-
-    Scale: filter pushed to parquet; partial agg map-side; only
-    |flags|×|status| groups shuffle — bytes shuffled are O(groups), not
-    O(rows), at any SF."""
-    li = table(spark, sf_dir, "lineitem")
-    # Money sums use exact DECIMAL arithmetic: float sums accumulate in
-    # partition order, and a 4-/6-decimal true value rounded at 2 dp is a
-    # coin flip whenever it lands on a half-cent boundary.  Decimal sums
-    # are order-independent and exact; cast to double after rounding.
-    dec = lambda c: F.col(c).cast("decimal(12,4)")
-    disc_price_dec = dec("l_extendedprice") * (1 - dec("l_discount"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price_dec), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(disc_price_dec * (1 + dec("l_tax"))), 2)
-            .cast("double")
-            .alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@register(
-    "q3_shipping_priority",
-    oracle="""
-    SELECT l_orderkey,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,4))
-                          * (1 - CAST(l_discount AS DECIMAL(12,4)))), 2)
-                AS DOUBLE) AS revenue,
-           strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-           o_orderpriority
-    FROM customer JOIN orders ON c_custkey = o_custkey
-                  JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-01-01'
-      AND l_shipdate  > TIMESTAMP '1998-01-01'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-    tags=("join", "agg", "topk"),
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective dim filter → fact join → agg → top-k.
-
-    Scale: customer (filtered) is orders-of-magnitude smaller than
-    lineitem → broadcast it.  orders⋈customer is a FACT join — its
-    orderdate filter is barely selective (TPC-H orders end 1998-08), so
-    hinting it broadcast would force a near-full orders build side into
-    every executor at 100 TB; leave lineitem⋈orders to shuffle and let
-    AQE upgrade to broadcast only when the post-filter side actually
-    fits.  Top-k is TakeOrderedAndProject (no global sort); unique
-    tiebreak on l_orderkey keeps LIMIT deterministic."""
-    cust = table(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    return (
-        li.join(
-            orders.join(broadcast(cust), F.col("o_custkey") == F.col("c_custkey")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(12,4)")
-                    * (1 - F.col("l_discount").cast("decimal(12,4)"))
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
-
-
-@register(
-    "q5_local_supplier_volume",
-    oracle="""
-    SELECT n_name,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,4))
-                          * (1 - CAST(l_discount AS DECIMAL(12,4)))), 2)
-                AS DOUBLE) AS revenue
-    FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate <  TIMESTAMP '1997-01-01'
-    GROUP BY n_name
-    """,
-    tags=("join", "agg"),
-)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way star join.
-
-    Scale: all dims (region/nation/supplier/customer) broadcast; only
-    orders⋈lineitem is a real shuffle join on orderkey.  Catalyst+AQE
-    pick broadcast automatically under the 10 MB default, but we hint
-    explicitly because at 100 TB the statistics pass may not have run."""
-    region = table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = table(spark, sf_dir, "nation")
-    supplier = table(spark, sf_dir, "supplier")
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            broadcast(supplier),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(12,4)")
-                    * (1 - F.col("l_discount").cast("decimal(12,4)"))
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
-
-@register(
     "agg_groupby_dynamic_dims",
     oracle="""
     SELECT o_orderstatus, o_orderpriority,
@@ -505,6 +322,42 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
+    )
+
+
+@register(
+    "window_ntile_quartiles",
+    oracle="""
+    SELECT quartile, count(*) AS n,
+           round(min(o_totalprice), 2) AS min_price,
+           round(max(o_totalprice), 2) AS max_price
+    FROM (SELECT o_totalprice,
+                 ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS quartile
+          FROM orders)
+    GROUP BY quartile
+    """,
+    tags=("window", "agg"),
+)
+def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ntile quartile bucketing (unique tiebreak keeps bucket edges
+    deterministic).  NOT a global ORDER window: that plan funnels the
+    whole table through one task.  Uses operators/ranking.py's two-phase
+    distributed rank (value-bucket ledger + per-bucket row_number) and
+    derives the quartile arithmetically — identical ANSI ntile output,
+    every window partitioned or over the tiny ledger."""
+    from ubw_spark.operators.ranking import distributed_ntile
+
+    o = table(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
+    tiled = distributed_ntile(
+        o, 4, "o_totalprice", "o_orderkey", tile_name="quartile"
+    )
+    return (
+        tiled.groupBy("quartile")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.min("o_totalprice"), 2).alias("min_price"),
+            F.round(F.max("o_totalprice"), 2).alias("max_price"),
+        )
     )
 
 

@@ -21,7 +21,6 @@ truth) only matches when the connector is lossless:
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 

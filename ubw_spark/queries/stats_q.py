@@ -1,4 +1,6 @@
-"""Profiling queries (operators/stats.py::profile_table)."""
+"""Profiling and grouped-statistics queries (operators/stats.py):
+column profiles, Benford audit, and the applyInPandas grouped-map
+paths (per-segment z-score, median/MAD outlier stats)."""
 
 from __future__ import annotations
 
@@ -93,3 +95,76 @@ def quality_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
     ).where(F.col("cents") > 0)
     return benford_digits(o, "cents")
+
+
+@register(
+    "grouped_robust_stats",
+    oracle="""
+    WITH s AS (
+      SELECT o_orderpriority, median(o_totalprice) AS med,
+             mad(o_totalprice) AS mad
+      FROM orders GROUP BY 1)
+    SELECT o.o_orderpriority, count(*) AS n,
+           round(s.med, 4) AS med, round(s.mad, 4) AS mad,
+           count(*) FILTER (abs(o.o_totalprice - s.med) > 3 * s.mad)
+             AS n_outliers
+    FROM orders o JOIN s USING (o_orderpriority)
+    GROUP BY 1, s.med, s.mad
+    """,
+    tags=("agg", "pandas"),
+)
+def grouped_robust_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped-map applyInPandas: exact per-priority median/MAD outlier
+    stats over orders — rank statistics are the case where shipping the
+    (bounded-cardinality) group through Arrow beats SQL gymnastics.
+    Both engines interpolate even-count medians identically on DOUBLE,
+    so the oracle is exact."""
+    from ubw_spark.operators.stats import grouped_robust_stats
+
+    o = table(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
+    stats = grouped_robust_stats(o, ["o_orderpriority"], "o_totalprice")
+    return stats.select(
+        "o_orderpriority",
+        "n",
+        F.round("med", 4).alias("med"),
+        F.round("mad", 4).alias("mad"),
+        "n_outliers",
+    )
+
+
+@register(
+    "grouped_map_zscore",
+    oracle="""
+    SELECT c_custkey,
+           round((c_acctbal - avg(c_acctbal) OVER (PARTITION BY c_mktsegment))
+                 / stddev_samp(c_acctbal) OVER (PARTITION BY c_mktsegment), 4)
+             AS bal_zscore
+    FROM customer WHERE c_custkey < 400
+    """,
+    tags=("udf",),
+)
+def grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """applyInPandas grouped-map (U-surface): per-segment z-score
+    normalization in pandas — deterministic, so even the Python-side
+    path is oracle-checked against the SQL window formulation.
+
+    (The window formulation is what production would use; this query
+    exists to pin the grouped-map batch contract: one group = one pandas
+    DataFrame in, same-length frame out.)"""
+    import pandas as pd
+
+    cust = table(spark, sf_dir, "customer").where(F.col("c_custkey") < 400)
+
+    def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
+        m = pdf["c_acctbal"].mean()
+        s = pdf["c_acctbal"].std(ddof=1)
+        return pd.DataFrame(
+            {
+                "c_custkey": pdf["c_custkey"],
+                "bal_zscore": ((pdf["c_acctbal"] - m) / s).round(4),
+            }
+        )
+
+    return cust.groupBy("c_mktsegment").applyInPandas(
+        zscore, schema="c_custkey bigint, bal_zscore double"
+    )

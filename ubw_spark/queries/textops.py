@@ -13,16 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ubw_spark.functions.text import tokens
 from ubw_spark.queries.registry import register, table
 
 # Fixed tiny stopword list shared with the SQL oracle.
 _STOPWORDS = ["the", "a", "of", "in", "and", "to", "is"]
-
-
-def _tokens(col):
-    from ubw_spark.functions.text import tokens
-
-    return tokens(col)
 
 
 @register(
@@ -74,7 +69,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_tok = F.round(nonspace / n_tokens, 4)
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     stop_cnt = F.size(
-        F.filter(_tokens(F.col("text")), lambda x: F.array_contains(stop_arr, x))
+        F.filter(tokens(F.col("text")), lambda x: F.array_contains(stop_arr, x))
     )
     return d.select(
         "doc_id",
@@ -118,7 +113,7 @@ def text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.regexp_replace(F.col("text"), r"[\x00-\x7F]", ""))
         / F.length("text")
     )
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
 
     def has_any(words: list[str]):
         arr = F.array(*[F.lit(w) for w in words])
@@ -216,7 +211,7 @@ def text_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(distinct_shingles).alias("n_distinct_shingles"),
         )
 
-    s = let(_tokens(F.col("text")), stats)
+    s = let(tokens(F.col("text")), stats)
     return d.select(
         "doc_id",
         s["n_shingles"].alias("n_shingles"),
@@ -251,7 +246,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces."""
     d = table(spark, sf_dir, "documents").where(F.col("doc_id") < 120)
     w = d.select(
-        "doc_id", "lang", F.array_distinct(_tokens(F.col("text"))).alias("words")
+        "doc_id", "lang", F.array_distinct(tokens(F.col("text"))).alias("words")
     )
     a = w.alias("a")
     b = w.alias("b")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ubw_spark.queries.registry import register, table
+from ubw_spark.streaming.stages import funnel_user_aggs
 
 # letter runs | digit runs | any single non-alnum-non-space char
 _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -45,22 +46,6 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(toks) / F.greatest(words, F.lit(1)), 4
         ).alias("tokens_per_word"),
     )
-
-
-def funnel_user_aggs() -> list:
-    """The per-user conditional first-timestamp aggregates — shared by
-    the batch query below and streaming.stages.stream_funnel_user_state,
-    so stream==batch equivalence is the same expression tree, not a
-    re-implementation."""
-
-    def first_ts(t: str):
-        return F.min(F.when(F.col("event_type") == t, F.col("ts")))
-
-    return [
-        first_ts("view").alias("t_view"),
-        first_ts("click").alias("t_click"),
-        first_ts("purchase").alias("t_purchase"),
-    ]
 
 
 def funnel_summary(per_user: DataFrame) -> DataFrame:

@@ -11,7 +11,6 @@ from ubw_spark.streaming.stages import (
     stream_static_enrich,
     write_stream_upsert,
     run_to_memory,
-    write_stream_parquet,
 )
 
 __all__ = [
@@ -27,5 +26,4 @@ __all__ = [
     "stream_static_enrich",
     "write_stream_upsert",
     "run_to_memory",
-    "write_stream_parquet",
 ]

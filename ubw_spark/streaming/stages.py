@@ -12,7 +12,7 @@ files (file source, processAllAvailable).
 Scale posture: watermarks bound state (no unbounded window state at
 100 TB/day); ``stateful_running_totals`` shows applyInPandasWithState
 for semantics the built-in windows can't express; sinks use
-``foreachBatch`` or native parquet with checkpointing.
+``foreachBatch`` with checkpointing.
 """
 
 from __future__ import annotations
@@ -193,11 +193,27 @@ def stateful_running_totals(df: DataFrame) -> DataFrame:
     )
 
 
+def funnel_user_aggs() -> list:
+    """The per-user conditional first-timestamp aggregates — shared by
+    the batch query queries.tokens_funnel.events_funnel and
+    stream_funnel_user_state below, so stream==batch equivalence is the
+    same expression tree, not a re-implementation."""
+
+    def first_ts(t: str):
+        return F.min(F.when(F.col("event_type") == t, F.col("ts")))
+
+    return [
+        first_ts("view").alias("t_view"),
+        first_ts("click").alias("t_click"),
+        first_ts("purchase").alias("t_purchase"),
+    ]
+
+
 def stream_funnel_user_state(df: DataFrame) -> DataFrame:
     """Streaming twin of queries.tokens_funnel.events_funnel, phase 1:
     per-user conditional first-timestamps as an incremental streaming
     aggregation (update/complete mode) — the SAME aggregate expressions
-    as the batch query, imported from the query module.
+    as the batch query (:func:`funnel_user_aggs`).
 
     The funnel's second (global) aggregation cannot chain inside one
     streaming query (multiple stateful aggs are unsupported); the
@@ -205,8 +221,6 @@ def stream_funnel_user_state(df: DataFrame) -> DataFrame:
     the sink, which is what the equivalence test drives.  State is one
     3-timestamp row per user; production adds a state TTL for idle
     users."""
-    from ubw_spark.queries.tokens_funnel import funnel_user_aggs
-
     return df.groupBy("user_id").agg(*funnel_user_aggs())
 
 
@@ -371,26 +385,6 @@ def write_stream_upsert(
 
     w = stream_df.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def write_stream_parquet(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-    trigger_once: bool = True,
-):
-    """Production sink shape: parquet + checkpoint; availableNow trigger
-    processes the backlog then stops (batch-like incremental runs)."""
-    w = (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
     )
     if trigger_once:
         w = w.trigger(availableNow=True)
