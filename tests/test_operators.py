@@ -1397,8 +1397,8 @@ def test_semantic_dedup_planted_clusters(spark):
 
 
 def test_semdedup_assign_paths_agree(spark, sf_dir):
-    """assign_cells dispatches on k: literal-fold expression below
-    _JOIN_ASSIGN_MIN_K, vectorized Arrow argmin at paper-scale k.  The
+    """assign_ivf_cells dispatches on k: literal-fold expression below
+    _VECTORIZED_ASSIGN_MIN_K, vectorized Arrow argmin at paper-scale k.  The
     two kernels must produce IDENTICAL assignments on real embeddings
     (same sequential-vs-BLAS float64 distances up to ~1e-13 drift, same
     lowest-cid tie-break) — the dispatch is a performance knob, never a
@@ -1425,32 +1425,57 @@ def test_semdedup_assign_paths_agree(spark, sf_dir):
     assert len(set(vec.values())) > 1  # sanity: not all one cell
 
 
-def test_assign_vectorized_rejects_corrupt_vectors(spark):
+@pytest.mark.parametrize("entry", ["assign_k4", "assign_k20", "pq_encode"])
+def test_assign_vectorized_rejects_corrupt_vectors(spark, entry):
     """NULL or ragged vectors are a CONTRACT error with a diagnosis
-    naming the column — not an opaque numpy shape failure mid-job."""
-    import pytest as _pytest
+    naming the column, whichever kernel the entry dispatches to: the
+    literal fold below the k threshold and PQ encoding used to file
+    them silently under cell / code 0, the Arrow argmin above it to
+    fail with an opaque numpy shape error."""
+    from ubw_spark.operators.ivf import assign_ivf_cells
+    from ubw_spark.operators.pq import pq_encode
 
-    from ubw_spark.operators.ivf import assign_vectorized
+    if entry == "pq_encode":
+        books = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [0.0, 1.0]]]
 
-    cents = [[float(i == j) for j in range(4)] for i in range(20)]
+        def kernel(df):
+            return pq_encode(df, books)
+
+        out_col, expect = "pq_code", [0, 1]
+    else:
+        n_cells = 4 if entry == "assign_k4" else 20
+        cents = [[float(i == j) for j in range(4)] for i in range(n_cells)]
+
+        def kernel(df):
+            return assign_ivf_cells(df, cents)
+
+        out_col, expect = "ivf_cell", 0  # e0 and e3 tie: lowest cid
     ok = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id bigint, embedding array<double>"
+        [(1, [1.0, 0.0, 0.0, 1.0])], "vec_id bigint, embedding array<double>"
     )
-    assert assign_vectorized(ok, cents).collect()[0]["ivf_cell"] == 0
+    assert kernel(ok).collect()[0][out_col] == expect
     bad = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0]), (2, None)],
         "vec_id bigint, embedding array<double>",
     )
-    with _pytest.raises(Exception, match="embedding"):
-        assign_vectorized(bad, cents).collect()
+    with pytest.raises(Exception, match="NULL or non-4-dim value in 'embedding'"):
+        kernel(bad).collect()
     ragged = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
     )
-    with _pytest.raises(Exception, match="4-dim"):
-        assign_vectorized(ragged, cents).collect()
+    with pytest.raises(Exception, match="4-dim"):
+        kernel(ragged).collect()
+    if entry == "pq_encode":
+        return
+    # the driver-side probe-cell pick refuses the same vectors as queries
+    from ubw_spark.operators.ivf import ivf_ann_topk
+
+    for queries in (bad, ragged):
+        with pytest.raises(ValueError, match="non-4-dim query vector"):
+            ivf_ann_topk(ok, queries, cents, k=1, nprobe=1)
     # pre-existing out_col is replaced, not duplicated (withColumn parity)
     pre = ok.withColumn("ivf_cell", F.lit(99))
-    assert assign_vectorized(pre, cents).collect()[0]["ivf_cell"] == 0
+    assert kernel(pre).collect()[0]["ivf_cell"] == 0
     # ... IN PLACE: withColumn keeps the replaced column's position, so
     # both dispatch paths must emit the same column ORDER too — the
     # vectorized path used to drop-then-append, and positional consumers
@@ -1458,9 +1483,8 @@ def test_assign_vectorized_rejects_corrupt_vectors(spark):
     pre2 = ok.select(
         "vec_id", F.lit(99).alias("ivf_cell"), F.col("embedding")
     )
-    out = assign_vectorized(pre2, cents)
+    out = kernel(pre2)
     assert out.columns == ["vec_id", "ivf_cell", "embedding"]
-    assert out.columns == pre2.withColumn("ivf_cell", F.lit(0)).columns
     assert out.collect()[0]["ivf_cell"] == 0
 
 

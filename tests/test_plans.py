@@ -641,3 +641,42 @@ def test_salted_join_plan_carries_salt_and_explode(q, spark):
         assert "Generate explode" in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+
+def test_capture_plans_normalizes_session_counters():
+    """tools/capture_plans.py writes plans with expression ids, PySpark
+    lambda-variable suffixes, exchange plan ids, RDD ids and random
+    expression seeds replaced, so two
+    captures of the same plan compare equal; names that merely end in
+    digits stay as they are."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "capture_plans.py"
+    spec = importlib.util.spec_from_file_location("capture_plans", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def plan(e, x, acc, pid):
+        return (
+            f"Project [vec_id#{e}L, aggregate(zip_with(embedding#{e + 1}, "
+            f"c#{e + 2}, lambdafunction((lambda x_{x}#{e + 3} * lambda "
+            f"y_{x + 1}#{e + 4}), lambda x_{x}#{e + 3}, lambda "
+            f"y_{x + 1}#{e + 4}, false)), 0.0, lambdafunction((lambda "
+            f"acc_{acc}#{e + 5} + lambda t#{e + 6}), lambda acc_{acc}"
+            f"#{e + 5}, lambda t#{e + 6}, false)) AS l_col_2#{e + 7}]\n"
+            f"Exchange hashpartitioning(q1_x#{e + 8}, 4) [plan_id={pid}]\n"
+            f"Arguments: MapPartitionsRDD[{pid + 3}] at localCheckpoint\n"
+            f"element_at(shuffle(array(c#{e}), Some({-pid * 10**9})), 1) "
+            "AS s, element_at(x#1, Some(2))"
+        )
+
+    a, b = plan(12, 60, 62, 7), plan(3401, 7, 1893, 310)
+    assert a != b
+    assert mod.normalize_plan(a) == mod.normalize_plan(b)
+    norm = mod.normalize_plan(a)
+    assert "vec_id#NL" in norm and "lambda x_N#N" in norm
+    assert "lambda t#N" in norm and "[plan_id=N]" in norm
+    assert "MapPartitionsRDD[N]" in norm and "Some(N)), 1)" in norm
+    assert "Some(2)" in norm
+    assert "l_col_2#N" in norm and "q1_x#N" in norm

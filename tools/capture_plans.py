@@ -13,14 +13,41 @@ The round-13 optimization deliverable names files
 ``plans/r13/<query>_before.txt`` / ``_after.txt`` — pass tags
 ``r13_before`` / ``r13_after`` and the files land as
 ``plans/r13/<query>_before.txt`` etc.
+
+Plans are written through :func:`normalize_plan`, so two captures of
+the same plan (across sessions, or a parent and a change) are
+byte-identical and ``diff -r`` shows only real plan differences.
+``SPARK_GRAFT_SF_DIR`` picks the data (default sf0.1).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+#: Per-session counters: expression ids (``vec_id#123L``), PySpark's
+#: generated lambda-variable names (``lambda x_17``), exchange plan
+#: ids (``[plan_id=42]``), RDD ids (``MapPartitionsRDD[328]``) and the
+#: seed drawn for each ``shuffle``/``rand`` expression (``Some(-131…)``,
+#: e.g. every ``functions.hof.fence``).
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"(\blambda [A-Za-z]\w*?)_\d+\b"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"Some\(-?\d{6,}\)"), "Some(N)"),
+)
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with every per-session counter replaced by a constant."""
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -59,7 +86,7 @@ def main() -> int:
         except Exception as e:  # capture the failure instead of dying
             plan = f"ERROR capturing plan: {e}"
         with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as f:
-            f.write(plan)
+            f.write(normalize_plan(plan))
         print(f"wrote {out_dir}/{name}{suffix}.txt")
     spark.stop()
     return 0

@@ -18,13 +18,11 @@ Spark-first shape:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 from ubw_spark.functions.hof import fence
 
-from ubw_spark.operators.similarity import cosine_col
+from ubw_spark.operators.similarity import _array_sql, probe_topk, require_dim
 from ubw_spark.operators.versioned import FileStore
 
 
@@ -104,7 +102,9 @@ def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
     `_create_lambda` across one bench pass) — where one expr() parse is
     ~2 ms.  The parsed tree is identical (same casts, same fold order,
     same lowest-cid tie-break), so assignments are bit-for-bit
-    unchanged (pinned by test_semdedup_assign_paths_agree)."""
+    unchanged (pinned by test_semdedup_assign_paths_agree).  Callers
+    pick cells through :func:`assign_ivf_cells` (one cell per row) or
+    :func:`nearest_cells_py` (a query's probe cells, driver-side)."""
     from ubw_spark.operators.dedup import _col_sql
 
     v = _col_sql(vec)
@@ -116,12 +116,8 @@ def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
     # (a−b)² products, same left-to-right fold, same (d, c) struct
     # sort with lowest-cid tie-break (still pinned by
     # test_semdedup_assign_paths_agree).
-    cents_sql = "array(" + ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
-        for c in centroids
-    ) + ")"
     ranked = (
-        f"array_sort(transform({cents_sql}, (c, i) -> "
+        f"array_sort(transform({_array_sql(centroids)}, (c, i) -> "
         "named_struct('d', aggregate(zip_with("
         f"{v}, c, "
         "(a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)"
@@ -161,7 +157,8 @@ def assign_vectorized(
     drift vs the sequential Σ(a−c)² fold is ~1e-13 against measured
     1st-vs-2nd-nearest gaps of ~8e-8 in the test corpora, and
     np.argmin's first-minimum IS the lowest-cid tie-break.  Row chunks
-    cap the n×k distance block at ~32 MB regardless of k."""
+    cap the n×k distance block at ~32 MB regardless of k.  Vector shape
+    is checked by the :func:`assign_ivf_cells` entry, not here."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -178,7 +175,6 @@ def assign_vectorized(
     out_schema = StructType(
         df.schema.fields + [StructField(out_col, IntegerType(), False)]
     )
-    dim = len(centroids[0])
     cmat = np.asarray(centroids, dtype=np.float64)  # (k, dim)
     c2 = (cmat * cmat).sum(axis=1)
     chunk = max(1, (1 << 22) // max(1, cmat.shape[0]))
@@ -188,19 +184,7 @@ def assign_vectorized(
             n = len(pdf)
             if n == 0:
                 continue
-            vecs = pdf[vec_col].tolist()
-            if any(v is None or len(v) != dim for v in vecs):
-                # the literal path silently flows NULL/ragged vectors
-                # through to an undefined cell; here that corrupt input
-                # is a CONTRACT error with a diagnosis instead of an
-                # opaque numpy shape failure mid-job
-                raise ValueError(
-                    f"assign_vectorized: NULL or non-{dim}-dim value in "
-                    f"'{vec_col}' — filter corrupt embeddings upstream "
-                    "(module contract: vector columns are non-null, "
-                    "fixed-dim)"
-                )
-            a = np.array(vecs, dtype=np.float64)
+            a = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             a2 = (a * a).sum(axis=1)
             cell = np.empty(n, dtype=np.int32)
             for lo in range(0, n, chunk):
@@ -261,16 +245,89 @@ def assign_ivf_cells(
     corpus: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
+    out_col: str = "ivf_cell",
 ) -> DataFrame:
-    """Map-only cell assignment (nearest centroid).  Small k inlines
-    the centroids as plan literals; paper-scale k takes the vectorized
-    Arrow kernel (see :data:`_VECTORIZED_ASSIGN_MIN_K`) — identical
-    assignments either way."""
+    """Map-only cell assignment (nearest centroid) into ``out_col`` —
+    the one k dispatch.  Small k inlines the centroids as plan
+    literals; paper-scale k takes the vectorized Arrow kernel (see
+    :data:`_VECTORIZED_ASSIGN_MIN_K`) — identical assignments either
+    way.  A NULL or wrong-dim vector raises at execution on both paths
+    (:func:`~ubw_spark.operators.similarity.require_dim`) instead of
+    landing in cell 0."""
+    corpus = require_dim(corpus, vec_col, len(centroids[0]), "assign_ivf_cells")
     if len(centroids) < _VECTORIZED_ASSIGN_MIN_K:
         return corpus.withColumn(
-            "ivf_cell", _nearest_cells(F.col(vec_col), centroids, 1)[0]
+            out_col, _nearest_cells(F.col(vec_col), centroids, 1)[0]
         )
-    return assign_vectorized(corpus, centroids, vec_col, "ivf_cell")
+    return assign_vectorized(corpus, centroids, vec_col, out_col)
+
+
+def _probe_cells(
+    queries: list[tuple], centroids: list[list[float]], nprobe: int
+) -> list[list[int]]:
+    """The probe-cell pick of every IVF and IVF-PQ search: each
+    ``(qid, vector)`` query's ``nprobe`` nearest cells, picked
+    driver-side with :func:`nearest_cells_py` (queries are
+    broadcast-sized by contract).  A NULL or wrong-dim query vector is
+    refused here: zip would silently truncate it."""
+    dim = len(centroids[0])
+    picks = []
+    for qid, vec in queries:
+        if vec is None or len(vec) != dim:
+            raise ValueError(
+                f"IVF probe: NULL or non-{dim}-dim query vector for "
+                f"qid={qid!r} — filter corrupt embeddings upstream "
+                "(module contract: vector columns are non-null, fixed-dim)"
+            )
+        picks.append(nearest_cells_py([float(x) for x in vec], centroids, nprobe))
+    return picks
+
+
+def _probe_frame(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    nprobe: int,
+) -> tuple[DataFrame, list[int]]:
+    """The (qid, __qv, ivf_cell) probe rows of an IVF search, one per
+    query and probed cell (:func:`_probe_cells`), plus the sorted union
+    of probed cells.
+
+    ``queries`` is collected ONCE: evaluating its plan twice (once for
+    a cell list, again inside the join) silently lost candidates when
+    it was non-deterministic (sample(), unordered limit, re-read of
+    mutable storage), and an in-plan pick paid the k·dim literal
+    expression build per call.  ``literal_frame``, not createDataFrame:
+    the probe rows join every consuming job, and a pickled local RDD
+    would launch a Python worker per job."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from ubw_spark.functions.literals import literal_frame
+
+    q_rows = [
+        (r["qid"], r["__qv"])
+        for r in queries.select(
+            F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
+        ).collect()
+    ]
+    rows = [
+        (qid, qv, cell)
+        for (qid, qv), cells in zip(q_rows, _probe_cells(q_rows, centroids, nprobe))
+        for cell in cells
+    ]
+    probes = literal_frame(
+        queries.sparkSession,
+        rows,
+        StructType(
+            [
+                StructField("qid", queries.schema[id_col].dataType, True),
+                StructField("__qv", queries.schema[vec_col].dataType, True),
+                StructField("ivf_cell", IntegerType(), True),
+            ]
+        ),
+    )
+    return probes, sorted({cell for _, _, cell in rows})
 
 
 def write_ivf_index(
@@ -315,76 +372,12 @@ def probe_ivf_index(
     ~nprobe/k of the corpus (PartitionFilters in the plan, asserted in
     tests/test_plans.py) rather than relying on runtime DPP.  The
     subsequent broadcast join on ivf_cell then only fans candidates out
-    of the surviving partitions.
-
-    The probe side is collected ONCE (queries are broadcast-sized by
-    contract — the isin cell list always required a collect anyway) and
-    its cells are computed driver-side with :func:`nearest_cells_py`:
-    the previous shape evaluated the ``queries`` plan twice (collect
-    for the cell list, again inside the join), which silently lost
-    candidates when queries was non-deterministic (sample(), unordered
-    limit, re-read of mutable storage) AND paid the k·dim literal
-    expression build per call at paper-scale k."""
+    of the surviving partitions.  The probe rows come from
+    :func:`_probe_frame`, the same pick :func:`ivf_ann_topk` makes."""
     root, _ = _STORE.open(path, centroid_params(centroids))
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
-    ).collect()
-    for r in q_rows:
-        if r["__qv"] is None:
-            raise ValueError(
-                f"probe_ivf_index: NULL query vector for qid={r['qid']!r} "
-                "— filter corrupt embeddings upstream (module contract: "
-                "vector columns are non-null, fixed-dim)"
-            )
-    probe_rows = [
-        (r["qid"], r["__qv"], cell)
-        for r in q_rows
-        for cell in nearest_cells_py(
-            [float(x) for x in r["__qv"]], centroids, nprobe
-        )
-    ]
-    from pyspark.sql.types import StructField, StructType
-
-    from ubw_spark.functions.literals import literal_frame
-
-    # literal_frame, not createDataFrame: the probe rows join every
-    # consuming job, and a pickled local RDD would launch a Python
-    # worker per job (round-13 measurement: ~0.3-0.5 s each warm)
-    indexed_all = _STORE.read(spark, root)
-    probes = literal_frame(
-        spark,
-        probe_rows,
-        StructType(
-            [
-                StructField("qid", queries.schema[id_col].dataType, True),
-                StructField("__qv", queries.schema[vec_col].dataType, True),
-                StructField(
-                    "ivf_cell",
-                    indexed_all.schema["ivf_cell"].dataType,
-                    True,
-                ),
-            ]
-        ),
-    )
-    cells = sorted({c for _, _, c in probe_rows})
-    indexed = indexed_all.where(F.col("ivf_cell").isin(cells))
-    cands = (
-        indexed.join(broadcast(probes), "ivf_cell")
-        .where(F.col(id_col) != F.col("qid"))
-        .select("qid", "__qv", id_col, vec_col)
-        .dropDuplicates(["qid", id_col])
-    )
-    scored = cands.select(
-        "qid",
-        id_col,
-        F.round(cosine_col(F.col("__qv"), F.col(vec_col)), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    probes, cells = _probe_frame(queries, centroids, id_col, vec_col, nprobe)
+    indexed = _STORE.read(spark, root).where(F.col("ivf_cell").isin(cells))
+    return probe_topk(indexed, probes, "ivf_cell", id_col, vec_col, k)
 
 
 def ivf_ann_topk(
@@ -397,69 +390,13 @@ def ivf_ann_topk(
     nprobe: int = 4,
 ) -> DataFrame:
     """Probe the nprobe nearest cells per query; exact-cosine re-rank
-    candidates only.  Join key is the small int cell id.
-
-    Probe-cell pick dispatches like cell assignment: small k embeds the
-    centroid literals in the plan; at ``_VECTORIZED_ASSIGN_MIN_K`` and
-    above the (broadcast-sized) queries are collected and their cells
-    computed driver-side — merely BUILDING the literal expression costs
-    k·dim py4j F.lit round-trips, the documented paper-scale stall."""
-    indexed = assign_ivf_cells(corpus, centroids, vec_col)
-    if len(centroids) >= _VECTORIZED_ASSIGN_MIN_K:
-        spark = queries.sparkSession
-        q_rows = queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
-        ).collect()
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        from ubw_spark.functions.literals import literal_frame
-
-        probes = literal_frame(
-            spark,
-            [
-                (r["qid"], r["__qv"], cell)
-                for r in q_rows
-                for cell in nearest_cells_py(
-                    [float(x) for x in r["__qv"]], centroids, nprobe
-                )
-            ],
-            StructType(
-                [
-                    StructField(
-                        "qid", queries.schema[id_col].dataType, True
-                    ),
-                    StructField(
-                        "__qv", queries.schema[vec_col].dataType, True
-                    ),
-                    StructField("ivf_cell", IntegerType(), True),
-                ]
-            ),
-        )
-    else:
-        probes = queries.select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("__qv"),
-            F.explode(
-                _nearest_cells(F.col(vec_col), centroids, nprobe)
-            ).alias("ivf_cell"),
-        )
-    cands = (
-        indexed.join(broadcast(probes), "ivf_cell")
-        .where(F.col(id_col) != F.col("qid"))
-        .select("qid", "__qv", id_col, vec_col)
-        # dedup on the id pair only, not the vectors (smaller shuffle key)
-        .dropDuplicates(["qid", id_col])
-    )
-    scored = cands.select(
-        "qid",
-        id_col,
-        F.round(cosine_col(F.col("__qv"), F.col(vec_col)), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    candidates only.  Join key is the small int cell id; probe cells
+    are picked driver-side exactly as :func:`probe_ivf_index` picks
+    them."""
+    probes, _ = _probe_frame(queries, centroids, id_col, vec_col, nprobe)
+    return probe_topk(
+        assign_ivf_cells(corpus, centroids, vec_col),
+        probes, "ivf_cell", id_col, vec_col, k,
     )
 
 

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ubw_spark.operators.similarity import norm
+
 PAYLOAD_META_SCHEMA = T.StructType(
     [
         T.StructField("media_type", T.StringType(), False),
@@ -169,18 +171,12 @@ def extract_features(
     decoded = decode_batches(
         df, id_col, payload_col, codec="fake", feature_dim=feature_dim
     )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("feature"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
+    nrm = norm(F.col("feature"))
     return decoded.select(
         "id",
         "n_bytes",
         F.transform(
-            F.col("feature"), lambda x: (x / norm).cast("float")
+            F.col("feature"), lambda x: (x / nrm).cast("float")
         ).alias("feature"),
     )
 

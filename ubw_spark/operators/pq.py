@@ -24,9 +24,16 @@ oracle-checkable end-to-end in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ubw_spark.operators.ivf import (
+    _probe_cells,
+    assign_ivf_cells,
+    centroid_params,
+    seed_rows,
+)
+from ubw_spark.operators.similarity import _array_sql, require_dim, rerank_topk
 from ubw_spark.operators.versioned import FileStore
 
 
@@ -46,8 +53,6 @@ def seed_pq_codebooks(
     ivf.seed_rows) — one shared driver collect for callers seeding
     several quantizer families."""
     if rows is None:
-        from ubw_spark.operators.ivf import seed_rows
-
         rows = seed_rows(emb, ksub)
     rows = rows[:ksub]
     dim = len(rows[0]["embedding"])
@@ -129,7 +134,9 @@ def pq_encode(
     generated from our own collected floats — no user input reaches it,
     so the JSON-DSL no-expr-strings safety contract is untouched.  The
     fold is the same left-to-right (x−y)² sum the DuckDB oracle
-    mirrors."""
+    mirrors.  A NULL or wrong-dim vector raises at execution
+    (:func:`~ubw_spark.operators.similarity.require_dim`) instead of
+    encoding to code 0."""
 
     # NOTE (round 14): hoisting the m codebooks into one flat constant
     # indexed by an outer transform lambda (the
@@ -139,40 +146,24 @@ def pq_encode(
     # hoisted; sim_ivfpq 1.91/2.02 vs 2.40/3.27).  The per-subspace
     # form keeps slice() bounds constant, which the interpreted HOF
     # path evaluates measurably faster than the lambda-indexed lookup.
-    def book_sql(book: list[list[float]]) -> str:
-        return "array(" + ",".join(
-            "array(" + ",".join(f"{float(c)!r}D" for c in cent) + ")"
-            for cent in book
-        ) + ")"
-
     codes = []
     for j, book in enumerate(codebooks):
         dsub = len(book[0])
         codes.append(F.expr(
-            f"array_sort(transform({book_sql(book)}, (c, i) -> "
+            f"array_sort(transform({_array_sql(book)}, (c, i) -> "
             f"struct(aggregate(zip_with(slice(__pqv, {j * dsub + 1}, {dsub}), c, "
             "(x, y) -> (x-y)*(x-y)), 0.0D, (a, t) -> a + t) AS d, "
             "i AS c)))[0].c"
         ))
+    dim = sum(len(book[0]) for book in codebooks)
     return (
-        df.withColumn(
+        require_dim(df, vec_col, dim, "pq_encode")
+        .withColumn(
             "__pqv", F.transform(F.col(vec_col), lambda x: x.cast("double"))
         )
         .withColumn(out_col, F.array(*codes))
         .drop("__pqv")
     )
-
-
-def _nearest_cells_py(
-    q: list[float], cell_centroids: list[list[float]], nprobe: int
-) -> list[int]:
-    """Driver-side probe-cell pick — the shared ivf definition (ONE
-    fold order + cid tie-break for every path that picks cells: the
-    written store and the in-memory scorer must probe the same
-    cells)."""
-    from ubw_spark.operators.ivf import nearest_cells_py
-
-    return nearest_cells_py(q, cell_centroids, nprobe)
 
 
 def _adc_sum_sql(
@@ -189,9 +180,8 @@ def _adc_sum_sql(
         dsub = len(book[0])
         qsub = q[j * dsub : (j + 1) * dsub]
         table = [sum(qs * cs for qs, cs in zip(qsub, cent)) for cent in book]
-        tbl = "array(" + ",".join(f"{t!r}D" for t in table) + ")"
         terms.append(
-            f"element_at({tbl}, element_at({code_col}, {j + 1}) + 1)"
+            f"element_at({_array_sql(table)}, element_at({code_col}, {j + 1}) + 1)"
         )
     return f"round({' + '.join(terms)}, 4)"
 
@@ -208,8 +198,6 @@ _STORE = FileStore(PQ_PARAMS_FILE, "ivfpq index", ((None, "ivf_cell"),))
 def _ivfpq_params(
     cell_centroids: list[list[float]], codebooks: list[list[list[float]]]
 ) -> dict:
-    from ubw_spark.operators.ivf import centroid_params
-
     return {
         "cells": centroid_params(cell_centroids),
         "codebooks": [centroid_params(book) for book in codebooks],
@@ -235,6 +223,56 @@ def _empty_adc_result(
     ).where(F.lit(False))
 
 
+def _adc_topk(
+    codes: DataFrame,
+    queries: list[tuple],
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    code_col: str,
+    k: int,
+    qid_type: str,
+    cells: list[list[int]] | None = None,
+) -> DataFrame:
+    """The one ADC scorer.  Per query, one struct of (qid, optional
+    probe-cell test, ADC score) with the lookup tables as plan
+    literals; every code row scores ALL queries in one scan (exploded),
+    keeps rows in the query's probe cells (``cells[i]`` for query i,
+    when given) other than the query itself, and
+    :func:`~ubw_spark.operators.similarity.rerank_topk` keeps each
+    query's top k.  Shuffles (qid, id, score) rows, never vectors."""
+    if not queries:
+        return _empty_adc_result(codes, id_col, qid_type)
+    per_query = []
+    for i, (qid, vec) in enumerate(queries):
+        fields = [F.lit(qid).alias("qid")]
+        if cells is not None:
+            fields.append(
+                F.expr(
+                    "array_contains(array("
+                    + ",".join(str(c) for c in cells[i])
+                    + "), ivf_cell)"
+                ).alias("in_probe")
+            )
+        q = [float(x) for x in vec]
+        fields.append(
+            F.expr(_adc_sum_sql(q, codebooks, code_col)).alias("approx_ip")
+        )
+        per_query.append(F.struct(*fields))
+    keep = F.col(id_col) != F.col("__q.qid")
+    if cells is not None:
+        keep = F.col("__q.in_probe") & keep
+    scored = (
+        codes.select(F.col(id_col), F.explode(F.array(*per_query)).alias("__q"))
+        .where(keep)
+        .select(
+            F.col("__q.qid").alias("qid"),
+            id_col,
+            F.col("__q.approx_ip").alias("approx_ip"),
+        )
+    )
+    return rerank_topk(scored, k, id_col, "approx_ip")
+
+
 def pq_adc_topk(
     codes: DataFrame,
     queries: list[tuple],
@@ -252,38 +290,7 @@ def pq_adc_topk(
     (exploded), and a per-qid window keeps the top k.  Returns
     (qid, vec_id, approx_ip) with the same 4-dp round + id tiebreak
     contract as the other ANN paths."""
-    if not queries:
-        return _empty_adc_result(codes, id_col, qid_type)
-    per_query = []
-    for qid, vec in queries:
-        q = [float(x) for x in vec]
-        per_query.append(
-            F.struct(
-                F.lit(qid).alias("qid"),
-                F.expr(_adc_sum_sql(q, codebooks, code_col)).alias(
-                    "approx_ip"
-                ),
-            )
-        )
-    scored = (
-        codes.select(
-            F.col(id_col), F.explode(F.array(*per_query)).alias("__q")
-        )
-        .select(
-            F.col("__q.qid").alias("qid"),
-            id_col,
-            F.col("__q.approx_ip").alias("approx_ip"),
-        )
-        .where(F.col(id_col) != F.col("qid"))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("approx_ip").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _adc_topk(codes, queries, codebooks, id_col, code_col, k, qid_type)
 
 
 def ivf_pq_topk(
@@ -308,49 +315,12 @@ def ivf_pq_topk(
     Probe cells are picked driver-side from the collected queries
     (bounded like every centroid collect); ordering is squared-L2 with
     cid tiebreak — the same argmin contract as cell assignment."""
-    from ubw_spark.operators.ivf import assign_ivf_cells
-
     coded = pq_encode(
         assign_ivf_cells(corpus, cell_centroids, vec_col), codebooks
     ).select(id_col, "ivf_cell", "pq_code")
-    if not queries:
-        return _empty_adc_result(coded, id_col, qid_type)
-
-    per_query = []
-    for qid, vec in queries:
-        q = [float(x) for x in vec]
-        cells = _nearest_cells_py(q, cell_centroids, nprobe)
-        per_query.append(
-            F.struct(
-                F.lit(qid).alias("qid"),
-                F.expr(
-                    "array_contains(array("
-                    + ",".join(str(c) for c in cells)
-                    + "), ivf_cell)"
-                ).alias("in_probe"),
-                F.expr(_adc_sum_sql(q, codebooks, "pq_code")).alias(
-                    "approx_ip"
-                ),
-            )
-        )
-    scored = (
-        coded.select(
-            F.col(id_col), F.explode(F.array(*per_query)).alias("__q")
-        )
-        .where(F.col("__q.in_probe") & (F.col(id_col) != F.col("__q.qid")))
-        .select(
-            F.col("__q.qid").alias("qid"),
-            id_col,
-            F.col("__q.approx_ip").alias("approx_ip"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("approx_ip").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    return _adc_topk(
+        coded, queries, codebooks, id_col, "pq_code", k, qid_type,
+        _probe_cells(queries, cell_centroids, nprobe),
     )
 
 
@@ -367,8 +337,6 @@ def write_ivfpq_index(
     nprobe/k_cells of the data AND each row is the m-byte code, not the
     float vector.  ``repartition("ivf_cell")`` first for O(1) files per
     cell (the ivf.write_ivf_index rationale)."""
-    from ubw_spark.operators.ivf import assign_ivf_cells
-
     coded = pq_encode(
         assign_ivf_cells(corpus, cell_centroids, vec_col), codebooks
     ).select(id_col, "ivf_cell", "pq_code")
@@ -393,50 +361,14 @@ def probe_ivfpq_index(
     cell bound + ADC scoring then run exactly as :func:`ivf_pq_topk`.
     Corpus text/vectors are never read — only m-int codes."""
     root, _ = _STORE.open(path, _ivfpq_params(cell_centroids, codebooks))
-    if not queries:
-        return _empty_adc_result(_STORE.read(spark, root), id_col, qid_type)
-    probes = {
-        qid: _nearest_cells_py([float(x) for x in vec], cell_centroids, nprobe)
-        for qid, vec in queries
-    }
-    all_cells = sorted({c for cells in probes.values() for c in cells})
-    coded = _STORE.read(spark, root).where(
-        F.col("ivf_cell").isin(all_cells)
-    )
-    per_query = []
-    for qid, vec in queries:
-        q = [float(x) for x in vec]
-        per_query.append(
-            F.struct(
-                F.lit(qid).alias("qid"),
-                F.expr(
-                    "array_contains(array("
-                    + ",".join(str(c) for c in probes[qid])
-                    + "), ivf_cell)"
-                ).alias("in_probe"),
-                F.expr(_adc_sum_sql(q, codebooks, "pq_code")).alias(
-                    "approx_ip"
-                ),
-            )
+    coded = _STORE.read(spark, root)
+    cells = _probe_cells(queries, cell_centroids, nprobe)
+    if queries:
+        coded = coded.where(
+            F.col("ivf_cell").isin(sorted({c for cs in cells for c in cs}))
         )
-    scored = (
-        coded.select(
-            F.col(id_col), F.explode(F.array(*per_query)).alias("__q")
-        )
-        .where(F.col("__q.in_probe") & (F.col(id_col) != F.col("__q.qid")))
-        .select(
-            F.col("__q.qid").alias("qid"),
-            id_col,
-            F.col("__q.approx_ip").alias("approx_ip"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("approx_ip").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    return _adc_topk(
+        coded, queries, codebooks, id_col, "pq_code", k, qid_type, cells
     )
 
 

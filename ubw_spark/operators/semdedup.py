@@ -28,8 +28,8 @@ feeding the pair list to operators/components.py.
   (the paper runs k = 50 000 on LAION).  ``max_cell`` caps degenerate
   cells exactly like dedup.cap_buckets caps hot LSH buckets —
   overflow rows are auto-kept, never silently dropped.
-- Cosines are JVM ``zip_with``/``aggregate`` folds (similarity.
-  cosine_col); no Python in the hot path.
+- Cosines are JVM ``zip_with``/``aggregate`` folds (similarity.dot
+  and similarity.norm); no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -39,13 +39,8 @@ from pyspark.sql import functions as F
 
 from ubw_spark.functions.hof import fence
 
-# The literal/vectorized dispatch line has ONE definition, next to the
-# kernel in operators/ivf.py — both families must flip at the same k.
-from ubw_spark.operators.ivf import (
-    _VECTORIZED_ASSIGN_MIN_K as _JOIN_ASSIGN_MIN_K,
-)
-from ubw_spark.operators.ivf import _nearest_cells
-from ubw_spark.operators.similarity import cosine_col
+from ubw_spark.operators.ivf import assign_ivf_cells
+from ubw_spark.operators.similarity import dot, norm
 
 
 def assign_cells(
@@ -54,28 +49,12 @@ def assign_cells(
     vec_col: str,
     centroids: list[list[float]],
 ) -> DataFrame:
-    """(id, vec, cell): nearest-centroid assignment, map-only.
-
-    Small k inlines the centroids as plan literals (zero extra plan
-    nodes); paper-scale k (the SemDeDup regime — 50k cells on LAION)
-    takes ivf.assign_vectorized — one float64 BLAS argmin per Arrow
-    batch, the stage the paper puts on GPUs.  Both paths produce
-    identical assignments: same float64 distances to ~1e-13 against
-    measured ~8e-8 assignment gaps, same lowest-cid tie-break (pinned
-    by test_semdedup_assign_paths_agree)."""
-    if len(centroids) < _JOIN_ASSIGN_MIN_K:
-        return df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
-        )
-    from ubw_spark.operators.ivf import assign_vectorized
-
-    return assign_vectorized(
-        df.select(F.col(id_col), F.col(vec_col)),
-        centroids,
-        vec_col,
-        "cell",
+    """(id, vec, cell): nearest-centroid assignment, map-only —
+    :func:`~ubw_spark.operators.ivf.assign_ivf_cells`, whose k dispatch
+    sends paper-scale k (the SemDeDup regime — 50k cells on LAION) to
+    the Arrow argmin kernel, the stage the paper puts on GPUs."""
+    return assign_ivf_cells(
+        df.select(F.col(id_col), F.col(vec_col)), centroids, vec_col, "cell"
     )
 
 
@@ -135,8 +114,8 @@ def _pairs_from_cells(
     so each of the Σ n_c² pairs evaluates one dot-product fold instead
     of cosine_col's three — the pair side is the quadratic term and
     higher-order-function folds are the expensive part of a pair.  The
-    per-pair float math is unchanged: dot / (norm_a * norm_b), the
-    exact cosine_col operation order."""
+    per-pair float math is cosine_col's: dot / (norm_a * norm_b), in
+    the same operation order."""
     if max_cell is not None:
         w = Window.partitionBy("cell").orderBy(id_col)
         cells = (
@@ -144,14 +123,7 @@ def _pairs_from_cells(
             .where(F.col("__rn") <= max_cell)
             .drop("__rn")
         )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.col(vec_col),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-    keyed = cells.withColumn("__nrm", nrm)
+    keyed = cells.withColumn("__nrm", norm(F.col(vec_col)))
     if pair_salt < 1:
         # pmod(x, 0) is NULL in non-ANSI mode: the join predicate would
         # silently match nothing and the report would keep every
@@ -189,15 +161,6 @@ def _pairs_from_cells(
             F.sequence(F.lit(0), F.lit(pair_salt - 1)).cast("array<long>")
         ).alias("__salt_b"),
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("__va"),
-            F.col("__vb"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     scored = a.join(
         b,
         (F.col("cell") == F.col("__cb"))
@@ -211,7 +174,10 @@ def _pairs_from_cells(
         # into this projection with __cos substituted — re-running the
         # dot fold per pair in the Filter AND again here (2× the
         # quadratic kernel; caught by hof_filter_violations)
-        fence(dot / (F.col("__na") * F.col("__nb"))).alias("__cos"),
+        fence(
+            dot(F.col("__va"), F.col("__vb"))
+            / (F.col("__na") * F.col("__nb"))
+        ).alias("__cos"),
     )
     return scored.where(F.col("__cos") >= threshold).select(
         "id_a", "id_b", "cell", F.round("__cos", 4).alias("cos_sim")

@@ -11,6 +11,12 @@
   At 100 TB: bucketing is map-only; the join shuffles on compact
   (table, bucket) keys; per-bucket fanout is the tunable knob
   (more bits → smaller buckets → lower recall, higher precision).
+
+Every ANN path (LSH here, IVF in ivf.py, PQ/IVF-PQ in pq.py) differs
+only in how it generates candidates; the vector math (:func:`dot`,
+:func:`norm`, :func:`cosine_col`), the shape guard
+(:func:`require_dim`), the constant rendering (:func:`_array_sql`) and
+the verification step (:func:`rerank_topk`) live here once.
 """
 
 from __future__ import annotations
@@ -22,23 +28,113 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ubw_spark.functions.hof import fence
 
-def cosine_col(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float-array columns (float64 math)."""
-    dot = F.aggregate(
+
+def dot(a: Column, b: Column) -> Column:
+    """Inner product of two float-array columns: element products in
+    float64, summed left to right."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
 
-    def norm(v: Column) -> Column:
-        return F.sqrt(
-            F.aggregate(
-                v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            )
-        )
 
-    return dot / (norm(a) * norm(b))
+def norm(v: Column) -> Column:
+    """L2 norm of a float-array column (float64, left-to-right fold)."""
+    return F.sqrt(
+        F.aggregate(
+            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+        )
+    )
+
+
+def cosine_col(a: Column, b: Column) -> Column:
+    """Cosine similarity of two float-array columns (float64 math)."""
+    return dot(a, b) / (norm(a) * norm(b))
+
+
+def _array_sql(values) -> str:
+    """A (nested) float matrix as one SQL array literal of DOUBLEs —
+    the form every ANN kernel ships its constants in (hyperplanes,
+    centroids, codebooks, ADC tables).  One ``F.expr`` parse instead of
+    one py4j ``F.lit`` round trip per float; ``repr`` keeps every bit."""
+    if isinstance(values, (int, float)):
+        return f"{float(values)!r}D"
+    return "array(" + ",".join(_array_sql(v) for v in values) + ")"
+
+
+def require_dim(df: DataFrame, vec_col: str, dim: int, who: str) -> DataFrame:
+    """Replace ``vec_col`` with itself, raising at execution on a NULL
+    or non-``dim`` vector.  Every kernel entry applies it: unguarded,
+    zip_with pads the short side with nulls and the folds go NULL, so a
+    corrupt vector silently lands in bucket 0, cell 0 or code 0."""
+    v = F.col(vec_col)
+    return df.withColumn(
+        vec_col,
+        F.when(
+            v.isNull() | (F.size(v) != dim),
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        f"{who}: NULL or non-{dim}-dim "
+                        f"value in '{vec_col}' — filter corrupt "
+                        "embeddings upstream (module contract: vector "
+                        "columns are non-null, fixed-dim); got size="
+                    ),
+                    F.coalesce(F.size(v).cast("string"), F.lit("NULL")),
+                )
+            ).cast(df.schema[vec_col].dataType),
+        ).otherwise(v),
+    )
+
+
+def rerank_topk(
+    cands: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    score_col: str = "cos_sim",
+    score: Column | None = None,
+) -> DataFrame:
+    """The one verification step every ANN path ends in: keep each
+    ``qid``'s ``k`` best rows by (score desc, id asc).  Scores are
+    rounded to 4 dp so rankings are stable across engines and fold
+    orders; ``score`` given, it is rounded here and projected as
+    (qid, id_col, score_col), otherwise ``cands`` already carries the
+    rounded ``score_col`` (the ADC lookup rounds inside its SQL)."""
+    if score is not None:
+        cands = cands.select("qid", id_col, F.round(score, 4).alias(score_col))
+    w = Window.partitionBy("qid").orderBy(F.col(score_col).desc(), F.col(id_col))
+    return (
+        cands.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .drop("__rn")
+    )
+
+
+def probe_topk(
+    indexed: DataFrame,
+    probes: DataFrame,
+    keys,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """Exact-cosine top-k over the candidates a probe frame admits:
+    corpus rows sharing a ``keys`` value (LSH bucket, IVF cell) with a
+    (qid, __qv, keys) probe row, self-matches and duplicate (qid, id)
+    pairs dropped, then :func:`rerank_topk`."""
+    cands = (
+        indexed.join(broadcast(probes), keys)
+        .where(F.col(id_col) != F.col("qid"))
+        .select("qid", "__qv", id_col, vec_col)
+        # dedup on the id pair only, not the vectors (smaller shuffle key)
+        .dropDuplicates(["qid", id_col])
+    )
+    return rerank_topk(
+        cands, k, id_col, score=cosine_col(F.col("__qv"), F.col(vec_col))
+    )
 
 
 def brute_force_topk(
@@ -52,16 +148,11 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
     )
-    scored = corpus.join(broadcast(q), F.col(id_col) != F.col("qid")).select(
-        "qid",
+    return rerank_topk(
+        corpus.join(broadcast(q), F.col(id_col) != F.col("qid")),
+        k,
         id_col,
-        F.round(cosine_col(F.col("__qv"), F.col(vec_col)), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+        score=cosine_col(F.col("__qv"), F.col(vec_col)),
     )
 
 
@@ -86,8 +177,8 @@ def hyperplane_lsh_buckets(
     so executors need no broadcast variable and the plan is fully
     deterministic.
 
-    NULL or wrong-``dim`` vectors raise at execution (``raise_error``,
-    same contract message as ivf.assign_vectorized): before this guard
+    NULL or wrong-``dim`` vectors raise at execution
+    (:func:`require_dim`, the guard every kernel entry shares): before it
     zip_with padded the short side with nulls, the dot fold went NULL,
     every sign bit fell to 0, and ALL corrupt rows piled into bucket 0
     of every table — a silent |corpus|×|queries| candidate blowup (or,
@@ -133,25 +224,7 @@ def hyperplane_bucket_array(
             f"hyperplane_bucket_array: bits={bits} > 31 — the bucket id "
             "is a 32-bit int accumulator"
         )
-    df = df.withColumn(
-        vec_col,
-        F.when(
-            F.col(vec_col).isNull() | (F.size(F.col(vec_col)) != dim),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"hyperplane_lsh_buckets: NULL or non-{dim}-dim "
-                        f"value in '{vec_col}' — filter corrupt "
-                        "embeddings upstream (module contract: vector "
-                        "columns are non-null, fixed-dim); got size="
-                    ),
-                    F.coalesce(
-                        F.size(F.col(vec_col)).cast("string"), F.lit("NULL")
-                    ),
-                )
-            ).cast(df.schema[vec_col].dataType),
-        ).otherwise(F.col(vec_col)),
-    )
+    df = require_dim(df, vec_col, dim, "hyperplane_lsh_buckets")
     planes = _hyperplanes(dim, bits, tables, seed)
     # ONE kernel expression over ONE flat plane constant (round 14):
     # the round-13 form emitted `tables` separate F.expr strings, each
@@ -164,13 +237,7 @@ def hyperplane_bucket_array(
     # zip_with element products, same left-to-right aggregate fold,
     # same bit weights summed in the same j order — parity asserted on
     # real testdata in tests/test_similarity.py).
-    planes_sql = "array(" + ",".join(
-        "array(" + ",".join(
-            "array(" + ",".join(f"{float(c)!r}D" for c in planes[t, j]) + ")"
-            for j in range(bits)
-        ) + ")"
-        for t in range(tables)
-    ) + ")"
+    planes_sql = _array_sql(planes)
     kernel = (
         f"transform(sequence(0, {tables - 1}), t -> named_struct("
         "'t', t, 'b', "
@@ -186,8 +253,6 @@ def hyperplane_bucket_array(
     # 16-table bucket kernel per row inside a Filter (the exact hazard
     # plans/inspect.py::hof_filter_violations lints for — it caught
     # this shape when the array stage was first split out).
-    from ubw_spark.functions.hof import fence
-
     return df.withColumn(out_col, fence(F.expr(kernel)))
 
 
@@ -211,24 +276,7 @@ def lsh_ann_topk(
         "lsh_table",
         "lsh_bucket",
     )
-    cands = (
-        cb.join(broadcast(qb), ["lsh_table", "lsh_bucket"])
-        .where(F.col(id_col) != F.col("qid"))
-        .select("qid", "__qv", id_col, vec_col)
-        # dedup on the id pair only, not the vectors (smaller shuffle key)
-        .dropDuplicates(["qid", id_col])
-    )
-    scored = cands.select(
-        "qid",
-        id_col,
-        F.round(cosine_col(F.col("__qv"), F.col(vec_col)), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return probe_topk(cb, qb, ["lsh_table", "lsh_bucket"], id_col, vec_col, k)
 
 
 def embedding_near_dup_pairs(
@@ -264,52 +312,42 @@ def embedding_near_dup_pairs(
         b = corpus.select(
             F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")
         )
-        # fence: project the cosine ONCE, then filter on the attribute —
-        # an unfenced where(cos >= t) is pushed back into the join and
-        # re-runs the fold per pair (hof_filter_violations)
-        from ubw_spark.functions.hof import fence
+        cands = a.join(b, F.col("id_a") < F.col("id_b"))
+    elif method == "lsh":
+        from ubw_spark.operators.dedup import cap_buckets
 
-        scored = a.join(b, F.col("id_a") < F.col("id_b")).select(
-            "id_a",
-            "id_b",
-            fence(cosine_col(F.col("__va"), F.col("__vb"))).alias("__cos"),
+        bucketed = hyperplane_lsh_buckets(
+            corpus.select(id_col, vec_col), vec_col, dim, bits, tables, seed
         )
-        return scored.where(F.col("__cos") >= threshold).select(
-            "id_a", "id_b", F.round("__cos", 3).alias("cos_sim")
+        if max_bucket is not None:
+            bucketed = cap_buckets(
+                bucketed, ["lsh_table", "lsh_bucket"], max_bucket
+            )
+        a = bucketed.select(
+            F.col(id_col).alias("id_a"),
+            F.col(vec_col).alias("__va"),
+            "lsh_table",
+            "lsh_bucket",
         )
-    if method != "lsh":
+        b = bucketed.select(
+            F.col(id_col).alias("id_b"),
+            F.col(vec_col).alias("__vb"),
+            "lsh_table",
+            "lsh_bucket",
+        )
+        cands = (
+            a.join(b, ["lsh_table", "lsh_bucket"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", "__va", "__vb")
+            # dedup on the id pair only — a full .distinct() would hash
+            # the vectors into the shuffle key and move them as key bytes
+            .dropDuplicates(["id_a", "id_b"])
+        )
+    else:
         raise ValueError(f"unknown method '{method}' (brute|lsh)")
-    from ubw_spark.operators.dedup import cap_buckets
-
-    bucketed = hyperplane_lsh_buckets(
-        corpus.select(id_col, vec_col), vec_col, dim, bits, tables, seed
-    )
-    if max_bucket is not None:
-        bucketed = cap_buckets(bucketed, ["lsh_table", "lsh_bucket"], max_bucket)
-    a = bucketed.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        "lsh_table",
-        "lsh_bucket",
-    )
-    b = bucketed.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        "lsh_table",
-        "lsh_bucket",
-    )
-    cands = (
-        a.join(b, ["lsh_table", "lsh_bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__va", "__vb")
-        # dedup on the id pair only — a full .distinct() would hash the
-        # vectors into the shuffle key and move them as key bytes
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # fence: same compute-once-then-filter shape as the brute branch —
-    # the verification fold is the per-candidate kernel
-    from ubw_spark.functions.hof import fence
-
+    # fence: project the cosine ONCE, then filter on the attribute — an
+    # unfenced where(cos >= t) is pushed back into the join and re-runs
+    # the fold per pair (hof_filter_violations)
     scored = cands.select(
         "id_a",
         "id_b",

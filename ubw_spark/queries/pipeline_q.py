@@ -83,8 +83,6 @@ def engine_observe_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     observation mechanism deliberately lacks), so the metric vocabulary
     here is count/sum/min/max — the reference's afterResult summaries
     are the same algebraic class."""
-    from ubw_spark.pipeline import Pipeline
-
     p = Pipeline()
     p.append(
         lambda df: df.where(F.col("l_quantity") > 45),

@@ -289,7 +289,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     input lists."""
     from pyspark.sql import Window
 
-    from ubw_spark.queries.similarity import cosine
+    from ubw_spark.operators.similarity import cosine_col
 
     d = table(spark, sf_dir, "documents")
     e = table(spark, sf_dir, "embeddings")
@@ -308,7 +308,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(cosine(F.col("__qe"), F.col("embedding")), 4)
+            F.round(cosine_col(F.col("__qe"), F.col("embedding")), 4)
             .alias("__cs"),
         )
         .orderBy(F.desc("__cs"), "vec_id")

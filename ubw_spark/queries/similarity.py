@@ -18,30 +18,20 @@ md5-seeded (operators/ivf.py::seed_ivf_centroids) instead of KMeans.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ubw_spark.operators.dedup import widen
 from ubw_spark.operators.ivf import seed_ivf_centroids, seed_rows
-from ubw_spark.operators.similarity import lsh_ann_topk
+from ubw_spark.operators.similarity import (
+    cosine_col,
+    lsh_ann_topk,
+    norm,
+    rerank_topk,
+)
 from ubw_spark.queries.registry import register, table
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays, computed in float64."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda v: F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    return dot / (norm(a) * norm(b))
 
 
 @register(
@@ -69,19 +59,10 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    scored = (
-        emb.join(broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine(F.col("qe"), F.col("embedding")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("qid", "vec_id", "cos_sim")
+    return rerank_topk(
+        emb.join(broadcast(q), F.col("vec_id") != F.col("qid")),
+        5,
+        score=cosine_col(F.col("qe"), F.col("embedding")),
     )
 
 
@@ -112,7 +93,7 @@ def sim_pairs_above_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into the BNLJ condition AND the projection would re-run it — 2×
     # the pair kernel (caught by hof_filter_violations' join scope)
     scored = a.join(broadcast(b), F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b", fence(cosine(F.col("ea"), F.col("eb"))).alias("__c")
+        "id_a", "id_b", fence(cosine_col(F.col("ea"), F.col("eb"))).alias("__c")
     )
     return scored.where(F.col("__c") >= 0.25).select(
         "id_a", "id_b", F.round("__c", 4).alias("cos_sim")
@@ -133,15 +114,8 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label L2-norm statistics — array reduce inside the row, then
     an ordinary partial-aggregated groupBy."""
     emb = table(spark, sf_dir, "embeddings")
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
     return (
-        emb.select("label", norm.alias("norm"))
+        emb.select("label", norm(F.col("embedding")).alias("norm"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -519,9 +493,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py for KMeans centroids)."""
     from functools import reduce as _reduce
 
-    from pyspark.sql import Window as _W
     from pyspark.sql import types as T
-    from pyspark.sql.functions import broadcast
 
     from ubw_spark.functions.literals import literal_frame
     from ubw_spark.operators.ivf import assign_ivf_cells, nearest_cells_py
@@ -532,7 +504,6 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ubw_spark.operators.similarity import (
         brute_force_topk,
-        cosine_col,
         hyperplane_bucket_array,
     )
 
@@ -571,9 +542,6 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("__qv")
     )
     vectors = enriched.select("vec_id", "embedding")
-    rerank_w = _W.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
 
     queries_list = [
         (r["vec_id"], r["embedding"])
@@ -766,7 +734,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ],
     )
-    w_all = _W.partitionBy("variant", "param", "qid").orderBy(
+    w_all = Window.partitionBy("variant", "param", "qid").orderBy(
         F.col("score").desc(), F.col("vec_id")
     )
     top_all = (
@@ -884,11 +852,7 @@ def sim_quantized_prerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor rounding, operators/quantize.py), so even this approximate
     path value-checks in DuckDB; the 4-decimal cosine rounding carries
     the same accepted fragility as the IVF oracle above."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
     from ubw_spark.operators.quantize import dequantize_int8, quantize_int8
-    from ubw_spark.operators.similarity import cosine_col
 
     # quantize/dequantize/cosine are per-row JVM array math and the
     # embeddings table ships as ONE parquet split — spread the compute
@@ -900,18 +864,11 @@ def sim_quantized_prerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = dq.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("dequant").alias("qv")
     )
-    scored = corpus.join(
-        broadcast(qs), F.col("vec_id") != F.col("qid")
-    ).select(
-        "qid",
-        "vec_id",
-        F.round(cosine_col(F.col("qv"), F.col("cv")), 4).alias("qcos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= 5)
-        .drop("__rn")
+    return rerank_topk(
+        corpus.join(broadcast(qs), F.col("vec_id") != F.col("qid")),
+        5,
+        score_col="qcos",
+        score=cosine_col(F.col("qv"), F.col("cv")),
     )
 
 
@@ -951,8 +908,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     within scale/2 of the float centroid per dimension (test-asserted).
     At 100 TB this is the class-prototype / embedding-drift monitor:
     one posexplode + one (label, dim)-keyed shuffle of small integers."""
-    from pyspark.sql.functions import broadcast
-
     emb = table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     e = emb.select("label", v.alias("v"))
