@@ -465,6 +465,48 @@ def test_json_update_refuses_operands_that_do_not_fit(spark, friend_df, col, ops
     assert problem.startswith(f"update.filters.{col}:")
 
 
+_FRIEND_IDS = {"from": "friend", "columns": [{"name": "id", "expr": "id"}]}
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [{"orders": [5]}, {"orders": [["id", "asc"]]}, {"filters": ["a"]},
+     {"filters": {"id": 3}}],
+)
+def test_json_malformed_request_entry_is_ignored(spark, tables, extra):
+    """A JSON read ignores a malformed orders/filters entry exactly, as
+    it ignores an unknown column: the same rows as without it."""
+    want = compile_json_query(spark, _FRIEND_IDS, tables).collect()
+    assert compile_json_query(spark, {**_FRIEND_IDS, **extra}, tables).collect() == want
+
+
+@pytest.mark.parametrize(
+    "q, block",
+    [
+        ({"from": "friend", "columns": "a"}, "'columns'"),
+        ({"from": "friend", "columns": ["a"]}, "'columns'"),
+        ({**_FRIEND_IDS, "windows": [{"name": "rk", "fn": "rank",
+          "partition_by": ["id"], "order_by": [5]}]}, "windows[0]"),
+        ({**_FRIEND_IDS, "take": -1}, "take"),
+        ({"setop": {"op": "union", "queries": ["a", "b"]}}, "setop.queries[0]"),
+    ],
+)
+def test_json_block_shape_is_a_spec_error(spark, tables, q, block):
+    with pytest.raises(SpecValidationError) as ei:
+        compile_json_query(spark, q, tables)
+    assert ei.value.problems[0].startswith(block), ei.value.problems
+
+
+def test_json_update_assign_must_be_an_object(spark, tables):
+    from ubw_spark.core.jsonquery import compile_json_write
+
+    with pytest.raises(SpecValidationError) as ei:
+        compile_json_write(
+            spark, {"verb": "update", "target": "friend", "assign": ["a"]}, tables
+        )
+    assert ei.value.problems == ["update.assign: must be an object, got ['a']"]
+
+
 # --- property-based fuzz: hostile/garbage specs never escape ------------
 
 from hypothesis import HealthCheck, given, settings
@@ -679,14 +721,14 @@ _setop_spec = st.fixed_dictionaries(
                     "queries": st.lists(_setop_branch, max_size=3),
                 },
             ),
+            # a valid setop, so the request keys below reach the params layer
+            st.just({"op": "union", "queries": [_FRIEND_IDS, _FRIEND_IDS]}),
         )
     },
     optional={
-        "orders": _junk,
-        "take": _junk,
-        "drop": _junk,
-        "page_index": _junk,
-        "page_size": _junk,
+        k: _junk
+        for k in ("orders", "filters", "drop", "take", "page_index", "page_size",
+                  "after_key")
     },
 )
 
@@ -699,16 +741,18 @@ _setop_spec = st.fixed_dictionaries(
 @given(spec=_setop_spec)
 def test_json_setop_fuzz_never_escapes(spark, tables, spec):
     """Property pair of test_json_write_fuzz_never_escapes for the setop
-    surface: any garbage setop spec either raises SpecValidationError
-    (accumulated, data-only validation) or compiles to a plain
-    DataFrame — never an injection-shaped error from deeper layers."""
+    surface and the request keys: any garbage spec either raises
+    SpecValidationError (accumulated, data-only validation), or one of
+    the keyset cursor's documented ValueErrors, or compiles to a frame
+    that collects — never an error from deeper layers."""
     try:
         df = compile_json_query(spark, spec, tables)
     except SpecValidationError:
         return
-    except (TypeError, ValueError):
-        return  # bad literal types surfaced as plain Python errors
-    assert df.columns
+    except ValueError as e:  # only the keyset cursor's documented errors
+        assert "after_key" in str(e), e
+        return
+    assert df.columns == ["id"] and len(df.collect()) <= 4
 
 
 def test_json_validate_verb(spark, tables):

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ubw_spark import ColumnSpec, QueryParams, QuerySpec, apply_params
 from ubw_spark.core import spec as spec_mod
+from ubw_spark.core.errors import SpecValidationError
 from ubw_spark.params import validate_params
 
 SPEC = QuerySpec(
@@ -39,25 +40,162 @@ filters_strategy = st.dictionaries(
 )
 
 
+#: Arbitrary JSON values: None, bools, ints (negative, 0, 2**64), NaN,
+#: one-letter strings, and lists and objects nesting them.
+_json = st.recursive(
+    st.one_of(
+        st.none(), st.booleans(), st.integers(-3, 3), st.just(2**64),
+        st.just(float("nan")), st.text(max_size=1), col_names,
+    ),
+    lambda kids: st.one_of(
+        st.lists(kids, max_size=3), st.dictionaries(st.text(max_size=1), kids, max_size=2)
+    ),
+    max_leaves=6,
+)
+_page_field = st.one_of(st.none(), st.none(), st.integers(-1, 5), _json)
+_shape = st.fixed_dictionaries(
+    {},
+    optional={
+        "orders": st.one_of(orders_strategy, _json, st.lists(
+            st.one_of(col_names, st.tuples(col_names, _json), _json), max_size=3
+        )),
+        "filters": st.one_of(filters_strategy, _json, st.dictionaries(
+            col_names,
+            st.one_of(_json, st.dictionaries(ops, st.one_of(operands, _json), max_size=2)),
+            max_size=2,
+        )),
+        "select": st.one_of(col_names, st.lists(col_names, max_size=3), _json,
+                            st.lists(st.one_of(col_names, _json), max_size=3)),
+    },
+)
+_paging = st.fixed_dictionaries(
+    {},
+    optional={
+        "drop": _page_field,
+        "take": _page_field,
+        "page_index": _page_field,
+        "page_size": _page_field,
+        "after_key": st.one_of(
+            st.none(), st.none(), st.none(), _json,
+            st.dictionaries(col_names, _json, max_size=2),
+        ),
+    },
+)
+# half the requests carry no paging or cursor key, so they reach the
+# orders/filters/select rules instead of a paging fault
+_request = st.builds(
+    lambda shape, paging, paged: {**shape, **paging} if paged else shape,
+    _shape, _paging, st.booleans(),
+)
+_PAGING = ("drop", "take", "page_index", "page_size", "after_key")
+#: The keyset ValueErrors, the one loud contract outside SpecValidationError.
+_KEYSET = ("mutually exclusive", "exactly the effective sort", "requires orders",
+           "not coercible")
+
+
+def _without_malformed(req: dict) -> tuple[dict, int]:
+    """The documented contract restated: ``req`` without its malformed
+    orders, filters and select entries, and how many it had."""
+    clean, dropped = dict(req), 0
+
+    def keep(key, ok):
+        nonlocal dropped
+        v = req.get(key)
+        if v is None:
+            return
+        v = [v] if isinstance(v, str) else v
+        if not isinstance(v, (list, tuple)):
+            clean[key], dropped = [], dropped + 1
+            return
+        clean[key] = [e for e in v if ok(e)]
+        dropped += len(v) - len(clean[key])
+
+    keep("orders", lambda o: isinstance(o, str) or (
+        isinstance(o, (list, tuple)) and len(o) == 2 and isinstance(o[0], str)
+        and (o[1] is None or (type(o[1]) in (bool, int) and o[1] in (0, 1)))
+    ))
+    keep("select", lambda n: isinstance(n, str))
+    f = req.get("filters")
+    if f is not None:
+        clean["filters"] = {k: v for k, v in f.items() if isinstance(v, dict)} \
+            if isinstance(f, dict) else {}
+        dropped += len(f) - len(clean["filters"]) if isinstance(f, dict) else 1
+    return clean, dropped
+
+
+def _outcome(run, req: dict):
+    """``run(req)``'s rows, or None when it raised one of the two loud
+    contracts: a SpecValidationError naming only paging keys (``drop/take``
+    names both), or a documented keyset ValueError."""
+    try:
+        return run(req)
+    except SpecValidationError as e:
+        named = [k for p in e.problems for k in p.split(":")[0].split("/")]
+        assert set(named) <= set(_PAGING), e.problems
+    except ValueError as e:
+        assert any(m in str(e) for m in _KEYSET), e
+    return None
+
+
 @settings(
-    max_examples=25,
+    max_examples=20,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(orders=orders_strategy, filters=filters_strategy)
-def test_random_params_never_crash(spark, friend_df, orders, filters):
-    """RAW junk straight from a hypothetical JSON layer: wrong types,
-    unknown ops/columns, lists where scalars belong.  The engine must
-    silently drop what doesn't apply — never raise (the reference's
-    out-of-range-filter contract, doc-01.md:148-152)."""
-    p = QueryParams(orders=orders, filters=filters)
-    df = apply_params(friend_df, SPEC, p)  # projection memo warm
-    rows = df.collect()
-    assert len(rows) <= 4
-    assert df.columns == ["id", "name", "nick", "ageOpt"]
-    # ... and cold: the memo hands back the plan a fresh projection builds
-    spec_mod._FRAME_MEMO.clear()
-    assert apply_params(friend_df, SPEC, p).collect() == rows
+@given(req=_request)
+def test_random_params_never_crash(spark, friend_df, req):
+    """RAW junk from a JSON layer in every request key, through the
+    Python constructor, a JSON read and the update verb's filters.  A
+    malformed orders/filters/select entry is left out exactly and
+    reported; a malformed page or cursor raises SpecValidationError
+    naming the key (or a keyset ValueError).  Nothing else escapes and
+    no Spark job fails."""
+    from ubw_spark.core.jsonquery import compile_json_query, compile_json_write
+
+    clean, dropped = _without_malformed(req)
+    tables = {"friend": friend_df}.__getitem__
+    # Row equality ignores names: the schema is checked on its own, the
+    # visible columns in declaration order, cut to a non-empty select
+    sel = clean.get("select")
+    want_cols = [c for c in ("id", "name", "nick", "ageOpt") if not sel or c in sel]
+
+    def py(r):
+        p = QueryParams(**r)
+        for k in ("drop", "take", "page_index", "page_size"):
+            assert getattr(p, k) is None or type(getattr(p, k)) is int
+        df = apply_params(friend_df, SPEC, p)
+        assert df.columns == want_cols
+        return p, df.collect()
+
+    got = _outcome(py, req)
+    if got is not None:
+        p, rows = got
+        assert len(rows) <= 4 and len(p.problems) == dropped
+        want, want_rows = py(clean) if dropped else (p, rows)
+        assert rows == want_rows
+        assert validate_params(SPEC, p) == list(p.problems) + validate_params(SPEC, want)
+        # ... and cold: the memo hands back the plan a fresh projection builds
+        spec_mod._FRAME_MEMO.clear()
+        assert apply_params(friend_df, SPEC, p).collect() == rows
+
+    def js(r):
+        q = {"from": "friend", **{k: v for k, v in r.items() if k != "select"}}
+        df = compile_json_query(spark, q, tables)
+        assert df.columns == friend_df.columns  # no "columns" block: whole scope
+        return df.collect()
+
+    rows = _outcome(js, req)
+    assert rows is None or not dropped or rows == js(clean)
+
+    try:
+        _, out = compile_json_write(spark, {
+            "verb": "update", "target": "friend", "filters": req.get("filters"),
+            "assign": {"age": {"lit": 0}},
+        }, tables)
+    except SpecValidationError as e:
+        assert all(p.startswith("update.filters") for p in e.problems), e.problems
+    else:
+        assert out.count() == 4
 
 
 @settings(
@@ -531,10 +669,114 @@ def test_every_ignored_key_is_reported_and_exactly_ignored(spark, friend_df):
         assert apply_params(friend_df, _U2_SPEC, p).collect() == clean, prefix
 
 
+def test_bare_string_is_one_name(spark, friend_df):
+    """``orders="id"`` orders by id (not by the keys 'i', 'd') and
+    ``select="nick"`` keeps nick, as PySpark's orderBy/select read a
+    bare string."""
+    p = QueryParams(orders="id", select="nick")
+    assert p.orders == (("id", None),) and p.select == ("nick",) and not p.problems
+    rows = apply_params(friend_df, SPEC, p).collect()
+    assert [tuple(r) for r in rows] == [("shihu",), ("kerr",), ("jilen 酱",), ("小莎莎",)]
+
+
+@pytest.mark.parametrize(
+    "kw, prefix",
+    [
+        ({"orders": [5]}, "orders[0]:"),
+        ({"orders": [["id", "asc"]]}, "orders[0]:"),  # not bool("asc") = desc
+        ({"orders": [["id", True, 1]]}, "orders[0]:"),
+        ({"orders": [["id", 2]]}, "orders[0]:"),  # 0/1 only, not bool(2)
+        ({"orders": 5}, "orders:"),
+        ({"filters": ["a"]}, "filters:"),
+        ({"select": [5, "id"]}, "select[0]:"),
+    ],
+)
+def test_malformed_entry_is_dropped_and_reported(spark, friend_df, kw, prefix):
+    """A malformed orders/filters/select entry is left out exactly and
+    reported by validate_params, never a bare TypeError/ValueError."""
+    p = QueryParams(**kw)
+    (problem,) = validate_params(SPEC, p)
+    assert problem.startswith(prefix), problem
+    clean = {k: [e for e in v if isinstance(e, str)] if k == "select" else None
+             for k, v in kw.items()}
+    assert apply_params(friend_df, SPEC, p).collect() == apply_params(
+        friend_df, SPEC, QueryParams(**clean)
+    ).collect()
+
+
+def test_zero_one_direction_reads_as_a_boolean(spark, friend_df):
+    """JSON's 0/1 encoding of ``is_desc`` sorts as False/True."""
+    assert QueryParams(orders=[["id", 1], ("nick", 0)]).orders == (
+        ("id", True), ("nick", False))
+    rows = apply_params(friend_df, SPEC, QueryParams(orders=[["id", 1]])).collect()
+    assert [r["id"] for r in rows] == [4, 3, 2, 1]
+
+
+@pytest.mark.parametrize(
+    "kw, key",
+    [
+        ({"page_size": 10}, "page_size"),  # alone: used to serve everything
+        ({"page_index": 2}, "page_index"),
+        ({"page_index": 0, "page_size": 2}, "page_index"),
+        ({"page_index": 1, "page_size": 2, "take": 3}, "page_index"),
+        ({"take": "5"}, "take"),  # used to fail as a Py4JError in limit
+        ({"take": True}, "take"),
+        ({"drop": -3}, "drop"),  # used to fail as an AnalysisException
+        ({"drop": 2**31 - 1, "take": 1}, "drop/take"),
+        ({"take": 2**31}, "take"),  # names the key given, not drop
+        ({"page_index": 2**30, "page_size": 2}, "page_index/page_size"),
+        ({"after_key": "x"}, "after_key"),
+    ],
+)
+def test_malformed_page_or_cursor_raises_naming_the_key(kw, key):
+    with pytest.raises(SpecValidationError) as ei:
+        QueryParams(**kw)
+    assert ei.value.problems[0].startswith(f"{key}:"), ei.value.problems
+
+
+@pytest.mark.parametrize("pattern", ["a\\", "\\x"])
+def test_like_pattern_spark_refuses_is_an_ignored_operand(spark, friend_df, pattern):
+    """A LIKE pattern with a dangling or stray escape is an operand that
+    does not fit (the filter is ignored), not an AnalysisException."""
+    p = QueryParams(filters={"nick": {"like": pattern}})
+    assert apply_params(friend_df, SPEC, p).collect() == apply_params(
+        friend_df, SPEC, QueryParams()
+    ).collect()
+
+
+def _parses_request_shape(node) -> bool:
+    """An order-entry unpack (``(o, False) if isinstance(o, str) else
+    ...``: a tuple built on an isinstance test) or a QueryParams built
+    field by field from a dict (two or more ``d.get(k)``/``d[k]``
+    keyword values)."""
+    import ast
+
+    if isinstance(node, ast.IfExp):
+        test = node.test
+        return (
+            isinstance(test, ast.Call)
+            and getattr(test.func, "id", None) == "isinstance"
+            and any(
+                isinstance(b, ast.Tuple)
+                or (isinstance(b, ast.Call) and getattr(b.func, "id", None) == "tuple")
+                for b in (node.body, node.orelse)
+            )
+        )
+    if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "QueryParams":
+        reads = [
+            k for k in node.keywords
+            if isinstance(k.value, ast.Subscript)
+            or (isinstance(k.value, ast.Call) and getattr(k.value.func, "attr", None) == "get")
+        ]
+        return len(reads) >= 2
+    return False
+
+
 def test_one_filter_compiler():
     """No module under ubw_spark/ or examples/ but params.py reads the
-    filter-op whitelist or defines an operand coercion, and params.py
-    has one coercion: a second filter compiler cannot grow back."""
+    filter-op whitelist, defines an operand coercion or parses a
+    request's shape, and params.py has one coercion: a second filter
+    compiler or request parser cannot grow back."""
     import ast
     from pathlib import Path
 
@@ -551,11 +793,30 @@ def test_one_filter_compiler():
                         coercions.append(node.name)
                     else:
                         offenders.append(f"{f.relative_to(repo)}:{node.lineno}")
-                elif f != params_py and "_FILTER_OPS" in (
-                    getattr(node, "id", None),
-                    getattr(node, "attr", None),
-                    getattr(node, "name", None),
+                elif f != params_py and (
+                    _parses_request_shape(node)
+                    or "_FILTER_OPS" in (
+                        getattr(node, "id", None),
+                        getattr(node, "attr", None),
+                        getattr(node, "name", None),
+                    )
                 ):
                     offenders.append(f"{f.relative_to(repo)}:{node.lineno}")
     assert not offenders, offenders
     assert coercions == ["_coerce"], coercions
+
+
+def test_request_shape_guard_sees_the_old_copies():
+    """The guard's two request-shape patterns, on the copies it deleted
+    from core/jsonquery.py; a one-key QueryParams and a bare-name test
+    that builds no tuple pass."""
+    import ast
+
+    def flagged(src):
+        return any(_parses_request_shape(n) for n in ast.walk(ast.parse(src)))
+
+    assert flagged("name, d = (o, False) if isinstance(o, str) else (o[0], bool(o[1]))")
+    assert flagged("x = [tuple(o) if isinstance(o, list) else o for o in v]")
+    assert flagged("QueryParams(drop=spec.get('drop'), take=spec['take'])")
+    assert not flagged("QueryParams(filters=spec.get('filters'))")
+    assert not flagged("c = F.col(c) if isinstance(c, str) else c")

@@ -645,10 +645,10 @@ def test_salted_join_plan_carries_salt_and_explode(q, spark):
 
 def test_capture_plans_normalizes_session_counters():
     """tools/capture_plans.py writes plans with expression ids, PySpark
-    lambda-variable suffixes, exchange plan ids, RDD ids and random
-    expression seeds replaced, so two
-    captures of the same plan compare equal; names that merely end in
-    digits stay as they are."""
+    lambda-variable suffixes, exchange plan ids, RDD ids, random
+    expression seeds, temp-path hashes, store version dirs and
+    checkpoint dirs replaced, so two captures of the same plan compare
+    equal; names that merely end in digits stay as they are."""
     import importlib.util
     import pathlib
 
@@ -657,8 +657,12 @@ def test_capture_plans_normalizes_session_counters():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    def plan(e, x, acc, pid):
+    def plan(e, x, acc, pid, run="0a1b2c3d4e", version=3):
         return (
+            f"Location: InMemoryFileIndex(1 paths)[file:/tmp/ubw_spark_hll_"
+            f"store_{run}/v{version:05d}], [file:/tmp/ubw_spark_stream_wm_{run}]\n"
+            f"[file:/tmp/ubw_ckpt_{run[:8]}/{run[:8]}-c897-4860-ab20-{run}ab/"
+            f"ubw-truncate-{run * 3}]\n"
             f"Project [vec_id#{e}L, aggregate(zip_with(embedding#{e + 1}, "
             f"c#{e + 2}, lambdafunction((lambda x_{x}#{e + 3} * lambda "
             f"y_{x + 1}#{e + 4}), lambda x_{x}#{e + 3}, lambda "
@@ -671,7 +675,7 @@ def test_capture_plans_normalizes_session_counters():
             "AS s, element_at(x#1, Some(2))"
         )
 
-    a, b = plan(12, 60, 62, 7), plan(3401, 7, 1893, 310)
+    a, b = plan(12, 60, 62, 7), plan(3401, 7, 1893, 310, "ffe0a9b1c2", 100000)
     assert a != b
     assert mod.normalize_plan(a) == mod.normalize_plan(b)
     norm = mod.normalize_plan(a)
@@ -680,3 +684,6 @@ def test_capture_plans_normalizes_session_counters():
     assert "MapPartitionsRDD[N]" in norm and "Some(N)), 1)" in norm
     assert "Some(2)" in norm
     assert "l_col_2#N" in norm and "q1_x#N" in norm
+    assert "/tmp/ubw_spark_hll_store_H/vN]" in norm
+    assert "/tmp/ubw_spark_stream_wm_H]" in norm
+    assert "/tmp/ubw_ckpt_R/U/ubw-truncate-H]" in norm

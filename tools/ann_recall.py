@@ -40,13 +40,12 @@ def recall_curve(
     table: brute-force ground truth on the same corpus, candidate
     volumes from the probed cells.  Returns one dict per nprobe."""
     from ubw_spark.operators.ivf import (
+        _probe_cells,
         assign_ivf_cells,
         ivf_ann_topk,
         train_ivf_centroids,
     )
     from ubw_spark.operators.similarity import brute_force_topk
-
-    from ubw_spark.operators.ivf import _nearest_cells
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     n = emb.count()
@@ -64,16 +63,21 @@ def recall_curve(
         assign_ivf_cells(emb, centroids).select("vec_id", "ivf_cell").cache()
     )
     cells.count()
+    q_rows = [(r["vec_id"], r["embedding"]) for r in q.collect()]
     rows = []
     for p in nprobes:
         # MEASURED candidate volume for this nprobe — KMeans cells are
         # not uniform, so nprobe/k (the nominal fraction) can misstate
-        # actual IO; this is the row count the probed partitions admit
-        probes = q.select(
-            F.col("vec_id").alias("qid"),
-            F.explode(
-                _nearest_cells(F.col("embedding"), centroids, p)
-            ).alias("ivf_cell"),
+        # actual IO; this is the row count the probed partitions admit.
+        # The cells are picked as ivf_ann_topk picks them: driver-side,
+        # from the collected queries.
+        probes = spark.createDataFrame(
+            [
+                (qid, cell)
+                for (qid, _), picked in zip(q_rows, _probe_cells(q_rows, centroids, p))
+                for cell in picked
+            ],
+            "qid bigint, ivf_cell int",
         )
         n_cand = (
             cells.join(F.broadcast(probes), "ivf_cell")
@@ -92,6 +96,7 @@ def recall_curve(
                 "nprobe": p,
                 "k_cells": k_cells,
                 "nominal_frac": round(min(1.0, p / k_cells), 4),
+                "candidates": n_cand,
                 "measured_cand_frac": round(
                     n_cand / (n_queries * n), 4
                 ),

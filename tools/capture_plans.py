@@ -33,13 +33,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: generated lambda-variable names (``lambda x_17``), exchange plan
 #: ids (``[plan_id=42]``), RDD ids (``MapPartitionsRDD[328]``) and the
 #: seed drawn for each ``shuffle``/``rand`` expression (``Some(-131…)``,
-#: e.g. every ``functions.hof.fence``).
+#: e.g. every ``functions.hof.fence``).  Per-run paths too: the hex
+#: suffix of a query's temp path (``/tmp/ubw_spark_<kind>_<md5 or
+#: uuid>``), a versioned store's version dir (``/v00003``) and a
+#: reliable checkpoint's mkdtemp/uuid dirs (``iterate.truncate_lineage``).
 _VOLATILE = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"(\blambda [A-Za-z]\w*?)_\d+\b"), r"\1_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"Some\(-?\d{6,}\)"), "Some(N)"),
+    (re.compile(r"(/tmp/ubw_spark_[a-z_]+?_)[0-9a-f]{8,}"), r"\1H"),
+    (re.compile(r"/v\d{5,}\b"), "/vN"),
+    (re.compile(r"/ubw_ckpt_\w+/[0-9a-f-]{36}/ubw-truncate-[0-9a-f]+"),
+     "/ubw_ckpt_R/U/ubw-truncate-H"),
 )
 
 

@@ -48,6 +48,7 @@ per-join broadcast hints from the JSON.
 
 from __future__ import annotations
 
+from dataclasses import fields, replace
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -57,7 +58,9 @@ from pyspark.sql.window import Window
 
 from ubw_spark.core.errors import ErrorAccumulator, SpecValidationError
 from ubw_spark.core.spec import ColumnSpec, QuerySpec
-from ubw_spark.params import QueryParams, _resolve, apply_params
+from ubw_spark.params import (
+    QueryParams, _resolve, apply_params, order_entry, sort_columns,
+)
 
 # The scalar-function vocabulary reachable from JSON (§2.8 surface).
 _FNS: dict[str, Callable[..., Column]] = {
@@ -135,6 +138,12 @@ _JOIN_HOWS = (
     | _SEMI_ANTI_HOWS
 )
 
+#: A JSON query's request keys: QueryParams' fields but the Python-only
+#: select and the constructor's problems output.
+_REQUEST_KEYS = [
+    f.name for f in fields(QueryParams) if f.name not in ("select", "problems")
+]
+
 _FRAME_BOUNDS = {
     "unbounded_preceding": Window.unboundedPreceding,
     "unbounded_following": Window.unboundedFollowing,
@@ -174,11 +183,12 @@ def _compile_window(
         if c not in in_scope:
             acc.add(f"{path}: partition_by column '{c}' not in scope")
     norm_order: list[tuple[str, bool]] = []
-    for o in order:
-        name, is_desc = (o, False) if isinstance(o, str) else (o[0], bool(o[1]))
-        if name not in in_scope:
-            acc.add(f"{path}: order_by column '{name}' not in scope")
-        norm_order.append((name, is_desc))
+    for o in order if isinstance(order, list) else [order]:
+        name, is_desc = order_entry(o) or (None, None)
+        if name in in_scope:
+            norm_order.append((name, bool(is_desc)))  # bare name: ascending
+        else:
+            acc.add(f"{path}: order_by {o!r} is not a column in scope")
     if not part and not wdef.get("global"):
         acc.add(
             f"{path}: empty partition_by funnels the whole input through "
@@ -187,12 +197,7 @@ def _compile_window(
 
     w = Window.partitionBy(*[F.col(c) for c in part])
     if norm_order:
-        w = w.orderBy(
-            *[
-                F.col(n).desc_nulls_last() if d else F.col(n).asc_nulls_last()
-                for n, d in norm_order
-            ]
-        )
+        w = w.orderBy(*sort_columns(norm_order))
 
     if fname in _WIN_RANKING:
         if not norm_order:
@@ -252,8 +257,9 @@ def _compile_expr(
     AnalysisException from Spark's eager analysis."""
 
     def ref(name: Any, where: str) -> Column:
-        if scope is not None and name not in scope:
+        if scope is not None and not (isinstance(name, str) and name in scope):
             acc.add(f"{where}: source column '{name}' not in scope")
+            return F.lit(None)
         return F.col(name)
 
     if isinstance(node, str):
@@ -314,7 +320,7 @@ def _compile_setop(
         acc.add("setop: must be an object {op, queries}")
         return None
     op = node.get("op")
-    fn = _SETOPS.get(op)
+    fn = _SETOPS.get(op) if isinstance(op, str) else None
     if fn is None:
         acc.add(f"setop: unknown op '{op}' (one of {sorted(_SETOPS)})")
         return None
@@ -368,6 +374,8 @@ def compile_json_query(
     a set operation over sub-specs (``setop`` — union / union_all /
     intersect / intersect_all / except / except_all); both forms share
     the post-blocks (windows, filters, orders, paging)."""
+    if not isinstance(spec, dict):
+        raise SpecValidationError([f"a query must be an object, got {spec!r}"])
     acc = ErrorAccumulator()
 
     if "setop" in spec:
@@ -482,24 +490,18 @@ def compile_json_query(
         if not cdefs:
             acc.add("'columns' must name at least one column (omit the "
                     "key entirely to select the whole scope)")
+        elif not isinstance(cdefs, list) or not all(isinstance(c, dict) for c in cdefs):
+            acc.add(f"'columns' must be a list of objects, got {cdefs!r}")
+            cdefs = []
     col_specs: list[ColumnSpec] = []
     for c_i, cdef in enumerate(cdefs):
         name = cdef.get("name")
-        if not name:
+        if not name or not isinstance(name, str):
             acc.add(f"columns[{c_i}]: 'name' required")
             continue
-        if "expr" in cdef and not ("fn" in cdef or "lit" in cdef):
-            src = cdef["expr"]
-            if src not in available:
-                acc.add(f"columns[{c_i}]: source column '{src}' not in scope")
-            expr: Column | None = F.col(src)
-        else:
-            expr = _compile_expr(
-                {k: v for k, v in cdef.items() if k != "name"},
-                acc,
-                f"columns[{c_i}]",
-                scope=available,
-            )
+        # {"expr": src} wins over "fn"/"lit", as in any expression node
+        node = {k: v for k, v in cdef.items() if k != "name"}
+        expr = _compile_expr(node, acc, f"columns[{c_i}]", scope=available)
         col_specs.append(
             ColumnSpec(
                 name,
@@ -634,38 +636,16 @@ def _apply_post_blocks(
     # hidden-sort-key contract of the engine layer.  Columns minted
     # after the projection (aggregate outputs, window columns, setop
     # results) default to every capability on.
-    declared = {c.name: c for c in caps or []}
-
-    def post_spec(c: str) -> ColumnSpec:
-        d = declared.get(c)
-        if d is None:
-            return ColumnSpec(
-                c, orderable=True, filterable=True, likeable=True
-            )
-        # flags only — the declared expr already ran in the projection,
-        # and re-binding it here would reference pre-projection names
-        return ColumnSpec(
-            c,
-            describe=d.describe,
-            orderable=d.orderable,
-            filterable=d.filterable,
-            likeable=d.likeable,
-            visible=d.visible,
-        )
-
-    out_spec = QuerySpec([post_spec(c) for c in projected.columns])
-    params = QueryParams(
-        orders=[tuple(o) if isinstance(o, list) else o for o in spec.get("orders", [])],
-        filters=spec.get("filters", {}),
-        drop=spec.get("drop"),
-        take=spec.get("take"),
-        page_index=spec.get("page_index"),
-        page_size=spec.get("page_size"),
-        # keyset cursor (the deep-page mode): the client echoes the last
-        # row's sort-key values back as "after_key" — params._keyset_
-        # predicate validates coverage and raises on offset mixing
-        after_key=spec.get("after_key"),
-    )
+    # Flags only: the declared expr already ran in the projection, and
+    # re-binding it here would reference pre-projection names.
+    declared = {c.name: replace(c, expr=None) for c in caps or []}
+    out_spec = QuerySpec([
+        declared.get(c) or ColumnSpec(c, orderable=True, filterable=True, likeable=True)
+        for c in projected.columns
+    ])
+    # "after_key" is the keyset cursor: the client echoes the last row's
+    # sort-key values back (params._keyset_predicate checks coverage)
+    params = QueryParams(**{k: spec[k] for k in _REQUEST_KEYS if k in spec})
     return apply_params(projected, out_spec, params)
 
 
@@ -884,17 +864,16 @@ def compile_json_write(
         assign = spec.get("assign", {})
         if not assign:
             acc.add("update: 'assign' mapping required")
-        filters = spec.get("filters", {})
-        if not isinstance(filters, dict):
-            acc.add("update.filters: must be an object")
-            filters = {}
+        elif not isinstance(assign, dict):
+            acc.add(f"update.assign: must be an object, got {assign!r}")
+            assign = {}
         # the read path's filter walk over every target column
         _keys, cond, problems = _resolve(
             QuerySpec([
                 ColumnSpec(c, filterable=True, likeable=True)
                 for c in target.columns
             ]),
-            QueryParams(filters=filters),
+            QueryParams(filters=spec.get("filters")),
             dict(target.dtypes),
         )
         for p in problems:

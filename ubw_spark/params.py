@@ -22,9 +22,20 @@ Implements, with the reference's silent-ignore semantics:
 - P6 optional predicate conjunction: absent params produce no filter node
   at all (Sample04.scala:7-16).
 
+The request contract: the :class:`QueryParams` constructor is the one
+reader of a request's shape, given as kwargs or as a JSON dict's keys;
+``None`` for a key means "not given".  A malformed ``orders``,
+``filters`` or ``select`` entry is dropped and recorded in
+``QueryParams.problems``: a bare string is one name (PySpark's
+``orderBy("a")``), an order direction must be a boolean or 0/1.  A malformed
+``drop``/``take``/``page_index``/``page_size``/``after_key`` raises
+SpecValidationError naming the key, as ignoring it would serve a page
+the client did not ask for (docs/SCALE.md "Request path" has the rules).
+
 One walk, :func:`_resolve`, decides which order keys and filters a
-request may use and returns a problem for each one it leaves out.  Its
-callers differ only in what they do with those problems:
+request may use and returns the constructor's problems followed by one
+for each key it leaves out.  Its callers differ only in what they do
+with those problems:
 :func:`apply_params` ignores them (the reference's silent-ignore
 contract), :func:`validate_params` returns them (U2: the accumulated
 report, AtomicException analog), and the JSON ``update`` verb raises them
@@ -51,6 +62,7 @@ depth — see :func:`_keyset_predicate` and the oracled
 from __future__ import annotations
 
 import datetime
+import re
 from dataclasses import dataclass, field
 from decimal import Decimal, InvalidOperation
 from functools import reduce
@@ -59,6 +71,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ubw_spark.core.errors import SpecValidationError
 from ubw_spark.core.spec import ColumnSpec, QuerySpec
 
 # The filter-operator whitelist (P7).  `like` additionally requires the
@@ -77,11 +90,50 @@ _FILTER_OPS: dict[str, Any] = {
 }
 
 
+_INT_MAX = 2**31 - 1  # Spark's LIMIT, OFFSET and their sum are 32-bit
+
+
+def order_entry(o: Any) -> tuple[str, bool | None] | None:
+    """The one reading of an order entry: a bare name (direction None,
+    omitted) or a ``[name, is_desc]`` pair whose ``is_desc`` is a
+    boolean, 0/1 (JSON's other boolean) or None; None when ``o`` is
+    neither (``"asc"`` is no boolean)."""
+    if isinstance(o, str):
+        return o, None
+    if isinstance(o, (list, tuple)) and len(o) == 2 and isinstance(o[0], str):
+        d = o[1]
+        if d is None or (type(d) in (bool, int) and d in (0, 1)):
+            return o[0], None if d is None else bool(d)
+    return None
+
+
+def sort_columns(keys: list[tuple[str, bool]]) -> list[Column]:
+    """``(name, is_desc)`` keys as sort columns, NULLS LAST both ways."""
+    return [F.col(n).desc_nulls_last() if d else F.col(n).asc_nulls_last()
+            for n, d in keys]
+
+
+def _entries(key: str, value: Any, read, what: str, problems: list) -> tuple:
+    """A list-valued key's entries through ``read``: None is no entry, a
+    bare string is one, and an entry ``read`` maps to None is dropped
+    and recorded in ``problems``."""
+    if value is None or isinstance(value, str):
+        value = [] if value is None else [value]
+    elif not isinstance(value, (list, tuple)):
+        problems.append(f"{key}: must be a list, got {value!r}")
+        return ()
+    got = [(i, v, read(v)) for i, v in enumerate(value)]
+    problems.extend(f"{key}[{i}]: {v!r} is not {what}" for i, v, r in got if r is None)
+    return tuple(r for _, _, r in got if r is not None)
+
+
 @dataclass(frozen=True)
 class QueryParams:
-    """Runtime parameters applied to a QuerySpec — all optional."""
+    """Runtime parameters applied to a QuerySpec — all optional.  The
+    constructor is the one reader of a request's shape (module
+    docstring); ``problems`` lists the entries it dropped."""
 
-    orders: tuple = ()  # [(name, is_desc)] or [name] (uses default_desc)
+    orders: tuple = ()  # ((name, is_desc or None for default_desc), ...)
     filters: dict[str, dict[str, Any]] = field(default_factory=dict)
     drop: int | None = None
     take: int | None = None
@@ -89,33 +141,57 @@ class QueryParams:
     page_size: int | None = None
     select: tuple | None = None  # list-driven projection (P4); None = all
     after_key: dict[str, Any] | None = None  # keyset paging boundary
+    problems: tuple = ()
 
-    def __init__(
-        self,
-        orders: list | tuple = (),
-        filters: dict[str, dict[str, Any]] | None = None,
-        drop: int | None = None,
-        take: int | None = None,
-        page_index: int | None = None,
-        page_size: int | None = None,
-        select: list | tuple | None = None,
-        after_key: dict[str, Any] | None = None,
-    ):
-        object.__setattr__(self, "orders", tuple(orders))
-        object.__setattr__(self, "filters", dict(filters or {}))
-        object.__setattr__(self, "drop", drop)
-        object.__setattr__(self, "take", take)
-        object.__setattr__(self, "page_index", page_index)
-        object.__setattr__(self, "page_size", page_size)
-        object.__setattr__(
-            self, "select", tuple(select) if select is not None else None
-        )
+    def __init__(self, orders=(), filters=None, drop=None, take=None,
+                 page_index=None, page_size=None, select=None, after_key=None):
+        problems: list[str] = []
+        parsed = _entries("orders", orders, order_entry,
+                          "a name or a [name, is_desc] pair", problems)
+        names = _entries("select", select, lambda n: n if isinstance(n, str) else None,
+                         "a column name", problems)
+        fs = filters if isinstance(filters, dict) else {}
+        if filters is not None and fs is not filters:
+            problems.append(f"filters: must be an object, got {filters!r}")
+        problems += [f"filters.{k}: operators must be an object"
+                     for k, o in fs.items() if not isinstance(o, dict)]
         # `is not None`, not truthiness: an empty cursor dict must reach
-        # _keyset_predicate and raise there (a service passing a hollow
-        # client cursor would otherwise silently get page 1).
-        object.__setattr__(
-            self, "after_key", dict(after_key) if after_key is not None else None
+        # _keyset_predicate and raise there (a hollow client cursor would
+        # otherwise silently get page 1).
+        self.__dict__.update(
+            orders=parsed,
+            filters={k: dict(o) for k, o in fs.items() if isinstance(o, dict)},
+            drop=drop, take=take, page_index=page_index, page_size=page_size,
+            select=None if select is None else names,
+            after_key=dict(after_key) if isinstance(after_key, dict) else after_key,
+            problems=tuple(problems),
         )
+        # Checked on the request fields, not the computed offset: drop=0
+        # or page_index=1 still declare offset paging, and letting page 1
+        # through would defer the error to page 2.
+        if after_key is not None and (drop, page_index, page_size) != (None,) * 3:
+            raise ValueError(
+                "after_key (keyset paging) and drop/page_index/page_size "
+                "(offset paging) are mutually exclusive — the boundary "
+                "row already encodes the page position; use take for "
+                "the keyset page size"
+            )
+        ints = {"drop": (drop, 0), "take": (take, 0),
+                "page_index": (page_index, 1), "page_size": (page_size, 1)}
+        bad = [f"{k}: must be an integer >= {lo}, got {v!r}"
+               for k, (v, lo) in ints.items()
+               if v is not None and (type(v) is not int or v < lo)]
+        paged = [k for k in ("page_index", "page_size") if ints[k][0] is not None]
+        if len(paged) == 1 or paged and (drop, take) != (None, None):
+            bad.append(f"{paged[0]}: page_index and page_size come together, "
+                       "without drop/take")
+        if not isinstance(after_key, (dict, type(None))):
+            bad.append(f"after_key: must be an object, got {after_key!r}")
+        if not bad and sum(n or 0 for n in self.offset_limit()) > _INT_MAX:
+            ends = paged or [k for k in ("drop", "take") if ints[k][0] is not None]
+            bad.append(f"{'/'.join(ends)}: the page ends past row {_INT_MAX}")
+        if bad:
+            raise SpecValidationError(bad)
 
     def offset_limit(self) -> tuple[int | None, int | None]:
         if self.page_index is not None and self.page_size is not None:
@@ -135,15 +211,14 @@ def _resolve(
     - ``predicate``: the AND of every admitted filter, or None when none
       applies (P6: no Filter node at all).  Filters compare against the
       projected columns by name;
-    - ``problems``: one ``"orders.<key>: why"`` or ``"filters.<key>: why"``
-      message per key left out.
+    - ``problems``: ``params.problems``, then one ``"orders.<key>: why"``
+      or ``"filters.<key>: why"`` message per key left out.
 
     With ``dtypes=None`` operands are neither checked nor compiled."""
     smap = spec.spec_map()
-    problems: list[str] = []
+    problems = list(params.problems)
     requested: dict[str, bool] = {}
-    for o in params.orders:
-        name, is_desc = (o, None) if isinstance(o, str) else o
+    for name, is_desc in params.orders:
         s = smap.get(name)
         if s is None:
             problems.append(f"orders.{name}: not a declared column")
@@ -158,8 +233,7 @@ def _resolve(
             problems.append(f"orders.{name}: {why}")
             continue
         requested.setdefault(
-            target.name,
-            target.default_desc if isinstance(o, str) else bool(is_desc),
+            target.name, target.default_desc if is_desc is None else is_desc
         )
     keys = [(s, requested[s.name]) for s in spec.columns if s.name in requested]
 
@@ -171,9 +245,6 @@ def _resolve(
             continue
         if not s.filterable:
             problems.append(f"filters.{name}: not filterable")
-            continue
-        if not isinstance(ops, dict):
-            problems.append(f"filters.{name}: operators must be an object")
             continue
         for op, operand in ops.items():
             fn = _FILTER_OPS.get(op)
@@ -271,9 +342,9 @@ def _keyset_predicate(
 
 
 def validate_params(spec: QuerySpec, params: QueryParams) -> list[str]:
-    """Every order and filter key ``apply_params`` would ignore, one
-    message each (U2: the accumulated report, for clients that want it
-    instead of the silent ignore).  Operands are not checked."""
+    """Every request entry ``apply_params`` would ignore, one message
+    each (U2: the accumulated report, for clients that want it instead
+    of the silent ignore).  Operands are not checked."""
     return _resolve(spec, params, None)[2]
 
 
@@ -302,23 +373,7 @@ def apply_params(
 
     offset, limit = params.offset_limit()
     if params.after_key is not None:
-        # Keyset page: boundary predicate instead of a growing OFFSET —
-        # combining both would double-skip, so it is a hard error.  The
-        # check is on the REQUEST fields, not the computed offset:
-        # page_index=1 or drop=0 compute to a zero offset but still
-        # declare offset-mode paging, and letting page 1 through would
-        # defer the error to page 2 (the worst place to learn it).
-        if (
-            params.drop is not None
-            or params.page_index is not None
-            or params.page_size is not None
-        ):
-            raise ValueError(
-                "after_key (keyset paging) and drop/page_index/page_size "
-                "(offset paging) are mutually exclusive — the boundary "
-                "row already encodes the page position; use take for "
-                "the keyset page size"
-            )
+        # Keyset page: boundary predicate instead of a growing OFFSET
         if not keys:
             raise ValueError(
                 "after_key requires orders: keyset paging is only "
@@ -331,12 +386,7 @@ def apply_params(
         out = out.where(pred)
 
     if keys:
-        out = out.orderBy(
-            *[
-                (F.col(s.name).desc_nulls_last() if d else F.col(s.name).asc_nulls_last())
-                for s, d in keys
-            ]
-        )
+        out = out.orderBy(*sort_columns([(s.name, d) for s, d in keys]))
 
     if offset:
         out = out.offset(offset)
@@ -349,6 +399,9 @@ def apply_params(
     hidden = [c.name for c in spec.columns if c.name not in visible]
     return out.drop(*hidden) if hidden else out
 
+
+#: A LIKE pattern Spark accepts: a backslash escapes only ``_``, ``%`` or itself.
+_LIKE = re.compile(r"(?:[^\\]|\\[_%\\])*", re.S)
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")
 _NUMERIC_TYPES = _INT_TYPES + ("float", "double", "decimal")
@@ -409,7 +462,7 @@ def _operand(dtype: str, op: str, operand: Any) -> tuple[bool, Any]:
     if op == "isnull":
         return isinstance(operand, bool), operand
     if op == "like":
-        return isinstance(operand, str), operand
+        return isinstance(operand, str) and bool(_LIKE.fullmatch(operand)), operand
     if op not in ("in", "between"):
         return _coerce(dtype, operand)
     if not isinstance(operand, (list, tuple)) or (
