@@ -509,7 +509,7 @@ def test_json_update_assign_must_be_an_object(spark, tables):
 
 # --- property-based fuzz: hostile/garbage specs never escape ------------
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _junk = st.one_of(
@@ -552,6 +552,8 @@ _spec = st.fixed_dictionaries(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(spec=_spec)
+@example(spec={"verb": "insert", "into": "friend", "rows": [{"id": 1}],
+               "lookups": ["grades"]})
 def test_json_write_fuzz_never_escapes(spark, tables, spec):
     """Any garbage spec either raises SpecValidationError (accumulated,
     data-only validation) or compiles into a plain DataFrame.  It must
@@ -739,6 +741,23 @@ _setop_spec = st.fixed_dictionaries(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(spec=_setop_spec)
+# a non-object block entry, and the expression nodes whose fn, args or
+# lit has the wrong shape: each must be refused as a spec error
+@example(spec={"setop": {"op": "union", "queries": [
+    {**_FRIEND_IDS, "joins": ["grades"]}, _FRIEND_IDS]}})
+@example(spec={"setop": {"op": "union", "queries": [
+    {**_FRIEND_IDS, "aggs": ["count"]}, _FRIEND_IDS]}})
+@example(spec={"setop": {"op": "union", "queries": [
+    {**_FRIEND_IDS, "windows": ["rank"]}, _FRIEND_IDS]}})
+@example(spec={"setop": {"op": "union", "queries": [
+    {"from": "friend", "columns": [{"name": "id", "fn": ["upper"], "args": ["id"]}]},
+    _FRIEND_IDS]}})
+@example(spec={"setop": {"op": "union", "queries": [
+    {"from": "friend", "columns": [{"name": "id", "fn": "upper", "args": 5}]},
+    _FRIEND_IDS]}})
+@example(spec={"setop": {"op": "union", "queries": [
+    {"from": "friend", "columns": [{"name": "id", "lit": {"a": 1}}]},
+    _FRIEND_IDS]}})
 def test_json_setop_fuzz_never_escapes(spark, tables, spec):
     """Property pair of test_json_write_fuzz_never_escapes for the setop
     surface and the request keys: any garbage spec either raises

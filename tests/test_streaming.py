@@ -1349,20 +1349,15 @@ def test_stream_session_kill_and_replay_exactly_once(spark, sf_dir, tmp_path):
     assert final.count() == final.distinct().count()
 
 
-def test_stream_shuffle_partitions(spark, monkeypatch):
-    from ubw_spark.streaming.stages import (
-        shuffle_partitions_override,
-        stream_shuffle_partitions,
-    )
+def test_stream_shuffle_partitions(spark):
+    from ubw_spark.session import pinned_conf
+    from ubw_spark.streaming.stages import stream_shuffle_partitions
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     n = stream_shuffle_partitions(spark)
-    assert 1 <= n <= 4
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "13")
-    assert stream_shuffle_partitions(spark) == 13
+    assert n == max(1, min(spark.sparkContext.defaultParallelism, 4))
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    with shuffle_partitions_override(spark, 3):
+    with pinned_conf(spark, {key: 3}):
         assert spark.conf.get(key) == "3"
     assert spark.conf.get(key) == before
 

@@ -527,8 +527,10 @@ _LIFECYCLE = {
 
 def test_lifecycle_primitives_stay_in_versioned():
     """No module under ubw_spark/ or examples/ other than versioned.py
-    calls a store lifecycle primitive, and the pre-FileStore shared
-    compaction body is gone."""
+    calls a store lifecycle primitive or touches column metadata (an
+    ``alias(..., metadata=...)`` or a ``schema[...].metadata`` read —
+    the shape pin is versioned.ShapePin's), and the pre-FileStore
+    shared compaction body is gone."""
     import ast
     from pathlib import Path
 
@@ -539,6 +541,15 @@ def test_lifecycle_primitives_stay_in_versioned():
             if f == Path(versioned.__file__).resolve():
                 continue
             for node in ast.walk(ast.parse(f.read_text())):
+                where = f"{f.relative_to(repo)}:{getattr(node, 'lineno', 0)}"
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr == "metadata"
+                    and isinstance(node.value, ast.Subscript)
+                    and isinstance(node.value.value, ast.Attribute)
+                    and node.value.value.attr == "schema"
+                ):
+                    offenders.append(f"{where} schema[...].metadata")
                 if not isinstance(node, ast.Call):
                     continue
                 fn = node.func
@@ -546,8 +557,10 @@ def test_lifecycle_primitives_stay_in_versioned():
                     fn, "attr", None
                 )
                 if name in _LIFECYCLE:
-                    offenders.append(
-                        f"{f.relative_to(repo)}:{node.lineno} {name}"
-                    )
+                    offenders.append(f"{where} {name}")
+                if name == "alias" and any(
+                    k.arg == "metadata" for k in node.keywords
+                ):
+                    offenders.append(f"{where} alias(metadata=)")
     assert not offenders, offenders
     assert not hasattr(versioned, "compact_partitioned_store")

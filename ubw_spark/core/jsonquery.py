@@ -270,11 +270,17 @@ def _compile_expr(
     if "expr" in node:
         return ref(node["expr"], path)
     if "lit" in node:
+        if isinstance(node["lit"], (dict, list)):
+            acc.add(f"{path}: 'lit' must be a scalar, got {node['lit']!r}")
+            return F.lit(None)
         return F.lit(node["lit"])
     if "fn" in node:
-        fn = _FNS.get(node["fn"])
+        fn = _FNS.get(node["fn"]) if isinstance(node["fn"], str) else None
         if fn is None:
-            acc.add(f"{path}: unknown function '{node['fn']}'")
+            acc.add(f"{path}: unknown function {node['fn']!r}")
+            return F.lit(None)
+        if not isinstance(node.get("args", []), list):
+            acc.add(f"{path}.args: must be a list, got {node['args']!r}")
             return F.lit(None)
         args = [
             _compile_expr(a, acc, f"{path}.args[{i}]", scope)
@@ -398,6 +404,9 @@ def compile_json_query(
 
     available = set(df.columns)
     for j_i, join in enumerate(spec.get("joins", [])):
+        if not isinstance(join, dict):
+            acc.add(f"joins[{j_i}]: must be an object, got {join!r}")
+            continue
         jname = join.get("table")
         try:
             right = tables(jname)
@@ -541,6 +550,9 @@ def compile_json_query(
     if aggs:
         agg_cols = []
         for a_i, adef in enumerate(aggs):
+            if not isinstance(adef, dict):
+                acc.add(f"aggs[{a_i}]: must be an object, got {adef!r}")
+                continue
             fn = _AGGS.get(adef.get("fn"))
             if fn is None:
                 acc.add(f"aggs[{a_i}]: unknown aggregate '{adef.get('fn')}'")
@@ -610,6 +622,9 @@ def _apply_post_blocks(
     Windows apply in declaration order; a later window may partition or
     order by an earlier one's output."""
     for w_i, wdef in enumerate(spec.get("windows", [])):
+        if not isinstance(wdef, dict):
+            acc.add(f"windows[{w_i}]: must be an object, got {wdef!r}")
+            continue
         wname = wdef.get("name")
         if not wname:
             acc.add(f"windows[{w_i}]: 'name' required")
@@ -758,6 +773,9 @@ def _apply_lookups(
     ``set`` columns in — how an insert resolves foreign keys from
     natural keys without the caller hand-writing joins."""
     for l_i, lk in enumerate(lookups):
+        if not isinstance(lk, dict):
+            acc.add(f"lookups[{l_i}]: must be an object, got {lk!r}")
+            continue
         lname = lk.get("table")
         try:
             right = tables(lname)

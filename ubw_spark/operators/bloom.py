@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ubw_spark.functions.hof import let
 from ubw_spark.functions.text import tokens
 from ubw_spark.operators.dedup import widen, word_shingles
-from ubw_spark.operators.versioned import MergeStore
+from ubw_spark.operators.versioned import MergeStore, cell_merge
 
 M_DEFAULT = 1 << 18  # bits in the filter (32 KiB packed)
 K_DEFAULT = 4  # probes per gram
@@ -306,18 +306,11 @@ def bloom_audit(
 PARAMS_FILE = "_BLOOM_PARAMS"
 
 
-def _or_merge(old: DataFrame, new: DataFrame) -> DataFrame:
-    """bloom(A ∪ B) == bloom(A) | bloom(B): union the packed words and
-    bit_or them per word index."""
-    return (
-        old.withColumnRenamed("bits", "mask")
-        .unionByName(new.withColumnRenamed("bits", "mask"))
-        .groupBy("word_idx")
-        .agg(F.expr("bit_or(mask)").alias("bits"))
-    )
-
-
-_STORE = MergeStore(PARAMS_FILE, "bloom", _or_merge)
+#: bloom(A ∪ B) == bloom(A) | bloom(B): union the packed words and
+#: bit_or them per word index.
+_STORE = MergeStore(PARAMS_FILE, "bloom", cell_merge(
+    ("word_idx",), {"bits": F.bit_or}, where="_or_merge"
+))
 
 
 def read_bloom_params(path: str) -> dict:

@@ -16,13 +16,11 @@ convergence is typically 2-4 rounds; ``max_iter`` is the runaway guard.
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.iterate import TruncateSlot, truncate
+from ubw_spark.session import pinned_conf
 
 
 def _loop_partitions(spark) -> int:
@@ -34,38 +32,10 @@ def _loop_partitions(spark) -> int:
     count just multiplies tiny tasks; and per-round ADAPTIVE planning
     costs one driver replan + one job PER MATERIALIZED STAGE per round
     (measured round 13: ~4 stage-jobs of 10-40 ms execution each per
-    round — the loop was driver-bound, not compute-bound).  Same knob
-    pattern as streaming/stages.stream_shuffle_partitions:
-    ``SPARK_GRAFT_CC_PARTITIONS`` is the production lever (set to the
-    parallelism the EDGE LIST needs — pair graphs from banded dedup are
-    ~duplicate-count-sized); locally defaults to
-    min(defaultParallelism, 8)."""
-    env = os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "")
-    if env.isdigit() and int(env) > 0:
-        return int(env)
+    round — the loop was driver-bound, not compute-bound).  Derived like
+    streaming/stages.stream_shuffle_partitions: min(defaultParallelism,
+    8) — pair graphs from banded dedup are ~duplicate-count-sized."""
     return max(1, min(spark.sparkContext.defaultParallelism, 8))
-
-
-@contextmanager
-def _loop_conf(spark, n_partitions: int):
-    """Pin shuffle partitions and disable adaptive execution for the
-    duration of the iterative loop, restoring both on exit.  AQE's
-    per-stage materialization turns each round's single logical pass
-    into several driver-synchronized jobs; with a known-small, fixed
-    per-round state the static plan is strictly cheaper.  Partition
-    count and planner mode cannot change aggregation values."""
-    keys = {
-        "spark.sql.shuffle.partitions": str(n_partitions),
-        "spark.sql.adaptive.enabled": "false",
-    }
-    old = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def connected_components(
@@ -97,7 +67,7 @@ def connected_components(
     )
     # sym lives for the WHOLE loop (every round joins it): no slot, its
     # durable copy is reclaimed by the checkpoint dir's retention policy.
-    # eager=True, and BEFORE _loop_conf below: the edge-generation
+    # eager=True, and BEFORE the pinned_conf loop below: the edge-generation
     # lineage above this point is corpus-scale (at scale the full
     # MinHash/LSH pipeline), so its one materializing shuffle must run
     # under the session's normal conf (AQE on, corpus-sized shuffle
@@ -115,7 +85,15 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
     spark = edges.sparkSession
-    with _loop_conf(spark, _loop_partitions(spark)):
+    # Static plan for the loop: AQE's per-stage materialization turns
+    # each round's single logical pass into several driver-synchronized
+    # jobs; with a known-small, fixed per-round state the static plan
+    # is strictly cheaper.  Partition count and planner mode cannot
+    # change aggregation values.
+    with pinned_conf(spark, {
+        "spark.sql.shuffle.partitions": _loop_partitions(spark),
+        "spark.sql.adaptive.enabled": "false",
+    }):
         for _ in range(max_iter):
             neighbor_min = (
                 sym.join(labels, sym["a"] == labels["node"])

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.dedup import portable_hash
-from ubw_spark.operators.versioned import MergeStore
+from ubw_spark.operators.versioned import MergeStore, ShapePin, cell_merge
 
 #: rho is computed from a 32-bit uniform hash value.
 _HASH_BITS = 32
@@ -103,20 +103,7 @@ def rho_sql(expr: str) -> str:
     return f"(1 + {cases})"
 
 
-def _meta_p(registers: DataFrame) -> int | None:
-    if "r" not in registers.columns:
-        return None
-    return registers.schema["r"].metadata.get("hll_p")
-
-
-def _check_p(registers: DataFrame, where: str) -> int:
-    p = _meta_p(registers)
-    if p is None:
-        raise ValueError(
-            f"{where}: input is not an hll_build register set "
-            "(missing hll_p metadata on `r`)"
-        )
-    return p
+_SHAPE = ShapePin("r", {"p": "hll_p"}, "an hll_build register set", "precision")
 
 
 def hll_build(
@@ -145,32 +132,17 @@ def hll_build(
             hll_rho(item).alias("rho"),
         )
         .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("r", metadata={"hll_p": p}))
+        .agg(_SHAPE.pin(F.max("rho"), {"p": p}))
     )
 
 
-def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Register-wise MAX — registers(A ∪ B) exactly (tested), and
-    IDEMPOTENT: merging a sketch with itself (or a replayed batch) is a
-    no-op.  Raises on a precision mismatch: cross-p registers don't
-    align and the merged estimate would be silently wrong."""
-    pa, pb = _check_p(a, "hll_merge"), _check_p(b, "hll_merge")
-    if pa != pb:
-        raise ValueError(f"hll_merge: precision mismatch p={pa} vs p={pb}")
-    group_cols = [c for c in a.columns if c not in ("bucket", "r")]
-    # SET comparison: column order is presentation, not semantics —
-    # unionByName + groupBy align by name regardless
-    if set(group_cols) != {
-        c for c in b.columns if c not in ("bucket", "r")
-    }:
-        raise ValueError(
-            f"hll_merge: group columns differ: {a.columns} vs {b.columns}"
-        )
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("r").alias("r", metadata={"hll_p": pa}))
-    )
+#: hll_merge(a, b): register-wise MAX per group — registers(A ∪ B)
+#: exactly (tested), and IDEMPOTENT: merging a sketch with itself (or a
+#: replayed batch) is a no-op.  Raises on a precision mismatch (cross-p
+#: registers don't align) and on differing group columns.
+hll_merge = cell_merge(
+    ("bucket",), {"r": F.max}, where="hll_merge", shape=_SHAPE, grouped=True
+)
 
 
 def hll_estimate(
@@ -186,7 +158,7 @@ def hll_estimate(
     (span 2^-33..2^11 < 53 mantissa bits for p <= 16, r <= 33), so the
     only engine-sensitive steps are one division and one ln — rounded
     away at 6dp."""
-    p = _check_p(registers, "hll_estimate")
+    p = _SHAPE.of(registers, "hll_estimate")["p"]
     m = 1 << p
     a = alpha(m)
     group_cols = list(group_cols or [])
@@ -239,27 +211,19 @@ def estimate_sql(p: int, registers_cte: str, group_by: str = "") -> str:
 
 PARAMS_FILE = "_HLL_PARAMS"
 
-_STORE = MergeStore(
-    PARAMS_FILE,
-    "hll",
-    hll_merge,
-    repin=lambda df, p: df.select(
-        "bucket", F.col("r").alias("r", metadata={"hll_p": p["p"]})
-    ),
-)
+_STORE = MergeStore(PARAMS_FILE, "hll", hll_merge, _SHAPE)
 
 
 def write_hll_store(registers: DataFrame, path: str) -> None:
     """Persist an (ungrouped) register set (<= 2^p rows) + its
     precision sidecar as a new store version."""
-    p = _check_p(registers, "write_hll_store")
     extra = [c for c in registers.columns if c not in ("bucket", "r")]
     if extra:
         raise ValueError(
             f"write_hll_store: store registers must be ungrouped "
             f"(bucket, r); got extra columns {extra}"
         )
-    _STORE.write(registers, path, {"p": p})
+    _STORE.write(registers, path)
 
 
 def load_hll(spark, path: str) -> tuple[DataFrame, dict]:

@@ -8,13 +8,10 @@ per-scanline unfiltering, CRC-checked, validated byte-exact against the
 JVM's independent ImageIO decoder): ``codec="png"`` gives real decode /
 feature-extract / resize with no third-party dependency, and
 ``extract_image_features`` value-checks against a closed-form DuckDB
-oracle.  ``codec="real"`` remains the PIL integration point for the
-full format zoo (JPEG etc.) via an optional executor-side import
-(NotImplementedError with install guidance where pillow is absent — as
-in this container; the tests skip accordingly).  Video frame sampling
-stays gated the same way pending an ffmpeg binding.  A deterministic
-fake (``codec="fake"``) drives payload-agnostic plumbing tests and the
-DuckDB oracles that predate the PNG codec.
+oracle.  Video frame sampling has only the deterministic fake
+(``codec="fake"``), which also drives payload-agnostic plumbing tests
+and the DuckDB oracles that predate the PNG codec.  Any other codec
+name raises ValueError when the plan is built.
 
 Scale: payloads stay in executor memory one Arrow batch at a time
 (bound via spark.sql.execution.arrow.maxRecordsPerBatch for fat rows);
@@ -64,6 +61,11 @@ def with_payload_metadata(
 DECODED_SCHEMA = "id bigint, n_bytes bigint, feature array<float>"
 
 
+def _check_codec(codec: str, known: tuple[str, ...]) -> None:
+    if codec not in known:
+        raise ValueError(f"unknown codec {codec!r}; expected one of {known}")
+
+
 def decode_batches(
     df: DataFrame,
     id_col: str,
@@ -76,30 +78,17 @@ def decode_batches(
     mapInPandas (per-partition Arrow batch iterator — the pattern for
     any custom scan/transform the SQL layer can't express).
 
-    codec="real" is the integration point for actual media libraries;
-    in this environment it raises NotImplementedError by design.
-    codec="fake" derives a deterministic feature vector from the payload
-    bytes, keeping every Spark-side mechanism (schema, batching,
-    partition parallelism) real and testable."""
+    codec="png" decodes through the stdlib PNG codec; codec="fake"
+    derives a deterministic feature vector from the payload bytes,
+    keeping every Spark-side mechanism (schema, batching, partition
+    parallelism) real and testable."""
+    _check_codec(codec, ("fake", "png"))
 
     def _decode(batches: Iterator) -> Iterator:
         import hashlib
 
         import numpy as np
         import pandas as pd
-
-        if codec == "real":
-            # Optional-import INSIDE the worker function: the import must
-            # happen on executors, and absence must fail with the same
-            # clear gate message the stub used to raise.
-            try:
-                from PIL import Image
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "codec='real' requires PIL (pillow), which is not "
-                    "available in this environment; use codec='fake' or "
-                    "install pillow"
-                ) from e
 
         for pdf in batches:
             feats = []
@@ -129,19 +118,6 @@ def decode_batches(
                             ]
                             vec.append(sum(cols) / len(cols) / 255.0)
                         feats.append(vec)
-                    except Exception:
-                        feats.append(None)
-                    continue
-                if codec == "real":
-                    # real decode: grayscale thumbnail row as the feature
-                    # vector; undecodable payloads yield NULL (dirty bytes
-                    # are routine at corpus scale — route, don't crash)
-                    import io
-
-                    try:
-                        img = Image.open(io.BytesIO(raw)).convert("L")
-                        px = list(img.resize((feature_dim, 1)).getdata())
-                        feats.append([p / 255.0 for p in px])
                     except Exception:
                         feats.append(None)
                     continue
@@ -203,26 +179,17 @@ def resize_images(
 ) -> DataFrame:
     """Resize image payloads to width×height via mapInPandas.
 
-    codec="real" is the PIL integration point (NotImplementedError
-    here); codec="fake" emits a deterministic RGB-sized byte payload
+    codec="png" decodes and resamples through the stdlib PNG codec;
+    codec="fake" emits a deterministic RGB-sized byte payload
     (width·height·3 bytes streamed from the payload digest) so the
     Spark-side contract — binary in, binary out, one Arrow batch at a
     time, output size bound known up front — is real and tested."""
+    _check_codec(codec, ("fake", "png"))
 
     def _resize(batches: Iterator) -> Iterator:
         import hashlib
 
         import pandas as pd
-
-        if codec == "real":
-            try:
-                from PIL import Image
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "codec='real' requires PIL (pillow), which is not "
-                    "available in this environment; use codec='fake' or "
-                    "install pillow"
-                ) from e
 
         out_len = width * height * 3
         for pdf in batches:
@@ -231,8 +198,8 @@ def resize_images(
                 raw = bytes(payload) if payload is not None else b""
                 if codec == "png":
                     # stdlib decode + nearest-neighbor resample to
-                    # interleaved RGB (same output contract as the PIL
-                    # path: raw bytes, exactly width*height*3 long)
+                    # interleaved RGB: raw bytes, exactly
+                    # width*height*3 long
                     try:
                         w0, h0, ch, px = png_decode(raw)
                         out = bytearray(out_len)
@@ -249,17 +216,6 @@ def resize_images(
                                 o = (y * width + x) * 3
                                 out[o:o + 3] = trip
                         payloads.append(bytes(out))
-                    except Exception:
-                        payloads.append(None)
-                    continue
-                if codec == "real":
-                    # real resize: raw interleaved RGB bytes, exactly
-                    # width*height*3 long; undecodable payloads → NULL
-                    import io
-
-                    try:
-                        img = Image.open(io.BytesIO(raw)).convert("RGB")
-                        payloads.append(img.resize((width, height)).tobytes())
                     except Exception:
                         payloads.append(None)
                     continue
@@ -303,10 +259,11 @@ def sample_frames(
     ROW FAN-OUT (one input row → n output rows), the pattern for any
     decode that explodes a container into parts.
 
-    codec="real" is the ffmpeg integration point; codec="fake" derives
-    frame ``i`` as sha256(payload || '#i') — deterministic AND
-    reproducible in plain SQL, so the whole fan-out path is
-    oracle-checkable (see the multimodal_frame_sample query)."""
+    codec="fake" (the only one) derives frame ``i`` as
+    sha256(payload || '#i') — deterministic AND reproducible in plain
+    SQL, so the whole fan-out path is oracle-checkable (see the
+    multimodal_frame_sample query)."""
+    _check_codec(codec, ("fake",))
 
     def _frames(batches: Iterator) -> Iterator:
         import hashlib
@@ -314,11 +271,6 @@ def sample_frames(
         import pandas as pd
 
         for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "video codecs not available in this environment; "
-                    "plug ffmpeg frame extraction here"
-                )
             ids, idxs, tss, frames = [], [], [], []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
                 raw = bytes(payload) if payload is not None else b""
@@ -392,8 +344,7 @@ def extract_audio_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """REAL audio decode: parse PCM WAV payloads with the stdlib
-    ``wave`` module (no third-party codec needed, so — unlike the
-    PIL/ffmpeg-gated image/video paths — this runs everywhere) and emit
+    ``wave`` module (no third-party codec needed) and emit
     per-clip features: channel count, sample rate, sample count,
     duration, integer peak, RMS.
 

@@ -36,14 +36,13 @@ shifted first — the projection already centers exactly.
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.functions.hof import let
-from ubw_spark.operators.versioned import MergeStore
+from ubw_spark.operators.versioned import MergeStore, cell_merge
 
 __all__ = [
     "covariance_matrix",
@@ -140,19 +139,12 @@ def _numpy_moments(emb: DataFrame, vec_col: str) -> DataFrame:
     return _sum_moments(emb.select(vec_col).mapInPandas(acc, schema))
 
 
-def _sum_moments(*parts: DataFrame) -> DataFrame:
-    """(i, j) re-aggregated union of moment frames — exact, since raw
-    moments are plain sums."""
-    return (
-        reduce(DataFrame.unionByName, parts)
-        .groupBy("i", "j")
-        .agg(
-            F.sum("sxy").alias("sxy"),
-            F.sum("si").alias("si"),
-            F.sum("sj").alias("sj"),
-            F.sum("n").alias("n"),
-        )
-    )
+#: (i, j) re-aggregated union of moment frames — exact, since raw
+#: moments are plain sums.
+_sum_moments = cell_merge(
+    ("i", "j"), dict.fromkeys(("sxy", "si", "sj", "n"), F.sum),
+    where="_sum_moments",
+)
 
 
 def pca_fit(

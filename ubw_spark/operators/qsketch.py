@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ubw_spark.operators.versioned import MergeStore
+from ubw_spark.operators.versioned import MergeStore, ShapePin, cell_merge
 
 __all__ = [
     "hist_build",
@@ -59,21 +59,10 @@ def _validate(lo: int, hi: int, nbins: int) -> None:
         raise ValueError(f"need hi > lo and nbins >= 2; got [{lo},{hi}) x{nbins}")
 
 
-def _shape(cells: DataFrame) -> tuple[int | None, int | None, int | None]:
-    if "cnt" not in cells.columns:
-        return None, None, None
-    m = cells.schema["cnt"].metadata
-    return m.get("qh_lo"), m.get("qh_hi"), m.get("qh_bins")
-
-
-def _check_shape(cells: DataFrame, where: str) -> tuple[int, int, int]:
-    lo, hi, nb = _shape(cells)
-    if lo is None or hi is None or nb is None:
-        raise ValueError(
-            f"{where}: input is not a hist_build histogram "
-            "(missing qh_lo/qh_hi/qh_bins metadata on `cnt`)"
-        )
-    return lo, hi, nb
+_SHAPE = ShapePin(
+    "cnt", {"lo": "qh_lo", "hi": "qh_hi", "nbins": "qh_bins"},
+    "a hist_build histogram",
+)
 
 
 def hist_build(
@@ -119,40 +108,22 @@ def grouped_hist_build(
         .select(*group_cols, bucket.cast("int").alias("bin"))
         .groupBy(*group_cols, "bin")
         .agg(
-            F.count(F.lit(1)).alias(
-                "cnt", metadata={"qh_lo": lo, "qh_hi": hi, "qh_bins": nbins}
+            _SHAPE.pin(
+                F.count(F.lit(1)), {"lo": lo, "hi": hi, "nbins": nbins}
             )
         )
     )
 
 
-def hist_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum — hist(A ∪ B) exactly; raises on a range/bin
-    mismatch (cross-range cells would silently mis-bin) and on any
-    input that is not exactly ``(bin, cnt)`` — the groupBy('bin')
-    below would otherwise silently collapse a grouped_hist_build
-    result's segments into one histogram (the same guard
-    write_hist_store applies)."""
-    for side, name in ((a, "a"), (b, "b")):
-        if set(side.columns) != {"bin", "cnt"}:
-            raise ValueError(
-                "hist_merge: input %s must have exactly columns "
-                "{bin, cnt}, got %s — merge grouped histograms "
-                "per-segment, not through hist_merge" % (name, side.columns)
-            )
-    sa, sb = _check_shape(a, "hist_merge"), _check_shape(b, "hist_merge")
-    if sa != sb:
-        raise ValueError(f"hist_merge: shape mismatch {sa} vs {sb}")
-    lo, hi, nb = sa
-    return (
-        a.unionByName(b)
-        .groupBy("bin")
-        .agg(
-            F.sum("cnt").alias(
-                "cnt", metadata={"qh_lo": lo, "qh_hi": hi, "qh_bins": nb}
-            )
-        )
-    )
+#: hist_merge(a, b): cell-wise sum — hist(A ∪ B) exactly; raises on a
+#: range/bin mismatch (cross-range cells would silently mis-bin) and on
+#: any input that is not exactly ``(bin, cnt)`` — grouping by ``bin``
+#: alone would otherwise silently collapse a grouped_hist_build
+#: result's segments into one histogram (the same guard
+#: write_hist_store applies).
+hist_merge = cell_merge(
+    ("bin",), {"cnt": F.sum}, where="hist_merge", shape=_SHAPE
+)
 
 
 def hist_quantiles(
@@ -192,7 +163,7 @@ def grouped_hist_quantiles(
     (a NULL group is a real segment — groupBy keeps it, so a
     null-unsafe join would silently drop its curve) — a broadcastable
     aggregate when groups are few, a plain keyed join otherwise."""
-    lo, hi, nb = _check_shape(cells, _where)
+    lo, hi, nb = _SHAPE.of(cells, _where).values()
     if not q_millis or any(q < 1 or q > 1000 for q in q_millis):
         raise ValueError(f"q_millis must be within [1, 1000]: {q_millis}")
     agg = cells.groupBy(*group_cols, "bin").agg(F.sum("cnt").alias("cnt"))
@@ -248,20 +219,7 @@ def grouped_hist_quantiles(
 # Persisted histogram store (versioned.MergeStore): bounded cells,
 # ADD-merge appends, batch_id high-water mark for replay safety.
 
-_STORE = MergeStore(
-    PARAMS_FILE,
-    "qh",
-    hist_merge,
-    repin=lambda df, p: df.select(
-        "bin",
-        F.col("cnt").alias(
-            "cnt",
-            metadata={
-                "qh_lo": p["lo"], "qh_hi": p["hi"], "qh_bins": p["nbins"],
-            },
-        ),
-    ),
-)
+_STORE = MergeStore(PARAMS_FILE, "qh", hist_merge, _SHAPE)
 
 
 def read_hist_params(path: str) -> dict:
@@ -280,8 +238,7 @@ def write_hist_store(cells: DataFrame, path: str) -> None:
             f"{cells.columns} — grouped histograms have no store "
             "lifecycle (reading one back would merge the segments)"
         )
-    lo, hi, nb = _check_shape(cells, "write_hist_store")
-    _STORE.write(cells, path, {"lo": lo, "hi": hi, "nbins": nb})
+    _STORE.write(cells, path)
 
 
 def load_hist(spark, path: str) -> tuple[DataFrame, dict]:

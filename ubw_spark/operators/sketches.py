@@ -20,8 +20,9 @@ Hashes are the portable md5 recipe so every cell is oracle-checkable
 in SQL.
 
 The sketch's (width, depth) ride in the ``cnt`` column's METADATA
-(zero runtime cost, survives projection/union/parquet), and both
-``cms_merge`` and ``cms_estimate`` fail loudly on a shape mismatch —
+(``versioned.ShapePin``: zero runtime cost, survives projection/union/
+parquet), and both ``cms_merge`` and ``cms_estimate`` fail loudly on a
+shape mismatch —
 merging or probing across shapes would silently UNDERCOUNT, breaking
 the module's one invariant (the Bloom store's m-mismatch rule).
 
@@ -36,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.dedup import portable_hash
-from ubw_spark.operators.versioned import MergeStore
+from ubw_spark.operators.versioned import MergeStore, ShapePin, cell_merge
 
 
 def _cell_bucket(item_col: Column, i: int, width: int) -> Column:
@@ -51,21 +52,9 @@ def _validate(width: int, depth: int) -> None:
         raise ValueError(f"need width >= 2, depth >= 1; got {width}x{depth}")
 
 
-def _shape(sketch: DataFrame) -> tuple[int | None, int | None]:
-    if "cnt" not in sketch.columns:
-        return None, None
-    m = sketch.schema["cnt"].metadata
-    return m.get("cms_width"), m.get("cms_depth")
-
-
-def _check_shape(sketch: DataFrame, where: str) -> tuple[int, int]:
-    w, d = _shape(sketch)
-    if w is None or d is None:
-        raise ValueError(
-            f"{where}: input is not a cms_build sketch "
-            "(missing cms_width/cms_depth metadata on `cnt`)"
-        )
-    return w, d
+_SHAPE = ShapePin(
+    "cnt", {"width": "cms_width", "depth": "cms_depth"}, "a cms_build sketch"
+)
 
 
 def cms_pairs(item_col: Column, width: int, depth: int) -> Column:
@@ -103,34 +92,17 @@ def cms_build(
     return (
         df.select(*cols)
         .groupBy(F.col("p.i").alias("i"), F.col("p.bucket").alias("bucket"))
-        .agg(
-            F.sum(w).alias(
-                "cnt", metadata={"cms_width": width, "cms_depth": depth}
-            )
-        )
+        .agg(_SHAPE.pin(F.sum(w), {"width": width, "depth": depth}))
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two sketches — sketch(A ∪ B) exactly (tested);
-    the cross-dump merge needs no access to either dump's rows.
-
-    Raises on a (width, depth) mismatch: cross-shape cells don't align,
-    and the merged estimates would silently UNDERCOUNT."""
-    sa, sb = _check_shape(a, "cms_merge"), _check_shape(b, "cms_merge")
-    if sa != sb:
-        raise ValueError(
-            f"cms_merge: shape mismatch {sa[0]}x{sa[1]} vs {sb[0]}x{sb[1]}"
-        )
-    return (
-        a.unionByName(b)
-        .groupBy("i", "bucket")
-        .agg(
-            F.sum("cnt").alias(
-                "cnt", metadata={"cms_width": sa[0], "cms_depth": sa[1]}
-            )
-        )
-    )
+#: cms_merge(a, b): cell-wise sum of two sketches — sketch(A ∪ B)
+#: exactly (tested); the cross-dump merge needs no access to either
+#: dump's rows.  Raises on a (width, depth) mismatch: cross-shape cells
+#: don't align, and the merged estimates would silently UNDERCOUNT.
+cms_merge = cell_merge(
+    ("i", "bucket"), {"cnt": F.sum}, where="cms_merge", shape=_SHAPE
+)
 
 
 def cms_estimate(
@@ -157,7 +129,7 @@ def cms_estimate(
     them explicitly asserts the caller's expectation and raises on a
     mismatch — probing with the wrong shape would undercount
     silently."""
-    shape = _check_shape(sketch, "cms_estimate")
+    shape = tuple(_SHAPE.of(sketch, "cms_estimate").values())
     if width is None and depth is None:
         width, depth = shape
     elif (width, depth) != shape:
@@ -192,19 +164,7 @@ def cms_estimate(
 
 PARAMS_FILE = "_CMS_PARAMS"
 
-_STORE = MergeStore(
-    PARAMS_FILE,
-    "cms",
-    cms_merge,
-    repin=lambda df, p: df.select(
-        "i",
-        "bucket",
-        F.col("cnt").alias(
-            "cnt",
-            metadata={"cms_width": p["width"], "cms_depth": p["depth"]},
-        ),
-    ),
-)
+_STORE = MergeStore(PARAMS_FILE, "cms", cms_merge, _SHAPE)
 
 
 def read_cms_params(path: str) -> dict:
@@ -216,8 +176,7 @@ def read_cms_params(path: str) -> dict:
 def write_cms_store(sketch: DataFrame, path: str) -> None:
     """Persist a sketch (≤ depth*width cells) + its shape sidecar as
     a new store version."""
-    w, d = _check_shape(sketch, "write_cms_store")
-    _STORE.write(sketch, path, {"width": w, "depth": d})
+    _STORE.write(sketch, path)
 
 
 def load_cms(spark, path: str) -> tuple[DataFrame, dict]:
@@ -298,15 +257,7 @@ def cms_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
     key sets would return NULL and a partially-disjoint pair would skip
     its zero rows and over-estimate (min over a SUBSET of the rows the
     formula demands)."""
-    sa, sb = _check_shape(a, "cms_inner_product"), _check_shape(
-        b, "cms_inner_product"
-    )
-    if sa != sb:
-        raise ValueError(
-            f"cms_inner_product: shape mismatch {sa[0]}x{sa[1]} vs "
-            f"{sb[0]}x{sb[1]}"
-        )
-    depth = sa[1]
+    depth = _SHAPE.same((a, b), "cms_inner_product")["depth"]
     prod = (
         a.select("i", "bucket", F.col("cnt").alias("__ca"))
         .join(

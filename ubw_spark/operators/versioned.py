@@ -28,6 +28,17 @@ Every store here goes through one of two lifecycles: the six
 bounded-state merge stores through :class:`MergeStore`, the four
 file-additive stores (LSH bands, IVF cells, IVFPQ codes, term index)
 through :class:`FileStore`.  The primitives below are theirs.
+
+A merge store declares four things: its sidecar file, its kind, its
+merge kernel (for the five cell stores one :func:`cell_merge`: cell
+keys and one associative aggregate per value column), and, for the
+three sketches whose shape rides in a value column's Spark metadata
+(count-min width/depth, HLL precision, histogram range), the
+:class:`ShapePin` mapping sidecar keys to metadata keys.  Builders pin
+the shape through it, merges and probes read it back through it, and
+the store derives its sidecar from it on write and re-pins it from the
+sidecar (the authority) on load — no module outside this one touches
+column metadata.
 """
 
 from __future__ import annotations
@@ -38,7 +49,7 @@ import posixpath
 import re
 import shutil
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, NamedTuple
 
 #: Manifest file at the store root naming the live version directory.
 MANIFEST = "_CURRENT"
@@ -297,6 +308,97 @@ def read_sidecar(root: str, filename: str, kind: str) -> dict:
         ) from None
 
 
+class ShapePin(NamedTuple):
+    """Where a sketch's shape rides: ``keys`` maps each sidecar key to
+    the metadata key it sits under on value ``column`` (zero runtime
+    cost; survives projection, union and parquet).  ``noun`` names the
+    builder's output in the refusal of an unpinned input, and ``what``
+    names the shape in the refusal of a mismatched one."""
+
+    column: str
+    keys: dict[str, str]
+    noun: str
+    what: str = "shape"
+
+    def pin(self, col, params: dict):
+        """``col`` aliased to the pinned column, carrying ``params``."""
+        return col.alias(self.column, metadata={
+            meta: params[key] for key, meta in self.keys.items()
+        })
+
+    def of(self, df, where: str) -> dict:
+        """The sidecar-keyed shape pinned on ``df``; raises, naming
+        ``where``, when ``df`` carries none — merging or probing under a
+        guessed shape would silently undercount."""
+        meta = df.schema[self.column].metadata if self.column in df.columns else {}
+        if not all(m in meta for m in self.keys.values()):
+            raise ValueError(
+                f"{where}: input is not {self.noun} (missing "
+                f"{'/'.join(self.keys.values())} metadata on `{self.column}`)"
+            )
+        return {key: meta[m] for key, m in self.keys.items()}
+
+    def same(self, frames, where: str) -> dict:
+        """The one shape pinned on every frame; raises on a mismatch —
+        cross-shape cells do not align."""
+        first, *rest = [self.of(df, where) for df in frames]
+        for other in rest:
+            if other != first:
+                raise ValueError(f"{where}: {self.what} mismatch {first} vs {other}")
+        return first
+
+
+def cell_merge(
+    keys: tuple[str, ...],
+    values: dict,
+    *,
+    where: str,
+    shape: ShapePin | None = None,
+    grouped: bool = False,
+) -> Callable:
+    """The merge kernel of a cell-state store: union the frames, group
+    by the cell ``keys`` and fold each value column with its associative
+    aggregate (``values``: column → ``functions.sum``/``max``/
+    ``bit_or``), so merge(A, B) is the state of A ∪ B.  One frame is a
+    plain re-aggregation.
+
+    Refuses, naming ``where``: an input without ``shape``'s pin, frames
+    whose pins differ, and column sets that do not line up — exactly
+    keys + values, or with ``grouped`` the same extra group columns on
+    every frame (they lead the grouping key).  The merged pin is
+    re-attached: an aggregate drops column metadata."""
+    cells = set(keys) | set(values)
+
+    def merge(*frames):
+        for df in frames if shape else ():
+            shape.of(df, where)
+        group = [c for c in frames[0].columns if c not in cells]
+        for i, df in enumerate(frames):
+            if not grouped and set(df.columns) != cells:
+                raise ValueError(
+                    f"{where}: input {i} must have exactly columns "
+                    f"{sorted(cells)}, got {df.columns} — merge grouped "
+                    f"cells per-segment, not through {where}"
+                )
+            if grouped and {c for c in df.columns if c not in cells} != set(group):
+                raise ValueError(
+                    f"{where}: group columns differ: "
+                    f"{frames[0].columns} vs {df.columns}"
+                )
+        pin = shape.same(frames, where) if shape else None
+        aggs = [
+            shape.pin(fn(c), pin) if shape and c == shape.column
+            else fn(c).alias(c)
+            for c, fn in values.items()
+        ]
+        union = frames[0]
+        for df in frames[1:]:
+            union = union.unionByName(df)
+        return union.groupBy(*group, *keys).agg(*aggs)
+
+    return merge
+
+
 @dataclass(frozen=True)
 class MergeStore:
     """The lifecycle of the bounded-state MERGE stores (count-min,
@@ -309,20 +411,25 @@ class MergeStore:
 
     An instance holds only per-store constants: the ``sidecar`` file
     name, the store ``kind`` for error messages, the
-    ``merge(old, new, **merge_args)`` kernel, and an optional
-    ``repin(df, params)`` that re-attaches the sidecar params (the
-    authority) as column metadata on load."""
+    ``merge(old, new, **merge_args)`` kernel, and for a sketch the
+    :class:`ShapePin` of its shape: :meth:`write` then takes the sidecar
+    from the frame's pin, and :meth:`load` re-pins the sidecar (the
+    authority) onto the loaded column."""
 
     sidecar: str
     kind: str
     merge: Callable
-    repin: Callable | None = None
+    shape: ShapePin | None = None
 
     def params(self, path: str) -> dict:
         """Sidecar of the live version (use :meth:`load` for data)."""
         return read_sidecar(resolve_root(path), self.sidecar, self.kind)
 
-    def write(self, frame, path: str, params: dict) -> None:
+    def write(self, frame, path: str, params: dict | None = None) -> None:
+        """``frame`` as a new version; a sketch's ``params`` default to
+        the shape pinned on ``frame``."""
+        if params is None:
+            params = self.shape.of(frame, f"write_{self.kind}_store")
         new_v, root = begin_rewrite(path)
         frame.coalesce(1).write.mode("overwrite").parquet(root)
         pin_schema(root, frame.schema)
@@ -333,10 +440,17 @@ class MergeStore:
         """(state, params), both from ONE manifest resolve: two resolves
         could straddle a rewrite and pair one version's params with
         another's data, which no shape guard catches."""
+        from pyspark.sql import functions as F
+
         root = resolve_root(path)
         params = read_sidecar(root, self.sidecar, self.kind)
         df = read_pinned_parquet(spark, root)
-        return (df if self.repin is None else self.repin(df, params)), params
+        if self.shape is not None:
+            df = df.select(*[
+                self.shape.pin(F.col(c), params) if c == self.shape.column
+                else c for c in df.columns
+            ])
+        return df, params
 
     def fold(self, spark, path: str, build, *, batch_id=None, **merge_args):
         """Merge ``build(params)`` — the batch's state under the stored

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.bloom import bloom_audit, bloom_probe, build_bloom
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 
 # Shared oracle scaffolding: word 3-grams per doc, then the k=4 bloom
 # positions of every gram, m = 2^18.  (h1 + i·(2·h2+1)) mod m with
@@ -155,8 +155,6 @@ def dedup_bloom_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_bloom_decontaminate``: the lifecycle must not change a
     single count.  Timing includes both store writes — that IS the
     operation, as with the LSH/gram/IVF store entries."""
-    import hashlib
-
     from ubw_spark.operators.bloom import (
         append_bloom_store,
         probe_bloom_store,
@@ -164,9 +162,7 @@ def dedup_bloom_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    path = "/tmp/ubw_spark_bloom_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("bloom_store", sf_dir)
     write_bloom_store(
         d.where(F.col("doc_id") % 20 == 0), "text", path, n=3,
     )

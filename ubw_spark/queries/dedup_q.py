@@ -21,7 +21,7 @@ from ubw_spark.operators.dedup import (
 )
 from ubw_spark.operators.ivf import seed_ivf_centroids
 from ubw_spark.operators.similarity import embedding_near_dup_pairs
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 
 
 @register(
@@ -667,8 +667,6 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     recall/IO knob; plan-asserted in tests/test_plans.py).  At 100 TB
     this is the shape that amortizes corpus banding across every
     incoming batch instead of recomputing it per run."""
-    import hashlib
-
     from ubw_spark.operators.lsh_index import (
         probe_minhash_index,
         write_minhash_index,
@@ -677,9 +675,7 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     d = table(spark, sf_dir, "documents")
     # deterministic per-sf_dir scratch location (overwritten per run);
     # at scale this is the long-lived lake path the index lives at
-    path = "/tmp/ubw_spark_minhash_idx_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("minhash_idx", sf_dir)
     write_minhash_index(
         d.where(F.col("doc_id") < 400), "doc_id", "text", path,
     )

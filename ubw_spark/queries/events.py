@@ -404,10 +404,8 @@ def stream_tumbling_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended exactly once (checkpointed offsets + idempotent sink)."""
     import uuid
 
-    from ubw_spark.streaming.stages import (
-        shuffle_partitions_override,
-        stream_shuffle_partitions,
-    )
+    from ubw_spark.session import pinned_conf
+    from ubw_spark.streaming.stages import stream_shuffle_partitions
 
     ev = table(spark, sf_dir, "events")
     run = uuid.uuid4().hex[:10]
@@ -440,9 +438,9 @@ def stream_tumbling_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store commit + checkpoint delta + sink file PER MICRO-BATCH).
     # Partitioning never changes the aggregation's values, only where
     # rows are summed — the DuckDB oracle pins that.
-    with shuffle_partitions_override(
-        spark, stream_shuffle_partitions(spark)
-    ):
+    with pinned_conf(spark, {
+        "spark.sql.shuffle.partitions": stream_shuffle_partitions(spark)
+    }):
         q = (
             agg.writeStream.format("parquet")
             .option("path", sink)
@@ -527,10 +525,8 @@ def stream_session_window_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     tests/test_streaming.py)."""
     import uuid
 
-    from ubw_spark.streaming.stages import (
-        shuffle_partitions_override,
-        stream_shuffle_partitions,
-    )
+    from ubw_spark.session import pinned_conf
+    from ubw_spark.streaming.stages import stream_shuffle_partitions
 
     ev = table(spark, sf_dir, "events")
     run = uuid.uuid4().hex[:10]
@@ -562,9 +558,9 @@ def stream_session_window_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     # Streaming-sized state partitions — see stream_tumbling_watermark;
     # session merging is per-user, so partitioning cannot change which
     # sessions form, only which state store holds each user.
-    with shuffle_partitions_override(
-        spark, stream_shuffle_partitions(spark)
-    ):
+    with pinned_conf(spark, {
+        "spark.sql.shuffle.partitions": stream_shuffle_partitions(spark)
+    }):
         q = (
             agg.writeStream.format("parquet")
             .option("path", sink)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ubw_spark.operators.dedup import word_shingles
 from ubw_spark.operators.hll import estimate_sql, hll_build, hll_estimate, rho_sql
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 
 #: DuckDB CTEs producing one row per DISTINCT (lang, bigram) with the two
 #: portable hashes — dedup BEFORE hashing (registers are set-semantics, so
@@ -102,8 +102,6 @@ def sketch_hll_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: every store step moves ≤ 2^p register rows; each half is
     scanned once, never re-read by the append."""
-    import hashlib
-
     from ubw_spark.operators.hll import (
         append_hll_registers,
         estimate_hll_store,
@@ -111,9 +109,7 @@ def sketch_hll_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ubw_spark.operators.iterate import truncate
 
-    path = "/tmp/ubw_spark_hll_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("hll_store", sf_dir)
     d = table(spark, sf_dir, "documents").where(F.col("lang") == "en")
     parity_col = F.coalesce(F.pmod(F.col("doc_id"), F.lit(2)), F.lit(0))
     # ONE corpus pass (round 13, guide §1.2/§8): the distinct-bigram

@@ -11,7 +11,7 @@ from ubw_spark.operators.qsketch import (
     probe_hist_quantiles,
     write_hist_store,
 )
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 
 #: Pinned range for the orders total-price histogram, in CENTS.
 #: o_totalprice tops out near $555k at every generated sf; the clamp
@@ -116,17 +116,13 @@ def sketch_quantile_store_probe(
 
     Scale: every store step moves ≤nbins cells; each half is scanned
     once to build its own cells and never re-read."""
-    import hashlib
-
     from ubw_spark.operators.iterate import truncate
     from ubw_spark.operators.qsketch import (
         append_hist_cells,
         grouped_hist_build,
     )
 
-    path = "/tmp/ubw_spark_qh_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("qh_store", sf_dir)
     o = _cents_orders(spark, sf_dir)
     parity = F.coalesce(F.pmod(F.col("o_orderkey"), F.lit(2)), F.lit(0))
     # ONE corpus pass (round 13, guide §1.2): both halves' cells come

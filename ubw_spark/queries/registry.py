@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 import weakref
 from dataclasses import dataclass
@@ -90,6 +91,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # not what a caller reading "session-local cast" expects).
         _assert_utc_session(spark)
     return df
+
+
+def store_path(kind: str, sf_dir: str) -> str:
+    """Deterministic per-``sf_dir`` scratch location of a query's
+    ``kind`` store (overwritten per run); at scale, the long-lived lake
+    path the store lives at."""
+    return f"/tmp/ubw_spark_{kind}_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
 
 
 def _assert_utc_session(spark: SparkSession) -> None:

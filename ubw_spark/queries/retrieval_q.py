@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ubw_spark.operators.retrieval import bm25_topk, probe_term_index
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 from ubw_spark.functions.literals import literal_frame
 
 #: The shared benchmark query — terms chosen from the synthetic corpus
@@ -99,14 +99,10 @@ def search_bm25_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as the in-memory query: the lifecycle must not change a
     score.  Timing includes the index write, which at 100 TB amortizes
     across every query (the dedup_incremental_index_probe contract)."""
-    import hashlib
-
     from ubw_spark.operators.retrieval import write_term_index
 
     d = table(spark, sf_dir, "documents")
-    path = "/tmp/ubw_spark_term_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("term_store", sf_dir)
     write_term_index(d, "doc_id", "text", path)
     return probe_term_index(spark, path, QUERY, k=TOP_K)
 
@@ -211,14 +207,12 @@ def stream_term_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming/stages.py::stream_shuffle_partitions): stateless here,
     # but each batch still pays per-partition task + sink-file cost
     # that AQE cannot coalesce under the streaming runner.
-    from ubw_spark.streaming.stages import (
-        shuffle_partitions_override,
-        stream_shuffle_partitions,
-    )
+    from ubw_spark.session import pinned_conf
+    from ubw_spark.streaming.stages import stream_shuffle_partitions
 
-    with shuffle_partitions_override(
-        spark, stream_shuffle_partitions(spark)
-    ):
+    with pinned_conf(spark, {
+        "spark.sql.shuffle.partitions": stream_shuffle_partitions(spark)
+    }):
         q = (
             stream.writeStream.foreachBatch(handle)
             .option("checkpointLocation", ckpt)
@@ -390,17 +384,13 @@ def search_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose value list is bounded by the bucket count (≤32 ints
     collected) no matter how large the log grows; per-query ranking is
     a window partitioned by qid."""
-    import hashlib
-
     from ubw_spark.operators.retrieval import (
         probe_term_index_batch,
         write_term_index,
     )
 
     d = table(spark, sf_dir, "documents")
-    path = "/tmp/ubw_spark_term_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("term_store", sf_dir)
     write_term_index(d, "doc_id", "text", path)
     queries = literal_frame(
         spark,

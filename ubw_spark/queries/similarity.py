@@ -31,7 +31,7 @@ from ubw_spark.operators.similarity import (
     norm,
     rerank_topk,
 )
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 
 
 @register(
@@ -252,15 +252,11 @@ def sim_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     index write: at 100 TB that write amortizes across every probe
     batch, and benching the whole lifecycle is honest (same contract as
     dedup_incremental_index_probe)."""
-    import hashlib
-
     from ubw_spark.operators.ivf import probe_ivf_index, write_ivf_index
 
     emb = table(spark, sf_dir, "embeddings")
     centroids = seed_ivf_centroids(emb, k=8)
-    path = "/tmp/ubw_spark_ivf_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("ivf_store", sf_dir)
     write_ivf_index(emb, centroids, path)
     return probe_ivf_index(
         spark, path, emb.where(F.col("vec_id") < 5), centroids,

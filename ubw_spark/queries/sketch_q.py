@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ubw_spark.functions.text import tokens
 from ubw_spark.operators.sketches import cms_build, cms_estimate
-from ubw_spark.queries.registry import register, table
+from ubw_spark.queries.registry import register, store_path, table
 from ubw_spark.functions.literals import literal_frame
 
 _PROBES = ["key", "table", "spark", "row", "zz_absent_zz"]
@@ -151,8 +151,6 @@ def sketch_cms_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: every store step moves ≤ depth×width cells; each half is
     scanned once to build its own sketch, never re-read by the
     append."""
-    import hashlib
-
     from ubw_spark.operators.iterate import truncate
     from ubw_spark.operators.sketches import (
         append_cms_cells,
@@ -160,9 +158,7 @@ def sketch_cms_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_cms_store,
     )
 
-    path = "/tmp/ubw_spark_cms_store_" + hashlib.md5(
-        sf_dir.encode()
-    ).hexdigest()[:10]
+    path = store_path("cms_store", sf_dir)
     d = table(spark, sf_dir, "documents").where(F.col("lang") == "en")
     # pmod + coalesce: plain % keeps the dividend's sign and NULL%2 is
     # NULL — either would silently drop docs from BOTH halves while the

@@ -10,6 +10,7 @@ any pandas interchange.  On a real cluster the same builder is used; only
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -43,3 +44,20 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, conf: dict):
+    """Set the session ``conf`` keys for the duration of the ``with``
+    block and restore each on exit.  A plan reads the conf when it is
+    planned: a streaming query pins its shuffle partitions into the
+    checkpoint at first-batch planning, and a plan built outside the
+    block is unaffected."""
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)

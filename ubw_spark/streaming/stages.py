@@ -44,39 +44,12 @@ def stream_shuffle_partitions(spark: SparkSession) -> int:
 
     Sizing rule: state partitions should match STATE VOLUME and key
     cardinality, not the box's core count — and the count is sticky (a
-    checkpoint pins it for the query's life), so it is a deliberate
-    knob, not an inherited default.  ``SPARK_GRAFT_STREAM_PARTITIONS``
-    overrides (the production lever: set ≈ parallelism the state
-    actually needs, e.g. 2-3× cores on a real ingest cluster);
-    locally defaults to min(defaultParallelism, 4) — the bench's
+    checkpoint pins it for the query's life), so it is derived here,
+    not inherited: min(defaultParallelism, 4) — the bench's
     micro-batches carry ~10k rows, where even 4 partitions is
-    parallelism-bound, not state-bound."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "")
-    if env.isdigit() and int(env) > 0:
-        return int(env)
+    parallelism-bound, not state-bound.  Callers pin it for the
+    stream's life with ``session.pinned_conf``."""
     return max(1, min(spark.sparkContext.defaultParallelism, 4))
-
-
-class shuffle_partitions_override:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` for the
-    duration (stream start → termination), restore on exit.  Streaming
-    queries capture the value at FIRST batch planning and pin it into
-    the checkpoint; batch queries planned outside the ``with`` are
-    unaffected."""
-
-    _KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession, n: int) -> None:
-        self.spark, self.n = spark, n
-
-    def __enter__(self) -> None:
-        self._old = self.spark.conf.get(self._KEY)
-        self.spark.conf.set(self._KEY, str(self.n))
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set(self._KEY, self._old)
 
 
 def read_stream(
